@@ -82,38 +82,6 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter.cast("double") / union).otherwise(0.0)
 
 
-def minhash_signature_from_hashes(hashed: Column, n_hashes: int = 32) -> Column:
-    """MinHash signature from a PRE-MATERIALIZED array of 64-bit token
-    hashes: the i-th hash family is xxhash64(base_hash, seed=i), a
-    constant-cost mix of a fixed-width long — the variable-length
-    string walk happened once when ``hashed`` was built, instead of
-    once per family (~n_hashes× less string CPU).  Identical token
-    sets yield identical signatures under any per-token function, so
-    the threshold-1.0 recall guarantee is unaffected.  Callers must
-    materialize ``hashed`` as a real column (separate select) first:
-    inlining the string-hash transform here would re-expand it into
-    each of the n_hashes aggregates — same CSE trap as
-    simhash_from_hashes.  Pure Column algebra via transform +
-    array_min — no UDF, fully codegen'd."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(hashed, lambda h: F.xxhash64(h, F.lit(i)))
-            ).alias(f"h{i}")
-            for i in range(n_hashes)
-        ]
-    )
-
-
-def minhash_signature(tokens: Column, n_hashes: int = 32) -> Column:
-    """MinHash signature straight from a token array — convenience
-    wrapper; hot paths should materialize the base-hash array and use
-    minhash_signature_from_hashes (see CSE note there)."""
-    return minhash_signature_from_hashes(
-        F.transform(tokens, lambda t: F.xxhash64(t)), n_hashes
-    )
-
-
 def minhash_band_buckets(
     docs: DataFrame,
     text: str = "text",
@@ -344,13 +312,6 @@ def simhash_from_hashes(hashed: Column, bits: int = 32) -> Column:
             F.lit(0).cast("long")
         )
     return out
-
-
-def simhash(tokens: Column, bits: int = 32) -> Column:
-    """SimHash fingerprint of a token array; near-identical token sets
-    get small Hamming distance.  Convenience column form — hot paths go
-    through simhash_table (exploded codegen aggregation)."""
-    return simhash_from_hashes(F.transform(tokens, portable_token_hash), bits)
 
 
 def simhash_table(

@@ -59,10 +59,6 @@ def rolling_max(col: str, n: int) -> Column:
     return _min_periods(n, F.max(col).over(w_rows(n)))
 
 
-def rolling_sum(col: str, n: int) -> Column:
-    return _min_periods(n, F.sum(col).over(w_rows(n)))
-
-
 def price_change(col: str = "close") -> Column:
     """W8 — absolute diff vs previous row (feature_engineer.py:225)."""
     return F.col(col) - F.lag(col).over(w_ordered())
@@ -143,12 +139,6 @@ def true_range() -> Column:
     )
 
 
-def atr_sma(n: int = 14) -> Column:
-    """W6 (Keltner variant) — SMA of true range
-    (advanced_feature_engineer.py:216-221)."""
-    return _min_periods(n, F.avg(true_range()).over(w_rows(n)))
-
-
 def price_position(n: int) -> Column:
     """W10 — (close - min low) / (max high - min low) × 100
     (feature_engineer.py:242-250)."""
@@ -204,11 +194,6 @@ def obv_proxy() -> Column:
     return F.sum(signed).over(
         w_ordered().rowsBetween(Window.unboundedPreceding, 0)
     )
-
-
-def rolling_volatility(ret_col: str, n: int) -> Column:
-    """W9 — rolling std of returns × 100 (feature_engineer.py:234-239)."""
-    return _min_periods(n, F.stddev_samp(ret_col).over(w_rows(n)) * 100.0)
 
 
 def candle_anatomy() -> dict[str, Column]:

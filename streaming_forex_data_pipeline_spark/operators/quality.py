@@ -93,40 +93,6 @@ def fix_ohlc(df: DataFrame) -> DataFrame:
     ).withColumn("low", F.least("low", "open", "close"))
 
 
-def zscore_outlier_flags(
-    df: DataFrame, cols: list[str], z_thresh: float = 3.0, iqr_k: float = 1.5
-) -> DataFrame:
-    """D7 — outlier flag = |z| > z_thresh OR outside [q1-k·IQR, q3+k·IQR],
-    union across price columns (data_validator.py:292-331).
-
-    Stats are computed in one global aggregate and broadcast back via a
-    cross join of a 1-row literal frame — no per-row recompute, and the
-    broadcast side is O(#cols) scalars regardless of table size.
-    """
-    aggs = []
-    for c in cols:
-        aggs += [
-            F.avg(c).alias(f"__mu_{c}"),
-            F.stddev_samp(c).alias(f"__sd_{c}"),
-            F.expr(f"percentile({c}, 0.25)").alias(f"__q1_{c}"),
-            F.expr(f"percentile({c}, 0.75)").alias(f"__q3_{c}"),
-        ]
-    stats = df.agg(*aggs)
-    out = df.crossJoin(F.broadcast(stats))
-    flag = F.lit(False)
-    for c in cols:
-        mu, sd = F.col(f"__mu_{c}"), F.col(f"__sd_{c}")
-        q1, q3 = F.col(f"__q1_{c}"), F.col(f"__q3_{c}")
-        iqr = q3 - q1
-        z_bad = F.when(sd > 0, F.abs((F.col(c) - mu) / sd) > z_thresh).otherwise(
-            F.lit(False)
-        )
-        iqr_bad = (F.col(c) < q1 - iqr_k * iqr) | (F.col(c) > q3 + iqr_k * iqr)
-        flag = flag | z_bad | iqr_bad
-    out = out.withColumn("is_outlier", flag)
-    return out.drop(*[c for c in out.columns if c.startswith("__")])
-
-
 def fill_gaps(
     df: DataFrame,
     interval: str = "1 hour",

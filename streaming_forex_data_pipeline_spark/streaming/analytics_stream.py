@@ -1,12 +1,9 @@
 """Streaming faces of the event-analytics queries (`plans/olap_q.py`).
 
-Same state contract as the sketch channels in `corpus_stream.py`
-(CMS = SUM, HLL = MAX, reservoir = top-k): each micro-batch commits a
-bounded DELTA through the transactional log (`sources/sinks.py:
-commit_append`), the live readout is a lazy view aggregating the log
-by the face's merge law, the driver holds O(1) state, and crashed
-micro-batch replays dedup idempotently against their (key, batch)
-identity.
+The cohort and WAU faces run on the delta-log channel mechanism
+`corpus_stream.py:_start_merge_channel`, which states the delta ->
+commit -> merge-view contract once; each face here supplies only its
+delta and its merge law.
 
 The cohort face's merge law is **MIN**: a user's first-event timestamp
 over a union of batches is the min of per-batch minima — so per-user
@@ -17,6 +14,8 @@ and the weekly cohort sizes derived from them equal the batch answer
 
 from __future__ import annotations
 
+from .corpus_stream import _start_merge_channel
+
 
 def start_cohort_channel(
     spark,
@@ -26,61 +25,33 @@ def start_cohort_channel(
     stream=None,
 ):
     """Continuously maintained weekly signup-cohort sizes over an
-    events stream: each micro-batch commits its per-user min event
-    timestamp keyed (user_id, batch); the live view folds the log by
-    per-user MIN, truncates to ISO week, and counts users per cohort
-    — `plans/olap_q.py:cohort_retention`'s cohort dimension, kept
-    fresh without rescanning history (parity across real micro-batches
-    proven in tests/test_streaming.py).
-
-    Scale shape: delta rows are bounded by users-per-batch, sink state
-    by users x batches before `compact_log` folds settled commits, the
-    view's aggregation is users-keyed, and the cohort readout is
-    calendar-bounded.  The driver never holds per-user state."""
+    events stream: each batch commits its per-user min event timestamp
+    keyed (user_id, batch); the view folds the log by per-user MIN,
+    truncates to ISO week, and counts users per cohort —
+    `plans/olap_q.py:cohort_retention`'s cohort dimension, kept fresh
+    without rescanning history (parity across real micro-batches:
+    tests/test_streaming.py).  The view's aggregation is users-keyed
+    and the cohort readout calendar-bounded."""
     from pyspark.sql import functions as F
 
-    from ..sources.scratch import scratch_dir
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
-
-    if sink_dir is None:
-        sink_dir = scratch_dir("cohort_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "events")
-    spark.createDataFrame(
-        [], "cohort timestamp, n_cohort long"
-    ).createOrReplaceTempView(sink_table)
-
-    def run_batch(batch_df, batch_id):
-        delta = (
-            batch_df.groupBy("user_id")
-            .agg(F.min("ts").alias("first_ts"))
-            .withColumn("batch", F.lit(int(batch_id)).cast("long"))
-        )
-        commit_append(delta, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(
-                spark, sink_dir, keys=["user_id", "batch"]
-            )
-        except FileNotFoundError:
-            return
-        (
+    def view_fn(committed):
+        return (
             committed.groupBy("user_id")
             .agg(F.min("first_ts").alias("first_ts"))  # the MIN merge law
-            .select(
-                F.date_trunc("week", F.col("first_ts")).alias("cohort")
-            )
+            .select(F.date_trunc("week", F.col("first_ts")).alias("cohort"))
             .groupBy("cohort")
             .agg(F.count(F.lit(1)).alias("n_cohort"))
-            .createOrReplaceTempView(sink_table)
         )
 
-    return (
-        stream.writeStream.queryName(sink_table)
-        .foreachBatch(run_batch)
-        .option("checkpointLocation", scratch_dir("cohort_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    return _start_merge_channel(
+        spark, sf_dir, "events", sink_table, sink_dir, stream,
+        slot_prefix="cohort_",
+        empty_schema="cohort timestamp, n_cohort long",
+        keys=["user_id", "batch"],
+        delta_fn=lambda b: b.groupBy("user_id").agg(
+            F.min("ts").alias("first_ts")
+        ),
+        view_fn=view_fn,
     )
 
 
@@ -508,57 +479,29 @@ def start_wau_channel(
     stream=None,
 ):
     """Streaming face of the rolling-WAU sketch (`plans/olap_q.py:
-    rolling_wau_hll`): each micro-batch commits its per-(day, bucket)
-    HLL register deltas keyed (day, bucket, batch); the live view is
-    the register file per day merged by element-wise MAX across
-    batches — the same merge law the global HLL channel proves, here
+    rolling_wau_hll`): each batch commits its per-(day, bucket) HLL
+    register deltas keyed (day, bucket, batch), and the view merges
+    them by element-wise MAX — the global HLL channel's merge law,
     keyed by the calendar dimension so the 7-day window merge and the
-    per-day estimate are deterministic folds any consumer can run on
-    the view at any moment (they are pure functions of the registers,
-    oracle-proven in the registered batch query).
-
-    State: at most #batches x days x 2^p delta rows before
-    compact_log folds settled commits; the driver holds O(1)."""
+    per-day estimate are deterministic folds of the view (oracle-proven
+    in the registered batch query)."""
     from pyspark.sql import functions as F
 
     from ..llm.vocab import hll_keyed_rhos
-    from ..sources.scratch import scratch_dir
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
 
-    if sink_dir is None:
-        sink_dir = scratch_dir("wau_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "events")
-    spark.createDataFrame(
-        [], "day timestamp, bucket long, max_rho int"
-    ).createOrReplaceTempView(sink_table)
-
-    def run_batch(batch_df, batch_id):
-        delta = hll_keyed_rhos(
-            batch_df.select(
-                F.date_trunc("day", F.col("ts")).alias("day"), "user_id"
-            ),
+    return _start_merge_channel(
+        spark, sf_dir, "events", sink_table, sink_dir, stream,
+        slot_prefix="wau_",
+        empty_schema="day timestamp, bucket long, max_rho int",
+        keys=["day", "bucket", "batch"],
+        delta_fn=lambda b: hll_keyed_rhos(
+            b.select(F.date_trunc("day", F.col("ts")).alias("day"), "user_id"),
             "user_id",
             ["day"],
-        ).withColumn("batch", F.lit(int(batch_id)).cast("long"))
-        commit_append(delta, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(
-                spark, sink_dir, keys=["day", "bucket", "batch"]
-            )
-        except FileNotFoundError:
-            return
-        committed.groupBy("day", "bucket").agg(
+        ),
+        view_fn=lambda c: c.groupBy("day", "bucket").agg(
             F.max("max_rho").alias("max_rho")
-        ).createOrReplaceTempView(sink_table)
-
-    return (
-        stream.writeStream.queryName(sink_table)
-        .foreachBatch(run_batch)
-        .option("checkpointLocation", scratch_dir("wau_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 

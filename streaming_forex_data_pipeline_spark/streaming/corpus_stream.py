@@ -1,8 +1,11 @@
 """Streaming corpus ingest: the corpus-hygiene operators as streaming
 channels — the stateless quality gate, incremental near-dup checking
 against a static index, decontamination against a static eval-gram
-frame, and the real-codec multimodal decode (all batch/stream
-parity-tested).
+frame, the real-codec multimodal decode, and the merge-law sketch
+channels (CMS, HLL, histogram, reservoir, DSIR models, gate
+dashboard), all batch/stream parity-tested.  Every delta-log channel
+runs on one mechanism, `_start_merge_channel`, whose docstring holds
+the delta -> commit -> merge-view contract.
 
 A training-corpus pipeline at 100 TB ingests continuously; the
 document-level gate (Gopher/C4 rule battery, `llm/corpus.py:
@@ -24,10 +27,16 @@ so keep/reasons agree bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..llm.corpus import words_array
+from ..llm.corpus import (
+    histogram_sketch,
+    quality_gate,
+    weighted_reservoir_sample,
+    word_ngrams,
+    words_array,
+)
 from ..llm.text import avg_word_len
 
 
@@ -94,6 +103,75 @@ def start_corpus_gate_channel(
     )
 
 
+def _start_merge_channel(
+    spark,
+    sf_dir: str,
+    table: str,
+    sink_table: str,
+    sink_dir: str | None,
+    stream,
+    *,
+    slot_prefix: str,
+    empty_schema: str,
+    keys: list[str],
+    delta_fn,
+    view_fn,
+):
+    """The delta-log channel mechanism every merge-law channel runs on
+    (the foreachBatch + idempotent-sink model of Structured Streaming).
+
+    Contract, per micro-batch ``batch_id``:
+
+    1. delta: ``delta_fn(batch_df)`` builds the batch's OWN bounded
+       partial state (a sketch, counters, a top-k, per-key minima);
+    2. commit: the delta, tagged with a ``batch`` column, lands through
+       the transactional ``commit_append`` sink (`sources/sinks.py`)
+       at ``version=batch_id`` — executor-side files plus one atomic
+       manifest, so the driver holds O(1) state;
+    3. merge view: ``read_committed(keys)`` keeps the latest row per
+       key over the whole log and ``view_fn`` folds it by the
+       channel's merge law into the lazy view ``sink_table``.
+
+    A replayed micro-batch (restart after a crash, same ``sink_dir``)
+    rewrites the same (key, batch) identities, and keep-latest drops
+    the older copies, so restarts merge idempotently.  Until the first
+    non-empty commit the view is the empty frame ``empty_schema``.
+    The query is named ``sink_table`` (what `channel_stats` reports),
+    checkpoints into a fresh scratch directory, and drains the source
+    with ``availableNow``.  ``stream`` defaults to ``table`` read as a
+    file stream, ``sink_dir`` to a fresh ``slot_prefix`` scratch slot.
+    """
+    from ..sources.scratch import scratch_dir
+    from ..sources.sinks import commit_append, read_committed
+    from .channels import read_table_stream
+
+    if sink_dir is None:
+        sink_dir = scratch_dir(slot_prefix)
+    if stream is None:
+        stream = read_table_stream(spark, sf_dir, table)
+    spark.createDataFrame([], empty_schema).createOrReplaceTempView(sink_table)
+
+    def run_batch(batch_df, batch_id):
+        delta = delta_fn(batch_df).withColumn(
+            "batch", F.lit(int(batch_id)).cast("long")
+        )
+        commit_append(delta, sink_dir, version=float(batch_id))
+        try:
+            committed = read_committed(spark, sink_dir, keys=keys)
+        except FileNotFoundError:
+            # every commit so far was empty: keep the empty view
+            return
+        view_fn(committed).createOrReplaceTempView(sink_table)
+
+    return (
+        stream.writeStream.queryName(sink_table)
+        .foreachBatch(run_batch)
+        .option("checkpointLocation", scratch_dir(slot_prefix + "ckpt_"))
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def start_incremental_dedup_channel(
     spark,
     sf_dir: str,
@@ -101,74 +179,43 @@ def start_incremental_dedup_channel(
     sink_table: str = "incremental_dedup_sink",
     sink_dir: str | None = None,
 ):
-    """Streaming face of the incremental dedup: documents arrive as a
-    stream (today's crawl), and each micro-batch is checked against
-    the STATIC historical index (documents below ``cutoff``) plus
-    itself — `llm.dedup.incremental_near_dup_pairs` inside
-    ``foreachBatch``, the same per-micro-batch recompute pattern the
-    reference's channels use.
+    """Streaming face of the incremental dedup: each micro-batch of
+    today's crawl is checked against the STATIC historical index
+    (documents below ``cutoff``) plus itself with
+    `llm.dedup.incremental_near_dup_pairs`.  Merge law: keep-latest per
+    (doc_a, doc_b), so the view is the union of every batch's pairs
+    and per-batch cost never depends on the total found so far.
 
-    Pairs land through the transactional ``commit_append`` sink
-    (`sources/sinks.py`): each micro-batch's pairs are written
-    executor-side to ``sink_dir`` and published with one atomic
-    manifest — NO driver-side materialization, so per-batch cost
-    depends only on that batch's pairs, never on the total found so
-    far, and the driver holds O(1) state.  ``sink_table`` is refreshed
-    as a lazy view over the committed files; the batch id is the
-    commit version, so a replayed micro-batch (restart-after-crash)
-    merges idempotently via read_committed's keep-latest-per-pair.
-
-    At scale the static side is the precomputed band-bucket index
-    table and each micro-batch joins it — state lives in the table,
-    not the stream, so the channel itself is stateless and restarts
-    cleanly from the checkpoint.
-
-    Scope note: pairs BETWEEN two different micro-batches are found
-    only after the earlier batch has been folded into the index table
-    (the production loop appends each processed batch to the index).
-    This demo channel checks batch-vs-index and batch-vs-itself; the
-    availableNow single-file source delivers one micro-batch, so the
-    parity test is exact.
-    """
-    from pyspark.sql import functions as F
-
+    Pairs BETWEEN two micro-batches are found only once the earlier
+    batch is folded into the index (the production loop appends each
+    processed batch to it); the availableNow single-file source
+    delivers one micro-batch, so the parity test is exact."""
     from ..llm.dedup import incremental_near_dup_pairs
-    from ..sources.sinks import commit_append, read_committed
-    from ..sources.scratch import scratch_dir
     from ..sources.tables import load_table
     from .channels import read_table_stream
 
-    if sink_dir is None:
-        sink_dir = scratch_dir("inc_dedup_pairs_")
     index = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < cutoff
     )
-    stream = read_table_stream(spark, sf_dir, "documents").filter(
-        F.col("doc_id") >= cutoff
-    )
-    spark.createDataFrame(
-        [], "doc_a long, doc_b long, jaccard double"
-    ).createOrReplaceTempView(sink_table)
 
-    def run_batch(batch_df, batch_id):
-        both = index.unionByName(batch_df)
-        pairs = incremental_near_dup_pairs(
-            both, F.col("doc_id") >= cutoff, threshold=1.0, bands=1
+    def delta_fn(batch_df):
+        return incremental_near_dup_pairs(
+            index.unionByName(batch_df),
+            F.col("doc_id") >= cutoff,
+            threshold=1.0,
+            bands=1,
         )
-        commit_append(pairs, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(
-                spark, sink_dir, keys=["doc_a", "doc_b"]
-            )
-        except FileNotFoundError:
-            # every commit so far carried zero pairs: keep the empty view
-            return
-        committed.createOrReplaceTempView(sink_table)
 
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .trigger(availableNow=True)
-        .start()
+    return _start_merge_channel(
+        spark, sf_dir, "documents", sink_table, sink_dir,
+        read_table_stream(spark, sf_dir, "documents").filter(
+            F.col("doc_id") >= cutoff
+        ),
+        slot_prefix="inc_dedup_pairs_",
+        empty_schema="doc_a long, doc_b long, jaccard double",
+        keys=["doc_a", "doc_b"],
+        delta_fn=delta_fn,
+        view_fn=lambda c: c.drop("batch"),
     )
 
 
@@ -181,25 +228,14 @@ def start_decontamination_channel(
     sink_dir: str | None = None,
 ):
     """Streaming face of the decontamination scrub
-    (`llm/dedup.py:decontaminate`): training documents arrive as a
-    stream and every micro-batch is scrubbed against the STATIC
-    distinct eval-gram frame — the eval split is the benchmark, fixed
-    before the crawl starts, so the face is stateless per batch.  The
-    scrub (explode → broadcast semi-join → per-doc any-collision →
-    anti-join) mixes a stream-side aggregation with anti-joins, which
-    Structured Streaming's incremental planner cannot run in one
-    continuous plan — so, like the incremental-dedup channel, each
-    micro-batch recomputes the batch plan inside ``foreachBatch``
-    (batch/stream parity by construction: it IS the batch code).
-    Eval rows in the stream are dropped by definition.
-
-    At 100 TB-crawl scale the eval gram frame is megabytes and
-    broadcast; each micro-batch pays one map-side hash join and its
-    own per-doc aggregation — per-batch cost independent of history,
-    the same contract as the incremental-dedup channel."""
-    from pyspark.sql import functions as F
-
-    from ..llm.corpus import word_ngrams, words_array
+    (`llm/dedup.py:decontaminate`): every micro-batch is scrubbed
+    against the STATIC distinct eval-gram frame (the eval split is
+    fixed before the crawl starts, and is megabytes, so it broadcasts).
+    The scrub mixes a stream-side aggregation with anti-joins, which
+    the incremental planner cannot run in one continuous plan, so each
+    micro-batch runs the batch plan — parity by construction.  Eval
+    rows in the stream are dropped by definition.  Merge law:
+    keep-latest per doc_id over the survivors."""
     from ..sources.tables import load_table
     from .channels import read_table_stream
 
@@ -211,47 +247,28 @@ def start_decontamination_channel(
         .distinct()
         .localCheckpoint(eager=False)  # one gram scan, not one per batch
     )
-    stream = read_table_stream(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % eval_mod != 0
-    )
-    spark.createDataFrame(
-        [], "doc_id long, source string, n_chars long"
-    ).createOrReplaceTempView(sink_table)
 
-    from ..sources.sinks import commit_append, read_committed
-
-    # sink_dir is a parameter (matching the incremental-dedup channel's
-    # signature) so a restarted channel can resume the SAME commit log
-    # and replays merge idempotently; mkdtemp is only the demo default.
-    if sink_dir is None:
-        from ..sources.scratch import scratch_dir
-
-        sink_dir = scratch_dir("decon_survivors_")
-
-    def run_batch(batch_df, batch_id):
+    def delta_fn(batch_df):
         ex = batch_df.select("doc_id", F.explode(grams).alias("gram"))
         bad = (
             ex.join(F.broadcast(ev), "gram", "left_semi")
             .select("doc_id")
             .distinct()
         )
-        out = batch_df.select("doc_id", "source", "n_chars").join(
+        return batch_df.select("doc_id", "source", "n_chars").join(
             bad, "doc_id", "left_anti"
         )
-        # executor-side append + atomic manifest (same O(1)-driver-state
-        # contract as the incremental-dedup channel; replays merge
-        # idempotently on doc_id)
-        commit_append(out, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(spark, sink_dir, keys=["doc_id"])
-        except FileNotFoundError:
-            return
-        committed.createOrReplaceTempView(sink_table)
 
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .trigger(availableNow=True)
-        .start()
+    return _start_merge_channel(
+        spark, sf_dir, "documents", sink_table, sink_dir,
+        read_table_stream(spark, sf_dir, "documents").filter(
+            F.col("doc_id") % eval_mod != 0
+        ),
+        slot_prefix="decon_survivors_",
+        empty_schema="doc_id long, source string, n_chars long",
+        keys=["doc_id"],
+        delta_fn=delta_fn,
+        view_fn=lambda c: c.drop("batch"),
     )
 
 
@@ -288,55 +305,24 @@ def start_cms_channel(
     stream=None,
 ):
     """Streaming face of the Count-Min sketch (`llm/vocab.py:
-    cms_build`): documents arrive as micro-batches; each batch builds
-    its OWN depth x width sketch and appends it as a delta through the
-    transactional ``commit_append`` sink, keyed (row, bucket, batch).
-    The live sketch is a lazy VIEW that merges the delta log by
-    counter-wise SUM — the CMS merge law (sketches over disjoint
-    streams add), proven against the batch sketch in
-    tests/test_streaming.py across multiple micro-batches.
-
-    This is the sketch-state-in-the-table shape: the driver holds
-    O(1); a replayed micro-batch rewrites the same (row, bucket,
-    batch) keys and ``read_committed``'s keep-latest dedups it, so
-    restarts merge idempotently; and the view's aggregation input is
-    #batches x depth x width rows — the FIXED sketch size is what
-    bounds it, never the vocabulary or the corpus."""
-    from pyspark.sql import functions as F
-
+    cms_build`) on the `_start_merge_channel` delta log: each batch
+    commits its OWN depth x width sketch keyed (row, bucket, batch),
+    and the view merges the log by counter-wise SUM — the CMS merge
+    law (sketches over disjoint streams add).  The view's input is
+    #batches x depth x width rows: the FIXED sketch size bounds it,
+    never the vocabulary.  Parity with the batch sketch across real
+    micro-batches: tests/test_streaming.py."""
     from ..llm.vocab import cms_build
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
 
-    if sink_dir is None:
-        from ..sources.scratch import scratch_dir
-
-        sink_dir = scratch_dir("cms_sketch_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "documents")
-    spark.createDataFrame(
-        [], "row int, bucket long, c long"
-    ).createOrReplaceTempView(sink_table)
-
-    def run_batch(batch_df, batch_id):
-        delta = cms_build(batch_df).withColumn(
-            "batch", F.lit(int(batch_id)).cast("long")
-        )
-        commit_append(delta, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(
-                spark, sink_dir, keys=["row", "bucket", "batch"]
-            )
-        except FileNotFoundError:
-            return
-        committed.groupBy("row", "bucket").agg(
+    return _start_merge_channel(
+        spark, sf_dir, "documents", sink_table, sink_dir, stream,
+        slot_prefix="cms_sketch_",
+        empty_schema="row int, bucket long, c long",
+        keys=["row", "bucket", "batch"],
+        delta_fn=cms_build,
+        view_fn=lambda c: c.groupBy("row", "bucket").agg(
             F.sum("c").alias("c")
-        ).createOrReplaceTempView(sink_table)
-
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -348,56 +334,24 @@ def start_hll_channel(
     stream=None,
 ):
     """Streaming face of HyperLogLog (`llm/vocab.py:hll_registers`):
-    each micro-batch emits its own complete 2^p register file as a
-    delta keyed (bucket, batch) through ``commit_append``; the live
-    register file is a lazy VIEW merging the delta log by element-wise
-    MAX — the HLL merge law (the register union of two streams is the
-    bucket-wise max), proven against the batch register file across
-    multiple micro-batches in tests/test_streaming.py.
-
-    Same state contract as the CMS channel: sketch lives in the sink
-    table, driver state O(1), replays idempotent via keep-latest on
-    (bucket, batch), view input bounded by #batches x 2^p rows
-    regardless of stream cardinality.  `hll_estimate` folds the
-    merged view into the live distinct count whenever a consumer asks
-    — the register file IS the streaming state, estimates are free."""
-    from pyspark.sql import functions as F
-
-    from ..llm.corpus import words_array
+    each batch commits its complete 2^p register file keyed (bucket,
+    batch), and the view merges by bucket-wise MAX — the HLL merge law
+    (the register file of a union is the element-wise max).  Parity
+    with the batch register file, and so with its `hll_estimate`, is
+    proven across real micro-batches in tests/test_streaming.py."""
     from ..llm.vocab import hll_registers
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
 
-    if sink_dir is None:
-        from ..sources.scratch import scratch_dir
-
-        sink_dir = scratch_dir("hll_regs_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "documents")
-    spark.createDataFrame(
-        [], "bucket long, max_rho int"
-    ).createOrReplaceTempView(sink_table)
-
-    def run_batch(batch_df, batch_id):
-        items = batch_df.select(F.explode(words_array("text")).alias("item"))
-        delta = hll_registers(items).withColumn(
-            "batch", F.lit(int(batch_id)).cast("long")
-        )
-        commit_append(delta, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(
-                spark, sink_dir, keys=["bucket", "batch"]
-            )
-        except FileNotFoundError:
-            return
-        committed.groupBy("bucket").agg(
+    return _start_merge_channel(
+        spark, sf_dir, "documents", sink_table, sink_dir, stream,
+        slot_prefix="hll_regs_",
+        empty_schema="bucket long, max_rho int",
+        keys=["bucket", "batch"],
+        delta_fn=lambda b: hll_registers(
+            b.select(F.explode(words_array("text")).alias("item"))
+        ),
+        view_fn=lambda c: c.groupBy("bucket").agg(
             F.max("max_rho").alias("max_rho")
-        ).createOrReplaceTempView(sink_table)
-
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -413,48 +367,19 @@ def start_histogram_channel(
     n_bins: int = 50,
 ):
     """Streaming face of the histogram rank sketch (`llm/corpus.py:
-    histogram_sketch`): each micro-batch commits its own complete
-    n_bins+2 bin spine as a delta keyed (bin, batch); the live
-    histogram is a lazy VIEW summing the delta log bin-wise — the
-    histogram merge law, same contract as the CMS/HLL channels (state
-    in the sink table, O(1) driver, idempotent replays, view input
-    bounded by #batches x bins).  `histogram_quantiles` folds the
-    merged view into live quantile estimates on demand."""
-    from pyspark.sql import functions as F
-
-    from ..llm.corpus import histogram_sketch
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
-
-    if sink_dir is None:
-        from ..sources.scratch import scratch_dir
-
-        sink_dir = scratch_dir("hist_sketch_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "documents")
-    spark.createDataFrame(
-        [], "bin int, c long"
-    ).createOrReplaceTempView(sink_table)
-
-    def run_batch(batch_df, batch_id):
-        delta = histogram_sketch(
-            batch_df, value_col, lo=lo, hi=hi, n_bins=n_bins
-        ).withColumn("batch", F.lit(int(batch_id)).cast("long"))
-        commit_append(delta, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(
-                spark, sink_dir, keys=["bin", "batch"]
-            )
-        except FileNotFoundError:
-            return
-        committed.groupBy("bin").agg(
-            F.sum("c").alias("c")
-        ).createOrReplaceTempView(sink_table)
-
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .trigger(availableNow=True)
-        .start()
+    histogram_sketch`): each batch commits its complete n_bins+2 bin
+    spine keyed (bin, batch), and the view SUMs the log bin-wise — the
+    histogram merge law.  Parity with the batch sketch and its
+    `histogram_quantiles`: tests/test_streaming.py."""
+    return _start_merge_channel(
+        spark, sf_dir, "documents", sink_table, sink_dir, stream,
+        slot_prefix="hist_sketch_",
+        empty_schema="bin int, c long",
+        keys=["bin", "batch"],
+        delta_fn=lambda b: histogram_sketch(
+            b, value_col, lo=lo, hi=hi, n_bins=n_bins
+        ),
+        view_fn=lambda c: c.groupBy("bin").agg(F.sum("c").alias("c")),
     )
 
 
@@ -469,69 +394,43 @@ def start_reservoir_channel(
     stream=None,
 ):
     """Streaming face of weighted reservoir sampling (`llm/corpus.py:
-    weighted_reservoir_sample`): because the A-Res key is a pure
-    per-row function, the reservoir over a stream is just "the k best
-    keys seen so far" — each micro-batch commits its OWN top-k as a
-    delta keyed (doc_id, batch), and the live sample is a lazy VIEW
-    taking the global top-k over the delta log (key max-merge, the
-    sampling analogue of the sketch channels' sum/max laws; proven
-    equal to the batch sample over the whole table in
-    tests/test_streaming.py across real micro-batches).
+    weighted_reservoir_sample`): the A-Res key is a pure per-row
+    function, so the reservoir over a stream is "the k best keys seen
+    so far".  Each batch commits its OWN top-k keyed (doc_id, batch),
+    and the view takes the global top-k over the log — the TOP-K merge
+    law, at most #batches x k rows in.  A seeded rerun, batch or
+    stream, any partitioning, picks the identical rows
+    (tests/test_streaming.py)."""
 
-    Same state contract as the sketch channels: sample state lives in
-    the sink table (at most #batches x k rows before the view's
-    top-k), the driver holds O(1), replays dedup idempotently.  A
-    seeded rerun — batch or stream, any partitioning — picks the
-    identical rows."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from ..llm.corpus import weighted_reservoir_sample
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
-
-    if sink_dir is None:
-        from ..sources.scratch import scratch_dir
-
-        sink_dir = scratch_dir("reservoir_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "documents")
-    spark.createDataFrame(
-        [], "doc_id long, res_key double, sample_rank int"
-    ).createOrReplaceTempView(sink_table)
-
-    def run_batch(batch_df, batch_id):
+    def delta_fn(batch_df):
         # the delta carries the UNROUNDED key: cross-batch re-ranking
         # on a display-rounded key would collapse realistic weights
         # into ties (the batch face ranks raw for the same reason)
-        top = weighted_reservoir_sample(
+        return weighted_reservoir_sample(
             batch_df.select("doc_id", weight_col),
             k=k,
             weight_col=weight_col,
             seed=seed,
             keep_raw=True,
         ).select("doc_id", "res_key_raw")
-        delta = top.withColumn("batch", F.lit(int(batch_id)).cast("long"))
-        commit_append(delta, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(
-                spark, sink_dir, keys=["doc_id", "batch"]
-            )
-        except FileNotFoundError:
-            return
+
+    def view_fn(committed):
         win = Window.orderBy(F.desc("res_key_raw"), F.asc("doc_id"))
-        committed.select("doc_id", "res_key_raw").withColumn(
-            "sample_rank", F.row_number().over(win)
-        ).filter(F.col("sample_rank") <= k).withColumn(
-            "res_key", F.round("res_key_raw", 6)
-        ).drop("res_key_raw").createOrReplaceTempView(
-            sink_table
+        return (
+            committed.select("doc_id", "res_key_raw")
+            .withColumn("sample_rank", F.row_number().over(win))
+            .filter(F.col("sample_rank") <= k)
+            .withColumn("res_key", F.round("res_key_raw", 6))
+            .drop("res_key_raw")
         )
 
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .trigger(availableNow=True)
-        .start()
+    return _start_merge_channel(
+        spark, sf_dir, "documents", sink_table, sink_dir, stream,
+        slot_prefix="reservoir_",
+        empty_schema="doc_id long, res_key double, sample_rank int",
+        keys=["doc_id", "batch"],
+        delta_fn=delta_fn,
+        view_fn=view_fn,
     )
 
 
@@ -545,39 +444,22 @@ def start_dsir_model_channel(
     stream=None,
 ):
     """Streaming face of the DSIR hashed-unigram models (`llm/text.py:
-    dsir_logratio`): the models' whole sufficient statistic is a pair
-    of per-bucket token counts (raw corpus, target slice) — exact
-    integers that merge by ADDITION — so a continuous ingest keeps
-    them live with the same delta-log contract as the sketch
-    channels: each micro-batch commits its (bucket, cr, ct) deltas
-    keyed (b, batch), the live model is a lazy VIEW summing the log,
-    and importance weights for any document are computable against
-    the view at any moment without rescanning history.  Parity with
-    the batch models is proven across real micro-batches in
-    tests/test_streaming.py.
+    dsir_logratio`): their whole sufficient statistic is a pair of
+    exact per-bucket token counts (raw corpus, target slice), so each
+    batch commits its (b, cr, ct) counts keyed (b, batch) and the view
+    SUMs the log.  Importance weights are computable against the view
+    at any moment without rescanning history; parity with the batch
+    models: tests/test_streaming.py.
 
     ``target_pred`` is the Column predicate naming the in-domain
     slice (default lang = 'en', matching the registered dsir_weights
     query)."""
-    from pyspark.sql import functions as F
-
     from ..llm.dedup import portable_token_hash
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
 
-    if sink_dir is None:
-        from ..sources.scratch import scratch_dir
-
-        sink_dir = scratch_dir("dsir_model_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "documents")
     if target_pred is None:
         target_pred = F.col("lang") == "en"
-    spark.createDataFrame(
-        [], "b long, cr long, ct long"
-    ).createOrReplaceTempView(sink_table)
 
-    def run_batch(batch_df, batch_id):
+    def delta_fn(batch_df):
         ex = batch_df.select(
             target_pred.alias("is_target"),
             F.explode(
@@ -587,27 +469,20 @@ def start_dsir_model_channel(
             "is_target",
             (portable_token_hash(F.col("tok")) % n_buckets).alias("b"),
         )
-        delta = (
-            ex.groupBy("b")
-            .agg(
-                F.count(F.lit(1)).alias("cr"),
-                F.count(F.when(F.col("is_target"), 1)).alias("ct"),
-            )
-            .withColumn("batch", F.lit(int(batch_id)).cast("long"))
+        return ex.groupBy("b").agg(
+            F.count(F.lit(1)).alias("cr"),
+            F.count(F.when(F.col("is_target"), 1)).alias("ct"),
         )
-        commit_append(delta, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(spark, sink_dir, keys=["b", "batch"])
-        except FileNotFoundError:
-            return
-        committed.groupBy("b").agg(
-            F.sum("cr").alias("cr"), F.sum("ct").alias("ct")
-        ).createOrReplaceTempView(sink_table)
 
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .trigger(availableNow=True)
-        .start()
+    return _start_merge_channel(
+        spark, sf_dir, "documents", sink_table, sink_dir, stream,
+        slot_prefix="dsir_model_",
+        empty_schema="b long, cr long, ct long",
+        keys=["b", "batch"],
+        delta_fn=delta_fn,
+        view_fn=lambda c: c.groupBy("b").agg(
+            F.sum("cr").alias("cr"), F.sum("ct").alias("ct")
+        ),
     )
 
 
@@ -620,36 +495,19 @@ def start_gate_dashboard_channel(
 ):
     """Streaming face of the per-source gate dashboard
     (`plans/corpus_q.py:gate_by_source`): every gate decision is a
-    function of ONE document, so per-source rule counts are ADDITIVE
-    across micro-batches — each batch commits its own
-    (source, n_docs, n_keep, n_<rule>...) delta and the live
-    dashboard is a lazy VIEW summing the delta log (the CMS merge
-    law applied to compliance counters).  Same delta-log contract as
-    every sketch channel: state in the sink table, O(1) driver,
-    idempotent replays keyed (source, batch), view input bounded by
-    #batches x #sources and foldable by `compact_log`."""
-    from pyspark.sql import functions as F
-
-    from ..llm.corpus import quality_gate
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
-
-    if sink_dir is None:
-        from ..sources.scratch import scratch_dir
-
-        sink_dir = scratch_dir("gate_dash_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "documents")
+    function of ONE document, so per-source rule counts are ADDITIVE.
+    Each batch commits its (source, n_docs, n_keep, n_<rule>...)
+    counters keyed (source, batch) and the view SUMs the log (the CMS
+    merge law on compliance counters); the log is foldable by
+    `compact_log`.  Parity with the batch dashboard:
+    tests/test_streaming.py."""
     rules = ["too_short", "too_long", "dup_words", "top_word", "word_len"]
-    schema = "source string, n_docs long, n_keep long, " + ", ".join(
-        f"n_{r} long" for r in rules
-    )
-    spark.createDataFrame([], schema).createOrReplaceTempView(sink_table)
+    counts = ["n_docs", "n_keep"] + [f"n_{r}" for r in rules]
 
-    def run_batch(batch_df, batch_id):
+    def delta_fn(batch_df):
         g = quality_gate(batch_df).select("doc_id", "reasons", "keep")
         j = g.join(batch_df.select("doc_id", "source"), "doc_id")
-        delta = j.groupBy("source").agg(
+        return j.groupBy("source").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.when(F.col("keep"), 1).otherwise(0))
             .cast("long")
@@ -664,24 +522,18 @@ def start_gate_dashboard_channel(
                 .alias(f"n_{rl}")
                 for rl in rules
             ],
-        ).withColumn("batch", F.lit(int(batch_id)).cast("long"))
-        commit_append(delta, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(
-                spark, sink_dir, keys=["source", "batch"]
-            )
-        except FileNotFoundError:
-            return
-        committed.groupBy("source").agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("n_keep").alias("n_keep"),
-            *[F.sum(f"n_{rl}").alias(f"n_{rl}") for rl in rules],
-        ).createOrReplaceTempView(sink_table)
+        )
 
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .trigger(availableNow=True)
-        .start()
+    return _start_merge_channel(
+        spark, sf_dir, "documents", sink_table, sink_dir, stream,
+        slot_prefix="gate_dash_",
+        empty_schema="source string, "
+        + ", ".join(f"{c} long" for c in counts),
+        keys=["source", "batch"],
+        delta_fn=delta_fn,
+        view_fn=lambda c: c.groupBy("source").agg(
+            *[F.sum(n).alias(n) for n in counts]
+        ),
     )
 
 
@@ -899,8 +751,6 @@ def start_video_signature_channel(
     committed pair log is what makes a clip pair whose evidence
     straddles micro-batches reach the threshold the moment its later
     frames arrive."""
-    from pyspark.sql import functions as F
-
     from ..llm.multimodal import dhash_video_frames, encode_videos
     from ..plans.modal_q import VIDEO_EVERY_N, fid_clip, fid_frame, vid_fid
 
@@ -987,8 +837,6 @@ def start_signature_channel(
     the video face reduces frame pairs to clip pairs here, so
     evidence that straddles micro-batches counts toward the clip
     threshold as soon as it lands."""
-    from pyspark.sql import functions as F
-
     from ..llm.dedup import incremental_dhash_pairs
     from ..sources.scratch import scratch_dir
     from ..sources.sinks import commit_append, read_committed
@@ -1079,8 +927,6 @@ def start_embedding_index_channel(
     commit BEFORE vectors, and the index read anti-joins the current
     batch's ids so a replay whose vectors already landed cannot
     self-pair."""
-    from pyspark.sql import functions as F
-
     from ..llm.similarity import incremental_embedding_pairs
     from ..sources.scratch import scratch_dir
     from ..sources.sinks import commit_append, read_committed
@@ -1199,8 +1045,6 @@ def start_knn_graph_channel(
     can never be reclaimed out from under a reader.  The channel's
     OWN state (``knng_idx_*`` dirs) is outside both prefixes by
     construction.  ``None`` disables retirement."""
-    from pyspark.sql import functions as F
-
     from ..llm.similarity import knn_graph, lsh_bucket
     from ..sources.scratch import retire_stale_silvers, scratch_dir
     from ..sources.sinks import (

@@ -503,6 +503,69 @@ def test_reservoir_channel_matches_batch_sample(spark, sf_dir, tmp_path):
     assert got == want and len(got) == 25
 
 
+@pytest.mark.parametrize("channel", ["cms", "reservoir"])
+def test_merge_channel_replay_merges_idempotently(
+    spark, sf_dir, tmp_path, channel
+):
+    """A restarted merge-law channel (same sink_dir and source, fresh
+    checkpoint) re-delivers batch ids 0 and 1; keep-latest on each
+    (key, batch) identity must absorb the replay, so the view still
+    equals the batch answer.  A replay that doubled rows would double
+    the CMS counters (SUM law) and repeat reservoir candidates (top-k
+    law).  The query also reports under its sink_table name."""
+    import os
+
+    from streaming_forex_data_pipeline_spark.llm import corpus as CO
+    from streaming_forex_data_pipeline_spark.llm import vocab as VO
+    from streaming_forex_data_pipeline_spark.streaming.channels import (
+        channel_stats,
+    )
+    from streaming_forex_data_pipeline_spark.streaming.corpus_stream import (
+        start_cms_channel,
+        start_reservoir_channel,
+    )
+
+    d, stream = _two_batch_docs_stream(spark, sf_dir, tmp_path)
+    if channel == "cms":
+        start, kw = start_cms_channel, {}
+
+        def answer(df):
+            return {(r["row"], r["bucket"]): r["c"] for r in df.collect()}
+
+        want = answer(VO.cms_build(d))
+    else:
+        start, kw = start_reservoir_channel, {"k": 25}
+
+        def answer(df):
+            return [
+                (r["doc_id"], r["res_key"])
+                for r in df.orderBy("sample_rank").collect()
+            ]
+
+        want = answer(
+            CO.weighted_reservoir_sample(
+                d.select("doc_id", "n_chars"), k=25, weight_col="n_chars",
+                seed="res1",
+            )
+        )
+    sink_table = f"replay_{channel}"
+    sink_dir = str(tmp_path / f"replay_{channel}_sink")
+    for _ in range(2):  # the run, then the restart that replays it
+        q = start(
+            spark, sf_dir, sink_table=sink_table, sink_dir=sink_dir,
+            stream=stream, **kw,
+        )
+        q.awaitTermination(180)
+        assert q.exception() is None
+    assert len(os.listdir(os.path.join(sink_dir, "_log"))) >= 4, (
+        "restart did not replay both micro-batches"
+    )
+    got = answer(spark.table(sink_table))
+    assert got == want and len(got) > 0
+    stats = channel_stats(spark, queries=[q]).collect()
+    assert [r["channel"] for r in stats] == [sink_table]
+
+
 def test_dsir_model_channel_matches_batch_models(spark, sf_dir, tmp_path):
     """The streamed DSIR bucket models (raw + target counts merged by
     sum through the commit log) must equal the batch models computed
