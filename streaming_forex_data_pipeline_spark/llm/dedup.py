@@ -9,42 +9,47 @@ of O(N²) pairs).
 from __future__ import annotations
 
 import math
-import os
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .text import md5_fingerprint
 
-# connected_components broadcast gate (r15 optimization round): when the
-# node set is small enough for its (node, comp) label table to broadcast
-# (~32-48 B/row in the hash relation, so 2M rows ~ 64-96 MB, inside the
-# session's 64 MB auto threshold ballpark and far inside an 8 GB driver),
-# every per-round join (label propagation AND pointer jump) becomes a
-# BroadcastHashJoin: the edge list is never shuffled and each round is a
-# single map stage + one exchange for the min-label aggregation.  Above
-# the gate the loop keeps the shuffle joins, which are the only layout
-# that scales to a 100 TB node set.  The decision comes from a MEASURED
-# count of the actual label table, not an estimate, so it is
-# scale-adaptive rather than tuned to local[32]; raise it on clusters
-# with bigger executors via the env knob.
-_CC_BROADCAST_MAX_NODES = int(
-    os.environ.get("SFDP_CC_BROADCAST_MAX_NODES", str(2_000_000))
-)
+# target rows per edge partition for the Spark CC loop (two BIGINTs a
+# row, ~2M rows ~ 32 MB): the symmetric edge list inherits its
+# partition count from whatever the upstream pair emitter produced, and
+# every propagation round re-scans it — coalescing to a count derived
+# from the MEASURED edge count keeps per-round fixed stage cost
+# proportional to the data instead of the session default.  coalesce()
+# is narrow — no shuffle is added.
+_CC_EDGE_ROWS_PER_PARTITION = 2_000_000
 
-# target rows per edge partition for the CC loop (two BIGINTs a row,
-# ~2M rows ~ 32 MB): the symmetric edge list inherits its partition
-# count from whatever the upstream pair emitter produced (tens of
-# map tasks for a few-hundred-KB frame at bench scale), and every
-# propagation round re-scans it — coalescing to a count derived from
-# the MEASURED edge count keeps per-round fixed stage cost
-# proportional to the data instead of the session default (guide
-# §2.1/§2.2: fixed cost per partition; the r14 scaling block showed
-# cross_modal_clusters FASTER on 8 cores than 32 for exactly this
-# reason).  coalesce() is narrow — no shuffle is added.
-_CC_EDGE_ROWS_PER_PARTITION = int(
-    os.environ.get("SFDP_CC_EDGE_ROWS_PER_PARTITION", str(2_000_000))
-)
+
+def _broadcast_rows(df: DataFrame) -> int:
+    """Rows of ``df``'s schema that fit under the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (read on every call), at
+    Spark's own per-row size estimate (8 bytes + each column's default
+    size); 0 when broadcasting is disabled."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    row_bytes = 8 + df._jdf.schema().defaultSize()
+    return max(conf.autoBroadcastJoinThreshold(), 0) // row_bytes
+
+
+def _collect_if_small(df: DataFrame) -> "pa.Table | None":
+    """The driver-finish gate of the iterative graph loops: a frame
+    small enough that Spark would broadcast it (at most
+    `_broadcast_rows` rows) is small enough to finish on the driver.
+    Returns its rows as an Arrow table, or None above the gate or when
+    the threshold is <= 0.  One job does both the size check and the
+    fetch: ``limit(cap + 1)`` is collected and kept only if it came
+    back with at most ``cap`` rows."""
+    cap = _broadcast_rows(df)
+    if cap <= 0:
+        return None
+    tbl = df.limit(cap + 1).toArrow()
+    return tbl if tbl.num_rows <= cap else None
 
 
 def exact_duplicate_groups(docs: DataFrame, text: str = "text") -> DataFrame:
@@ -503,72 +508,85 @@ def connected_components(
 ) -> DataFrame:
     """Connected components over an undirected pair graph: returns
     ``(node, cluster_id)`` for every node that appears in ``pairs``,
-    with ``cluster_id`` = the minimum node id in its component.
+    with ``cluster_id`` = the minimum node id in its component, so
+    A~B and B~C land in ONE cluster even though (A, C) was never
+    emitted.  Node ids are non-null.
 
-    This is the missing last stage of every near-dup pipeline: the
-    pair emitters (MinHash/SimHash/embedding LSH) produce edges, but a
-    dedup decision needs the transitive closure — A~B and B~C must
-    land A, B, C in ONE cluster even though (A, C) was never emitted.
-    Reference keeps pairs only (`data_quality.py` emits duplicate
-    lists, never groups); this closes them.
+    Under the `_collect_if_small` gate the edge list is fetched once
+    (ONE job over a materialized pair list) and the components are
+    finished on the driver by the same rounds as the Spark loop
+    (`_components_spark`), so the labels are exact, ``max_iterations``
+    raises on the same graphs, and the result is a local frame.  Above
+    the gate the Spark loop runs."""
+    e = pairs.select(
+        F.col(src).alias("e_src"), F.col(dst).alias("e_dst")
+    ).localCheckpoint(eager=False)
+    edges = e.unionByName(
+        e.select(F.col("e_dst").alias("e_src"), F.col("e_src").alias("e_dst"))
+    )
+    # the probe reads the frame the Spark loop reads next, so above the
+    # gate it has materialized e's checkpoint and the upstream pair
+    # emitters still run once
+    small = _collect_if_small(e)
+    if small is None:
+        comp = _components_spark(e, edges, max_iterations)
+    else:
+        schema = edges.toDF("node", "cluster_id").schema
+        comp = _components_driver(
+            e.sparkSession, small, schema, max_iterations
+        )
+    if comp is None:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iterations} rounds"
+        )
+    return comp
 
-    Algorithm: min-label propagation with pointer jumping, the
-    DataFrame rendering of the two-phase star technique (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14).
-    Each round does
+
+def _components_driver(spark, tbl: "pa.Table", schema, max_iterations: int):
+    """`_components_spark`'s rounds in numpy over the collected edge
+    list: node ids map to their sorted positions (so min position is
+    min id), ``np.minimum.at`` is the min-label propagation and
+    ``lab[lab]`` the pointer jump.  None when not converged."""
+    a = tbl.column("e_src").to_numpy()
+    b = tbl.column("e_dst").to_numpy()
+    nodes, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    src, dst = idx, np.concatenate([idx[len(a):], idx[: len(a)]])
+    lab = np.arange(len(nodes))
+    np.minimum.at(lab, src, dst)  # fused first propagation
+    for _ in range(max_iterations):
+        proposed = lab.copy()
+        np.minimum.at(proposed, dst, lab[src])
+        if np.array_equal(proposed, lab):
+            return spark.createDataFrame(
+                pa.table({"node": nodes, "cluster_id": nodes[lab]}), schema
+            )
+        lab = proposed[proposed]
+    return None
+
+
+def _components_spark(e: DataFrame, edges: DataFrame, max_iterations: int):
+    """The above-gate loop, the 100 TB layout: min-label propagation
+    with pointer jumping, the DataFrame rendering of the two-phase star
+    technique (Kiveris et al., "Connected Components in MapReduce and
+    Beyond", SoCC'14).  Each round does
       1. propagate:  label(v) <- min(label(v), min label(u) over
-         neighbours u) — one |E|-sized hash join + a map-side-combined
+         neighbours u) — one |E|-sized shuffle join + a map-side-combined
          min aggregation, and
       2. shortcut:   label(v) <- label(label(v)) — one |V|-sized self
          join (labels are min-monotone, so label(label(v)) <= label(v)
          always holds and the blind overwrite is safe).
     The shortcut step collapses label chains exponentially, so rounds
-    are O(log d) for diameter d rather than O(d) — on a 100 TB corpus
-    the near-dup graph is millions of small dense clusters (d <= 3-4
-    typical) plus rare pathological chains from template drift; the
-    jump step is what keeps those chains from serializing the loop.
-    Initialization fuses the first propagation (label0(v) = min of v's
-    closed neighbourhood, one groupBy) — for clique-shaped components,
-    the overwhelmingly common near-dup case, label0 is already the
-    fixpoint and the loop runs a single verify round.  Each round's
-    frames are lazily ``localCheckpoint``-ed and materialized by the
-    convergence count: without lineage truncation the plan doubles per
-    iteration and Catalyst analysis time dominates after ~10 rounds.
+    are O(log d) for diameter d rather than O(d).  Each round's frames
+    are lazily ``localCheckpoint``-ed and materialized by the
+    convergence action: without lineage truncation the plan doubles
+    per iteration.
 
-    Convergence is detected from the LABEL-SUM invariant (r14
-    optimization round): labels are min-monotone — a round can only
-    ever DECREASE a node's label, never increase it, and the node set
-    is fixed after initialization — so Σ label changed iff any label
-    changed.  Comparing Σ(proposed) (an exact DECIMAL(38,0) sum,
-    overflow-free at any corpus size) with Σ(current labels) replaces
-    the per-round changed-count JOIN with a map-side-combined
-    aggregate over the frames the checkpoints materialize anyway, and
-    (r15) BOTH sums ride ONE tagged-union aggregate job, so each round
-    costs exactly one driver action.  The check runs BEFORE the jump
-    join — a propagation fixpoint forces label equality across every
-    symmetric edge, so converged labels are already component-constant
-    — and the jump checkpoint stays lazy, so the final round never
-    executes its jump at all.  The loop asserts convergence within
-    ``max_iterations`` rather than silently returning a partial
-    clustering.
-
-    Join strategy and layout are derived from MEASURED sizes, not the
-    session default (r15, guide §2.1/§3.1): one sizing pass counts the
-    label and edge tables; a node set under the broadcast gate turns
-    every per-round join into a BroadcastHashJoin (the edge list is
-    then scanned but never shuffled), and the edge scan is coalesced
-    to ~|E|-proportional partitions so per-round fixed stage cost
-    tracks the data.  Above the gate the loop keeps shuffle joins —
-    the 100 TB layout.
-    """
-    edges = pairs.select(
-        F.col(src).alias("e_src"), F.col(dst).alias("e_dst")
-    )
-    edges = edges.unionByName(
-        edges.select(
-            F.col("e_dst").alias("e_src"), F.col("e_src").alias("e_dst")
-        )
-    ).localCheckpoint(eager=False)
+    Convergence comes from the LABEL-SUM invariant: labels are
+    min-monotone over a fixed node set, so Σ label changed iff any
+    label changed; Σ(labels) and Σ(proposed) (exact DECIMAL(38,0))
+    ride ONE tagged-union aggregate job per round, checked BEFORE the
+    jump join — a propagation fixpoint forces label equality across
+    every symmetric edge.  None when not converged."""
     # Fused first propagation: label0(v) = min(v, min neighbour) from a
     # single groupBy over the symmetric edge list.  Near-dup components
     # are overwhelmingly cliques (identical/near-identical docs all
@@ -581,26 +599,18 @@ def connected_components(
         .select("node", F.least("node", "m").alias("comp"))
         .localCheckpoint(eager=False)
     )
-    # ONE sizing pass (materializes the labels AND edges checkpoints —
-    # the loop was going to pay that anyway on its first action): the
-    # measured |V| gates the broadcast plan, the measured |E| sizes the
-    # per-round scan partitioning.  Both are data-derived, so the same
-    # code picks shuffle joins and wide scans on a 100 TB graph.
-    n_nodes = labels.count()
-    n_sym_edges = edges.count()  # cached RDD after the count above
+    # the measured |E| sizes the per-round scan partitioning (e's
+    # checkpoint is already materialized by the gate probe)
+    n_sym_edges = 2 * e.count()
     npart = edges.rdd.getNumPartitions()
     target = max(
         1, math.ceil(n_sym_edges / _CC_EDGE_ROWS_PER_PARTITION)
     )
     if target < npart:
         edges = edges.coalesce(target)  # narrow: merges cached blocks
-    small = n_nodes <= _CC_BROADCAST_MAX_NODES
-    bc = F.broadcast if small else (lambda f: f)
 
     def tagged_sums(before: DataFrame, after: DataFrame):
         # exact Σ comp — DECIMAL(38,0) so ids near 2^63 cannot wrap.
-        # BOTH sums ride one tagged-union aggregate job (r14 verdict
-        # Next #3a: the loop used to pay two collects per round);
         # `before` is upstream of `after`, so its checkpoint is
         # materialized once inside this job and read twice.
         rows = (
@@ -615,7 +625,7 @@ def connected_components(
 
     for _ in range(max_iterations):
         nbr = edges.join(
-            bc(labels.withColumnRenamed("node", "e_src")), "e_src"
+            labels.withColumnRenamed("node", "e_src"), "e_src"
         ).select(F.col("e_dst").alias("node"), "comp")
         # lazy checkpoint: the tagged-sum action below materializes it,
         # truncating lineage without paying a separate job
@@ -625,20 +635,13 @@ def connected_components(
             .agg(F.min("comp").alias("comp"))
             .localCheckpoint(eager=False)
         )
-        # ONE action per round: Σ(labels) — the post-jump baseline the
-        # old second collect existed to take, now deferred into the
-        # round that consumes it — and Σ(proposed) together.  The jump
-        # checkpoint is lazy, so on the final round the jump join is
-        # never executed at all (the convergence check still fires
-        # BEFORE the jump, exactly as before).
+        # ONE action per round: Σ(labels) and Σ(proposed) together.  The
+        # jump checkpoint is lazy, so on the final round the jump join
+        # is never executed at all.
         base_sum, new_sum = tagged_sums(labels, proposed)
         # min-monotone labels over a fixed node set: Σ unchanged <=>
         # no label changed (every change strictly decreases one term)
         if new_sum == base_sum:
-            # propagation fixpoint: label(v) = min over v's closed
-            # neighbourhood for every v forces label equality across
-            # every (symmetric) edge, i.e. labels are already constant
-            # per component — the jump join is unnecessary
             return labels.select("node", F.col("comp").alias("cluster_id"))
         jump = proposed.select(
             F.col("node").alias("comp"), F.col("comp").alias("jumped")
@@ -647,13 +650,11 @@ def connected_components(
         # must be compared against Σ(post-jump labels) — which the
         # next round's tagged aggregate computes as its `before` leg
         labels = (
-            proposed.join(bc(jump), "comp", "left")
+            proposed.join(jump, "comp", "left")
             .select("node", F.coalesce("jumped", "comp").alias("comp"))
             .localCheckpoint(eager=False)
         )
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iterations} rounds"
-    )
+    return None
 
 
 def near_dup_clusters(
@@ -1475,7 +1476,7 @@ def cross_modal_clusters(
     Returns one row per cluster: (cluster_id, n_docs, keep_doc,
     n_<modality>_edges per modality), ordered by cluster_id.
     Plan shape: the components come from `connected_components`
-    (pointer jumping, O(log d) rounds); the keep decision is a
+    (one driver-finish job on graphs under its gate); the keep decision is a
     map-side-combinable max of a (quality, -doc_id) struct — NO
     per-cluster window, so a pathological giant cluster (this
     synthetic corpus chains most documents together at sf0.1) never
@@ -1484,20 +1485,19 @@ def cross_modal_clusters(
     cluster (doc_a and doc_b are in the same cluster by
     construction, so either endpoint attributes the edge)."""
     # one materialization for BOTH consumers: connected_components
-    # checkpoints its own symmetric derivative, but the per-modality
+    # checkpoints its own (src, dst) projection, but the per-modality
     # edge counts below read the ORIGINAL labeled frame — without this
     # cut the upstream pair emitters (four full signature passes on
     # the registered query) execute a second time for ecnt
     edges = edges.localCheckpoint(eager=False)
     comp = connected_components(edges)
-    # comp is a checkpoint-backed frame with NO size statistics, so
-    # the planner sort-merge-joins it against the edge list even when
-    # it is tiny; counting the already-materialized checkpoint is
-    # metadata-cheap and gates a broadcast the same way the CC loop
-    # itself does (r15, guide §3.1 — measured size, not estimate)
+    # above the CC gate comp is a checkpoint-backed frame with NO size
+    # statistics, so the planner sort-merge-joins it against the edge
+    # list even when it is under the broadcast threshold; its measured
+    # row count against the same threshold rule gates the broadcast
     bc = (
         F.broadcast
-        if comp.count() <= _CC_BROADCAST_MAX_NODES
+        if comp.count() <= _broadcast_rows(comp)
         else (lambda f: f)
     )
     members = bc(comp).join(

@@ -1080,6 +1080,19 @@ def knn_graph_delta(
     return carried.unionByName(rebuilt)
 
 
+def _pagerank_headroom(damping_pct: int, n_nodes: int, scale: int) -> None:
+    """The int64 headroom of `integer_pagerank`, enforced on both paths:
+    the largest in-flight int64 is damping_pct * (total mass) =
+    d * N * scale inside the contribution sum; with non-ANSI configs
+    exceeding 2^63 would WRAP silently and corrupt ranks."""
+    if damping_pct * n_nodes * scale >= 2**63:
+        raise ValueError(
+            f"integer_pagerank overflow: damping_pct*n_nodes*scale = "
+            f"{damping_pct}*{n_nodes}*{scale} >= 2^63; lower `scale` "
+            f"(1e8 holds to ~1e9 nodes) to keep the recurrence in int64"
+        )
+
+
 def integer_pagerank(
     edges: DataFrame,
     nodes: DataFrame,
@@ -1088,8 +1101,7 @@ def integer_pagerank(
     damping_pct: int = 85,
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """PageRank in EXACT INTEGER arithmetic — the iterative distributed
-    graph algorithm, made engine-portable: ranks are int64 mass units
+    """PageRank in EXACT INTEGER arithmetic: ranks are int64 mass units
     (``scale`` per node at t=0) and every step is integer division and
     integer sums, so the result is bit-identical under any partitioning,
     aggregation order, or engine (a float PageRank compounds ulp drift
@@ -1099,45 +1111,37 @@ def integer_pagerank(
         R_0(v)     = scale
         R_{t+1}(v) = (100-d)*scale//100
                      + d * SUM_{u->v}( R_t(u) // outdeg(u) ) // 100
-    Nodes without out-edges leak their mass (the dropped-dangling
-    variant) — deterministic and documented, the standard choice when
-    normalization is not needed for RANKING.
+    with outdeg over ALL edges and only edges between ``nodes`` ids
+    contributing.  Nodes without out-edges leak their mass (the
+    dropped-dangling variant).  d * N * scale must stay < 2^63 (at
+    scale=1e12 that holds to N ~ 10^5 nodes) or a ValueError is raised.
 
-    Scale shape: each iteration is one edges-keyed join + one keyed
-    integer sum — the textbook Pregel step expressed relationally;
-    lineage is cut with localCheckpoint every 3 iterations (the
-    connected-components precedent) so 10 iterations don't stack a
-    10-deep join plan into the optimizer.  Overflow headroom: the
-    in-flight quantity d * N * scale must stay < 2^63 — at the default
-    scale=1e12 that holds to N ~ 10^5 nodes; drop scale to 1e8 for
-    10^9-node graphs.  ENFORCED at runtime: nodes are counted once
-    (the same action that materializes the reused checkpoint) and a
-    breach raises instead of wrapping under non-ANSI configs.
+    Under the `_collect_if_small` gate (edges and node ids) this starts
+    TWO jobs, one fetch each, and runs the same int64 recurrence in
+    numpy on the driver, so the ranks are bit-identical to the Spark
+    loop's; the result is a local frame.  Above the gate each iteration
+    is one edges-keyed join + one keyed integer sum.
 
     Returns (id_col, pr) with pr the exact BIGINT mass."""
+    from .dedup import _collect_if_small
+
     base = (100 - damping_pct) * scale // 100
     e = edges.select("src", "dst")
+    ids = nodes.select(F.col(id_col).alias("__id"))
+    small_e = _collect_if_small(e)
+    small_n = None if small_e is None else _collect_if_small(ids)
+    if small_n is not None:
+        return _pagerank_driver(
+            ids, small_e, small_n, iters, scale, damping_pct, base, id_col
+        )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
     ed = e.join(deg, "src").localCheckpoint(eager=False)
     # checkpoint the node frame too: it re-enters the plan every
     # iteration (the left join restoring zero-in-degree nodes), and
-    # without this each segment re-scans the source parquet
-    node_ids = nodes.select(F.col(id_col).alias("__id")).localCheckpoint(
-        eager=False
-    )
-    # Enforce the documented headroom instead of stating it (round-8
-    # ADVICE): the largest in-flight int64 is damping_pct * (total
-    # mass) = d * N * scale inside the contribution sum; with non-ANSI
-    # configs exceeding 2^63 would WRAP silently and corrupt ranks.
-    # The count also eagerly materializes the node checkpoint we reuse
-    # every iteration, so it costs one scan we were about to pay anyway.
-    n_nodes = node_ids.count()
-    if damping_pct * n_nodes * scale >= 2**63:
-        raise ValueError(
-            f"integer_pagerank overflow: damping_pct*n_nodes*scale = "
-            f"{damping_pct}*{n_nodes}*{scale} >= 2^63; lower `scale` "
-            f"(1e8 holds to ~1e9 nodes) to keep the recurrence in int64"
-        )
+    # without this each segment re-scans the source parquet; the
+    # headroom count materializes it
+    node_ids = ids.localCheckpoint(eager=False)
+    _pagerank_headroom(damping_pct, node_ids.count(), scale)
     ranks = node_ids.withColumn("pr", F.lit(scale).cast("long"))
     for it in range(iters):
         contrib = (
@@ -1165,9 +1169,43 @@ def integer_pagerank(
                 ).cast("long").alias("pr"),
             )
         )
+        # lineage cut every 3 iterations keeps the join plan shallow
         if it % 3 == 2:
             ranks = ranks.localCheckpoint(eager=False)
     return ranks.select(F.col("__id").alias(id_col), "pr")
+
+
+def _pagerank_driver(
+    ids: DataFrame, small_e, small_n, iters, scale, damping_pct, base, id_col
+) -> DataFrame:
+    """`integer_pagerank`'s recurrence in int64 numpy over the fetched
+    edges and node ids.  A node id listed m times counts m times, as
+    it does in the joins: m rank rows, each sending its share."""
+    import numpy as np
+    import pyarrow as pa
+
+    node_col = small_n.column("__id").to_numpy()
+    _pagerank_headroom(damping_pct, len(node_col), scale)
+    uniq, mult = np.unique(node_col, return_counts=True)
+    src = small_e.column("src").to_numpy()
+    dst = small_e.column("dst").to_numpy()
+    _, src_pos, outdeg = np.unique(
+        src, return_inverse=True, return_counts=True
+    )
+    # outdegree over ALL edges; then only edges inside the node set
+    # contribute (the inner join on src, the left join on dst)
+    keep = np.isin(src, uniq) & np.isin(dst, uniq)
+    si = np.searchsorted(uniq, src[keep])
+    di = np.searchsorted(uniq, dst[keep])
+    deg = outdeg[src_pos[keep]]
+    ranks = np.full(len(uniq), scale, dtype=np.int64)
+    for _ in range(iters):
+        s = np.zeros(len(uniq), dtype=np.int64)
+        np.add.at(s, di, ranks[si] // deg * mult[si])
+        ranks = base + damping_pct * s // 100
+    schema = ids.toDF(id_col).schema.add("pr", "long")
+    out = {id_col: np.repeat(uniq, mult), "pr": np.repeat(ranks, mult)}
+    return ids.sparkSession.createDataFrame(pa.table(out), schema)
 
 
 def ivf_pq_topk(
@@ -1537,39 +1575,29 @@ def knn_graph_search(
     n_planes: int = 4,
 ) -> DataFrame:
     """Greedy beam search over a prebuilt kNN graph — the navigation
-    tier that graph-based ANN (HNSW's base layer) runs at query time,
-    completing the ladder: brute force -> LSH buckets -> IVF cells ->
-    PQ codes -> kNN-graph BUILD (`knn_graph`) -> graph SEARCH (this).
+    tier that graph-based ANN (HNSW's base layer) runs at query time.
 
     Deterministic greedy best-first with a fixed step budget: start
     from ``entry_ids`` — default ONE ENTRY PER LSH BUCKET (the lowest
     vec_id; ``n_planes`` must match the graph build), because the
-    bucketed build yields one disconnected component per bucket and a
-    single-entry walk can never leave its component (measured: recall
-    0 from a lone entry, the bridging failure IVF-style multi-entry
-    exists to fix).  Each round expands the current beam's out-edges,
-    scores unvisited candidates by cosine to the query, and keeps the
-    top-``beam`` of ALL visited nodes (ties to the lower vec_id).
-    After ``steps`` rounds the answer is the top-``k`` of the visited
-    set — so the oracle can replay the walk exactly as ``steps``
-    unrolled relational rounds.
+    bucketed build yields one disconnected component per bucket.  Each
+    round expands the current beam's out-edges, scores unvisited
+    candidates by cosine to the query (zero-norm vectors excluded),
+    and keeps the top-``beam`` of ALL visited nodes (ties to the lower
+    vec_id).  After ``steps`` rounds the answer is the top-``k`` of the
+    visited set, (vec_id, cos_sim) in that order.
 
-    Driver-side loop with BOUNDED collects: the beam is <= ``beam``
-    ids and the visited set <= #entries + steps·beam·k_graph ids
-    (tens at the defaults) — scalar-scale frontier state, never
-    data-sized; the per-round candidate scoring is a broadcast-id
-    probe of the scores frame.  At 100 TB the graph lives in a silver
-    bucketed by src, so each expansion is a pruned point lookup, and
-    the corpus is never scanned beyond the one pass that builds the
-    scores projection."""
+    Under the `_collect_if_small` gate (graph and scores) this starts
+    one job for the graph and one scores pass, and walks on the driver
+    with the same cosines, ordering (`_cos_desc_key`) and break
+    conditions as the Spark loop, so the answer is identical; the
+    result is a local frame.  Above the gate each round is a bounded
+    candidate collect plus an isin probe of the checkpointed scores."""
     from ..sources.tables import fan_out
+    from .dedup import _collect_if_small
 
-    # one corpus pass, materialized: every round's top-beam re-ranking
-    # and the final top-k probe hit the (vec_id, cos_sim) projection —
-    # N x 16 bytes, distributed — instead of re-scanning embeddings
-    # per round (the walk is `steps` sequential rounds).  fan_out
-    # splits the single-row-group parquet across cores and norms are
-    # computed once per vector, not per pair (r12 bench finding).
+    # fan_out splits the single-row-group parquet across cores and
+    # norms are computed once per vector, not per pair
     base = fan_out(
         emb.select("vec_id", F.col("embedding").alias("v"))
     ).select(
@@ -1581,6 +1609,22 @@ def knn_graph_search(
     q = query.select(F.col("embedding").alias("qv")).select(
         "qv", norm("qv").alias("qn")
     )
+    small_g = _collect_if_small(graph.select("src", "dst"))
+    if small_g is not None:
+        # every vector's bucket (for the entries) and its guarded cosine
+        # (NULL for a zero-norm vector, which the walk never scores)
+        cos = guarded_cos(dot("v", "qv"), F.col("n"), F.col("qn"))
+        pairs = base.crossJoin(F.broadcast(q)).select(
+            "vec_id", "bucket", cos.alias("cos_sim")
+        )
+        small_s = _collect_if_small(pairs)
+        if small_s is not None:
+            top = _walk_driver(small_g, small_s, k, beam, steps, entry_ids)
+            return emb.sparkSession.createDataFrame(
+                top, pairs.select("vec_id", "cos_sim").schema
+            )
+    # one corpus pass, materialized: every round's probe hits the
+    # (vec_id, cos_sim) projection instead of re-scanning embeddings
     scores = (
         base.crossJoin(F.broadcast(q))
         # zero-norm guard (advice r12): dot/(n*qn) on a zero-norm
@@ -1599,26 +1643,13 @@ def knn_graph_search(
         )
         .localCheckpoint()
     )
-    # driver-side score cache (bounded: one float per visited id) —
-    # each round is then ONE job (candidate expansion + their scores
-    # in a single plan) instead of two, and the beam re-rank costs
-    # nothing; orderings replicate Spark's exactly ((-cos, id) with
-    # all-finite doubles), so the walk is unchanged (r12: the
-    # two-jobs-per-round shape dominated the warm query's wall time)
-    # every probe below is frontier-sized and BOUNDED (one entry per
-    # bucket / beam*k_graph candidates per round) while `scores` is
-    # the corpus-sized checkpoint WITHOUT size statistics
-    # (ExistingRDD) — the old per-round `cands.join(scores)` therefore
-    # sort-merge-joined, re-shuffling the whole score matrix every
-    # round for a dozens-of-ids lookup, and even a broadcast-hinted
-    # join still paid a distinct exchange plus a broadcast-build
-    # sub-job per round (~0.5 s/round measured at sf0.1).  Two
-    # single-stage jobs per round — collect the bounded candidate-id
-    # set, then scan scores once with an isin filter — is the minimal
-    # shape (r15; guide §1.2/§2.4: per-round fixed latency, not bytes,
-    # dominated this walk).  Ids that the zero-norm guard dropped from
-    # `scores` simply never come back from the isin scan, exactly as
-    # they never matched the old join.
+    # driver-side score cache (bounded: one float per visited id), so
+    # each round is two single-stage jobs — collect the bounded
+    # candidate-id set, then scan scores once with an isin filter;
+    # `scores` is a checkpoint WITHOUT size statistics, so a join
+    # would sort-merge the whole score matrix per round.  Ids that the
+    # zero-norm guard dropped from `scores` simply never come back
+    # from the isin scan.
     if entry_ids is None:
         ids0 = sorted(
             int(r["vec_id"])
@@ -1655,6 +1686,50 @@ def knn_graph_search(
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(k)
     )
+
+
+def _walk_driver(small_g, small_s, k, beam, steps, entry_ids):
+    """`knn_graph_search`'s Spark-loop walk over the fetched graph and
+    (vec_id, bucket, cos_sim) rows: entries, break conditions,
+    beam ranking and the final top-``k`` replay it step for step, with
+    the out-edges of a beam read from the src-sorted edge arrays
+    (EDBT 2020's case for keeping top-k search state on the driver).
+    Returns the top-``k`` as (vec_id, cos_sim) tuples, best first."""
+    import numpy as np
+
+    src = small_g.column("src").to_numpy()
+    order = np.argsort(src, kind="stable")
+    src, dst = src[order], small_g.column("dst").to_numpy()[order]
+    score = {
+        int(i): c
+        for i, c in zip(
+            small_s.column("vec_id").to_pylist(),
+            small_s.column("cos_sim").to_pylist(),
+        )
+        if c is not None
+    }
+    if entry_ids is None:
+        mins = small_s.group_by("bucket").aggregate([("vec_id", "min")])
+        ids0 = sorted(int(i) for i in mins.column("vec_id_min").to_pylist())
+    else:
+        ids0 = sorted({int(e) for e in entry_ids})
+    cos_of = {i: score[i] for i in ids0 if i in score}
+    visited = set(cos_of)
+    beam_ids = sorted(visited)
+    for _ in range(steps):
+        lo = np.searchsorted(src, beam_ids, side="left")
+        hi = np.searchsorted(src, beam_ids, side="right")
+        cands = {int(d) for a, b in zip(lo, hi) for d in dst[a:b]} - visited
+        if not cands:
+            break  # frontier exhausted: further rounds are no-ops
+        new = {c: score[c] for c in cands if c in score}
+        if not new:
+            break  # every new candidate was a guarded zero-norm row
+        cos_of.update(new)
+        visited |= set(new)
+        beam_ids = sorted(visited, key=_cos_desc_key(cos_of))[:beam]
+    top = sorted(visited, key=_cos_desc_key(cos_of))[:k]
+    return [(i, cos_of[i]) for i in top]
 
 
 def batch_cosine_scores(emb: DataFrame, queries: DataFrame) -> DataFrame:

@@ -713,9 +713,11 @@ ORDER BY doc_id
     doc="Near-dup pair graph -> connected components -> cluster "
     "assignment with sizes (llm/dedup.py connected_components): "
     "min-label propagation + pointer jumping (Kiveris SoCC'14 star "
-    "technique as DataFrame joins, localCheckpoint per round), so "
-    "transitively-linked docs land in one cluster even when the LSH "
-    "stage never emitted the closing pair.  Reference parity: "
+    "technique), finished on the driver after one fetch of the pair "
+    "list when it is under the broadcast threshold (DataFrame join "
+    "rounds above it), so transitively-linked docs land in one "
+    "cluster even when the LSH stage never emitted the closing pair.  "
+    "Reference parity: "
     "data_quality.py stops at duplicate PAIR lists; the cluster "
     "closure is what a dedup decision actually consumes.  Oracle: "
     "DuckDB recursive-CTE reachability with min-label aggregation — "
@@ -1407,9 +1409,11 @@ LIMIT 10
     "LSH).  Deterministic walk: one entry per 4-plane bucket, "
     "8-step budget, beam 16, ties to the lower vec_id — so "
     "the oracle replays it exactly as 8 unrolled relational "
-    "rounds over the SAME graph CTEs.  Driver state is the bounded "
-    "frontier (tens of ids), never data-sized; at 100 TB each "
-    "expansion is a point probe of a src-bucketed graph silver.  "
+    "rounds over the SAME graph CTEs.  Under the broadcast "
+    "threshold the graph and the query's scores are fetched once and "
+    "the walk runs on the driver; above it each expansion is a point "
+    "probe of the graph silver with a bounded frontier (tens of "
+    "ids).  "
     "Recall@10 vs brute force ~0.5-0.6 here (floor-pinned in "
     "tests/test_operators.py) — the navigation tier completing the "
     "ANN ladder after the `knn_graph` BUILD step.",

@@ -1134,11 +1134,12 @@ LIMIT {k}
     "in INTEGER mass units (int64 floor arithmetic end to end): a "
     "float PageRank compounds ulp drift across iterations and can "
     "never be strictly compared cross-engine, while integer sums are "
-    "aggregation-order-free by construction.  Physical shape per "
-    "iteration: one edges-keyed join + one keyed integer sum (the "
-    "Pregel step expressed relationally), lineage cut every 3 "
-    "iterations; the oracle unrolls the same 10 steps as chained "
-    "CTEs.  Top-20 via TakeOrdered.",
+    "aggregation-order-free by construction.  Under the broadcast "
+    "threshold the edges and node ids are fetched once and the 10 "
+    "int64 steps run on the driver (bit-identical); above it each "
+    "step is one edges-keyed join + one keyed integer sum (the Pregel "
+    "step expressed relationally).  The oracle unrolls the same 10 "
+    "steps as chained CTEs.  Top-20 via TakeOrdered.",
 )
 def pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llm import similarity as SIM

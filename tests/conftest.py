@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import functools
 import os
+from contextlib import contextmanager
 
 import duckdb
 import pytest
@@ -16,6 +18,40 @@ def spark():
     s = get_spark("sfdp-tests")
     yield s
     s.stop()
+
+
+@contextmanager
+def _gate_side(spark, side: str):
+    """Run the block on one side of the graph loops' driver-finish gate
+    (llm/dedup.py:_collect_if_small): ``driver`` keeps the session's
+    broadcast threshold; ``spark`` sets
+    spark.sql.autoBroadcastJoinThreshold=-1, so every graph counts as
+    too big and the Spark loops run.  The session value is restored,
+    never unset (the shared session pins a non-default 64 MB)."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key, None)
+    if side == "spark":
+        spark.conf.set(key, "-1")
+    try:
+        yield side
+    except BaseException as exc:
+        exc.add_note(f"graph-loop gate side: {side}")
+        raise
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+@pytest.fixture
+def gate_sides(spark):
+    """Both sides of the graph loops' gate, driver then spark, as
+    context managers that yield the side's name:
+    ``for side in gate_sides: with side(): ...``."""
+    return [
+        functools.partial(_gate_side, spark, side) for side in ("driver", "spark")
+    ]
 
 
 @pytest.fixture(scope="session")

@@ -313,23 +313,25 @@ def test_ivf_kmeans_dominates_on_clustered_corpus(spark):
     assert tot_km > tot_boot
 
 
-def test_connected_components_closes_transitive_pairs(spark):
+def test_connected_components_closes_transitive_pairs(spark, gate_sides):
     """A~B and B~C cluster A,B,C together even though (A,C) was never
     emitted; separate components keep separate min-id labels; the
     64-edge chain forces multiple pointer-jump rounds."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (20, 22), (20, 23)],
-        "doc_a long, doc_b long",
-    )
-    got = {r["node"]: r["cluster_id"] for r in DD.connected_components(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10,
-                   20: 20, 21: 20, 22: 20, 23: 20}
+    for side in gate_sides:
+        with side():
+            pairs = spark.createDataFrame(
+                [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (20, 22), (20, 23)],
+                "doc_a long, doc_b long",
+            )
+            got = {r["node"]: r["cluster_id"] for r in DD.connected_components(pairs).collect()}
+            assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10,
+                           20: 20, 21: 20, 22: 20, 23: 20}
 
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(64)], "doc_a long, doc_b long"
-    )
-    labs = DD.connected_components(chain).collect()
-    assert len(labs) == 65 and {r["cluster_id"] for r in labs} == {0}
+            chain = spark.createDataFrame(
+                [(i, i + 1) for i in range(64)], "doc_a long, doc_b long"
+            )
+            labs = DD.connected_components(chain).collect()
+            assert len(labs) == 65 and {r["cluster_id"] for r in labs} == {0}
 
 
 def test_dedup_canonical_keeps_one_per_cluster_plus_singletons(spark):
@@ -1419,7 +1421,7 @@ def test_reservoir_by_group_groups_are_independent(spark):
     assert sum(1 for (s, _r) in after if s == "NEW") == 5
 
 
-def test_integer_pagerank_matches_python_recurrence(spark):
+def test_integer_pagerank_matches_python_recurrence(spark, gate_sides):
     """On a small fixed graph the int64 recurrence must equal a pure
     Python implementation EXACTLY (no tolerance — that's the point of
     integer PageRank), the hub of a star graph must rank first, and
@@ -1445,14 +1447,16 @@ def test_integer_pagerank_matches_python_recurrence(spark):
             contrib[t] = contrib.get(t, 0) + pr[s] // deg[s]
         pr = {v: base + (D * contrib.get(v, 0)) // 100 for v in range(10)}
 
-    for parts in (1, 5):
-        got = {
-            r["vec_id"]: r["pr"]
-            for r in integer_pagerank(
-                edges.repartition(parts), nodes, iters=IT, scale=S
-            ).collect()
-        }
-        assert got == pr, f"parts={parts}: integer recurrence diverged"
+    for side in gate_sides:
+        with side():
+            for parts in (1, 5):
+                got = {
+                    r["vec_id"]: r["pr"]
+                    for r in integer_pagerank(
+                        edges.repartition(parts), nodes, iters=IT, scale=S
+                    ).collect()
+                }
+                assert got == pr, f"parts={parts}: integer recurrence diverged"
     # after finitely many iterations the hub's mass oscillates with its
     # sole beneficiary (9 -> 0 -> 9 ...), so assert the robust property:
     # both beat every plain spoke, which holds base mass only
@@ -1846,7 +1850,7 @@ def test_rsi_atr_native_track_exact_kernels(spark, sf_dir):
 
 
 @pytest.mark.slow  # r15: slow lane (see pytest.ini)
-def test_knn_graph_search_recall_floor(spark, sf_dir):
+def test_knn_graph_search_recall_floor(spark, sf_dir, gate_sides):
     """The graph-probe ANN tier (llm/similarity.py:knn_graph_search over
     the union 4-plane/2-plane kNN graph) must clear a recall floor
     against brute-force truth — the grade that makes an approximate
@@ -1867,26 +1871,28 @@ def test_knn_graph_search_recall_floor(spark, sf_dir):
     g4 = SIM.knn_graph(e, k=3, n_planes=4).select("src", "dst")
     g2 = SIM.knn_graph(e, k=3, n_planes=2).select("src", "dst")
     union = g4.unionByName(g2).distinct()
-    got_union = {
-        r["vec_id"]
-        for r in SIM.knn_graph_search(
-            e, union, qdf, k=10, beam=16, steps=8
-        ).collect()
-    }
-    recall_union = len(truth & got_union) / 10
-    assert recall_union >= 0.4, f"union-graph recall {recall_union} < 0.4"
-    got_single = {
-        r["vec_id"]
-        for r in SIM.knn_graph_search(
-            e, g4, qdf, k=10, beam=16, steps=8
-        ).collect()
-    }
-    recall_single = len(truth & got_single) / 10
-    assert recall_union >= recall_single, (recall_union, recall_single)
+    for side in gate_sides:
+        with side():
+            got_union = {
+                r["vec_id"]
+                for r in SIM.knn_graph_search(
+                    e, union, qdf, k=10, beam=16, steps=8
+                ).collect()
+            }
+            recall_union = len(truth & got_union) / 10
+            assert recall_union >= 0.4, f"union-graph recall {recall_union} < 0.4"
+            got_single = {
+                r["vec_id"]
+                for r in SIM.knn_graph_search(
+                    e, g4, qdf, k=10, beam=16, steps=8
+                ).collect()
+            }
+            recall_single = len(truth & got_single) / 10
+            assert recall_union >= recall_single, (recall_union, recall_single)
 
 
 @pytest.mark.slow  # r15: slow lane (see pytest.ini)
-def test_batch_graph_walk_matches_single_query_walks(spark, sf_dir):
+def test_batch_graph_walk_matches_single_query_walks(spark, sf_dir, gate_sides):
     """r11 verdict Next #3 done-criterion: the set-oriented batch walk
     (llm/similarity.py:knn_graph_search_batch) must reproduce the
     single-query walk's result for EVERY query in the batch — same
@@ -1913,25 +1919,27 @@ def test_batch_graph_walk_matches_single_query_walks(spark, sf_dir):
     assert batch["qid"].nunique() == queries.count()
     # spot-check three spread-out queries against the single walk
     sample = sorted(batch["qid"].unique())[::31][:3]
-    for qid in sample:
-        single = (
-            SIM.knn_graph_search(
-                e,
-                union,
-                e.filter(F.col("vec_id") == int(qid)),
-                k=10,
-                beam=16,
-                steps=8,
-            )
-            .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-            .toPandas()
-        )
-        got = batch[batch["qid"] == qid].reset_index(drop=True)
-        assert list(got["vec_id"]) == list(single["vec_id"]), qid
-        assert (
-            abs(got["cos_sim"].values - single["cos_sim"].values).max()
-            < 1e-12
-        ), qid
+    for side in gate_sides:
+        with side():
+            for qid in sample:
+                single = (
+                    SIM.knn_graph_search(
+                        e,
+                        union,
+                        e.filter(F.col("vec_id") == int(qid)),
+                        k=10,
+                        beam=16,
+                        steps=8,
+                    )
+                    .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+                    .toPandas()
+                )
+                got = batch[batch["qid"] == qid].reset_index(drop=True)
+                assert list(got["vec_id"]) == list(single["vec_id"]), qid
+                assert (
+                    abs(got["cos_sim"].values - single["cos_sim"].values).max()
+                    < 1e-12
+                ), qid
     # recall floor vs brute force on the sampled queries
     hits = 0
     for qid in sample:

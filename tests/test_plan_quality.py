@@ -179,12 +179,17 @@ def test_registered_ivf_silver_topk_prunes_partitions(spark, sf_dir):
     )
 
 
-def test_knn_graph_consumers_read_silver_not_rebuild(spark, sf_dir):
+def test_knn_graph_consumers_read_silver_not_rebuild(
+    spark, sf_dir, gate_sides
+):
     """r11 verdict Next #1 plan gate: after the build-once graph
     silver exists, the graph consumers' plans must contain NO
     graph-build stages — no bucketed self-join, no per-src top-k
     window — only the silver parquet scan.  A rewire regression
-    (someone calling SIM.knn_graph inline again) fails here."""
+    (someone calling SIM.knn_graph inline again) fails here.  On the
+    driver side of the graph-loop gate pagerank_topk's plan is a local
+    relation, so the check also runs with broadcasts disabled, where
+    the plan is the distributed recurrence."""
     from streaming_forex_data_pipeline_spark.plans.llm_q import (
         _knn_graph_silver,
         _knn_union_graph_silver,
@@ -193,13 +198,17 @@ def test_knn_graph_consumers_read_silver_not_rebuild(spark, sf_dir):
     # ensure both silvers are built (idempotent)
     _knn_graph_silver(spark, sf_dir).count()
     _knn_union_graph_silver(spark, sf_dir).count()
-    for name in ("knn_graph", "pagerank_topk", "triangle_topk"):
-        df = all_queries()[name].spark(spark, sf_dir)
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        assert "row_number" not in plan, (
-            f"{name} still builds the kNN graph inline (top-k window "
-            f"in plan):\n{plan[:2000]}"
-        )
+    for side in gate_sides:
+        with side() as name_of_side:
+            for name in ("knn_graph", "pagerank_topk", "triangle_topk"):
+                df = all_queries()[name].spark(spark, sf_dir)
+                plan = df._jdf.queryExecution().optimizedPlan().toString()
+                assert "row_number" not in plan, (
+                    f"{name} still builds the kNN graph inline (top-k window "
+                    f"in plan):\n{plan[:2000]}"
+                )
+                if name_of_side == "spark" and name == "pagerank_topk":
+                    assert "LocalRelation" not in plan, plan[:2000]
 
 
 @pytest.mark.parametrize(

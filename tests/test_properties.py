@@ -263,7 +263,7 @@ def test_simhash_table_matches_column_fold(spark):
 )
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_connected_components_matches_union_find(spark, edges):
+def test_connected_components_matches_union_find(spark, gate_sides, edges):
     """connected_components equals a sequential union-find on random
     graphs — including self-loops, duplicate edges, and chains long
     enough to need several propagation rounds."""
@@ -288,11 +288,13 @@ def test_connected_components_matches_union_find(spark, edges):
         df = spark.createDataFrame([], "doc_a long, doc_b long")
     else:
         df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = {
-        r["node"]: r["cluster_id"]
-        for r in DD.connected_components(df).collect()
-    }
-    assert got == want
+    for side in gate_sides:
+        with side():
+            got = {
+                r["node"]: r["cluster_id"]
+                for r in DD.connected_components(df).collect()
+            }
+            assert got == want
 
 
 @given(

@@ -93,7 +93,7 @@ def test_scratch_path_is_deterministic_and_sandboxed(tmp_root):
         SC.scratch_path("")
 
 
-def test_integer_pagerank_overflow_guard_raises(spark):
+def test_integer_pagerank_overflow_guard_raises(spark, gate_sides):
     """ADVICE r8: the docstring's int64 headroom bound is now enforced
     at runtime — a scale too large for the node count must raise, not
     silently wrap under non-ANSI configs."""
@@ -105,8 +105,10 @@ def test_integer_pagerank_overflow_guard_raises(spark):
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3)], "src long, dst long"
     )
-    with pytest.raises(ValueError, match="overflow"):
-        integer_pagerank(edges, nodes, iters=1, scale=2**62)
-    # and the in-bounds call still runs
-    out = integer_pagerank(edges, nodes, iters=2).collect()
-    assert len(out) == 4
+    for side in gate_sides:
+        with side():
+            with pytest.raises(ValueError, match="overflow"):
+                integer_pagerank(edges, nodes, iters=1, scale=2**62)
+            # and the in-bounds call still runs
+            out = integer_pagerank(edges, nodes, iters=2).collect()
+            assert len(out) == 4
