@@ -6,7 +6,10 @@ side; the plan gates in tests/test_plan_quality.py pin it).
 
 Shared by plans/scale_q.py (the fingerprint-keyed silver cache probes)
 and streaming/analytics_stream.py (the incremental maintenance
-channel), so the write/attach/rebuild protocol lives in one place.
+channels), so the write/attach recipes live in one place.  The
+channels' append/marker/replay protocol and their log rebuild are the
+maintained-layout mechanism in streaming/channels.py
+(`_maintained_layout_batch`, `_rebuild_layout`).
 """
 
 from __future__ import annotations
@@ -162,7 +165,8 @@ def repair_bucketed_compaction(loc: str) -> dict:
     (restore the aside files — never delete data whose replacement
     never went live).  Half-built ``_compact-*`` dirs are always safe
     to drop: their content either never went live, or went live and
-    left the build dir empty.  ``_published`` markers and ``_SUCCESS``
+    left the build dir empty.  ``_published`` markers (written by
+    `streaming/channels.py:_maintained_layout_batch`) and ``_SUCCESS``
     are never touched.  Idempotent; called at the start of every
     compaction.  Returns {'restored', 'completed'}."""
     import os
@@ -291,7 +295,8 @@ def write_day_partitioned(
     the day derivation (UTC date_format yyyy-MM-dd into day= Hive
     directories) shared by the batch silver build
     (plans/pipeline_q.py), the streaming append, and the log rebuild
-    (streaming/analytics_stream.py).  The streaming channel's parity
+    (streaming/analytics_stream.py, through
+    `streaming/channels.py:_rebuild_layout`).  The streaming channel's parity
     contract with the batch silver depends on every site deriving the
     partition value identically (review-found triplication)."""
     from pyspark.sql import functions as F

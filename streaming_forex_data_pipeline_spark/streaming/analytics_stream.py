@@ -1,9 +1,13 @@
-"""Streaming faces of the event-analytics queries (`plans/olap_q.py`).
+"""Streaming faces of the event-analytics queries (`plans/olap_q.py`)
+and the maintained events serving layouts.
 
-The cohort and WAU faces run on the delta-log channel mechanism
-`corpus_stream.py:_start_merge_channel`, which states the delta ->
-commit -> merge-view contract once; each face here supplies only its
-delta and its merge law.
+Every channel here runs on a delta-log mechanism of `channels.py`,
+whose docstrings hold the contracts; each face supplies only its own
+rows and view.  Cohort, WAU and the funnel are merge channels
+(`_start_merge_channel`): the funnel's delta is the stateful
+transition frame, committed as is.  The bucketed and date-partitioned
+events layouts are maintained layouts (`_maintained_layout_batch`,
+rebuilt by `_rebuild_layout`).
 
 The cohort face's merge law is **MIN**: a user's first-event timestamp
 over a union of batches is the min of per-batch minima — so per-user
@@ -14,7 +18,12 @@ and the weekly cohort sizes derived from them equal the batch answer
 
 from __future__ import annotations
 
-from .corpus_stream import _start_merge_channel
+from .channels import (
+    _maintained_layout_batch,
+    _rebuild_layout,
+    _start_channel_query,
+    _start_merge_channel,
+)
 
 
 def start_cohort_channel(
@@ -135,84 +144,47 @@ def start_funnel_channel(
     ordered: bool = False,
 ):
     """Continuously maintained STRICT sequential funnel
-    (`plans/olap_q.py:funnel_conversion`) via a per-user state machine
-    in ``applyInPandasWithState`` — the ST7 pattern (stateful.py)
-    applied to multi-stage progression state instead of a counter.
+    (`plans/olap_q.py:funnel_conversion`) on the merge-channel
+    mechanism, with a per-user state machine in
+    ``applyInPandasWithState`` (the ST7 pattern of stateful.py)
+    feeding it.
 
-    Per user the GroupState holds one epoch-micros timestamp per
-    stage (the first qualifying hit).  Each micro-batch replays the
-    user's new events in event-time order through the machine: stage
-    i fires on the first event of its type strictly after stage i-1's
-    recorded hit.  Newly reached stages are EMITTED as (user_id,
-    stage_ord, reached_ts) rows — monotone inserts (a stage fires at
-    most once per user across the whole stream), committed per batch
-    through the delta log keyed (user_id, stage_ord, batch) so crashed
-    replays dedup; the live view is the per-stage distinct-user count,
-    i.e. funnel_conversion's n_users column kept fresh.
+    Per user the GroupState holds one epoch-micros timestamp per stage
+    (the first qualifying hit): stage i fires on the first event of its
+    type strictly after stage i-1's hit.  Delta: the newly reached
+    stages as (user_id, stage_ord, reached_us) rows — monotone inserts,
+    a stage fires at most once per user — keyed (user_id, stage_ord,
+    batch).  View: the per-stage distinct-user count,
+    funnel_conversion's n_users column kept fresh; beside it,
+    ``<sink_table>_violations`` sums each user's late-event count (the
+    ``stage_ord = -1`` delta rows).
 
-    Ordering (two tiers; since round 10 the SAFE tier is the default —
-    the fast path requires an explicit ``ordered=True`` opt-in, so an
-    operator who never read this docstring gets disorder-corrected
-    counts, not a silent ordering contract):
+    Ordering, two tiers:
 
-    - ``ordered=True`` (fast path, opt-in, for sources that GUARANTEE
-      per-user event-time order — file replays of sorted data,
-      watermark-sorted ingest): events are replayed through the
-      machine as they arrive.  Stage decisions are final, so per-user
-      events must arrive in event-time order ACROSS micro-batches; a
-      violation (an event older than the user's max already-replayed
-      event time) can no longer pass silently — it is counted in the
-      per-user GroupState and emitted as a ``stage_ord = -1`` delta
-      row, surfaced in the ``<sink_table>_violations`` view, so a
-      disordered source shows up as a nonzero counter instead of a
-      silent undercount.  (``lateness`` is ignored on this tier.)
-    - ``lateness="1 day"`` (reorder tier, the DEFAULT):
-      the stream gets an event-time watermark and the machine BUFFERS
-      each user's events in state, releasing them in event-time order
-      only once the watermark has passed them — so any disorder within
-      the lateness bound is corrected before a stage decision is made
-      (parity with the batch funnel proven on an out-of-order fixture
-      in tests/test_streaming.py).  Buffered users flush via
-      event-time timeouts as the watermark advances, with no new data
-      needed for that user.  Events arriving more than ``lateness``
-      behind the watermark never reach the state machine: the
-      stateful operator drops rows older than the LATE-EVENTS
-      watermark before invoking the kernel (standard Structured
-      Streaming semantics under an event-time timeout), and the drop
-      count is observable through Spark's
-      ``numRowsDroppedByWatermark`` metric — surfaced by
-      `channels.watermark_drop_report`, proven by a straggler fixture
-      in tests/test_streaming.py.  One measured nuance (Spark's
-      design): the late-events fence is the PREVIOUS micro-batch's
-      watermark, so a straggler landing in the very next batch after
-      the watermark advanced is still admitted — the kernel's
-      release() violation fence is the defense in depth that counts
-      exactly those.  The ``<sink_table>_violations`` view is the
-      FAST PATH's (and that one-batch window's) observability
-      mechanism.
+    - ``lateness="1 day"`` (the DEFAULT, reorder tier): the stream gets
+      an event-time watermark and the machine BUFFERS each user's
+      events in state, releasing them in event-time order once the
+      watermark has passed them, so disorder within the bound is
+      corrected before any (final) stage decision; buffered users flush
+      via event-time timeouts as the watermark advances.  Rows more
+      than ``lateness`` behind the watermark are dropped by the
+      stateful operator before the kernel runs — counted only by
+      Spark's ``numRowsDroppedByWatermark``
+      (`channels.watermark_drop_report`).  The late-events fence is the
+      PREVIOUS batch's watermark, so a straggler in the very next batch
+      is admitted; the kernel's violation fence counts exactly those.
+    - ``ordered=True`` (fast path, explicit opt-in, for sources that
+      GUARANTEE per-user event-time order): events replay as they
+      arrive, no watermark (``lateness`` ignored); an event older than
+      the user's max replayed time is counted as a violation instead of
+      passing silently.
 
-    Drain semantics (round-9 ADVICE — read this before an
-    ``availableNow`` replay): on the reorder tier, events buffered
-    within the final ``lateness`` window of the stream's maximum event
-    time never flush once the stream drains, because the watermark
-    only advances on NEW data and the event-time timeout (armed at
-    watermark+1) never fires without it.  The live funnel view
-    therefore UNDERCOUNTS that tail until more watermark-advancing
-    data arrives — permanent for a one-shot ``availableNow`` run,
-    transient (bounded by ``lateness``) for a continuous stream.  A
-    replay that must account every event has two options: append a
-    watermark-pusher batch whose event time exceeds max(ts) +
-    lateness (the ``wm_pusher`` pattern — any dummy user works, the
-    timeout flush needs no per-user data), or opt into
-    ``ordered=True`` when the source is already sorted.  This is
-    Structured Streaming's design, not a removable limitation: state
-    can only be released by watermark movement, and the watermark is
-    data-driven.  Since round 11 the pusher pattern is BUILT IN: pass
-    ``final_flush=True`` (with ``source_dir``, or letting the channel
-    stage its own default source) and the channel appends its own
-    flush-sentinel files before starting — see
-    ``append_flush_sentinels`` — so an ``availableNow`` replay
-    accounts every event with no caller-side pusher rows.
+    Drain: on the reorder tier, events within the final ``lateness``
+    window never flush once an ``availableNow`` stream drains — the
+    watermark only advances on new data.  ``final_flush=True`` (with
+    ``source_dir``, or letting the channel stage its own source)
+    appends flush sentinels first (`append_flush_sentinels`), so the
+    replay accounts every event.
 
     State is #stages longs per user plus, in the reorder tier, the
     within-lateness buffer (bounded by the user's event rate x
@@ -235,7 +207,6 @@ def start_funnel_channel(
     )
 
     from ..sources.scratch import scratch_dir
-    from ..sources.sinks import commit_append, read_committed
     from .channels import read_table_stream
 
     if ordered:
@@ -248,8 +219,6 @@ def start_funnel_channel(
             "ordered=True explicitly (the source must guarantee "
             "per-user event-time order), or keep a lateness bound"
         )
-    if sink_dir is None:
-        sink_dir = scratch_dir("funnel_")
     if final_flush and stream is not None:
         raise ValueError(
             "final_flush requires the channel to OWN its file source "
@@ -285,9 +254,6 @@ def start_funnel_channel(
             stream = read_table_stream(spark, sf_dir, "events")
     if lateness is not None:
         stream = stream.withWatermark("ts", lateness)
-    spark.createDataFrame(
-        [], "stage_ord int, stage string, n_users long"
-    ).createOrReplaceTempView(sink_table)
     spark.createDataFrame(
         [], "user_id long, n_late long"
     ).createOrReplaceTempView(f"{sink_table}_violations")
@@ -425,19 +391,19 @@ def start_funnel_channel(
         ),
     )
 
-    def run_batch(batch_df, batch_id):
-        delta = batch_df.withColumn(
-            "batch", F.lit(int(batch_id)).cast("long")
-        )
-        commit_append(delta, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(
-                spark, sink_dir, keys=["user_id", "stage_ord", "batch"]
-            )
-        except FileNotFoundError:
-            return
-        stage_names = F.array(*[F.lit(s) for s in stages])
+    def view_fn(committed):
+        # ordering-contract observability (round-8 ADVICE): stage_ord
+        # = -1 rows carry per-batch late-event count deltas in the
+        # reached_us slot; a disordered source shows up HERE instead
+        # of as a silent undercount
         (
+            committed.filter(F.col("stage_ord") == -1)
+            .groupBy("user_id")
+            .agg(F.sum("reached_us").alias("n_late"))
+            .createOrReplaceTempView(f"{sink_table}_violations")
+        )
+        stage_names = F.array(*[F.lit(s) for s in stages])
+        return (
             committed.filter(F.col("stage_ord") >= 0)
             .groupBy("stage_ord")
             .agg(F.countDistinct("user_id").alias("n_users"))
@@ -449,25 +415,15 @@ def start_funnel_channel(
                 ),
                 "n_users",
             )
-            .createOrReplaceTempView(sink_table)
-        )
-        # ordering-contract observability (round-8 ADVICE): stage_ord
-        # = -1 rows carry per-batch late-event count deltas in the
-        # reached_us slot; a disordered source shows up HERE instead
-        # of as a silent undercount
-        (
-            committed.filter(F.col("stage_ord") == -1)
-            .groupBy("user_id")
-            .agg(F.sum("reached_us").alias("n_late"))
-            .createOrReplaceTempView(f"{sink_table}_violations")
         )
 
-    return (
-        transitions.writeStream.queryName(sink_table)
-        .foreachBatch(run_batch)
-        .option("checkpointLocation", scratch_dir("funnel_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    return _start_merge_channel(
+        spark, sf_dir, "events", sink_table, sink_dir, transitions,
+        slot_prefix="funnel_",
+        empty_schema="stage_ord int, stage string, n_users long",
+        keys=["user_id", "stage_ord", "batch"],
+        delta_fn=lambda t: t,
+        view_fn=view_fn,
     )
 
 
@@ -508,83 +464,29 @@ def start_wau_channel(
 def rebuild_events_bucketed(
     spark, sink_dir: str, tbl: str, loc: str, n_buckets: int = 8
 ) -> str:
-    """Re-derive the bucketed events serving table from the
-    transactional commit log — the recovery path when a crash between
-    a serving append and its marker leaves the layout holding zero OR
-    one copies of a batch (index-from-WAL, the same move as
-    `corpus_stream.rebuild_ivf_serving`).  The log is the source of
-    truth: committed (event_id, batch) rows dedup idempotently, so the
-    rebuild is exact under any crash interleaving."""
-    import shutil
+    """Re-derive the bucketed events serving table from the bucketed
+    channel's log (`channels._rebuild_layout`): the recovery path when
+    a crash between a serving append and its marker leaves the layout
+    holding zero OR one copies of a batch.  The catalog table is
+    re-attached over the swapped-in location; returns its name."""
     import uuid
 
     from ..sources.layout import attach_bucketed_table, schema_ddl
     from ..sources.layout import write_bucketed_events
-    from ..sources.sinks import read_committed
 
-    committed = read_committed(spark, sink_dir, keys=["event_id", "batch"])
-    data = committed.select(
-        *[c for c in committed.columns if c != "batch"]
-    )
-    # build the replacement COMPLETELY (data + markers) in a sibling
-    # location before touching the live layout: a crash mid-build
-    # leaves the old table readable, and the destructive window
-    # shrinks to the swap (review-found: the first version dropped the
-    # table before building, so a build failure left NOTHING for
-    # consumers to read)
     tmp_tbl = f"{tbl}_rebuild_{uuid.uuid4().hex}"
-    tmp_loc = f"{loc}.rebuild-{uuid.uuid4().hex}"
-    try:
+
+    def build_fn(data, tmp_loc):
         write_bucketed_events(
             spark, data, tmp_tbl, tmp_loc, n_buckets=n_buckets
         )
         spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        _publish_rebuilt_layout(sink_dir, loc, tmp_loc)
-    except BaseException:
-        # a failed rebuild must not leak its uuid-named fact-sized tmp
-        # copy: the scratch root has no vacuum, and each retry would
-        # leak another full copy (review-found — same class as the
-        # write_bucketed_events build-failure leak)
-        shutil.rmtree(tmp_loc, ignore_errors=True)
-        raise
+
+    data = _rebuild_layout(spark, sink_dir, loc, "event_id", build_fn)
     return attach_bucketed_table(
         spark, tbl, loc, schema_ddl(data), n_buckets=n_buckets
     )
-
-
-def _publish_rebuilt_layout(sink_dir: str, loc: str, tmp_loc: str) -> None:
-    """Marker re-derivation + rename-ASIDE swap, shared by both layout
-    rebuilds (ONE copy of the crash-safety tail): published batch ids
-    come from the O(#commits) manifest metadata, never a data-sized
-    distinct over the committed rows; and the swap sets the live copy
-    aside rather than rmtree-ing it — a crash between a destructive
-    rmtree and the rename would leave NEITHER layout on disk and
-    readers fail until another replay re-triggers the rebuild, while
-    the aside copy keeps the window recoverable and is deleted only
-    after the replacement rename succeeded (round-9 ADVICE)."""
-    import os
-    import shutil
-    import uuid
-
-    from ..sources.sinks import log_versions
-
-    marker_dir = os.path.join(tmp_loc, "_published")
-    os.makedirs(marker_dir, exist_ok=True)
-    for v in log_versions(sink_dir):
-        open(os.path.join(marker_dir, f"batch-{int(v)}"), "w").close()
-    old_loc = f"{loc}.old-{uuid.uuid4().hex}"
-    had_old = os.path.isdir(loc)
-    if had_old:
-        os.rename(loc, old_loc)
-    try:
-        os.rename(tmp_loc, loc)
-    except BaseException:
-        if had_old:
-            os.rename(old_loc, loc)  # restore the live layout
-        raise
-    if had_old:
-        shutil.rmtree(old_loc, ignore_errors=True)
 
 
 def start_events_bucketed_channel(
@@ -598,24 +500,20 @@ def start_events_bucketed_channel(
     compact_every: int | None = None,
 ):
     """Streaming maintenance of the bucketed-by-user_id events silver
-    layout (`sources/layout.py`): at 100 TB the layout that makes
-    every funnel/cohort run exchange-free must absorb new events
-    incrementally — a full bucketed rewrite per arrival is the
+    layout (`sources/layout.py`) on the
+    `channels._maintained_layout_batch` mechanism: at 100 TB the layout
+    that makes every funnel/cohort run exchange-free must absorb new
+    events incrementally — a full bucketed rewrite per arrival is the
     scale-killer this channel removes.
 
-    Each micro-batch lands in two places:
-
-    - the transactional log (``commit_append`` keyed
-      (event_id, batch)): atomic, idempotent under crash replays, the
-      source of truth;
-    - the bucketed serving table: an ``insertInto`` APPEND that the
-      catalog's bucket spec routes into per-bucket files, so the
-      maintained table KEEPS the zero-user-keyed-exchange contract
-      (bucketed scans merge multiple files per bucket; plan-gated in
-      tests).  A ``_published/batch-<id>`` marker makes clean replays
-      skip already-published batches; a crash BETWEEN append and
-      marker (batch in the log, marker missing) is detected on replay
-      and recovered by `rebuild_events_bucketed` from the log.
+    Rows: each micro-batch's events, logged keyed (event_id, batch) in
+    ``sink_dir``.  Layout: the catalog table ``tbl`` at ``loc``, an
+    ``insertInto`` APPEND that the catalog's bucket spec routes into
+    per-bucket files, so the maintained table KEEPS the
+    zero-user-keyed-exchange contract (bucketed scans merge multiple
+    files per bucket; plan-gated in tests); recovery is
+    `rebuild_events_bucketed`, maintenance `compact_bucketed_table`
+    every ``compact_every`` batches.  The query is named ``tbl``.
 
     Parity contract (tests/test_streaming.py): after the stream
     drains, the maintained table equals the batch bucketed build of
@@ -626,14 +524,11 @@ def start_events_bucketed_channel(
     from ..sources.layout import write_bucketed_events
     from ..sources.scratch import scratch_dir
     from ..sources.tables import load_table
-    from .channels import read_table_stream
 
     if sink_dir is None:
         sink_dir = scratch_dir("events_bucketed_log_")
     if loc is None:
         loc = os.path.join(scratch_dir("events_bucketed_serve_"), "tbl")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "events")
     schema = load_table(spark, sf_dir, "events").schema
     cols = [f.name for f in schema.fields]
     if not spark.catalog.tableExists(tbl):
@@ -648,14 +543,6 @@ def start_events_bucketed_channel(
             n_buckets=n_buckets,
         )
 
-    def append_fn(batch_df):
-        batch_df.select(*cols).write.insertInto(tbl)
-
-    def rebuild_fn():
-        rebuild_events_bucketed(
-            spark, sink_dir, tbl, loc, n_buckets=n_buckets
-        )
-
     def maintain_fn():
         from ..sources.layout import compact_bucketed_table
 
@@ -666,95 +553,30 @@ def start_events_bucketed_channel(
         spark.catalog.refreshTable(tbl)
 
     run_batch = _maintained_layout_batch(
-        sink_dir, loc, cols, append_fn, rebuild_fn,
-        maintain_fn=maintain_fn, maintain_every=compact_every,
+        sink_dir,
+        loc,
+        lambda b: b.select(*cols),
+        lambda rows: rows.write.insertInto(tbl),
+        lambda: rebuild_events_bucketed(
+            spark, sink_dir, tbl, loc, n_buckets=n_buckets
+        ),
+        maintain_fn=maintain_fn,
+        maintain_every=compact_every,
     )
-    return (
-        stream.writeStream.queryName(tbl)
-        .foreachBatch(run_batch)
-        .option("checkpointLocation", scratch_dir("events_bucketed_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    return _start_channel_query(
+        spark, sf_dir, "events", stream, tbl, "events_bucketed_ckpt_",
+        run_batch,
     )
-
-
-def _maintained_layout_batch(
-    sink_dir, loc, cols, append_fn, rebuild_fn,
-    maintain_fn=None, maintain_every: int | None = None,
-):
-    """The maintained-serving-layout micro-batch protocol, shared by
-    the bucketed and date-partitioned events channels (ONE copy of
-    the crash-recovery logic): replay detection BEFORE committing —
-    batch id in the log but marker missing means a prior attempt
-    crashed between the serving append and the marker, the layout's
-    state is unknowable, rebuild from the log (idempotent); a clean
-    replay (marker present) is a no-op because the log deduped it and
-    serving has it.
-
-    ``maintain_fn`` (with ``maintain_every`` = N): optional in-channel
-    small-files maintenance, invoked after every Nth batch's clean
-    publish — INSIDE foreachBatch, where the channel's writes are
-    serialized, so the single-maintenance-writer contract of
-    `compact_day_partitions` / `compact_bucketed_table` holds by
-    construction (no quiesce step needed; a crash mid-compaction is
-    repaired by the compactors' own aside/manifest protocols and, in
-    the worst case, the WAL rebuild).  Maintenance never runs on a
-    replayed batch — the rebuild already rewrote the layout
-    compactly."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from ..sources.sinks import commit_append, log_has_version
-
-    def run_batch(batch_df, batch_id):
-        replayed = log_has_version(sink_dir, float(batch_id))
-        delta = batch_df.select(*cols).withColumn(
-            "batch", F.lit(int(batch_id)).cast("long")
-        )
-        commit_append(delta, sink_dir, version=float(batch_id))
-        marker = os.path.join(loc, "_published", f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return
-        if replayed:
-            rebuild_fn()  # writes markers
-            return
-        append_fn(batch_df)
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        open(marker, "w").close()
-        if (
-            maintain_fn is not None
-            and maintain_every
-            and int(batch_id) % maintain_every == maintain_every - 1
-        ):
-            maintain_fn()
-
-    return run_batch
 
 
 def rebuild_events_partitioned(spark, sink_dir: str, loc: str) -> str:
     """Re-derive the date-partitioned events serving layout from the
-    transactional commit log — the partitioned sibling of
-    `rebuild_events_bucketed` (index-from-WAL): build the replacement
-    completely in a sibling location, then publish through the shared
-    marker + rename-ASIDE tail."""
-    import shutil
-    import uuid
-
+    partitioned channel's log (`channels._rebuild_layout`) — the
+    partitioned sibling of `rebuild_events_bucketed`.  Returns
+    ``loc``."""
     from ..sources.layout import write_day_partitioned
-    from ..sources.sinks import read_committed
 
-    committed = read_committed(spark, sink_dir, keys=["event_id", "batch"])
-    data = committed.select(
-        *[c for c in committed.columns if c != "batch"]
-    )
-    tmp_loc = f"{loc}.rebuild-{uuid.uuid4().hex}"
-    try:
-        write_day_partitioned(data, tmp_loc)
-        _publish_rebuilt_layout(sink_dir, loc, tmp_loc)
-    except BaseException:
-        shutil.rmtree(tmp_loc, ignore_errors=True)
-        raise
+    _rebuild_layout(spark, sink_dir, loc, "event_id", write_day_partitioned)
     return loc
 
 
@@ -768,56 +590,42 @@ def start_events_partitioned_channel(
     compact_every: int | None = None,
 ):
     """Streaming maintenance of the DATE-PARTITIONED events silver
-    (`plans/pipeline_q.py:_ensure_events_partitioned`'s layout): each
-    micro-batch lands in the transactional log (source of truth) and
-    APPENDS into its day= directories — new days create directories,
-    late events append files into existing ones, and retention stays
-    a directory drop.  Same crash contract as the bucketed channel
-    (the shared `_maintained_layout_batch` protocol): a crash between
-    the serving append and its marker is detected on replay and
-    recovered by `rebuild_events_partitioned` from the log.
+    (`plans/pipeline_q.py:_ensure_events_partitioned`'s layout) on the
+    `channels._maintained_layout_batch` mechanism.
+
+    Rows: each micro-batch's events, logged keyed (event_id, batch) in
+    ``sink_dir``.  Layout: the day= directories under ``loc``, APPENDED
+    per batch — new days create directories, late events append files
+    into existing ones, and retention stays a directory drop; recovery
+    is `rebuild_events_partitioned`, maintenance
+    `compact_day_partitions` every ``compact_every`` batches.
 
     Parity contract (tests/test_streaming.py): after the stream
     drains, reading the maintained layout equals the batch
     partitioned build row-for-row, day partition column included."""
     import os
 
-    from ..sources.layout import write_day_partitioned
+    from ..sources.layout import compact_day_partitions, write_day_partitioned
     from ..sources.scratch import scratch_dir
     from ..sources.tables import load_table
-    from .channels import read_table_stream
 
     if sink_dir is None:
         sink_dir = scratch_dir("events_partitioned_log_")
     if loc is None:
         loc = os.path.join(scratch_dir("events_partitioned_serve_"), "tbl")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "events")
     cols = [
         f.name for f in load_table(spark, sf_dir, "events").schema.fields
     ]
-
-    def append_fn(batch_df):
-        write_day_partitioned(batch_df.select(*cols), loc, mode="append")
-
-    def rebuild_fn():
-        rebuild_events_partitioned(spark, sink_dir, loc)
-
-    def maintain_fn():
-        from ..sources.layout import compact_day_partitions
-
-        compact_day_partitions(spark, loc)
-
     run_batch = _maintained_layout_batch(
-        sink_dir, loc, cols, append_fn, rebuild_fn,
-        maintain_fn=maintain_fn, maintain_every=compact_every,
+        sink_dir,
+        loc,
+        lambda b: b.select(*cols),
+        lambda rows: write_day_partitioned(rows, loc, mode="append"),
+        lambda: rebuild_events_partitioned(spark, sink_dir, loc),
+        maintain_fn=lambda: compact_day_partitions(spark, loc),
+        maintain_every=compact_every,
     )
-    return (
-        stream.writeStream.queryName(query_name)
-        .foreachBatch(run_batch)
-        .option(
-            "checkpointLocation", scratch_dir("events_partitioned_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return _start_channel_query(
+        spark, sf_dir, "events", stream, query_name,
+        "events_partitioned_ckpt_", run_batch,
     )

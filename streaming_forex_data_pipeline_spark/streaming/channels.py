@@ -29,6 +29,9 @@ from __future__ import annotations
 
 import atexit
 import logging
+import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,8 +43,6 @@ _STREAM_STAGING: dict[tuple[str, str], str] = {}
 
 @atexit.register
 def _cleanup_staging() -> None:
-    import shutil
-
     for path in _STREAM_STAGING.values():
         shutil.rmtree(path, ignore_errors=True)
     _STREAM_STAGING.clear()
@@ -79,8 +80,6 @@ def read_table_stream(
 
     pin_portability_confs(spark)
     schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
-    import os
-
     from ..sources.scratch import scratch_dir
 
     key = (spark.sparkContext.applicationId, f"{sf_dir}:{table}")
@@ -371,8 +370,6 @@ def failover_tick_source(
     — exactly where the reference makes it — so the streaming plan
     itself stays static.  Returns (stream, source_name).
     """
-    import os
-
     if primary_dir and os.path.isdir(primary_dir):
         try:
             files = [f for f in os.listdir(primary_dir) if f.endswith(".parquet")]
@@ -562,3 +559,279 @@ def channel_stats(spark, queries=None) -> "DataFrame":
             )
         )
     return spark.createDataFrame(rows, schema)
+
+
+# Delta-log channel mechanisms: merge channel, accumulating index and
+# maintained layout (the foreachBatch + idempotent-sink model of
+# Structured Streaming).  Each micro-batch commits to a transactional
+# log (`sources/sinks.py:commit_append`) at ``version=batch_id``, so a
+# replay rewrites the same key identities and keep-latest absorbs it.
+
+
+def _start_channel_query(
+    spark, sf_dir: str, table: str, stream, name: str, ckpt_prefix: str,
+    run_batch,
+):
+    """The query-start policy of every delta-log channel: ``stream``
+    (default: ``table`` read as a file stream) runs ``run_batch`` per
+    micro-batch in a query named ``name`` (what `channel_stats`
+    reports), checkpointed into a fresh ``ckpt_prefix`` scratch
+    directory, draining the source with ``availableNow``."""
+    from ..sources.scratch import scratch_dir
+
+    if stream is None:
+        stream = read_table_stream(spark, sf_dir, table)
+    return (
+        stream.writeStream.queryName(name)
+        .foreachBatch(run_batch)
+        .option("checkpointLocation", scratch_dir(ckpt_prefix))
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _with_batch(df: DataFrame, batch_id) -> DataFrame:
+    return df.withColumn("batch", F.lit(int(batch_id)).cast("long"))
+
+
+def _due(batch_id, every: int | None) -> bool:
+    """Is micro-batch ``batch_id`` the last of a run of ``every``?"""
+    return bool(every) and (int(batch_id) + 1) % every == 0
+
+
+def _start_merge_channel(
+    spark,
+    sf_dir: str,
+    table: str,
+    sink_table: str,
+    sink_dir: str | None,
+    stream,
+    *,
+    slot_prefix: str,
+    empty_schema: str,
+    keys: list[str],
+    delta_fn,
+    view_fn,
+):
+    """The merge channel: per micro-batch ``batch_id``,
+
+    1. delta: ``delta_fn(batch_df)`` builds the batch's OWN bounded
+       partial state (a sketch, counters, a top-k, per-key minima,
+       funnel transitions);
+    2. commit: the delta, tagged with a ``batch`` column, lands in the
+       log at ``sink_dir`` — executor-side files plus one atomic
+       manifest, so the driver holds O(1) state;
+    3. merge view: ``read_committed(keys)`` keeps the latest row per
+       key over the whole log and ``view_fn`` folds it by the
+       channel's merge law into the lazy view ``sink_table``.
+
+    Until the first non-empty commit the view is the empty frame
+    ``empty_schema``.  The query is named ``sink_table``; ``sink_dir``
+    defaults to a fresh ``slot_prefix`` slot, the checkpoint prefix is
+    ``slot_prefix + "ckpt_"``."""
+    from ..sources.scratch import scratch_dir
+    from ..sources.sinks import commit_append, read_committed
+
+    if sink_dir is None:
+        sink_dir = scratch_dir(slot_prefix)
+    spark.createDataFrame([], empty_schema).createOrReplaceTempView(sink_table)
+
+    def run_batch(batch_df, batch_id):
+        delta = _with_batch(delta_fn(batch_df), batch_id)
+        commit_append(delta, sink_dir, version=float(batch_id))
+        try:
+            committed = read_committed(spark, sink_dir, keys=keys)
+        except FileNotFoundError:
+            return  # every commit so far was empty: keep the empty view
+        view_fn(committed).createOrReplaceTempView(sink_table)
+
+    return _start_channel_query(
+        spark, sf_dir, table, stream, sink_table, slot_prefix + "ckpt_",
+        run_batch,
+    )
+
+
+def _start_index_channel(
+    spark,
+    sf_dir: str,
+    table: str,
+    sink_table: str,
+    stream,
+    *,
+    item_dir: str,
+    out_dir: str,
+    ckpt_prefix: str,
+    item_id: str,
+    item_fn,
+    out_fn,
+    out_keys: list[str],
+    empty_schema: str,
+    view_fn,
+    maintain_fn=None,
+    maintain_every: int | None = None,
+):
+    """The accumulating index: a channel whose output for each
+    micro-batch depends on every EARLIER batch's items.  Per
+    micro-batch ``batch_id``:
+
+    1. items: ``item_fn(batch_df)`` (keyed by ``item_id``), checkpointed
+       so the steps below read it once;
+    2. index: the committed items of ``item_dir`` minus this batch's
+       own ids;
+    3. output: ``out_fn(items, indexed)``, where ``indexed`` is the
+       index rows (``__new`` false) plus this batch's items (``__new``
+       true);
+    4. commit the output to ``out_dir``, THEN the items (tagged with
+       ``batch``) to ``item_dir``;
+    5. every ``maintain_every`` batches, ``maintain_fn()``;
+    6. publish ``view_fn`` over the output log, read keep-latest on
+       ``out_keys``, as the view ``sink_table`` (until the first
+       non-empty output commit: ``view_fn`` of the empty frame
+       ``empty_schema``).
+
+    Replay contract (two logs): a replayed batch may find its items
+    already indexed (crash between the commits, or a restart).  The
+    anti-join of step 2 keeps them out of the old side, so they cannot
+    meet themselves across the old/new split; the replay recomputes the
+    identical output and both logs dedup on their keys.  The query is
+    named ``sink_table``."""
+    from ..sources.sinks import commit_append, read_committed
+
+    view_fn(spark.createDataFrame([], empty_schema)).createOrReplaceTempView(
+        sink_table
+    )
+
+    def run_batch(batch_df, batch_id):
+        items = item_fn(batch_df).localCheckpoint(eager=False)
+        indexed = items.withColumn("__new", F.lit(True))
+        try:
+            old = (
+                read_committed(spark, item_dir, keys=[item_id, "batch"])
+                .drop("batch")
+                .join(items.select(item_id), item_id, "left_anti")
+            )
+            indexed = old.withColumn("__new", F.lit(False)).unionByName(
+                indexed
+            )
+        except FileNotFoundError:
+            pass  # first batch: the index is empty
+        commit_append(
+            out_fn(items, indexed), out_dir, version=float(batch_id)
+        )
+        commit_append(
+            _with_batch(items, batch_id), item_dir, version=float(batch_id)
+        )
+        if maintain_fn is not None and _due(batch_id, maintain_every):
+            maintain_fn()
+        try:
+            committed = read_committed(spark, out_dir, keys=out_keys)
+        except FileNotFoundError:
+            return  # every output commit so far was empty
+        view_fn(committed).createOrReplaceTempView(sink_table)
+
+    return _start_channel_query(
+        spark, sf_dir, table, stream, sink_table, ckpt_prefix, run_batch
+    )
+
+
+def _published_marker(loc: str, batch_id) -> str:
+    """Path of the marker saying the layout at ``loc`` holds
+    micro-batch ``batch_id``."""
+    return os.path.join(loc, "_published", f"batch-{int(batch_id)}")
+
+
+def _mark_published(loc: str, batch_ids) -> None:
+    for b in batch_ids:  # O(#batches) empty stamps, never data-sized
+        marker = _published_marker(loc, b)
+        os.makedirs(os.path.dirname(marker), exist_ok=True)
+        open(marker, "w").close()
+
+
+def _maintained_layout_batch(
+    sink_dir, loc, rows_fn, append_fn, rebuild_fn,
+    maintain_fn=None, maintain_every: int | None = None,
+):
+    """The maintained-layout micro-batch: a serving layout at ``loc``
+    (cell-partitioned IVF silver, bucketed or day-partitioned events)
+    kept beside the log at ``sink_dir``, which is the source of truth.
+    Per micro-batch ``batch_id``, ``rows_fn(batch_df)`` is committed to
+    the log (keyed by the caller's id and ``batch``) and the same rows
+    are passed to ``append_fn``, which appends them to the layout; a
+    ``_published`` marker then stamps the batch.
+
+    Replay: detection runs BEFORE the commit.  Marker present means a
+    clean replay — the log dedups it and the layout has it, so nothing
+    more runs.  Batch id in the log but no marker means a prior attempt
+    crashed between the append and the marker; the layout holds zero or
+    one copies of the batch, so ``rebuild_fn()`` re-derives it from the
+    log (which writes every marker).
+
+    ``maintain_fn`` (every ``maintain_every`` batches): small-files
+    maintenance after a clean publish, inside foreachBatch where the
+    channel's writes are serialized (the compactors' single-writer
+    contract); never on a replay, whose rebuild already rewrote the
+    layout compactly.  Returns the foreachBatch function."""
+    from ..sources.sinks import commit_append, log_has_version
+
+    def run_batch(batch_df, batch_id):
+        replayed = log_has_version(sink_dir, float(batch_id))
+        rows = rows_fn(batch_df)
+        commit_append(
+            _with_batch(rows, batch_id), sink_dir, version=float(batch_id)
+        )
+        if os.path.exists(_published_marker(loc, batch_id)):
+            return
+        if replayed:
+            rebuild_fn()
+            return
+        append_fn(rows)
+        _mark_published(loc, [batch_id])
+        if maintain_fn is not None and _due(batch_id, maintain_every):
+            maintain_fn()
+
+    return run_batch
+
+
+def _rebuild_layout(spark, sink_dir: str, loc: str, key: str, build_fn):
+    """Re-derive the serving layout at ``loc`` from its log — the
+    recovery path of `_maintained_layout_batch` (index-from-WAL).
+    Committed (``key``, batch) rows dedup idempotently, so the rebuild
+    is exact under any crash interleaving.  ``build_fn(data, tmp_loc)``
+    builds the replacement completely in a sibling directory, so a
+    failed build leaves the live layout readable; a failed build or
+    swap removes the sibling.  Returns the rebuilt data frame."""
+    from ..sources.sinks import read_committed
+
+    data = read_committed(spark, sink_dir, keys=[key, "batch"]).drop("batch")
+    tmp_loc = f"{loc}.rebuild-{uuid.uuid4().hex}"
+    try:
+        build_fn(data, tmp_loc)
+        _publish_rebuilt_layout(sink_dir, loc, tmp_loc)
+    except BaseException:
+        shutil.rmtree(tmp_loc, ignore_errors=True)
+        raise
+    return data
+
+
+def _publish_rebuilt_layout(sink_dir: str, loc: str, tmp_loc: str) -> None:
+    """Markers + rename-ASIDE swap of a rebuilt layout.  Published batch
+    ids come from the O(#commits) manifest metadata, never a data-sized
+    distinct over the committed rows.  The swap sets the live copy
+    aside rather than deleting it: a crash between a delete and the
+    rename would leave NEITHER layout on disk, while the aside copy is
+    restored if the rename fails and deleted only after it succeeded."""
+    from ..sources.sinks import log_versions
+
+    _mark_published(tmp_loc, log_versions(sink_dir))
+    old_loc = f"{loc}.old-{uuid.uuid4().hex}"
+    had_old = os.path.isdir(loc)
+    if had_old:
+        os.rename(loc, old_loc)
+    try:
+        os.rename(tmp_loc, loc)
+    except BaseException:
+        if had_old:
+            os.rename(old_loc, loc)  # restore the live layout
+        raise
+    if had_old:
+        shutil.rmtree(old_loc, ignore_errors=True)

@@ -1,11 +1,18 @@
 """Streaming corpus ingest: the corpus-hygiene operators as streaming
-channels — the stateless quality gate, incremental near-dup checking
-against a static index, decontamination against a static eval-gram
-frame, the real-codec multimodal decode, and the merge-law sketch
-channels (CMS, HLL, histogram, reservoir, DSIR models, gate
-dashboard), all batch/stream parity-tested.  Every delta-log channel
-runs on one mechanism, `_start_merge_channel`, whose docstring holds
-the delta -> commit -> merge-view contract.
+channels, all batch/stream parity-tested.  Every delta-log channel
+runs on a mechanism of `channels.py`, whose docstring holds its
+contract; each channel here supplies only its own rows and view:
+
+- merge channels (`_start_merge_channel`): incremental near-dup
+  checking against a static index, decontamination against a static
+  eval-gram frame, and the sketch channels (CMS, HLL, histogram,
+  reservoir, DSIR models, gate dashboard);
+- accumulating indexes (`_start_index_channel`): the image, audio and
+  video signature channels, the embedding index and the kNN graph;
+- a maintained layout (`_maintained_layout_batch`): the IVF silver.
+
+The stateless quality gate and the real-codec multimodal decode run
+as plain memory-sink queries.
 
 A training-corpus pipeline at 100 TB ingests continuously; the
 document-level gate (Gopher/C4 rule battery, `llm/corpus.py:
@@ -38,6 +45,13 @@ from ..llm.corpus import (
     words_array,
 )
 from ..llm.text import avg_word_len
+from .channels import (
+    _maintained_layout_batch,
+    _rebuild_layout,
+    _start_channel_query,
+    _start_index_channel,
+    _start_merge_channel,
+)
 
 
 def streaming_quality_gate(docs: DataFrame, text: str = "text") -> DataFrame:
@@ -98,75 +112,6 @@ def start_corpus_gate_channel(
         gated.writeStream.outputMode("append")
         .format("memory")
         .queryName(sink_table)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _start_merge_channel(
-    spark,
-    sf_dir: str,
-    table: str,
-    sink_table: str,
-    sink_dir: str | None,
-    stream,
-    *,
-    slot_prefix: str,
-    empty_schema: str,
-    keys: list[str],
-    delta_fn,
-    view_fn,
-):
-    """The delta-log channel mechanism every merge-law channel runs on
-    (the foreachBatch + idempotent-sink model of Structured Streaming).
-
-    Contract, per micro-batch ``batch_id``:
-
-    1. delta: ``delta_fn(batch_df)`` builds the batch's OWN bounded
-       partial state (a sketch, counters, a top-k, per-key minima);
-    2. commit: the delta, tagged with a ``batch`` column, lands through
-       the transactional ``commit_append`` sink (`sources/sinks.py`)
-       at ``version=batch_id`` — executor-side files plus one atomic
-       manifest, so the driver holds O(1) state;
-    3. merge view: ``read_committed(keys)`` keeps the latest row per
-       key over the whole log and ``view_fn`` folds it by the
-       channel's merge law into the lazy view ``sink_table``.
-
-    A replayed micro-batch (restart after a crash, same ``sink_dir``)
-    rewrites the same (key, batch) identities, and keep-latest drops
-    the older copies, so restarts merge idempotently.  Until the first
-    non-empty commit the view is the empty frame ``empty_schema``.
-    The query is named ``sink_table`` (what `channel_stats` reports),
-    checkpoints into a fresh scratch directory, and drains the source
-    with ``availableNow``.  ``stream`` defaults to ``table`` read as a
-    file stream, ``sink_dir`` to a fresh ``slot_prefix`` scratch slot.
-    """
-    from ..sources.scratch import scratch_dir
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
-
-    if sink_dir is None:
-        sink_dir = scratch_dir(slot_prefix)
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, table)
-    spark.createDataFrame([], empty_schema).createOrReplaceTempView(sink_table)
-
-    def run_batch(batch_df, batch_id):
-        delta = delta_fn(batch_df).withColumn(
-            "batch", F.lit(int(batch_id)).cast("long")
-        )
-        commit_append(delta, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(spark, sink_dir, keys=keys)
-        except FileNotFoundError:
-            # every commit so far was empty: keep the empty view
-            return
-        view_fn(committed).createOrReplaceTempView(sink_table)
-
-    return (
-        stream.writeStream.queryName(sink_table)
-        .foreachBatch(run_batch)
-        .option("checkpointLocation", scratch_dir(slot_prefix + "ckpt_"))
         .trigger(availableNow=True)
         .start()
     )
@@ -537,37 +482,17 @@ def start_gate_dashboard_channel(
     )
 
 
+
+
 def rebuild_ivf_serving(spark, sink_dir: str, serve_dir: str) -> None:
-    """Re-derive the cell-partitioned serving layout from the
-    transactional assignment log — the recovery path when a crash
-    between a serving append and its marker leaves the layout behind
-    (or ahead of) the log.  The log is the source of truth: committed
-    (vec_id, batch) rows dedup idempotently, so the rebuild is exact
-    no matter what the crash interleaving was."""
-    import os
-    import shutil
-
-    from ..sources.sinks import log_versions, read_committed
-
-    committed = read_committed(spark, sink_dir, keys=["vec_id", "batch"])
-    tmp = f"{serve_dir}.rebuild"
-    (
-        committed.select("vec_id", "v", "n", "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(tmp)
+    """Re-derive the cell-partitioned serving layout from the IVF
+    channel's assignment log (`channels._rebuild_layout`): the recovery
+    path when a crash between a serving append and its marker leaves
+    the layout behind (or ahead of) the log."""
+    _rebuild_layout(
+        spark, sink_dir, serve_dir, "vec_id",
+        lambda data, tmp: data.write.partitionBy("cell").parquet(tmp),
     )
-    # published batch ids from the O(#commits) manifest metadata — a
-    # data-sized distinct over committed rows buys nothing the log's
-    # own version stamps don't already hold (review-found)
-    published = log_versions(sink_dir)
-    if os.path.isdir(serve_dir):
-        shutil.rmtree(serve_dir)
-    os.rename(tmp, serve_dir)
-    marker_dir = os.path.join(serve_dir, "_published")
-    os.makedirs(marker_dir, exist_ok=True)
-    for v in published:  # O(#batches) stamps, not corpus-sized
-        open(os.path.join(marker_dir, f"batch-{int(v)}"), "w").close()
 
 
 def start_ivf_silver_channel(
@@ -579,48 +504,35 @@ def start_ivf_silver_channel(
     sink_dir: str | None = None,
     stream=None,
 ):
-    """Streaming maintenance of the IVF silver table (round-8 verdict
-    Next #4): at 100 TB the ANN index must absorb new embeddings
-    incrementally — a full `write_ivf_silver` rebuild per arrival is
-    the scale-killer this channel removes.
+    """Streaming maintenance of the IVF silver table on the
+    `channels._maintained_layout_batch` mechanism: at 100 TB the ANN
+    index must absorb new embeddings incrementally — a full
+    `write_ivf_silver` rebuild per arrival is the scale-killer this
+    channel removes.
 
-    Each micro-batch of new embeddings is assigned to the EXISTING
+    Rows: each micro-batch of new embeddings assigned to the EXISTING
     index's cells (the fixed ``cents`` frame broadcasts — by default
     the base corpus's bootstrap centroids, i.e. exactly the quantizer
-    `write_ivf_silver` bakes into the batch-built table) and lands in
-    two places:
+    `write_ivf_silver` bakes into the batch-built table), as (vec_id,
+    v, n, cell), logged keyed (vec_id, batch) in ``sink_dir``.
+    Layout: the Hive ``cell=<k>/`` directories under ``serve_dir``,
+    APPENDED per batch, so the maintained table keeps the probe-time
+    partition-pruning contract (`probe_ivf_silver` reads nprobe
+    directories) without rewriting existing data; recovery is
+    `rebuild_ivf_serving`.  The query is named after ``serve_dir``'s
+    last path component.
 
-    - the transactional assignment log (``commit_append`` keyed
-      (vec_id, batch) — the decontamination-channel pattern): atomic,
-      idempotent under crash replays, the source of truth;
-    - the Hive ``cell=<k>/`` serving layout (``serve_dir``): an
-      APPEND of just the batch's rows into its cell directories, so
-      the maintained table keeps the probe-time partition-pruning
-      contract (`probe_ivf_silver` reads nprobe directories) without
-      ever rewriting existing data.  A ``_published/batch-<id>``
-      marker makes clean replays skip already-published batches; a
-      crash BETWEEN append and marker (batch in the log, marker
-      missing) is DETECTED on replay and recovered automatically by
-      `rebuild_ivf_serving` from the log — index-from-WAL, the
-      standard serving-cache recovery story, and the only exact move
-      when the layout may hold zero or one copies of the batch.
-
-    Parity contract (tests/test_streaming.py): after the stream
-    drains, the serving table equals the batch `write_ivf_silver`
-    rebuild row-for-row, and a probe against it carries the same
-    PartitionFilters pruning gate as the batch-built table."""
+    After the drain the serving table equals the batch
+    `write_ivf_silver` rebuild row-for-row, with the same
+    PartitionFilters pruning on probes."""
     import os
 
     from ..llm.similarity import _bootstrap_centroids, assign_to_cells
     from ..sources.scratch import scratch_dir
-    from ..sources.sinks import commit_append
     from ..sources.tables import load_table
-    from .channels import read_table_stream
 
     if sink_dir is None:
         sink_dir = scratch_dir("ivf_assign_log_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "embeddings")
     if cents is None:
         cents = _bootstrap_centroids(
             load_table(spark, sf_dir, "embeddings"), n_cells,
@@ -631,47 +543,21 @@ def start_ivf_silver_channel(
     # the base corpus per micro-batch)
     cents = cents.localCheckpoint(eager=True)
 
-    from ..sources.sinks import log_has_version
-
-    def _log_has_version(version: float) -> bool:
-        return log_has_version(sink_dir, version)
-
-    def run_batch(batch_df, batch_id):
-        assigned = assign_to_cells(batch_df, cents).select(
+    run_batch = _maintained_layout_batch(
+        sink_dir,
+        serve_dir,
+        lambda b: assign_to_cells(b, cents).select(
             F.col("id").alias("vec_id"), "v", "n", "cell"
-        )
-        # replay detection BEFORE committing: if this batch id is
-        # already in the log but its serving marker is missing, a
-        # prior attempt crashed somewhere between the serving append
-        # and the marker — the serving layout's state is unknowable
-        # (zero or one copies of the batch), so the only exact move is
-        # a rebuild from the log, which is idempotent (review-found:
-        # the old marker-after-append ordering silently DUPLICATED
-        # serving rows on exactly that crash window)
-        replayed = _log_has_version(float(batch_id))
-        delta = assigned.withColumn(
-            "batch", F.lit(int(batch_id)).cast("long")
-        )
-        commit_append(delta, sink_dir, version=float(batch_id))
-        marker = os.path.join(serve_dir, "_published", f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # clean replay: log deduped it, serving has it
-        if replayed:
-            rebuild_ivf_serving(spark, sink_dir, serve_dir)  # writes markers
-            return
-        (
-            assigned.write.mode("append")
-            .partitionBy("cell")
-            .parquet(serve_dir)
-        )
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        open(marker, "w").close()
-
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .option("checkpointLocation", scratch_dir("ivf_silver_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+        ),
+        lambda rows: rows.write.mode("append")
+        .partitionBy("cell")
+        .parquet(serve_dir),
+        lambda: rebuild_ivf_serving(spark, sink_dir, serve_dir),
+    )
+    return _start_channel_query(
+        spark, sf_dir, "embeddings", stream,
+        os.path.basename(os.path.normpath(serve_dir)), "ivf_silver_ckpt_",
+        run_batch,
     )
 
 
@@ -690,15 +576,9 @@ def start_image_signature_channel(
     from ..llm.multimodal import dhash_images, encode_images
 
     return start_signature_channel(
-        spark,
-        sf_dir,
-        lambda df: dhash_images(encode_images(df)),
-        sink_table=sink_table,
-        sig_dir=sig_dir,
-        pair_dir=pair_dir,
-        stream=stream,
-        max_hamming=max_hamming,
-        prefix="img_sig",
+        spark, sf_dir, lambda df: dhash_images(encode_images(df)),
+        sink_table=sink_table, sig_dir=sig_dir, pair_dir=pair_dir,
+        stream=stream, max_hamming=max_hamming, prefix="img_sig",
     )
 
 
@@ -719,15 +599,9 @@ def start_audio_signature_channel(
     from ..llm.multimodal import encode_audio, fingerprint_audio
 
     return start_signature_channel(
-        spark,
-        sf_dir,
-        lambda df: fingerprint_audio(encode_audio(df)),
-        sink_table=sink_table,
-        sig_dir=sig_dir,
-        pair_dir=pair_dir,
-        stream=stream,
-        max_hamming=max_hamming,
-        prefix="aud_sig",
+        spark, sf_dir, lambda df: fingerprint_audio(encode_audio(df)),
+        sink_table=sink_table, sig_dir=sig_dir, pair_dir=pair_dir,
+        stream=stream, max_hamming=max_hamming, prefix="aud_sig",
     )
 
 
@@ -775,15 +649,9 @@ def start_video_signature_channel(
         )
 
     return start_signature_channel(
-        spark,
-        sf_dir,
-        signature_fn,
-        sink_table=sink_table,
-        sig_dir=sig_dir,
-        pair_dir=pair_dir,
-        stream=stream,
-        max_hamming=max_hamming,
-        prefix="vid_sig",
+        spark, sf_dir, signature_fn,
+        sink_table=sink_table, sig_dir=sig_dir, pair_dir=pair_dir,
+        stream=stream, max_hamming=max_hamming, prefix="vid_sig",
         publish_fn=publish_fn,
     )
 
@@ -800,104 +668,45 @@ def start_signature_channel(
     prefix: str = "sig",
     publish_fn=None,
 ):
-    """Streaming maintenance of a perceptual dedup index — the
-    production loop the text channel's scope note defers, generic
-    over the signature function (one engine, every two-half-signature
-    modality): each micro-batch of documents is signed by
-    ``signature_fn`` (a (doc_id)-frame -> (doc_id, h_lo, h_hi)
-    builder — image dHash, audio envelope, and composite-frame-id
-    video ship as the `start_image_signature_channel` /
-    `start_audio_signature_channel` / `start_video_signature_channel`
-    faces), its NEW signatures are checked against the ACCUMULATED
-    signature index
-    of every earlier batch via `llm.dedup.incremental_dhash_pairs`
-    (signature granularity, old x old never expands), and then the
-    batch's signatures are folded INTO the index — so pairs BETWEEN
-    micro-batches are found as soon as the later batch arrives, and
-    after the stream drains the committed pair set equals the batch
-    `dhash_near_dup_pairs` over the whole corpus (the parity test's
-    claim).
+    """Streaming maintenance of a perceptual dedup index on the
+    `channels._start_index_channel` mechanism, generic over the
+    signature function (one engine, every two-half-signature
+    modality).
 
-    Two transactional logs (`sources/sinks.py:commit_append`, both
-    executor-written, driver O(1)):
-
-    - ``sig_dir``: the signature index, keyed (doc_id, batch);
-    - ``pair_dir``: discovered pairs, keyed (doc_a, doc_b).
-
-    Crash/replay contract: pairs commit BEFORE signatures, and the
-    index read anti-joins the current batch's doc_ids — a replay
-    whose signatures already landed (crash between the two commits)
-    would otherwise see its own documents on BOTH sides of the
-    old/new split and emit self-pairs; with the anti-join the replay
-    recomputes the identical pair set and both logs dedup
-    idempotently on their keys.
-
-    ``publish_fn`` maps the FULL committed pair log to the view the
-    sink table exposes (default: raw (doc_a, doc_b, hamming) pairs);
-    the video face reduces frame pairs to clip pairs here, so
-    evidence that straddles micro-batches counts toward the clip
-    threshold as soon as it lands."""
+    Items: ``signature_fn`` over each micro-batch's documents — a
+    (doc_id)-frame -> (doc_id, h_lo, h_hi) builder (image dHash, audio
+    envelope and composite-frame-id video ship as the
+    `start_image_signature_channel` / `start_audio_signature_channel` /
+    `start_video_signature_channel` faces), indexed keyed (doc_id,
+    batch) in ``sig_dir``.  Output: the batch's new signatures paired
+    against the index by `llm.dedup.incremental_dhash_pairs`
+    (signature granularity, old x old never expands), keyed (doc_a,
+    doc_b) in ``pair_dir``; after the drain it equals the batch
+    `dhash_near_dup_pairs` over the whole corpus.  View:
+    ``publish_fn`` of the full pair log (default: raw (doc_a, doc_b,
+    hamming) pairs); the video face reduces frame pairs to clip pairs
+    here, so evidence that straddles micro-batches counts toward the
+    clip threshold as soon as it lands."""
     from ..llm.dedup import incremental_dhash_pairs
     from ..sources.scratch import scratch_dir
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
 
-    if sig_dir is None:
-        sig_dir = scratch_dir(f"{prefix}_index_")
-    if pair_dir is None:
-        pair_dir = scratch_dir(f"{prefix}_pairs_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "documents")
     if publish_fn is None:
         def publish_fn(pairs):
             return pairs.select("doc_a", "doc_b", "hamming")
 
-    publish_fn(
-        spark.createDataFrame([], "doc_a long, doc_b long, hamming long")
-    ).createOrReplaceTempView(sink_table)
-
-    def run_batch(batch_df, batch_id):
-        batch_hashes = signature_fn(
-            batch_df.select("doc_id")
-        ).localCheckpoint(eager=False)
-        try:
-            old = (
-                read_committed(spark, sig_dir, keys=["doc_id", "batch"])
-                .select("doc_id", "h_lo", "h_hi")
-                .join(
-                    batch_hashes.select("doc_id"), "doc_id", "left_anti"
-                )
-            )
-            flagged = old.withColumn("__new", F.lit(False)).unionByName(
-                batch_hashes.withColumn("__new", F.lit(True))
-            )
-        except FileNotFoundError:
-            flagged = batch_hashes.withColumn("__new", F.lit(True))
-        pairs = incremental_dhash_pairs(
-            flagged, F.col("__new"), max_hamming=max_hamming
-        )
-        commit_append(pairs, pair_dir, version=float(batch_id))
-        commit_append(
-            batch_hashes.withColumn(
-                "batch", F.lit(int(batch_id)).cast("long")
-            ),
-            sig_dir,
-            version=float(batch_id),
-        )
-        try:
-            committed = read_committed(
-                spark, pair_dir, keys=["doc_a", "doc_b"]
-            )
-        except FileNotFoundError:
-            return  # every commit so far carried zero pairs
-        publish_fn(committed).createOrReplaceTempView(sink_table)
-
-    return (
-        stream.writeStream.queryName(sink_table)
-        .foreachBatch(run_batch)
-        .option("checkpointLocation", scratch_dir(f"{prefix}_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    return _start_index_channel(
+        spark, sf_dir, "documents", sink_table, stream,
+        item_dir=scratch_dir(f"{prefix}_index_") if sig_dir is None else sig_dir,
+        out_dir=scratch_dir(f"{prefix}_pairs_") if pair_dir is None else pair_dir,
+        ckpt_prefix=f"{prefix}_ckpt_",
+        item_id="doc_id",
+        item_fn=lambda b: signature_fn(b.select("doc_id")),
+        out_fn=lambda items, indexed: incremental_dhash_pairs(
+            indexed, F.col("__new"), max_hamming=max_hamming
+        ),
+        out_keys=["doc_a", "doc_b"],
+        empty_schema="doc_a long, doc_b long, hamming long",
+        view_fn=publish_fn,
     )
 
 
@@ -911,79 +720,34 @@ def start_embedding_index_channel(
     threshold: float = 0.35,
     n_planes: int = 4,
 ):
-    """Streaming maintenance of the SEMANTIC dedup index — the
-    embedding face of the accumulating-index family (the signature
-    channels' contract carried to vectors, which do not fit the
-    two-half-signature frame): each micro-batch's new vectors are
-    paired against the committed index of every earlier batch via
-    `llm.similarity.incremental_embedding_pairs` (same-LSH-bucket
-    candidates, exact cosine >= ``threshold`` verify, old x old never
-    scored), then folded into the index.  After the drain the
-    committed pair set equals the batch
-    `embedding_near_dup_candidates` over the whole corpus — the
-    parity test's claim, cross-batch pairs included.
+    """Streaming maintenance of the SEMANTIC dedup index on the
+    `channels._start_index_channel` mechanism — the embedding face of
+    the accumulating-index family.
 
-    Same two-log crash contract as `start_signature_channel`: pairs
-    commit BEFORE vectors, and the index read anti-joins the current
-    batch's ids so a replay whose vectors already landed cannot
-    self-pair."""
+    Items: each micro-batch's (vec_id, embedding) rows, indexed keyed
+    (vec_id, batch) in ``vec_dir``.  Output: the new vectors paired
+    against the index by `llm.similarity.incremental_embedding_pairs`
+    (same-LSH-bucket candidates, exact cosine >= ``threshold`` verify,
+    old x old never scored), keyed (id_a, id_b) in ``pair_dir``.  View:
+    the full pair log as (id_a, id_b, cos_sim); after the drain it
+    equals the batch `embedding_near_dup_candidates` over the whole
+    corpus, cross-batch pairs included."""
     from ..llm.similarity import incremental_embedding_pairs
     from ..sources.scratch import scratch_dir
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
 
-    if vec_dir is None:
-        vec_dir = scratch_dir("emb_idx_index_")
-    if pair_dir is None:
-        pair_dir = scratch_dir("emb_idx_pairs_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "embeddings")
-    spark.createDataFrame(
-        [], "id_a long, id_b long, cos_sim double"
-    ).createOrReplaceTempView(sink_table)
-
-    def run_batch(batch_df, batch_id):
-        batch_vecs = batch_df.select(
-            "vec_id", "embedding"
-        ).localCheckpoint(eager=False)
-        try:
-            old = (
-                read_committed(spark, vec_dir, keys=["vec_id", "batch"])
-                .select("vec_id", "embedding")
-                .join(batch_vecs.select("vec_id"), "vec_id", "left_anti")
-            )
-            flagged = old.withColumn("__new", F.lit(False)).unionByName(
-                batch_vecs.withColumn("__new", F.lit(True))
-            )
-        except FileNotFoundError:
-            flagged = batch_vecs.withColumn("__new", F.lit(True))
-        pairs = incremental_embedding_pairs(
-            flagged, F.col("__new"), threshold=threshold, n_planes=n_planes
-        )
-        commit_append(pairs, pair_dir, version=float(batch_id))
-        commit_append(
-            batch_vecs.withColumn(
-                "batch", F.lit(int(batch_id)).cast("long")
-            ),
-            vec_dir,
-            version=float(batch_id),
-        )
-        try:
-            committed = read_committed(
-                spark, pair_dir, keys=["id_a", "id_b"]
-            )
-        except FileNotFoundError:
-            return  # every commit so far carried zero pairs
-        committed.select("id_a", "id_b", "cos_sim").createOrReplaceTempView(
-            sink_table
-        )
-
-    return (
-        stream.writeStream.queryName(sink_table)
-        .foreachBatch(run_batch)
-        .option("checkpointLocation", scratch_dir("emb_idx_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    return _start_index_channel(
+        spark, sf_dir, "embeddings", sink_table, stream,
+        item_dir=scratch_dir("emb_idx_index_") if vec_dir is None else vec_dir,
+        out_dir=scratch_dir("emb_idx_pairs_") if pair_dir is None else pair_dir,
+        ckpt_prefix="emb_idx_ckpt_",
+        item_id="vec_id",
+        item_fn=lambda b: b.select("vec_id", "embedding"),
+        out_fn=lambda items, indexed: incremental_embedding_pairs(
+            indexed, F.col("__new"), threshold=threshold, n_planes=n_planes
+        ),
+        out_keys=["id_a", "id_b"],
+        empty_schema="id_a long, id_b long, cos_sim double",
+        view_fn=lambda c: c.select("id_a", "id_b", "cos_sim"),
     )
 
 
@@ -999,146 +763,80 @@ def start_knn_graph_channel(
     compact_every: int | None = None,
     retire_stale_after: float | None = 14 * 86400,
 ):
-    """Streaming maintenance of the kNN-GRAPH index (round 12): the
-    graph-silver sibling of `start_ivf_silver_channel`, closing the
-    `knn_graph_delta` loop as a live channel.  Each micro-batch:
+    """Streaming maintenance of the kNN-GRAPH index on the
+    `channels._start_index_channel` mechanism: the graph-silver
+    sibling of `start_ivf_silver_channel`, closing the
+    `knn_graph_delta` loop as a live channel.
 
-    1. read the committed vector index (anti-joining the batch's own
-       ids, the shared replay-safety contract);
-    2. recompute the kNN graph ONLY over the LSH buckets the batch's
-       vectors land in (`llm.similarity.knn_graph` over the affected
-       buckets' members — identical rows to `knn_graph_delta`'s
-       rebuilt half, since a vector's top-k depends solely on its
-       bucket's membership);
-    3. commit those edges keyed (src, rank): `read_committed(keys=
-       ["src", "rank"])` keep-latest semantics make the commit an
-       UPSERT — re-ranked sources overwrite their old edges, while
-       untouched buckets' edges are never re-written or even read (a
-       src's out-degree min(k, |bucket|-1) only grows as members
-       arrive, so (src, rank) keys are never orphaned);
-    4. commit the batch's vectors (graph BEFORE vectors, so a replay
-       after a crash between the two recomputes an identical upsert).
+    Items: each micro-batch's (vec_id, embedding) rows, indexed keyed
+    (vec_id, batch) in ``vec_dir``.  Output: the kNN graph recomputed
+    ONLY over the LSH buckets the batch's vectors land in
+    (`llm.similarity.knn_graph` over the affected buckets' members —
+    identical rows to `knn_graph_delta`'s rebuilt half, since a
+    vector's top-k depends solely on its bucket's membership), keyed
+    (src, rank) in ``graph_dir``.  Keep-latest on (src, rank) makes the
+    commit an UPSERT: re-ranked sources overwrite their old edges,
+    while untouched buckets' edges are never re-written or read (a
+    src's out-degree min(k, |bucket|-1) only grows as members arrive,
+    so (src, rank) keys are never orphaned).  View: the graph log as
+    (src, dst, cos_sim, rank); after the drain it equals the batch
+    `knn_graph` over the whole corpus.
 
-    After the drain the committed graph equals the batch
-    `knn_graph` over the whole corpus — the parity test's claim.
-    Per-batch storage work is proportional to affected buckets, never
-    the corpus: the accumulating-index doctrine applied to the index
-    STRUCTURE itself.
+    ``compact_every``: every N micro-batches, `compact_log` folds the
+    settled commits of BOTH logs into one equivalent commit and
+    `vacuum` reclaims crash-orphaned staging dirs, so a months-long
+    channel scans O(1) manifests (pinned by the long-run pytest).
 
-    ``compact_every`` (r12 verdict Next #4 — lifecycle completeness):
-    every N micro-batches, `compact_log` folds the settled (src,
-    rank) upsert log of BOTH sinks into one equivalent commit
-    (keep_last=1 shields the in-flight replay) and `vacuum` reclaims
-    crash-orphaned staging dirs, so a channel running for months
-    scans O(1) manifests instead of one per micro-batch while
-    read-back equality with the from-scratch rebuild holds at every
-    drain (pinned by the long-run pytest).
-
-    ``retire_stale_after`` (r13 verdict Next #5 — the retirement rule
-    was library+pytest only, so the leak it fixes still accumulated):
-    the same compaction epilogue also ages out BATCH-SIDE graph
-    silvers (the ``knng_v*``/``knng_union_*`` build-once slots) whose
-    corpus fingerprint went stale — superseded corpora, bumped algo
-    versions, dead ``.build-*`` tmps.  LRU by slot mtime: consumers
-    ``utime`` their silver on every read, so anything untouched for
-    ``retire_stale_after`` seconds is dead weight and a LIVE silver
-    can never be reclaimed out from under a reader.  The channel's
-    OWN state (``knng_idx_*`` dirs) is outside both prefixes by
-    construction.  ``None`` disables retirement."""
+    ``retire_stale_after``: the same epilogue ages out BATCH-SIDE graph
+    silvers (``knng_v*``/``knng_union_*`` slots) untouched for that
+    many seconds — LRU by slot mtime, which consumers ``utime`` on
+    every read, so a LIVE silver is never reclaimed under a reader.
+    The channel's own ``knng_idx_*`` dirs match neither prefix.
+    ``None`` disables retirement."""
     from ..llm.similarity import knn_graph, lsh_bucket
     from ..sources.scratch import retire_stale_silvers, scratch_dir
-    from ..sources.sinks import (
-        commit_append,
-        compact_log,
-        read_committed,
-        vacuum,
-    )
-    from .channels import read_table_stream
+    from ..sources.sinks import compact_log, vacuum
 
-    if vec_dir is None:
-        vec_dir = scratch_dir("knng_idx_vecs_")
-    if graph_dir is None:
-        graph_dir = scratch_dir("knng_idx_edges_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "embeddings")
-    spark.createDataFrame(
-        [], "src long, dst long, cos_sim double, rank int"
-    ).createOrReplaceTempView(sink_table)
+    vec_dir = scratch_dir("knng_idx_vecs_") if vec_dir is None else vec_dir
+    graph_dir = scratch_dir("knng_idx_edges_") if graph_dir is None else graph_dir
+    bucket = lsh_bucket("embedding", n_planes=n_planes)
 
-    def run_batch(batch_df, batch_id):
-        batch_vecs = batch_df.select(
-            "vec_id", "embedding"
-        ).localCheckpoint(eager=False)
-        try:
-            old = (
-                read_committed(spark, vec_dir, keys=["vec_id", "batch"])
-                .select("vec_id", "embedding")
-                .join(batch_vecs.select("vec_id"), "vec_id", "left_anti")
-            )
-            everyone = old.unionByName(batch_vecs)
-        except FileNotFoundError:
-            everyone = batch_vecs
-        affected = (
-            batch_vecs.select(
-                lsh_bucket("embedding", n_planes=n_planes).alias(
-                    "bucket"
-                )
-            )
-            .distinct()
-        )
+    def out_fn(items, indexed):
+        affected = items.select(bucket.alias("bucket")).distinct()
         members = (
-            everyone.withColumn(
-                "bucket",
-                lsh_bucket("embedding", n_planes=n_planes),
-            )
+            indexed.withColumn("bucket", bucket)
             .join(F.broadcast(affected), "bucket")
             .select("vec_id", "embedding")
         )
-        rebuilt = knn_graph(members, k=k, n_planes=n_planes)
-        commit_append(rebuilt, graph_dir, version=float(batch_id))
-        commit_append(
-            batch_vecs.withColumn(
-                "batch", F.lit(int(batch_id)).cast("long")
-            ),
-            vec_dir,
-            version=float(batch_id),
-        )
-        if compact_every and (int(batch_id) + 1) % compact_every == 0:
-            # fold settled commits (keep_last=1: the in-flight batch
-            # may replay after a crash and must dedup against its own
-            # original keys) and reclaim unreferenced staging debris.
-            # Both are atomic wrt readers: compaction publishes ONE
-            # replaces-manifest link, vacuum touches only dirs no
-            # manifest references.
-            compact_log(spark, graph_dir, keys=["src", "rank"])
-            compact_log(spark, vec_dir, keys=["vec_id", "batch"])
-            vacuum(graph_dir)
-            vacuum(vec_dir)
-            if retire_stale_after is not None:
-                # lifecycle epilogue: age out superseded batch-side
-                # graph silvers (see docstring).  Two EXPLICIT slot
-                # prefixes — never the bare "knng_" that would also
-                # match this channel's own knng_idx_* state dirs.
-                retire_stale_silvers(
-                    "knng_v", max_age_seconds=retire_stale_after
-                )
-                retire_stale_silvers(
-                    "knng_union_", max_age_seconds=retire_stale_after
-                )
-        try:
-            committed = read_committed(
-                spark, graph_dir, keys=["src", "rank"]
-            )
-        except FileNotFoundError:
-            return  # every commit so far carried zero edges
-        committed.select(
-            "src", "dst", "cos_sim", "rank"
-        ).createOrReplaceTempView(sink_table)
+        return knn_graph(members, k=k, n_planes=n_planes)
 
-    return (
-        stream.writeStream.queryName(sink_table)
-        .foreachBatch(run_batch)
-        .option("checkpointLocation", scratch_dir("knng_idx_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    def maintain_fn():
+        # fold settled commits (keep_last=1: the in-flight batch may
+        # replay after a crash and must dedup against its own original
+        # keys) and reclaim unreferenced staging debris.  Both are
+        # atomic wrt readers: compaction publishes ONE replaces-manifest
+        # link, vacuum touches only dirs no manifest references.
+        compact_log(spark, graph_dir, keys=["src", "rank"])
+        compact_log(spark, vec_dir, keys=["vec_id", "batch"])
+        vacuum(graph_dir)
+        vacuum(vec_dir)
+        if retire_stale_after is not None:
+            # two EXPLICIT slot prefixes — never the bare "knng_" that
+            # would also match this channel's own knng_idx_* state dirs
+            for slot in ("knng_v", "knng_union_"):
+                retire_stale_silvers(slot, max_age_seconds=retire_stale_after)
+
+    return _start_index_channel(
+        spark, sf_dir, "embeddings", sink_table, stream,
+        item_dir=vec_dir,
+        out_dir=graph_dir,
+        ckpt_prefix="knng_idx_ckpt_",
+        item_id="vec_id",
+        item_fn=lambda b: b.select("vec_id", "embedding"),
+        out_fn=out_fn,
+        out_keys=["src", "rank"],
+        empty_schema="src long, dst long, cos_sim double, rank int",
+        view_fn=lambda c: c.select("src", "dst", "cos_sim", "rank"),
+        maintain_fn=maintain_fn,
+        maintain_every=compact_every,
     )

@@ -13,6 +13,23 @@ from streaming_forex_data_pipeline_spark.sources.tables import TABLES
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def pytest_terminal_summary(terminalreporter, config):
+    """Say what the default lane left out: pytest.ini deselects the
+    ``slow`` tests, so a green default run has not run them."""
+    if config.getoption("markexpr") != "not slow":
+        return
+    slow = [
+        item
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("slow") is not None
+    ]
+    if slow:
+        terminalreporter.write_line(
+            f"{len(slow)} slow tests deselected (not run); full lane: "
+            'python -m pytest tests/ -q -m ""'
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("sfdp-tests")

@@ -1021,6 +1021,9 @@ def test_ivf_silver_channel_matches_batch_rebuild(spark, sf_dir, tmp_path):
 
     from streaming_forex_data_pipeline_spark.llm import similarity as SIM
     from streaming_forex_data_pipeline_spark.sources.tables import load_table
+    from streaming_forex_data_pipeline_spark.streaming.channels import (
+        channel_stats,
+    )
     from streaming_forex_data_pipeline_spark.streaming.corpus_stream import (
         rebuild_ivf_serving,
         start_ivf_silver_channel,
@@ -1047,6 +1050,8 @@ def test_ivf_silver_channel_matches_batch_rebuild(spark, sf_dir, tmp_path):
     assert len(os.listdir(os.path.join(log_dir, "_log"))) >= 2, (
         "stream collapsed into one micro-batch — incrementality untested"
     )
+    stats = channel_stats(spark, queries=[q]).collect()
+    assert [r["channel"] for r in stats] == ["ivf_serving"]
 
     def rows(df):
         return sorted(
@@ -1149,6 +1154,69 @@ def test_ivf_silver_channel_recovers_from_crashed_append(
     got = rows(spark.read.parquet(serve))
     assert got == rows(spark.read.parquet(batch_dir))
     assert len(got) == e.count()  # no duplicated batch-0 vectors
+
+
+def test_ivf_rebuild_failed_swap_keeps_serving_layout(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A rebuild whose swap fails must leave the previous serving
+    layout readable with the same rows, and must not leave its
+    half-built sibling directory behind: the rebuild builds beside the
+    live layout and sets the live copy aside instead of deleting it
+    before the rename."""
+    import glob
+    import os
+
+    from pyspark.sql import functions as F
+
+    from streaming_forex_data_pipeline_spark.llm.similarity import (
+        _bootstrap_centroids,
+        assign_to_cells,
+    )
+    from streaming_forex_data_pipeline_spark.sources.sinks import commit_append
+    from streaming_forex_data_pipeline_spark.sources.tables import load_table
+    from streaming_forex_data_pipeline_spark.streaming.corpus_stream import (
+        rebuild_ivf_serving,
+    )
+
+    e = load_table(spark, sf_dir, "embeddings")
+    cents = _bootstrap_centroids(e, 16, "vec_id", "embedding")
+    log_dir = str(tmp_path / "ivf_swap_log")
+    serve = str(tmp_path / "ivf_swap_serving")
+    assigned = assign_to_cells(e, cents).select(
+        F.col("id").alias("vec_id"), "v", "n", "cell"
+    )
+    commit_append(
+        assigned.withColumn("batch", F.lit(0).cast("long")),
+        log_dir,
+        version=0.0,
+    )
+    rebuild_ivf_serving(spark, log_dir, serve)
+
+    def rows():
+        return sorted(
+            (r["vec_id"], tuple(r["v"]), r["n"], r["cell"])
+            for r in spark.read.parquet(serve).collect()
+        )
+
+    before = rows()
+    assert len(before) == e.count()
+
+    real_rename = os.rename
+
+    def failing_swap(src, dst):
+        if ".rebuild" in os.path.basename(src):
+            raise OSError("injected swap failure")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_swap)
+    with pytest.raises(OSError, match="injected swap failure"):
+        rebuild_ivf_serving(spark, log_dir, serve)
+    monkeypatch.undo()
+
+    assert rows() == before
+    assert not glob.glob(f"{serve}.rebuild*")
+    assert not glob.glob(f"{serve}.old-*")
 
 
 def test_events_bucketed_channel_matches_batch_build(spark, sf_dir, tmp_path):
@@ -2611,6 +2679,65 @@ def test_embedding_index_channel_matches_batch_pairs(
     assert any(a % 2 != b % 2 for (a, b) in got), (
         "no cross-batch pair — the accumulation claim went untested"
     )
+
+
+def test_embedding_index_channel_replay_is_idempotent(
+    spark, sf_dir, tmp_path
+):
+    """A restarted accumulating-index channel (same vec_dir, pair_dir
+    and source, fresh checkpoint) re-delivers batch ids 0 and 1 while
+    its vectors are already in the index.  The index read must leave
+    out each batch's own ids, or a replayed vector meets itself across
+    the old/new split and publishes a self-pair; the view must still
+    equal the batch embedding_near_dup_candidates."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from streaming_forex_data_pipeline_spark.llm.similarity import (
+        embedding_near_dup_candidates,
+    )
+    from streaming_forex_data_pipeline_spark.sources.tables import load_table
+    from streaming_forex_data_pipeline_spark.streaming.corpus_stream import (
+        start_embedding_index_channel,
+    )
+
+    e = load_table(spark, sf_dir, "embeddings")
+    src = str(tmp_path / "emb_replay_batches")
+    _staged_event_files(
+        spark, e, src,
+        [e.filter(F.col("vec_id") % 2 == 0),
+         e.filter(F.col("vec_id") % 2 == 1)],
+    )
+    stream = (
+        spark.readStream.schema(e.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    pair_dir = str(tmp_path / "emb_replay_pairs")
+    for _ in range(2):  # the run, then the restart that replays it
+        q = start_embedding_index_channel(
+            spark, sf_dir, sink_table="emb_idx_replay",
+            vec_dir=str(tmp_path / "emb_replay_vecs"), pair_dir=pair_dir,
+            stream=stream, threshold=0.35, n_planes=4,
+        )
+        q.awaitTermination(300)
+        assert q.exception() is None
+    assert len(os.listdir(os.path.join(pair_dir, "_log"))) >= 4, (
+        "restart did not replay both micro-batches"
+    )
+    got = {
+        (r["id_a"], r["id_b"]): round(r["cos_sim"], 5)
+        for r in spark.table("emb_idx_replay").collect()
+    }
+    want = {
+        (r["id_a"], r["id_b"]): round(r["cos_sim"], 5)
+        for r in embedding_near_dup_candidates(
+            e, threshold=0.35, n_planes=4
+        ).collect()
+    }
+    assert not [p for p in got if p[0] == p[1]], "replay self-paired"
+    assert got == want and len(want) > 0
 
 
 def test_knn_graph_channel_matches_batch_build(spark, sf_dir, tmp_path):
