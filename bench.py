@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -248,6 +249,17 @@ HEADLINE = [
 TIMED_SWEEPS = 2
 
 
+def silver_family(name: str) -> str:
+    """The family of a scratch-root entry.  A content-addressed slot
+    keeps everything before its corpus path tag (``_root_``/``_tmp_``),
+    whatever its ending; only a ``scratch_dir`` (mkdtemp) name, which
+    has no tag, loses its random 8-character suffix."""
+    for tag in ("_root_", "_tmp_"):
+        if tag in name:
+            return name.split(tag, 1)[0]
+    return re.sub(r"_[a-z0-9_]{8}$", "", name)
+
+
 def calibration_probe(reps: int = 5) -> float:
     """Fixed CPU-bound calibration probe (round-10 verdict Next #3):
     the same deterministic single-core workload every round — one
@@ -338,15 +350,7 @@ def main() -> None:
     except OSError:
         warm_silver_names = []
 
-    def _family(n: str) -> str:
-        # content-addressed slots: prefix before the corpus path tag;
-        # mkdtemp scratch dirs: strip the random 8-char suffix
-        import re
-
-        n = n.split("_root_", 1)[0].split("_tmp_", 1)[0]
-        return re.sub(r"_[a-z0-9_]{8}$", "", n)
-
-    warm_families = sorted({_family(n) for n in warm_silver_names})
+    warm_families = sorted({silver_family(n) for n in warm_silver_names})
     spark = get_spark("sfdp-bench", cpus=cpus)
 
     qs = dict(plans.spark_queries(), **EXTRA)

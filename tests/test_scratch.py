@@ -112,3 +112,21 @@ def test_integer_pagerank_overflow_guard_raises(spark, gate_sides):
             # and the in-bounds call still runs
             out = integer_pagerank(edges, nodes, iters=2).collect()
             assert len(out) == 4
+
+
+def test_silver_family_keeps_real_name_endings(tmp_root):
+    """bench.py's warm-silver telemetry: a content-addressed slot keeps
+    its whole family name, even one that ends in eight lowercase
+    letters; only a scratch_dir (mkdtemp) name loses its random suffix."""
+    from bench import silver_family
+
+    assert (
+        silver_family("events_baseline_root_testdata_sf0_01_b7c075ff4c17528d")
+        == "events_baseline"
+    )
+    assert (
+        silver_family("ivf_features_tmp_data_sf0.01_fcdd049ed2b00ab3_k3")
+        == "ivf_features"
+    )
+    ckpt = SC.scratch_dir("cms_sketch_ckpt_")
+    assert silver_family(os.path.basename(ckpt)) == "cms_sketch_ckpt"
