@@ -548,20 +548,12 @@ def kmeans_centroids(
     # scale guard (r14 verdict Next #7, same doctrine as
     # operators/importance._pin_fit_layout): the repartition(1) pin
     # funnels the fit input through one task — refuse loudly on an
-    # input that cannot fit, instead of OOMing inside the shuffle.
-    # The remedy at scale is a deterministic SAMPLE of the fit input,
-    # not a bigger cap.
+    # input that cannot fit, instead of OOMing inside the fit.  The
+    # remedy at scale is a deterministic SAMPLE of the fit input, not
+    # a bigger cap.  The guard counts the CACHED pinned frame, so the
+    # upstream chain is scanned once for the count and the fit both.
     import os as _os
 
-    n_fit_rows = emb.select(id_col).count()
-    cap = int(_os.environ.get("SFDP_PIN_FIT_MAX_ROWS", str(2_000_000)))
-    if n_fit_rows > cap:
-        raise ValueError(
-            f"kmeans_centroids: {n_fit_rows} rows exceed the "
-            f"single-partition fit cap ({cap}); sample the fit input "
-            "deterministically before pinning, or raise "
-            "SFDP_PIN_FIT_MAX_ROWS if executor memory truly allows"
-        )
     feats = (
         emb.select(
             F.col(id_col),
@@ -570,10 +562,23 @@ def kmeans_centroids(
         .repartition(1)
         .sortWithinPartitions(id_col)
         .select("fv")
+        .cache()
     )
-    model = KMeans(
-        k=n_cells, seed=seed, maxIter=max_iter, featuresCol="fv"
-    ).fit(feats)
+    try:
+        n_fit_rows = feats.count()
+        cap = int(_os.environ.get("SFDP_PIN_FIT_MAX_ROWS", str(2_000_000)))
+        if n_fit_rows > cap:
+            raise ValueError(
+                f"kmeans_centroids: {n_fit_rows} rows exceed the "
+                f"single-partition fit cap ({cap}); sample the fit input "
+                "deterministically before pinning, or raise "
+                "SFDP_PIN_FIT_MAX_ROWS if executor memory truly allows"
+            )
+        model = KMeans(
+            k=n_cells, seed=seed, maxIter=max_iter, featuresCol="fv"
+        ).fit(feats)
+    finally:
+        feats.unpersist()
     spark = emb.sparkSession
     cents = spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..llm import dedup as DD
 from ..llm import multimodal as MM
+from ..sources.scratch import build_once, corpus_fingerprint, scratch_path
 from ..sources.tables import fan_out, load_table
 from .registry import register
 
@@ -42,45 +43,22 @@ def media_payloads(spark, sf_dir: str, modality: str):
     pattern: the encode is the once-per-corpus amortized step; bench
     and driver re-runs measure the probe).  Keyed by the documents
     fingerprint + contract version under the verified per-user
-    scratch root; atomic-rename build, benign lost-race adoption."""
-    import os
-    import shutil
-    import uuid
-    from pathlib import Path
-
-    from ..sources.scratch import scratch_path
-    from .llm_q import _corpus_fingerprint
-
+    scratch root; published through `scratch.build_once`."""
     builders = {
         "image": MM.encode_images,
         "audio": MM.encode_audio,
         "video": MM.encode_videos,
     }
-    fp = _corpus_fingerprint(sf_dir, table="documents")
+    fp = corpus_fingerprint(sf_dir, table="documents")
     out_dir = scratch_path(
         f"media_{modality}_v{_MEDIA_CONTRACT_VERSION}_{fp}"
     )
-    if not (Path(out_dir) / "_SUCCESS").exists():
-        import time as _time
 
-        from ..sources.scratch import log_silver_build
-
-        _t0 = _time.perf_counter()
+    def build(tmp: str) -> None:
         d = load_table(spark, sf_dir, "documents")
-        tmp = f"{out_dir}.build-{uuid.uuid4().hex}"
         builders[modality](fan_out(d)).write.parquet(tmp)
-        try:
-            os.rename(tmp, out_dir)
-        except OSError:
-            # benign lost race only: if no winner's table exists this
-            # was a real failure — surface it
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not (Path(out_dir) / "_SUCCESS").exists():
-                raise
-        log_silver_build(
-            os.path.basename(out_dir), _time.perf_counter() - _t0
-        )
-    return spark.read.parquet(out_dir)
+
+    return spark.read.parquet(build_once(out_dir, build))
 
 #: bump when any signature computation in llm/multimodal.py changes
 #: (dhash grid walk, envelope framing, frame sampling) — the signature
@@ -104,16 +82,8 @@ def media_signatures(
     query.  Schemas: image/audio (doc_id, h_lo, h_hi); video
     (doc_id, frame_idx, h_lo, h_hi) at stride ``every_n``.
 
-    Same protocol as media_payloads: build to a temp dir, atomic
-    rename, adopt a concurrent builder's winner."""
-    import os
-    import shutil
-    import uuid
-    from pathlib import Path
-
-    from ..sources.scratch import scratch_path
-    from .llm_q import _corpus_fingerprint
-
+    Same `scratch.build_once` protocol as media_payloads; the payload
+    silver it reads is a nested build that logs its own cost."""
     if modality == "video":
         if every_n is None:
             raise ValueError("video signatures require every_n")
@@ -125,32 +95,16 @@ def media_signatures(
         builder, suffix = MM.fingerprint_audio, ""
     else:
         raise ValueError(f"unknown modality {modality!r}")
-    fp = _corpus_fingerprint(sf_dir, table="documents")
+    fp = corpus_fingerprint(sf_dir, table="documents")
     out_dir = scratch_path(
         f"sig_{modality}{suffix}"
         f"_v{_MEDIA_CONTRACT_VERSION}_{_SIG_CONTRACT_VERSION}_{fp}"
     )
-    if not (Path(out_dir) / "_SUCCESS").exists():
-        import time as _time
 
-        from ..sources.scratch import log_silver_build
+    def build(tmp: str) -> None:
+        builder(media_payloads(spark, sf_dir, modality)).write.parquet(tmp)
 
-        # the payload silver logs its own build; time only THIS
-        # signature pass so build rows stay additive
-        payloads = media_payloads(spark, sf_dir, modality)
-        _t0 = _time.perf_counter()
-        tmp = f"{out_dir}.build-{uuid.uuid4().hex}"
-        builder(payloads).write.parquet(tmp)
-        try:
-            os.rename(tmp, out_dir)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not (Path(out_dir) / "_SUCCESS").exists():
-                raise
-        log_silver_build(
-            os.path.basename(out_dir), _time.perf_counter() - _t0
-        )
-    return spark.read.parquet(out_dir)
+    return spark.read.parquet(build_once(out_dir, build))
 
 
 # closed-form replay of the dHash bit for position b (0..63) of doc_id:

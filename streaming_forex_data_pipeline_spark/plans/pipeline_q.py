@@ -39,8 +39,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..llm import dedup as DD
+from ..sources.scratch import build_once, corpus_fingerprint, scratch_path
 from ..sources.tables import load_table
-from .media_q import _AFP_CTE, media_payloads, media_signatures
+from .media_q import _AFP_CTE, media_signatures
 from .modal_q import (
     _VHASH_CTE,
     VIDEO_EVERY_N,
@@ -76,7 +77,6 @@ def _ensure_fact_bucketed(
     100 TB deployment writes thousands — the invariant that matters is
     only that both facts use the same count."""
     from ..sources.layout import ensure_bucketed_silver
-    from .llm_q import _corpus_fingerprint
 
     out = []
     for table, key, sort_cols in (
@@ -87,7 +87,7 @@ def _ensure_fact_bucketed(
             ensure_bucketed_silver(
                 spark,
                 load_table(spark, sf_dir, table),
-                _corpus_fingerprint(sf_dir, table=table),
+                corpus_fingerprint(sf_dir, table=table),
                 f"{table}_by_okey",
                 key,
                 sort_cols,
@@ -324,42 +324,21 @@ def _ensure_events_partitioned(spark: SparkSession, sf_dir: str) -> str:
     directory, and date predicates prune at the file index before any
     row is read.  Complements the bucketed silver (keyed access) with
     the time-keyed access path.  Same cache protocol as every silver:
-    fingerprint-keyed location under the 0700 scratch root, unique
-    temp build, atomic rename, lost-race adoption.  Readers go through
+    fingerprint-keyed location under the 0700 scratch root, published
+    through `scratch.build_once`.  Readers go through
     ``spark.read.parquet`` (path-based partition discovery), so no
     catalog state outlives the session."""
-    import os
-    import shutil
-    import uuid
-    from pathlib import Path
-
     from ..sources.layout import write_day_partitioned
-    from ..sources.scratch import scratch_path
-    from .llm_q import _corpus_fingerprint
 
     fp = re.sub(
-        r"[^A-Za-z0-9_]", "_", _corpus_fingerprint(sf_dir, table="events")
+        r"[^A-Za-z0-9_]", "_", corpus_fingerprint(sf_dir, table="events")
     )
-    loc = scratch_path(f"events_by_day_{fp}")
-    if not (Path(loc) / "_SUCCESS").exists():
-        e = load_table(spark, sf_dir, "events")
-        tmp = f"{loc}.build-{uuid.uuid4().hex}"
-        # the write and the rename get SEPARATE failure handling (the
-        # media_payloads shape): a write-phase error is never the
-        # benign lost-race case and must always surface
-        try:
-            write_day_partitioned(e, tmp)
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        try:
-            os.rename(tmp, loc)
-        except OSError:
-            # benign only if a concurrent builder won the rename race
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not (Path(loc) / "_SUCCESS").exists():
-                raise
-    return loc
+    return build_once(
+        scratch_path(f"events_by_day_{fp}"),
+        lambda tmp: write_day_partitioned(
+            load_table(spark, sf_dir, "events"), tmp
+        ),
+    )
 
 
 @register(

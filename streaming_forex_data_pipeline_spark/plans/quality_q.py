@@ -664,13 +664,25 @@ ORDER BY symbol, ts
     "symbol's hours with close/vwap = open; batch 2 = corrected bars, "
     "last 2/3 — overlapping the middle third), each round-trips "
     "through parse_polygon (S5, real JSON parsing in-engine), passes "
-    "the F2/F3/F6 validation chain, and is upsert-appended (S7) with "
-    "a pinned version stamp into a staging table; the returned frame "
-    "is the keep-latest merge-on-read, so overlapping keys must carry "
-    "batch-2 values.  The oracle replays the same batch construction "
-    "and merge directly in SQL.  JSON round-trips are exact for "
-    "doubles (shortest-repr emit, exact parse), so the result is "
-    "hash-checkable.",
+    "the F2/F3/F6 validation chain, and is committed (S7, "
+    "sinks.commit_append) with a pinned version stamp into a staging "
+    "table; the returned frame is read_committed's keep-latest merge, "
+    "so overlapping keys must carry batch-2 values.  The oracle "
+    "replays the same batch construction and merge directly in SQL.  "
+    "JSON round-trips are exact for doubles (shortest-repr emit, exact "
+    "parse), so the result is hash-checkable.  Same builder and oracle "
+    "as ingest_cycle_txn.",
+)
+@register(
+    "ingest_cycle_txn",
+    oracle=_INGEST_ORACLE,
+    doc="The ingest_cycle slice under the name that states its S7 "
+    "write path: each validated batch is staged, then published by an "
+    "atomic manifest link (sinks.commit_append), and the read side "
+    "(sinks.read_committed) scans only manifest-listed files with the "
+    "commit id as the merge tie-break.  Same builder and oracle as "
+    "ingest_cycle — oracle-checked evidence that the optimistic-"
+    "concurrency protocol preserves MERGE semantics end-to-end.",
 )
 def ingest_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import sinks as SK
@@ -678,32 +690,6 @@ def ingest_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     b1v, b2v = _ingest_batches(spark, sf_dir)
     table_dir = scratch_dir("ingest_cycle_")
-    _INGEST_DIRS.append(table_dir)
-    SK.upsert_append(b1v, table_dir, version=1.0)
-    SK.upsert_append(b2v, table_dir, version=2.0)
-    merged = SK.read_upserted(spark, table_dir, keys=["symbol", "ts"])
-    return _ingest_select(merged)
-
-
-@register(
-    "ingest_cycle_txn",
-    oracle=_INGEST_ORACLE,
-    doc="The ingest_cycle fetch-validate-persist slice routed through "
-    "the TRANSACTIONAL sink (sinks.py commit_append/read_committed): "
-    "each validated batch is staged then published by an atomic "
-    "manifest link, and the read side scans only manifest-listed "
-    "files with the commit id as the merge tie-break.  Same oracle as "
-    "ingest_cycle — the merge result must be byte-identical whichever "
-    "S7 write path carried it; what this row adds is driver-checked "
-    "evidence that the optimistic-concurrency protocol preserves "
-    "MERGE semantics end-to-end.",
-)
-def ingest_cycle_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources import sinks as SK
-    from ..sources.scratch import scratch_dir
-
-    b1v, b2v = _ingest_batches(spark, sf_dir)
-    table_dir = scratch_dir("ingest_cycle_txn_")
     _INGEST_DIRS.append(table_dir)
     SK.commit_append(b1v, table_dir, version=1.0)
     SK.commit_append(b2v, table_dir, version=2.0)
@@ -795,12 +781,11 @@ def _ingest_select(merged: DataFrame) -> DataFrame:
     ).orderBy("symbol", "ts")
 
 
-# one JSON round-trip per (session, corpus): ingest_cycle and
-# ingest_cycle_txn share the identical payload-build/parse/validate
-# front half — what each face ADDS is its S7 write path — so the
-# parsed batches are localCheckpoint'd once and reused (r12 verdict
-# Next #3: the txn face was the slow lane's worst at 19.7 s because
-# every invocation re-ran the whole front half from scratch)
+# one JSON round-trip per (session, corpus): ingest_cycle runs under
+# two registered names, so the parsed batches are localCheckpoint'd
+# once and reused by every invocation (r12 verdict Next #3: the txn
+# face was the slow lane's worst at 19.7 s because every invocation
+# re-ran the whole front half from scratch)
 _INGEST_BATCH_CACHE: dict[tuple, tuple] = {}
 
 

@@ -160,9 +160,9 @@ def _ensure_events_bucketed(
     table and register it in this session's catalog; returns the table
     name.  The silver-cache protocol throughout: the location is keyed
     by the events corpus fingerprint under the per-user 0700 scratch
-    root, the build lands in a unique temp dir and is atomically
-    renamed into place (losers of a concurrent race adopt the winner's
-    files — same fingerprint, same bytes), and later sessions re-attach
+    root, the build is published through `scratch.build_once` (losers
+    of a concurrent race adopt the winner's files — same fingerprint,
+    same bytes), and later sessions re-attach
     by CREATE TABLE over the existing files, never rewriting them.
 
     Bucket files are written one-per-bucket (the pre-write repartition
@@ -172,12 +172,12 @@ def _ensure_events_bucketed(
     buckets so every later user-keyed join/aggregate is exchange-free.
     """
     from ..sources.layout import ensure_bucketed_silver
-    from .llm_q import _corpus_fingerprint
+    from ..sources.scratch import corpus_fingerprint
 
     return ensure_bucketed_silver(
         spark,
         load_table(spark, sf_dir, "events"),
-        _corpus_fingerprint(sf_dir, table="events"),
+        corpus_fingerprint(sf_dir, table="events"),
         "events_by_user",
         "user_id",
         ("user_id", "ts"),

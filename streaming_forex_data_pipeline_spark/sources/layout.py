@@ -54,19 +54,18 @@ def write_bucketed(
     n_buckets: int = 8,
 ) -> str:
     """Build a bucketed-by-``key`` layout at ``loc`` and register it
-    as ``tbl``.  The build lands in a unique temp location and is
-    atomically renamed into place (a concurrent builder's winner is
-    adopted — same inputs, same bytes); the pre-write repartition uses
-    the same murmur3 hash bucketBy assigns with, so each bucket is one
-    file, sorted by ``sort_cols``."""
-    import os
-    import shutil
+    as ``tbl``.  The build is published through `scratch.build_once`,
+    so an existing layout at ``loc`` is adopted, never rewritten: a
+    concurrent builder's winner (same inputs, same bytes) or a
+    restarted channel's maintained files.  The pre-write repartition
+    uses the same murmur3 hash bucketBy assigns with, so each bucket
+    is one file, sorted by ``sort_cols``."""
     import uuid
-    from pathlib import Path
 
-    if not (Path(loc) / "_SUCCESS").exists():
+    from .scratch import build_once
+
+    def build(tmp_loc: str) -> None:
         tmp_tbl = f"{tbl}_build_{uuid.uuid4().hex}"
-        tmp_loc = f"{loc}.build-{uuid.uuid4().hex}"
         try:
             (
                 df.repartition(n_buckets, key)
@@ -75,24 +74,10 @@ def write_bucketed(
                 .option("path", tmp_loc)
                 .saveAsTable(tmp_tbl)
             )
-        except BaseException:
-            # a failed build must not leak its uuid-named partial dir:
-            # nothing ever adopts or vacuums it, and repeated failures
-            # would accumulate fact-sized orphans under the scratch
-            # root (review-found)
-            shutil.rmtree(tmp_loc, ignore_errors=True)
-            raise
         finally:
             spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
-        try:
-            os.rename(tmp_loc, loc)
-        except OSError:
-            # benign only if a concurrent builder won the rename race;
-            # a real failure (EACCES/EXDEV/...) must surface here, not
-            # as a later TABLE_OR_VIEW_NOT_FOUND with the cause gone
-            shutil.rmtree(tmp_loc, ignore_errors=True)
-            if not (Path(loc) / "_SUCCESS").exists():
-                raise
+
+    build_once(loc, build)
     return attach_bucketed_table(
         spark,
         tbl,

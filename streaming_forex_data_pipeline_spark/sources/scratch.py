@@ -1,6 +1,6 @@
 """Per-user scratch-directory helper shared by every component that
 materializes state outside the repo (streaming channel sinks and
-checkpoints, ingest-cycle demo tables, the IVF silver cache).
+checkpoints, ingest-cycle demo tables, the build-once silvers).
 
 One policy, one place (round-8 judge ask — the channels used bare
 ``tempfile.mkdtemp`` while the silver cache had grown its own hardened
@@ -19,13 +19,23 @@ root):
   mkdtemp replacement) or a deterministic named slot for
   content-addressed caches (``scratch_path``, the silver-cache
   pattern).
+
+Every build-once silver publishes through ``build_once`` here, keyed
+by ``corpus_fingerprint``: one module owns the build, the LRU touch
+and the age-based retirement that relies on that touch.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
+import shutil
 import stat as _stat
 import tempfile
+import time
+import uuid
+from pathlib import Path
 
 
 def user_scratch_root() -> str:
@@ -95,22 +105,20 @@ def retire_stale_silvers(
     corpus's cache — scratch grew one dead silver per corpus edit,
     forever).
 
-    Policy is LRU by directory mtime: `_build_once` touches a
-    silver's slot on every successful use, so mtime is
+    Policy is LRU by directory mtime: `build_once` touches a
+    silver's slot on every use, warm or cold, so mtime is
     last-consumption time, and any slot under ``prefix`` untouched
     for ``max_age_seconds`` is dead weight — a superseded
     fingerprint, or a corpus nobody queries anymore.  Age-based (not
     newest-fingerprint-wins) because DIFFERENT live corpora share the
     root (the three testdata scales each keep a silver) and must not
     thrash each other's caches.  The same rule reclaims the
-    documented ``.build-*`` leak of hard-killed builders: a LIVE
+    ``.build-*`` leak of hard-KILLED builders (a build that raises
+    removes its own tmp dir in `build_once`): a LIVE
     builder's tmp dir has a fresh mtime, so the age guard never races
     it.  ``keep`` lists slot basenames exempt from retirement.
     Returns the removed paths; never touches non-directories,
     symlinks, or names outside ``prefix``."""
-    import shutil
-    import time
-
     if not prefix:
         # an empty prefix would sweep EVERY channel's checkpoint and
         # sink under the shared root, not just the named silver family
@@ -152,3 +160,74 @@ def scratch_path(name: str) -> str:
         # channel's state (round-9 ADVICE)
         raise ValueError(f"scratch slot name must be a bare name: {name!r}")
     return os.path.join(user_scratch_root(), name)
+
+
+def corpus_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
+    """CONTENT-HASH fingerprint of a source parquet listing (per-file
+    name + mtime_ns + size, not whole-second mtime + total size — a
+    same-second same-size rewrite must invalidate).  The shared cache
+    key for every once-per-corpus artifact (kNN/IVF/k-means silvers,
+    media payloads and signatures, the bucketed and date-partitioned
+    fact layouts)."""
+    tag = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir).strip("_")
+    src = f"{sf_dir}/{table}.parquet"
+    h = hashlib.md5(os.path.abspath(src).encode())
+
+    def _add(path: str) -> None:
+        st = os.stat(path)
+        h.update(
+            f"{os.path.basename(path)}:{st.st_mtime_ns}:{st.st_size};"
+            .encode()
+        )
+
+    if os.path.isdir(src):
+        for f in sorted(os.listdir(src)):
+            if f.endswith(".parquet"):
+                _add(os.path.join(src, f))
+    else:
+        _add(src)
+    return f"{tag}_{h.hexdigest()[:16]}"
+
+
+def build_once(out_dir: str, build) -> str:
+    """THE build-once protocol, shared by every silver artifact: if
+    ``out_dir`` lacks a ``_SUCCESS``, run ``build(tmp)`` into a unique
+    ``.build-*`` temp dir and atomically rename it into place.  A
+    failed build removes its tmp; on a failed rename only the benign
+    lost race is swallowed (the winner's equivalent artifact exists) —
+    a real failure (EACCES/EXDEV/...) surfaces rather than leaving a
+    path a later read fails on with no cause.  A hard-KILLED builder's
+    ``.build-*`` dir stays behind until `retire_stale_silvers` ages it
+    out with its prefix family.  Cold builds log their own cost
+    (`log_silver_build`, nested builds subtracted); every call touches
+    the slot's mtime so retirement sees last use.  Returns
+    ``out_dir``."""
+    if not (Path(out_dir) / "_SUCCESS").exists():
+        # record this build's OWN cost — nested builds (e.g. the union
+        # graph's two sub-graph silvers) log themselves during
+        # build(), so subtract the slice they appended
+        mark = len(SILVER_BUILD_LOG)
+        t0 = time.perf_counter()
+        tmp = f"{out_dir}.build-{uuid.uuid4().hex}"
+        try:
+            build(tmp)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        try:
+            os.rename(tmp, out_dir)
+        except OSError:
+            shutil.rmtree(tmp, ignore_errors=True)
+            if not (Path(out_dir) / "_SUCCESS").exists():
+                raise
+        nested = sum(b["sec"] for b in SILVER_BUILD_LOG[mark:])
+        log_silver_build(
+            os.path.basename(out_dir), time.perf_counter() - t0 - nested
+        )
+    # LRU touch: slot mtime = last consumption, so retire_stale_silvers
+    # ages out superseded silvers without racing one a session reads
+    try:
+        os.utime(out_dir, None)
+    except OSError:
+        pass  # read-only root or a raced retire — the read still works
+    return out_dir

@@ -5,11 +5,14 @@ The reference's write path is a per-row SQLAlchemy upsert loop
 (:311-339) and retention policies.  On plain Parquet (no Delta in this
 container) the idiomatic equivalents are:
 
-- S7 upsert  = append the new batch, resolve conflicts ON READ with
-  keep-latest row_number over the key (the merge-on-read half of Delta
-  MERGE; a periodic compaction pass rewrites the table with conflicts
-  resolved — same lifecycle as OPTIMIZE).
-- S10 delete = partition-overwrite excluding the doomed range.
+- S7 upsert  = ``commit_append``: stage the batch's files, then publish
+  them with ONE atomic manifest link in the table's ``_log/`` (Delta's
+  commit protocol on a filesystem); ``read_committed`` scans only
+  manifest-listed files and keeps the latest row per key, and
+  ``compact_log`` folds settled commits into one replacing commit —
+  the same lifecycle as Delta's checkpoint/OPTIMIZE.
+- S10 delete = drop the doomed partitions, rewrite the boundary ones
+  beside the table and swap them in rename-aside.
 - S11 retention = drop partitions older than the horizon.
 - S14 export = df.write.json.
 
@@ -22,25 +25,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def upsert_append(
-    updates: DataFrame, table_dir: str, version: float | None = None
-) -> None:
-    """S7 write side: blind append of the update batch with an ingest
-    version stamp — no read-modify-write, so concurrent writers don't
-    conflict.  Conflict resolution happens in read_upserted.
-
-    ``version`` pins the stamp explicitly (deterministic replays, e.g.
-    the oracle-checked ingest_cycle query); default is wall-clock, the
-    production behavior."""
-    stamp = (
-        F.lit(float(version))
-        if version is not None
-        else F.current_timestamp().cast("double")
-    )
-    stamped = updates.withColumn("__ingest_ts", stamp)
-    stamped.write.mode("append").parquet(table_dir)
-
-
 def commit_append(
     updates: DataFrame,
     table_dir: str,
@@ -48,9 +32,8 @@ def commit_append(
     replaces: list[int] | None = None,
     stamp_from_column: bool = False,
 ) -> int:
-    """S7 write side with an ATOMIC commit (the transactional MERGE
-    story plain `upsert_append` lacks): the batch's parquet files are
-    written to a staging directory readers never list, then published
+    """S7 write side with an ATOMIC commit: the batch's parquet files
+    are written to a staging directory readers never list, then published
     by creating ONE manifest file in ``_log/`` with the next commit id.
     ``os.link`` is the POSIX create-if-absent primitive — if two
     writers race for the same id, exactly one link succeeds and the
@@ -388,34 +371,6 @@ def vacuum(table_dir: str) -> list[str]:
     return removed
 
 
-def read_upserted(
-    spark: SparkSession, table_dir: str, keys: list[str]
-) -> DataFrame:
-    """S7 read side: keep-latest per key (max __ingest_ts, ties broken
-    arbitrarily-but-deterministically by the stamp ordering) — MERGE
-    `WHEN MATCHED THEN UPDATE` semantics on read."""
-    df = spark.read.parquet(table_dir)
-    w = Window.partitionBy(*keys).orderBy(F.desc("__ingest_ts"))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__ingest_ts")
-    )
-
-
-def compact(spark: SparkSession, table_dir: str, keys: list[str]) -> None:
-    """S12-style maintenance: rewrite the table with upsert conflicts
-    resolved so reads stop paying the dedup window."""
-    import shutil
-
-    resolved = read_upserted(spark, table_dir, keys)
-    tmp = table_dir.rstrip("/") + ".compact"
-    resolved.write.mode("overwrite").parquet(tmp)
-    clean = spark.read.parquet(tmp)
-    clean.write.mode("overwrite").parquet(table_dir)
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
 PARTITION_COL = "p_date"
 
 
@@ -465,6 +420,29 @@ def _as_datetime(x):
     raise TypeError(f"unsupported bound type {type(x)!r}")
 
 
+def swap_aside(tmp: str, live: str, aside: str) -> None:
+    """Publish the fully written directory ``tmp`` at ``live`` by
+    rename-ASIDE: the live copy is renamed to ``aside``, ``tmp`` takes
+    its place, and ``aside`` is deleted only after that rename
+    succeeded — if it fails, ``aside`` is renamed back.  A delete
+    followed by a rename would leave NEITHER copy on disk if the
+    process died between the two."""
+    import os
+    import shutil
+
+    had_old = os.path.isdir(live)
+    if had_old:
+        os.rename(live, aside)
+    try:
+        os.rename(tmp, live)
+    except BaseException:
+        if had_old:
+            os.rename(aside, live)  # restore the live copy
+        raise
+    if had_old:
+        shutil.rmtree(aside, ignore_errors=True)
+
+
 def delete_range(
     spark: SparkSession,
     table_dir: str,
@@ -480,21 +458,39 @@ def delete_range(
     removed as whole directories, the at-most-two boundary partitions
     are rewritten alone, and every surviving partition's files are not
     read, rewritten, or even listed — O(partitions-touched), not
-    O(table).  On an unpartitioned table it falls back to the
-    overwrite-excluding rewrite."""
+    O(table).  On an unpartitioned table it falls back to one rewrite
+    of the whole table.  Every rewrite lands in a sibling directory
+    and is published by `swap_aside`, so a failed rewrite or swap
+    leaves that directory readable with its original rows."""
     import datetime
+    import os
     import shutil
+    import uuid
+
+    def rewrite(path: str, hidden: str, drop_if_empty: bool) -> None:
+        """Write ``path``'s surviving rows to ``hidden``.del-* and swap
+        them in (or drop ``path`` if none survive and that is allowed)."""
+        tag = uuid.uuid4().hex
+        tmp = f"{hidden}.del-{tag}"
+        try:
+            spark.read.parquet(path).filter(
+                ~((F.col(ts_col) >= start) & (F.col(ts_col) <= end))
+            ).write.parquet(tmp)
+            # count survivors from the materialized tmp — the filter
+            # above still lazily references ``path``
+            if drop_if_empty and not spark.read.parquet(tmp).limit(1).count():
+                shutil.rmtree(path)
+                shutil.rmtree(tmp)
+            else:
+                swap_aside(tmp, path, f"{hidden}.old-{tag}")
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
 
     parts = _partition_dirs(table_dir)
     if not parts:
-        df = spark.read.parquet(table_dir)
-        kept = df.filter(
-            ~((F.col(ts_col) >= start) & (F.col(ts_col) <= end))
-        )
-        tmp = table_dir.rstrip("/") + ".del"
-        kept.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(table_dir)
-        shutil.rmtree(tmp, ignore_errors=True)
+        table_dir = table_dir.rstrip("/")
+        rewrite(table_dir, table_dir, drop_if_empty=False)
         return
 
     lo, hi = _as_datetime(start), _as_datetime(end)
@@ -510,27 +506,12 @@ def delete_range(
             shutil.rmtree(path)  # fully doomed: pure directory drop
             continue
         # boundary chunk: rewrite just this partition's rows.  The
-        # temp dir is DOT-prefixed so a crash between write and move
-        # leaves a dir Spark's file listing AND _partition_dirs both
-        # ignore ('p_date=<date>.del' would make every later
-        # fromisoformat call crash)
-        kept = spark.read.parquet(path).filter(
-            ~((F.col(ts_col) >= start) & (F.col(ts_col) <= end))
-        )
-        import os
-
-        tmp = os.path.join(
-            table_dir, "." + os.path.basename(path.rstrip("/")) + ".del"
-        )
-        kept.write.mode("overwrite").parquet(tmp)
-        # count survivors from the materialized tmp — ``kept`` itself
-        # still lazily references ``path``, which is about to vanish
-        n_left = spark.read.parquet(tmp).limit(1).count()
-        shutil.rmtree(path)
-        if n_left == 0:
-            shutil.rmtree(tmp, ignore_errors=True)  # empty chunk: drop
-        else:
-            shutil.move(tmp, path)
+        # siblings are DOT-prefixed so a crash mid-swap leaves dirs
+        # Spark's file listing AND _partition_dirs both ignore
+        # ('p_date=<date>.del' would make every later fromisoformat
+        # call crash)
+        hidden = os.path.join(table_dir, "." + os.path.basename(path))
+        rewrite(path, hidden, drop_if_empty=True)
 
 
 def export_json(df: DataFrame, out_dir: str) -> None:

@@ -814,24 +814,10 @@ def _rebuild_layout(spark, sink_dir: str, loc: str, key: str, build_fn):
 
 
 def _publish_rebuilt_layout(sink_dir: str, loc: str, tmp_loc: str) -> None:
-    """Markers + rename-ASIDE swap of a rebuilt layout.  Published batch
-    ids come from the O(#commits) manifest metadata, never a data-sized
-    distinct over the committed rows.  The swap sets the live copy
-    aside rather than deleting it: a crash between a delete and the
-    rename would leave NEITHER layout on disk, while the aside copy is
-    restored if the rename fails and deleted only after it succeeded."""
-    from ..sources.sinks import log_versions
+    """Markers + rename-aside swap (`sinks.swap_aside`) of a rebuilt
+    layout.  Published batch ids come from the O(#commits) manifest
+    metadata, never a data-sized distinct over the committed rows."""
+    from ..sources.sinks import log_versions, swap_aside
 
     _mark_published(tmp_loc, log_versions(sink_dir))
-    old_loc = f"{loc}.old-{uuid.uuid4().hex}"
-    had_old = os.path.isdir(loc)
-    if had_old:
-        os.rename(loc, old_loc)
-    try:
-        os.rename(tmp_loc, loc)
-    except BaseException:
-        if had_old:
-            os.rename(old_loc, loc)  # restore the live layout
-        raise
-    if had_old:
-        shutil.rmtree(old_loc, ignore_errors=True)
+    swap_aside(tmp_loc, loc, f"{loc}.old-{uuid.uuid4().hex}")

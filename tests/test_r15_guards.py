@@ -82,3 +82,29 @@ def test_dot_fast_path_matches_column_path(spark):
     ).collect()[0]["d"]
     assert fast == slow == pytest.approx(32.0)
     assert math.isfinite(fast)
+
+
+def test_kmeans_fit_scans_upstream_once(spark):
+    """The row-cap guard counts the cached pinned fit frame, so the
+    upstream chain runs once for the guard and the fit together (it
+    used to run once for the count and again for the fit), and the
+    cache is released afterwards."""
+    from pyspark.sql.types import LongType
+
+    rows = spark.sparkContext.accumulator(0)
+
+    def tick(i):
+        rows.add(1)
+        return i
+
+    emb = spark.range(40).select(
+        F.udf(tick, LongType())("id").alias("vec_id"),
+        F.array(
+            (F.col("id") % 7).cast("double"), (F.col("id") % 5).cast("double")
+        ).alias("embedding"),
+    )
+    cached_before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    cents = SIM.kmeans_centroids(emb, n_cells=2, max_iter=3)
+    assert cents.count() == 2
+    assert rows.value == 40
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_before

@@ -19,29 +19,37 @@ def _candles(spark, rows):
 
 
 def test_upsert_merge_semantics(spark, tmp_path):
+    import json
+    import os
+
     tdir = str(tmp_path / "candles")
     t0 = dt.datetime(2024, 1, 1)
-    S.upsert_append(
+    S.commit_append(
         _candles(spark, [("S", t0, 1.0), ("S", t0 + dt.timedelta(hours=1), 2.0)]),
         tdir,
     )
     # second batch updates the first key and inserts a new one
-    S.upsert_append(
+    S.commit_append(
         _candles(spark, [("S", t0, 9.0), ("S", t0 + dt.timedelta(hours=2), 3.0)]),
         tdir,
     )
     got = {
         (r["symbol"], r["ts"]): r["close"]
-        for r in S.read_upserted(spark, tdir, ["symbol", "ts"]).collect()
+        for r in S.read_committed(spark, tdir, ["symbol", "ts"]).collect()
     }
     assert len(got) == 3
     assert got[("S", t0)] == 9.0  # WHEN MATCHED THEN UPDATE
     assert got[("S", t0 + dt.timedelta(hours=1))] == 2.0
     assert got[("S", t0 + dt.timedelta(hours=2))] == 3.0  # WHEN NOT MATCHED INSERT
 
-    # compaction rewrites without the dedup window; same content
-    S.compact(spark, tdir, ["symbol", "ts"])
-    after = spark.read.parquet(tdir)
+    # compaction rewrites the conflicts away; same content
+    cid = S.compact_log(spark, tdir, ["symbol", "ts"], keep_last=0)
+    with open(os.path.join(tdir, "_log", f"{cid:020d}.json")) as fh:
+        folded = json.load(fh)
+    assert folded["replaces"] == [1, 2]
+    staged = os.path.join(tdir, "_staged", folded["staged"])
+    assert spark.read.parquet(staged).count() == 3
+    after = S.read_committed(spark, tdir, ["symbol", "ts"])
     assert after.count() == 3
     assert "__ingest_ts" not in after.columns
 
@@ -71,6 +79,71 @@ def _file_identities(root):
                 st = os.stat(p)
                 out[os.path.relpath(p, root)] = (st.st_ino, st.st_mtime_ns)
     return out
+
+
+def _fail_swap_in(monkeypatch):
+    """Make every rename that publishes a ``.del-*`` rewrite fail."""
+    import os
+
+    real_rename = os.rename
+
+    def failing_swap(src, dst):
+        if ".del-" in os.path.basename(src):
+            raise OSError("injected swap failure")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_swap)
+
+
+def _siblings(path):
+    import glob
+
+    return glob.glob(f"{path}*.del-*") + glob.glob(f"{path}*.old-*")
+
+
+def test_range_delete_failed_swap_keeps_table(spark, tmp_path, monkeypatch):
+    """Unpartitioned S10: if publishing the rewritten copy fails, the
+    table still holds its original rows and no rewrite debris is left."""
+    import pytest
+
+    tdir = str(tmp_path / "keep_me")
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [("S", t0 + dt.timedelta(hours=h), float(h)) for h in range(10)]
+    _candles(spark, rows).write.parquet(tdir)
+    _fail_swap_in(monkeypatch)
+    with pytest.raises(OSError, match="injected swap failure"):
+        S.delete_range(
+            spark, tdir, "ts",
+            t0 + dt.timedelta(hours=3), t0 + dt.timedelta(hours=6),
+        )
+    left = sorted(r["close"] for r in spark.read.parquet(tdir).collect())
+    assert left == [float(h) for h in range(10)]
+    assert _siblings(tdir) == []
+
+
+def test_partitioned_delete_range_failed_swap_keeps_chunk(
+    spark, tmp_path, monkeypatch
+):
+    """Boundary-chunk S10: a failed swap restores the chunk's original
+    files; the table reads back every row."""
+    import os
+
+    import pytest
+
+    tdir = str(tmp_path / "part_keep")
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [("S", t0 + dt.timedelta(days=d, hours=h), float(d * 24 + h))
+            for d in range(2) for h in range(4)]
+    S.write_partitioned(_candles(spark, rows), tdir)
+    _fail_swap_in(monkeypatch)
+    with pytest.raises(OSError, match="injected swap failure"):
+        S.delete_range(
+            spark, tdir, "ts",
+            dt.datetime(2024, 1, 2, 1), dt.datetime(2024, 1, 2, 2),
+        )
+    left = sorted(r["close"] for r in spark.read.parquet(tdir).collect())
+    assert left == sorted(r[2] for r in rows)
+    assert _siblings(os.path.join(tdir, ".p_date")) == []
 
 
 def test_partitioned_retention_drops_only_old_chunks(spark, tmp_path):
