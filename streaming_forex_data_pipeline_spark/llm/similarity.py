@@ -1810,10 +1810,9 @@ def knn_graph_search_batch(
     (qid, vec_id) rows in later rounds.
 
     ``walk`` (r14): a prebuilt ``_batch_walk_visited`` result
-    (scores, visited, w) — the per-session walk cache the sibling
+    (scores, visited, w) — the session-memoized walk the sibling
     faces (recall eval, convergence report) share, so one session's
-    three consumers pay ONE walk instead of three (the _FIT_CACHE
-    doctrine applied to walk state)."""
+    three consumers pay ONE walk instead of three."""
     scores, visited, w = walk if walk is not None else _batch_walk_visited(
         emb, graph, queries, beam=beam, steps=steps,
         n_planes=n_planes, scores=scores,

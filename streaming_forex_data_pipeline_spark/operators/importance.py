@@ -24,6 +24,8 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import session_memo
+
 FEATURES = ("ret_1", "mom_5", "range_frac", "body_frac", "activity")
 
 
@@ -223,26 +225,10 @@ def consensus_ranking(
     )
 
 
-# Per-session model-fit cache (r13, WIRED r14 — the r13 helper was
-# dead code, so rf/lasso/rfe/consensus each re-fit per invocation and
-# the lane paid ~4 fit sets per session): the pinned-layout fits are
-# pure functions of (candle frame, feature subset, hyperparams), and
-# four faces consume them (rf/lasso/rfe + consensus_all_methods), so
-# each distinct fit runs once per session per corpus — the
-# candle-cache doctrine applied to model outputs.  Keyed WEAKLY on
-# the candle DataFrame object itself (candles_from_events returns a
-# per-(session, corpus) singleton, so identity IS the corpus key; a
-# caller's transient frame gets its own entry that dies with it —
-# never a false hit from id() reuse).  Cached VALUES are k-float
-# importance/coefficient lists and the materialized pinned matrix —
-# model-sized and matrix-sized, never corpus-sized.
-import weakref  # noqa: E402
-
-_FIT_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def _fit_slot(candles: DataFrame) -> dict:
-    return _FIT_CACHE.setdefault(candles, {})
+# Fits are pure functions of (candle frame, feature subset, hyperparams)
+# shared by rf/lasso/rfe + consensus_all_methods, so each is memoized on
+# the candle frame, which candles_from_events makes once per session and
+# corpus (r13, wired r14); a cold fit is logged as ``fit:<key>``.
 
 
 def _pinned_matrix(candles: DataFrame) -> DataFrame:
@@ -250,18 +236,13 @@ def _pinned_matrix(candles: DataFrame) -> DataFrame:
     candle singleton: every fit (and every RFE round) re-reads the
     same materialized rows, so the window-function matrix derivation
     runs once per session, not once per fit."""
-    import time
 
-    from ..sources.scratch import log_silver_build
-
-    per = _fit_slot(candles)
-    if "__matrix" not in per:
-        t0 = time.perf_counter()
+    def build() -> DataFrame:
         m = _pin_fit_layout(feature_matrix(candles)).cache()
         m.count()  # materialize under the pinned layout now
-        per["__matrix"] = m
-        log_silver_build("fit:matrix", time.perf_counter() - t0)
-    return per["__matrix"]
+        return m
+
+    return session_memo(candles, "matrix", build, log="fit:matrix")
 
 
 def _rf_importances(
@@ -274,21 +255,14 @@ def _rf_importances(
     per (candle singleton, subset, hyperparams).  RFE's first round
     (all features) therefore shares the random_forest_importance
     face's fit, and consensus_all_methods replays every fit free."""
-    import time
 
-    from ..sources.scratch import log_silver_build
-
-    per = _fit_slot(candles)
-    key = f"rf:{','.join(features)}:{n_trees}:{seed}"
-    if key not in per:
+    def build() -> list:
         from pyspark.ml.feature import VectorAssembler
         from pyspark.ml.regression import RandomForestRegressor
 
-        matrix = _pinned_matrix(candles)
-        t0 = time.perf_counter()
         assembled = VectorAssembler(
             inputCols=list(features), outputCol="fv"
-        ).transform(matrix)
+        ).transform(_pinned_matrix(candles))
         model = RandomForestRegressor(
             featuresCol="fv",
             labelCol="target",
@@ -296,12 +270,10 @@ def _rf_importances(
             seed=seed,
             maxDepth=5,
         ).fit(assembled)
-        per[key] = model.featureImportances.toArray().tolist()
-        # once-per-session shared state, same attribution doctrine as
-        # the disk silvers: the fit cost gets a NAMED row instead of
-        # landing on whichever face runs first in a bench lane
-        log_silver_build(f"fit:{key}", time.perf_counter() - t0)
-    return per[key]
+        return model.featureImportances.toArray().tolist()
+
+    key = f"rf:{','.join(features)}:{n_trees}:{seed}"
+    return session_memo(candles, key, build, log=f"fit:{key}")
 
 
 def _pin_fit_layout(matrix: DataFrame) -> DataFrame:
@@ -346,7 +318,7 @@ def random_forest_importance(
     """P7 random-forest method via pyspark.ml (JVM MLlib — the
     container has no sklearn): one model over the pooled matrix,
     featureImportances unpacked to (feature, importance) rows.
-    The fit goes through the per-session `_FIT_CACHE` (r14), so a
+    The fit is memoized on the candle frame (r14), so a
     session's later consumers — consensus_all_methods, RFE's first
     elimination round — replay it instead of re-fitting."""
     imps = _rf_importances(candles, tuple(FEATURES), n_trees, seed)
@@ -372,7 +344,7 @@ def rfe_importance(
     session (`_pinned_matrix`) — each elimination round re-fits on a
     column subset of the same cached rows, so the candle aggregation
     and alignment join run once, not len(FEATURES)-n_select times —
-    and every round's fit goes through the per-session `_FIT_CACHE`
+    and every round's fit is memoized on the candle frame
     (r14): the first round (all features) shares
     random_forest_importance's fit, and a repeat invocation in the
     same session (consensus_all_methods) replays all rounds free.
@@ -411,23 +383,16 @@ def lasso_importance(
     regularization (deterministic — this query has no SQL oracle, so
     reproducibility is the check, like rf_importance).  Coefficients
     are fit with standardization=True, matching the reference's
-    StandardScaler preprocessing.  Fit cached per session
-    (`_FIT_CACHE`, r14) — consensus_all_methods replays it free."""
-    import time
+    StandardScaler preprocessing.  Fit memoized on the candle frame
+    (r14) — consensus_all_methods replays it free."""
 
-    from ..sources.scratch import log_silver_build
-
-    per = _fit_slot(candles)
-    key = f"lasso:{reg_param}"
-    if key not in per:
+    def build() -> list:
         from pyspark.ml.feature import VectorAssembler
         from pyspark.ml.regression import LinearRegression
 
-        matrix = _pinned_matrix(candles)
-        t0 = time.perf_counter()
         assembled = VectorAssembler(
             inputCols=list(FEATURES), outputCol="fv"
-        ).transform(matrix)
+        ).transform(_pinned_matrix(candles))
         model = LinearRegression(
             featuresCol="fv",
             labelCol="target",
@@ -437,9 +402,10 @@ def lasso_importance(
             maxIter=100,
             tol=1e-9,
         ).fit(assembled)
-        per[key] = model.coefficients.toArray().tolist()
-        log_silver_build(f"fit:{key}", time.perf_counter() - t0)
-    coefs = per[key]
+        return model.coefficients.toArray().tolist()
+
+    key = f"lasso:{reg_param}"
+    coefs = session_memo(candles, key, build, log=f"fit:{key}")
     spark = candles.sparkSession
     return spark.createDataFrame(
         [(f, abs(float(v)), float(v)) for f, v in zip(FEATURES, coefs)],

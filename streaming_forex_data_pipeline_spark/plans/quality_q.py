@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 
 from ..operators import indicators as I
 from ..operators import quality as Q
+from ..session import session_dir, session_memo
+from ..sources import sinks as SK
 from ..sources.tables import CANDLES_CTE, candles_from_events, load_table
 from .registry import register
 
@@ -596,24 +598,6 @@ def source_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("symbol", "ts")
 
 
-#: ingest_cycle staging dirs, removed at interpreter exit (the returned
-#: DataFrame reads them lazily, so they must outlive the query call)
-_INGEST_DIRS: list[str] = []
-
-
-def _cleanup_ingest_dirs() -> None:
-    import shutil
-
-    for d in _INGEST_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _INGEST_DIRS.clear()
-
-
-import atexit  # noqa: E402
-
-atexit.register(_cleanup_ingest_dirs)
-
-
 _INGEST_ORACLE = CANDLES_CTE + """
 , numbered AS (
   SELECT symbol, ts, open, high, low, close, volume, n_events,
@@ -685,12 +669,16 @@ ORDER BY symbol, ts
     "concurrency protocol preserves MERGE semantics end-to-end.",
 )
 def ingest_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources import sinks as SK
-    from ..sources.scratch import scratch_dir
-
-    b1v, b2v = _ingest_batches(spark, sf_dir)
-    table_dir = scratch_dir("ingest_cycle_")
-    _INGEST_DIRS.append(table_dir)
+    # both registered names share one JSON round-trip per session and
+    # corpus (r12 verdict Next #3: the txn face re-ran it per call)
+    b1v, b2v = session_memo(
+        spark,
+        ("ingest_batches", sf_dir),
+        lambda: _ingest_batches(spark, sf_dir),
+        sources=((sf_dir, "events"),),
+    )
+    # the returned frame reads the table lazily: it lives with the session
+    table_dir = session_dir(spark, "ingest_cycle_")
     SK.commit_append(b1v, table_dir, version=1.0)
     SK.commit_append(b2v, table_dir, version=2.0)
     merged = SK.read_committed(spark, table_dir, keys=["symbol", "ts"])
@@ -735,12 +723,8 @@ ORDER BY 1
 def range_delete_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
 
-    from ..sources import sinks as SK
-    from ..sources.scratch import scratch_dir
-
     e = load_table(spark, sf_dir, "events")
-    table_dir = scratch_dir("range_delete_rb_")
-    _INGEST_DIRS.append(table_dir)
+    table_dir = session_dir(spark, "range_delete_rb_")
     SK.write_partitioned(e, table_dir, ts_col="ts")
     d0 = e.agg(F.min(F.to_date("ts")).alias("d")).collect()[0]["d"]
     lo = datetime.datetime.combine(
@@ -781,24 +765,12 @@ def _ingest_select(merged: DataFrame) -> DataFrame:
     ).orderBy("symbol", "ts")
 
 
-# one JSON round-trip per (session, corpus): ingest_cycle runs under
-# two registered names, so the parsed batches are localCheckpoint'd
-# once and reused by every invocation (r12 verdict Next #3: the txn
-# face was the slow lane's worst at 19.7 s because every invocation
-# re-ran the whole front half from scratch)
-_INGEST_BATCH_CACHE: dict[tuple, tuple] = {}
-
-
 def _ingest_batches(spark: SparkSession, sf_dir: str):
     """The two deterministic Polygon-payload batches of the ingest
     slice, already JSON-round-tripped and validated (see ingest_cycle
     doc): batch 1 = preliminary first-2/3 bars, batch 2 = corrected
     last-2/3 bars overlapping the middle third."""
     from ..sources import providers as PR
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _INGEST_BATCH_CACHE:
-        return _INGEST_BATCH_CACHE[key]
 
     c = candles_from_events(spark, sf_dir)
     w = Window.partitionBy("symbol").orderBy("ts")
@@ -855,9 +827,7 @@ def _ingest_batches(spark: SparkSession, sf_dir: str):
             Q.filter_positive_prices(Q.drop_null_prices(parsed))
         )
 
-    pair = (
+    return (
         validate(PR.parse_polygon(to_payloads(b1))).localCheckpoint(),
         validate(PR.parse_polygon(to_payloads(b2))).localCheckpoint(),
     )
-    _INGEST_BATCH_CACHE[key] = pair
-    return pair

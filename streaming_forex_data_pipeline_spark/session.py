@@ -19,11 +19,13 @@ verified.  They are compiled once per checkout (``jvm/build/``, keyed by
 the sources' hash and the Spark version); a host without ``javac``
 keeps the stock filesystem and logs one warning.  Only ``file:`` is
 touched: HDFS, S3 and Spark's checkpoint file manager keep their
-defaults, so the cluster posture is unchanged.
+defaults, so the cluster posture is unchanged.  State that outlives
+a query goes through `session_memo`.
 """
 
 from __future__ import annotations
 
+import atexit
 import functools
 import glob
 import hashlib
@@ -32,9 +34,11 @@ import os
 import shutil
 import subprocess
 import tempfile
+import threading
+import weakref
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
 _LOCAL_FS = "forexflow.fs.InProcessLocalFs"
@@ -140,3 +144,98 @@ def get_spark(app_name: str = "sfdp-spark", cpus: int | None = None) -> SparkSes
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+class _SessionDir(str):
+    """A scratch dir, removed when the memo entry holding it is released."""
+
+
+_memo_lock = threading.RLock()
+_memo_app: str | None = None
+_session_entries: dict = {}  # key -> (value, source fingerprints)
+_frame_entries: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def memo_entries(owner: SparkSession | DataFrame) -> dict:
+    """The live entries hanging off ``owner``, key -> (value, source
+    fingerprints).  The first call under a new applicationId releases
+    every entry of the previous application."""
+    global _memo_app
+    spark = owner if isinstance(owner, SparkSession) else owner.sparkSession
+    app = spark.sparkContext.applicationId
+    with _memo_lock:
+        if app != _memo_app:
+            if _memo_app is None:
+                # after the JVM gateway's own exit hook, so it runs first
+                atexit.register(_release_all)
+            _release_all()
+            _memo_app = app
+        if owner is spark:
+            return _session_entries
+        return _frame_entries.setdefault(owner, {})
+
+
+def _release(value) -> None:
+    if isinstance(value, DataFrame):
+        _release_entries(_frame_entries.pop(value, {}))
+        # a stopped context has already dropped its cache
+        if value.is_cached and value.sparkSession.sparkContext._jsc is not None:
+            value.unpersist()
+    elif isinstance(value, _SessionDir):
+        shutil.rmtree(value, ignore_errors=True)
+
+
+def _release_entries(entries: dict) -> None:
+    while entries:
+        _release(entries.popitem()[1][0])
+
+
+def _release_all() -> None:
+    with _memo_lock:
+        _release_entries(_session_entries)
+        while _frame_entries:
+            _release_entries(_frame_entries.popitem()[1])
+
+
+def session_memo(
+    owner: SparkSession | DataFrame,
+    key,
+    build,
+    *,
+    sources: tuple[tuple[str, str], ...] = (),
+    log: str | None = None,
+):
+    """``build()``'s value for ``key``, built once per owner.
+
+    The owner is a SparkSession (the entry lives as long as its
+    application) or a DataFrame (held weakly; its entries go with it).
+    ``sources`` names the ``(sf_dir, table)`` inputs of the value: their
+    `corpus_fingerprint` is checked on every hit, and a rewritten source
+    releases the entry and rebuilds it.  Releasing unpersists a
+    DataFrame value, with the entries hanging off it, and removes a
+    `session_dir`; it happens when the entry goes stale, when a new
+    application starts, and at exit.  A cold build with ``log`` set is
+    logged under that name (`scratch.log_silver_build`)."""
+    from .sources.scratch import corpus_fingerprint, log_silver_build
+
+    with _memo_lock:
+        entries = memo_entries(owner)
+        stamp = tuple(corpus_fingerprint(d, t) for d, t in sources)
+        hit = entries.get(key)
+        if hit is not None and hit[1] == stamp:
+            return hit[0]
+        if hit is not None:
+            del entries[key]
+            _release(hit[0])
+        value = log_silver_build(log, build) if log else build()
+        entries[key] = (value, stamp)
+        return value
+
+
+def session_dir(spark: SparkSession, prefix: str) -> str:
+    """A fresh scratch dir that outlives the query that made it (a
+    returned DataFrame reads it lazily), removed with the session."""
+    from .sources.scratch import scratch_dir
+
+    path = _SessionDir(scratch_dir(prefix))
+    return str(session_memo(spark, ("session_dir", path), lambda: path))

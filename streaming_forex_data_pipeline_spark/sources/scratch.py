@@ -18,7 +18,8 @@ root):
 - callers get either a fresh unpredictable dir (``scratch_dir``, the
   mkdtemp replacement) or a deterministic named slot for
   content-addressed caches (``scratch_path``, the silver-cache
-  pattern).
+  pattern), whose name ends in ``SILVER_MARK`` so retirement tells
+  every build-once slot from every channel dir.
 
 Every build-once silver publishes through ``build_once`` here, keyed
 by ``corpus_fingerprint``: one module owns the build, the LRU touch
@@ -68,10 +69,18 @@ def user_scratch_root() -> str:
     return root
 
 
+#: Ends every `scratch_path` slot name; a `scratch_dir` name (prefix
+#: plus eight of ``[a-z0-9_]``) never holds it, so retirement never
+#: takes a channel's dir.
+SILVER_MARK = "@silver"
+
+
 def scratch_dir(prefix: str) -> str:
     """A fresh unpredictable directory under the verified root — the
     drop-in ``tempfile.mkdtemp`` replacement for channel sinks,
     checkpoints, and demo tables."""
+    if SILVER_MARK in prefix:
+        raise ValueError(f"{SILVER_MARK!r} marks build-once slots: {prefix!r}")
     return tempfile.mkdtemp(prefix=prefix, dir=user_scratch_root())
 
 
@@ -88,46 +97,48 @@ def scratch_dir(prefix: str) -> str:
 SILVER_BUILD_LOG: list = []
 
 
-def log_silver_build(name: str, sec: float) -> None:
-    """Record one cold silver build (own cost only — callers subtract
-    nested builds via the mark/slice pattern)."""
+def log_silver_build(name: str, build):
+    """Run ``build()`` and log its own cost under ``name``: builds
+    nested inside it log themselves, so their seconds are subtracted.
+    Returns what ``build`` returns."""
+    mark = len(SILVER_BUILD_LOG)
+    t0 = time.perf_counter()
+    out = build()
+    nested = sum(b["sec"] for b in SILVER_BUILD_LOG[mark:])
+    sec = time.perf_counter() - t0 - nested
     SILVER_BUILD_LOG.append({"silver": name, "sec": round(sec, 3)})
+    return out
 
 
 def retire_stale_silvers(
-    prefix: str,
+    prefix: str | None,
     max_age_seconds: float,
     keep: tuple = (),
 ) -> list[str]:
-    """Retire content-addressed silver slots whose corpus fingerprint
-    went stale (r12 verdict Next #4: silvers are keyed by fingerprint
-    and maintained incrementally, but nothing ever RETIRED a replaced
-    corpus's cache — scratch grew one dead silver per corpus edit,
-    forever).
+    """Retire the build-once slots (`scratch_path`) of the ``prefix``
+    family (``None``: every family) untouched for ``max_age_seconds``,
+    except the slot names in ``keep``.  Returns the removed paths.
 
-    Policy is LRU by directory mtime: `build_once` touches a
-    silver's slot on every use, warm or cold, so mtime is
-    last-consumption time, and any slot under ``prefix`` untouched
-    for ``max_age_seconds`` is dead weight — a superseded
-    fingerprint, or a corpus nobody queries anymore.  Age-based (not
+    Policy is LRU by directory mtime: `build_once` touches a slot on
+    every use, warm or cold, so an old mtime means a superseded
+    fingerprint or a corpus nobody queries anymore.  Age-based (not
     newest-fingerprint-wins) because DIFFERENT live corpora share the
     root (the three testdata scales each keep a silver) and must not
     thrash each other's caches.  The same rule reclaims the
-    ``.build-*`` leak of hard-KILLED builders (a build that raises
-    removes its own tmp dir in `build_once`): a LIVE
-    builder's tmp dir has a fresh mtime, so the age guard never races
-    it.  ``keep`` lists slot basenames exempt from retirement.
-    Returns the removed paths; never touches non-directories,
-    symlinks, or names outside ``prefix``."""
-    if not prefix:
-        # an empty prefix would sweep EVERY channel's checkpoint and
-        # sink under the shared root, not just the named silver family
-        raise ValueError("retire_stale_silvers needs a non-empty prefix")
+    ``.build-*`` leak of a hard-KILLED builder; a LIVE builder's tmp
+    dir has a fresh mtime, so the age guard never races it.  Channel
+    dirs, stray files and symlinks are never touched."""
+    if prefix == "":  # a family name gone missing, not "every family"
+        raise ValueError("retire_stale_silvers needs a non-empty prefix or None")
     root = user_scratch_root()
     now = time.time()
     removed = []
     for entry in sorted(os.listdir(root)):
-        if not entry.startswith(prefix) or entry in keep:
+        if (
+            SILVER_MARK not in entry
+            or not entry.startswith(prefix or "")
+            or entry.removesuffix(SILVER_MARK) in keep
+        ):
             continue
         p = os.path.join(root, entry)
         try:
@@ -144,10 +155,11 @@ def retire_stale_silvers(
 
 
 def scratch_path(name: str) -> str:
-    """A deterministic named slot under the verified root for
-    content-addressed caches (the IVF silver-table pattern): same
+    """A deterministic named build-once slot under the verified root
+    for content-addressed caches (the IVF silver-table pattern): same
     fingerprint -> same path across sessions, but still inside the
-    ownership-checked 0700 root."""
+    ownership-checked 0700 root.  The slot is ``name`` followed by
+    `SILVER_MARK`, the one mark `retire_stale_silvers` retires by."""
     if (
         not name
         or os.sep in name
@@ -159,7 +171,7 @@ def scratch_path(name: str) -> str:
         # disposable (rename/rmtree) would then clobber every other
         # channel's state (round-9 ADVICE)
         raise ValueError(f"scratch slot name must be a bare name: {name!r}")
-    return os.path.join(user_scratch_root(), name)
+    return os.path.join(user_scratch_root(), name + SILVER_MARK)
 
 
 def corpus_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
@@ -202,12 +214,8 @@ def build_once(out_dir: str, build) -> str:
     (`log_silver_build`, nested builds subtracted); every call touches
     the slot's mtime so retirement sees last use.  Returns
     ``out_dir``."""
-    if not (Path(out_dir) / "_SUCCESS").exists():
-        # record this build's OWN cost — nested builds (e.g. the union
-        # graph's two sub-graph silvers) log themselves during
-        # build(), so subtract the slice they appended
-        mark = len(SILVER_BUILD_LOG)
-        t0 = time.perf_counter()
+
+    def publish() -> None:
         tmp = f"{out_dir}.build-{uuid.uuid4().hex}"
         try:
             build(tmp)
@@ -220,10 +228,10 @@ def build_once(out_dir: str, build) -> str:
             shutil.rmtree(tmp, ignore_errors=True)
             if not (Path(out_dir) / "_SUCCESS").exists():
                 raise
-        nested = sum(b["sec"] for b in SILVER_BUILD_LOG[mark:])
-        log_silver_build(
-            os.path.basename(out_dir), time.perf_counter() - t0 - nested
-        )
+
+    if not (Path(out_dir) / "_SUCCESS").exists():
+        name = os.path.basename(out_dir).removesuffix(SILVER_MARK)
+        log_silver_build(name, publish)
     # LRU touch: slot mtime = last consumption, so retire_stale_silvers
     # ages out superseded silvers without racing one a session reads
     try:

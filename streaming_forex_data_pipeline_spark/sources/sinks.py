@@ -21,6 +21,12 @@ All set-based: the reference's N-round-trips-per-batch loop disappears.
 
 from __future__ import annotations
 
+import datetime
+import json
+import os
+import shutil
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -47,9 +53,6 @@ def commit_append(
     Scale shape: the commit is O(1) metadata (one manifest listing the
     batch's files) regardless of batch size; readers pay one scan over
     the union of committed files.  Returns the commit id."""
-    import json
-    import os
-    import uuid
 
     if stamp_from_column:
         # compaction path: rows already carry their original
@@ -113,8 +116,6 @@ def commit_append(
 
 
 def _commit_ids(log_dir: str) -> list[int]:
-    import os
-
     if not os.path.isdir(log_dir):
         return []
     return sorted(
@@ -131,8 +132,6 @@ def log_versions(sink_dir: str) -> list[float]:
     micro-batch commits version=float(batch_id)), so layout rebuilds
     list published batches from here instead of running a
     data-sized distinct over the committed rows (review-found)."""
-    import json
-    import os
 
     log_dir = os.path.join(sink_dir, "_log")
     if not os.path.isdir(log_dir):
@@ -184,8 +183,6 @@ def read_committed(
     One parquet scan over all committed files; the file -> commit-id
     map rides a broadcast join keyed on the (globally unique) parquet
     part-file basename via input_file_name()."""
-    import json
-    import os
 
     log_dir = os.path.join(table_dir, "_log")
     rows = []
@@ -280,9 +277,6 @@ def compact_log(
     reclaims it), a crash after leaves stale-but-ignored manifests
     that this function garbage-collects on its next run.  Returns the
     compaction commit id, or None if there was nothing to fold."""
-    import json
-    import os
-    import shutil
 
     log_dir = os.path.join(table_dir, "_log")
     cids = _commit_ids(log_dir)
@@ -351,9 +345,6 @@ def vacuum(table_dir: str) -> list[str]:
     """Reclaim staging directories no manifest references — the debris
     of writers that crashed between staging and publishing.  Never
     touches committed data; returns the removed paths."""
-    import json
-    import os
-    import shutil
 
     log_dir = os.path.join(table_dir, "_log")
     referenced = set()
@@ -393,8 +384,6 @@ def write_partitioned(df: DataFrame, table_dir: str, ts_col: str = "ts") -> None
 def _partition_dirs(table_dir: str) -> list[tuple]:
     """(date, path) for each Hive ``p_date=`` partition directory;
     empty list means the table is unpartitioned."""
-    import datetime
-    import os
 
     out = []
     if os.path.isdir(table_dir):
@@ -409,8 +398,6 @@ def _partition_dirs(table_dir: str) -> list[tuple]:
 
 
 def _as_datetime(x):
-    import datetime
-
     if isinstance(x, str):
         return datetime.datetime.fromisoformat(x)
     if isinstance(x, datetime.datetime):
@@ -420,16 +407,43 @@ def _as_datetime(x):
     raise TypeError(f"unsupported bound type {type(x)!r}")
 
 
-def swap_aside(tmp: str, live: str, aside: str) -> None:
-    """Publish the fully written directory ``tmp`` at ``live`` by
-    rename-ASIDE: the live copy is renamed to ``aside``, ``tmp`` takes
-    its place, and ``aside`` is deleted only after that rename
-    succeeded — if it fails, ``aside`` is renamed back.  A delete
-    followed by a rename would leave NEITHER copy on disk if the
-    process died between the two."""
-    import os
-    import shutil
+def _sibling_stem(live: str, kind: str) -> str:
+    """``<live>.<kind>-``, the stem of a rewrite (``del``) or aside
+    (``old``) sibling.  A ``col=value`` partition's is dot-prefixed:
+    Spark's listing and `_partition_dirs` skip it, where a crash
+    leaving ``p_date=<date>.del-*`` would break both."""
+    parent, base = os.path.split(os.path.normpath(live))
+    if "=" in base:
+        base = "." + base
+    return os.path.join(parent, f"{base}.{kind}-")
 
+
+def _restore_aside(live: str) -> None:
+    """Rename a lone aside back to ``live`` when ``live`` is missing, as
+    a process killed between `swap_aside`'s two renames leaves it."""
+    if os.path.exists(live):
+        return
+    parent, stem = os.path.split(_sibling_stem(live, "old"))
+    try:
+        asides = [e for e in os.listdir(parent) if e.startswith(stem)]
+    except FileNotFoundError:
+        return
+    if len(asides) == 1:
+        os.rename(os.path.join(parent, asides[0]), live)
+
+
+def swap_aside(tmp: str, live: str) -> None:
+    """Publish the fully written directory ``tmp`` at ``live`` by
+    rename-ASIDE: the live copy is renamed to ``<live>.old-<uuid>``,
+    ``tmp`` takes its place, and the aside is deleted only after that
+    rename succeeded — if it fails, the aside is renamed back.  A
+    delete followed by a rename would leave NEITHER copy on disk if
+    the process died between the two; a process killed between the
+    two renames leaves the aside, which the next swap of ``live``
+    restores before it starts."""
+
+    _restore_aside(live)
+    aside = _sibling_stem(live, "old") + uuid.uuid4().hex
     had_old = os.path.isdir(live)
     if had_old:
         os.rename(live, aside)
@@ -461,17 +475,14 @@ def delete_range(
     O(table).  On an unpartitioned table it falls back to one rewrite
     of the whole table.  Every rewrite lands in a sibling directory
     and is published by `swap_aside`, so a failed rewrite or swap
-    leaves that directory readable with its original rows."""
-    import datetime
-    import os
-    import shutil
-    import uuid
+    leaves that directory readable with its original rows, and a
+    table or chunk a killed swap left aside is restored first."""
 
-    def rewrite(path: str, hidden: str, drop_if_empty: bool) -> None:
-        """Write ``path``'s surviving rows to ``hidden``.del-* and swap
-        them in (or drop ``path`` if none survive and that is allowed)."""
-        tag = uuid.uuid4().hex
-        tmp = f"{hidden}.del-{tag}"
+    def rewrite(path: str, drop_if_empty: bool) -> None:
+        """Write ``path``'s surviving rows to a ``.del-*`` sibling and
+        swap them in (or drop ``path`` if none survive and that is
+        allowed)."""
+        tmp = _sibling_stem(path, "del") + uuid.uuid4().hex
         try:
             spark.read.parquet(path).filter(
                 ~((F.col(ts_col) >= start) & (F.col(ts_col) <= end))
@@ -482,15 +493,19 @@ def delete_range(
                 shutil.rmtree(path)
                 shutil.rmtree(tmp)
             else:
-                swap_aside(tmp, path, f"{hidden}.old-{tag}")
+                swap_aside(tmp, path)
         except BaseException:
             shutil.rmtree(tmp, ignore_errors=True)
             raise
 
+    _restore_aside(table_dir)
+    for name in os.listdir(table_dir) if os.path.isdir(table_dir) else ():
+        if name.startswith(".") and ".old-" in name:  # a chunk's aside
+            _restore_aside(os.path.join(table_dir, name[1:].split(".old-")[0]))
     parts = _partition_dirs(table_dir)
     if not parts:
         table_dir = table_dir.rstrip("/")
-        rewrite(table_dir, table_dir, drop_if_empty=False)
+        rewrite(table_dir, drop_if_empty=False)
         return
 
     lo, hi = _as_datetime(start), _as_datetime(end)
@@ -505,13 +520,7 @@ def delete_range(
         ):
             shutil.rmtree(path)  # fully doomed: pure directory drop
             continue
-        # boundary chunk: rewrite just this partition's rows.  The
-        # siblings are DOT-prefixed so a crash mid-swap leaves dirs
-        # Spark's file listing AND _partition_dirs both ignore
-        # ('p_date=<date>.del' would make every later fromisoformat
-        # call crash)
-        hidden = os.path.join(table_dir, "." + os.path.basename(path))
-        rewrite(path, hidden, drop_if_empty=True)
+        rewrite(path, drop_if_empty=True)  # boundary chunk: just its rows
 
 
 def export_json(df: DataFrame, out_dir: str) -> None:
@@ -570,7 +579,6 @@ def export_shards(
     task, not one per (task x shard).
     """
     import json as _json
-    import os
 
     from ..llm.corpus import portable_bucket
 
@@ -624,8 +632,6 @@ def export_shards_jsonl(
     JVM-side (no Python in the path); readers get schema-on-read via
     ``spark.read.json`` or any line-oriented loader."""
     import json as _json
-    import os
-    import uuid
 
     from ..llm.corpus import portable_bucket
 
@@ -662,8 +668,6 @@ def export_shards_jsonl(
 def maintenance(
     spark: SparkSession,
     sinks: list[tuple[str, list[str]]] = (),
-    silver_prefixes: tuple = ("knng_v", "knng_union_", "ivf_", "media_",
-                              "sig_"),
     retire_stale_after: float | None = 14 * 86400,
     keep_last: int = 1,
 ) -> dict:
@@ -675,12 +679,10 @@ def maintenance(
     ``sinks`` is [(table_dir, upsert_keys), ...]: each gets
     `compact_log` (fold settled commits, ``keep_last`` shields any
     in-flight streaming replay) then `vacuum` (reclaim staging dirs
-    no manifest references).  ``silver_prefixes`` are the
-    content-addressed build-once families under the per-user scratch
-    root; slots untouched for ``retire_stale_after`` seconds are
-    LRU-retired (consumers `utime` on every read, so a live silver is
-    never reclaimed under a reader — `scratch.retire_stale_silvers`'s
-    contract).  ``None`` disables retirement.
+    no manifest references).  Every build-once slot untouched for
+    ``retire_stale_after`` seconds is LRU-retired (consumers `utime` on
+    every read, so a live silver is never reclaimed under a reader —
+    `scratch.retire_stale_silvers`'s contract).  ``None`` disables retirement.
 
     Returns {"compacted": [dir...], "vacuumed": {dir: [paths...]},
     "retired": [paths...]} for the caller's log line.  Errors on one
@@ -703,10 +705,7 @@ def maintenance(
         except Exception as exc:  # noqa: BLE001 — isolate per sink
             report["errors"][table_dir] = f"{type(exc).__name__}: {exc}"
     if retire_stale_after is not None:
-        for prefix in silver_prefixes:
-            report["retired"].extend(
-                retire_stale_silvers(
-                    prefix, max_age_seconds=retire_stale_after
-                )
-            )
+        report["retired"] = retire_stale_silvers(
+            None, max_age_seconds=retire_stale_after
+        )
     return report

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import session_memo
+
 TABLES = (
     "region",
     "nation",
@@ -45,31 +47,28 @@ ROUND = 6
 # cwd (the correctness harness does), workers would fail with
 # ModuleNotFoundError, so ship the package source as a zip via
 # addPyFile once per application.
-_SHIPPED: set[str] = set()
-
-
 def _ship_package(spark: SparkSession) -> None:
-    app = spark.sparkContext.applicationId
-    if app in _SHIPPED:
-        return
     import os
     import tempfile
     import zipfile
 
-    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"sfdp_spark_pkg_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for dirpath, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(dirpath, fn)
-                        rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                        z.write(full, rel)
-    spark.sparkContext.addPyFile(zpath)
-    _SHIPPED.add(app)
+    def ship() -> str:
+        pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        zpath = os.path.join(
+            tempfile.gettempdir(), f"sfdp_spark_pkg_{os.getpid()}.zip"
+        )
+        if not os.path.exists(zpath):
+            with zipfile.ZipFile(zpath, "w") as z:
+                for dirpath, _dirs, files in os.walk(pkg_dir):
+                    for fn in files:
+                        if fn.endswith(".py"):
+                            full = os.path.join(dirpath, fn)
+                            rel = os.path.relpath(full, os.path.dirname(pkg_dir))
+                            z.write(full, rel)
+        spark.sparkContext.addPyFile(zpath)
+        return zpath
+
+    session_memo(spark, ("ship_package",), ship)
 
 
 def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -124,16 +123,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Session-scoped silver-table cache for the candle resample: every
-# indicator query consumes the same derived candles, so computing the
-# aggregation once per (session, sf_dir, bucket) and caching it turns N
-# resamples into 1 + N cached scans.  At 100 TB this seam is where the
-# resample becomes a written silver table (one aggregation, N readers);
-# in-session .cache() is the local[N] analog.  Opt out with
-# SPARK_GRAFT_CACHE_CANDLES=0 (results identical either way).
-_CANDLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def candles_from_events(
     spark: SparkSession, sf_dir: str, bucket: str = "hour"
 ) -> DataFrame:
@@ -147,33 +136,33 @@ def candles_from_events(
     One shuffle on (event_type, bucket); partial aggregation is map-side
     (hash agg) so the shuffle carries pre-combined rows — at 100 TB the
     reduction factor is ~events-per-bucket.
+
+    Every indicator query consumes the same candles, so the frame is
+    ``.cache()``d once per session and corpus (`session_memo`) — the
+    local[N] analog of a written silver table (one aggregation, N readers).
     """
-    import os
 
-    cache_on = os.environ.get("SPARK_GRAFT_CACHE_CANDLES", "1") != "0"
-    key = (spark.sparkContext.applicationId, sf_dir, bucket)
-    if cache_on and key in _CANDLE_CACHE:
-        return _CANDLE_CACHE[key]
+    def build() -> DataFrame:
+        e = load_table(spark, sf_dir, "events")
+        return (
+            e.groupBy(
+                F.col("event_type").alias("symbol"),
+                F.date_trunc(bucket, F.col("ts")).alias("ts"),
+            )
+            .agg(
+                F.round(F.min_by("value", "event_id"), ROUND).alias("open"),
+                F.round(F.max("value"), ROUND).alias("high"),
+                F.round(F.min("value"), ROUND).alias("low"),
+                F.round(F.max_by("value", "event_id"), ROUND).alias("close"),
+                F.round(F.sum("value"), ROUND).alias("volume"),
+                F.count(F.lit(1)).alias("n_events"),
+            )
+            .cache()
+        )
 
-    e = load_table(spark, sf_dir, "events")
-    out = (
-        e.groupBy(
-            F.col("event_type").alias("symbol"),
-            F.date_trunc(bucket, F.col("ts")).alias("ts"),
-        )
-        .agg(
-            F.round(F.min_by("value", "event_id"), ROUND).alias("open"),
-            F.round(F.max("value"), ROUND).alias("high"),
-            F.round(F.min("value"), ROUND).alias("low"),
-            F.round(F.max_by("value", "event_id"), ROUND).alias("close"),
-            F.round(F.sum("value"), ROUND).alias("volume"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
+    return session_memo(
+        spark, ("candles", sf_dir, bucket), build, sources=((sf_dir, "events"),)
     )
-    if cache_on:
-        out = out.cache()
-        _CANDLE_CACHE[key] = out
-    return out
 
 
 # DuckDB-oracle rendering of candles_from_events, shared by every

@@ -27,7 +27,6 @@ Design rules:
 
 from __future__ import annotations
 
-import atexit
 import logging
 import os
 import shutil
@@ -35,17 +34,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-#: staging symlink dirs by (applicationId, sf_dir) — see
-#: read_events_stream; cleaned up at interpreter exit
-_STREAM_STAGING: dict[tuple[str, str], str] = {}
-
-
-@atexit.register
-def _cleanup_staging() -> None:
-    for path in _STREAM_STAGING.values():
-        shutil.rmtree(path, ignore_errors=True)
-    _STREAM_STAGING.clear()
 
 #: reference channel -> emit period, matching the reference's
 #: StreamConfig frequency table EXACTLY (websocket_manager.py:201-209,
@@ -74,22 +62,20 @@ def read_table_stream(
     """File-source stream over one testdata table (one-file micro-batch
     in tests via availableNow).  The file streaming source requires a
     DIRECTORY; a symlink staging dir pointing at the single table file
-    is cached per (application, sf_dir, table) and removed at exit
-    (testdata is read-only)."""
+    is made once per session, sf_dir and table (`session_memo`;
+    testdata is read-only)."""
+    from ..session import session_dir, session_memo
     from ..sources.tables import pin_portability_confs
 
     pin_portability_confs(spark)
     schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
-    from ..sources.scratch import scratch_dir
 
-    key = (spark.sparkContext.applicationId, f"{sf_dir}:{table}")
-    staging = _STREAM_STAGING.get(key)
-    if staging is None or not os.path.isdir(staging):
-        staging = scratch_dir(f"{table}_stream_")
-        os.symlink(
-            f"{sf_dir}/{table}.parquet", f"{staging}/{table}.parquet"
-        )
-        _STREAM_STAGING[key] = staging
+    def stage() -> str:
+        staging = session_dir(spark, f"{table}_stream_")
+        os.symlink(f"{sf_dir}/{table}.parquet", f"{staging}/{table}.parquet")
+        return staging
+
+    staging = session_memo(spark, ("stream_staging", sf_dir, table), stage)
     return spark.readStream.schema(schema).parquet(staging)
 
 
@@ -820,4 +806,4 @@ def _publish_rebuilt_layout(sink_dir: str, loc: str, tmp_loc: str) -> None:
     from ..sources.sinks import log_versions, swap_aside
 
     _mark_published(tmp_loc, log_versions(sink_dir))
-    swap_aside(tmp_loc, loc, f"{loc}.old-{uuid.uuid4().hex}")
+    swap_aside(tmp_loc, loc)

@@ -787,12 +787,9 @@ def start_knn_graph_channel(
     `vacuum` reclaims crash-orphaned staging dirs, so a months-long
     channel scans O(1) manifests (pinned by the long-run pytest).
 
-    ``retire_stale_after``: the same epilogue ages out BATCH-SIDE graph
-    silvers (``knng_v*``/``knng_union_*`` slots) untouched for that
-    many seconds — LRU by slot mtime, which consumers ``utime`` on
-    every read, so a LIVE silver is never reclaimed under a reader.
-    The channel's own ``knng_idx_*`` dirs match neither prefix.
-    ``None`` disables retirement."""
+    ``retire_stale_after``: the same epilogue retires BATCH-SIDE graph
+    silvers (``knng_*`` build-once slots) untouched for that many
+    seconds (`retire_stale_silvers`); ``None`` disables it."""
     from ..llm.similarity import knn_graph, lsh_bucket
     from ..sources.scratch import retire_stale_silvers, scratch_dir
     from ..sources.sinks import compact_log, vacuum
@@ -821,10 +818,7 @@ def start_knn_graph_channel(
         vacuum(graph_dir)
         vacuum(vec_dir)
         if retire_stale_after is not None:
-            # two EXPLICIT slot prefixes — never the bare "knng_" that
-            # would also match this channel's own knng_idx_* state dirs
-            for slot in ("knng_v", "knng_union_"):
-                retire_stale_silvers(slot, max_age_seconds=retire_stale_after)
+            retire_stale_silvers("knng_", max_age_seconds=retire_stale_after)
 
     return _start_index_channel(
         spark, sf_dir, "embeddings", sink_table, stream,

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from streaming_forex_data_pipeline_spark.operators import importance as IMP
+from streaming_forex_data_pipeline_spark.session import memo_entries
 from streaming_forex_data_pipeline_spark.sources.tables import candles_from_events
 
 
@@ -154,35 +155,33 @@ def test_importance_goldens_exact(spark, sf_dir):
 
 @pytest.mark.slow  # r15: slow lane (see pytest.ini)
 def test_fit_cache_shared_across_faces(spark, sf_dir):
-    """The per-session `_FIT_CACHE` (r13, wired r14) must make the
-    four model-consuming faces share fits: after rf + lasso + rfe
-    run, `consensus_all_methods` must add ZERO new fit entries (it
-    replays every model from the cache), and RFE's first elimination
-    round must share random_forest_importance's all-features fit
-    (same key) rather than re-fitting it."""
+    """The fits memoized on the candle frame (`session_memo`, r13,
+    wired r14) must make the four model-consuming faces share fits:
+    after rf + lasso + rfe run, `consensus_all_methods` must add ZERO
+    new fit entries (it replays every model from the memo), and RFE's
+    first elimination round must share random_forest_importance's
+    all-features fit (same key) rather than re-fitting it."""
     c = candles_from_events(spark, sf_dir)
-    slot = IMP._FIT_CACHE.get(c)
-    if slot is not None:
-        slot.clear()
+    memo_entries(c).clear()
 
     IMP.random_forest_importance(c).collect()
-    keys_rf = set(IMP._FIT_CACHE[c])
+    keys_rf = set(memo_entries(c))
     rf_fit_keys = {k for k in keys_rf if k.startswith("rf:")}
     assert len(rf_fit_keys) == 1
 
     IMP.rfe_importance(c).collect()
-    keys_rfe = set(IMP._FIT_CACHE[c])
+    keys_rfe = set(memo_entries(c))
     # n_features=5 -> eliminate down to 2 = 3 rounds; round 1 (all
     # features) must be the SAME key rf_importance already cached
     assert rf_fit_keys < keys_rfe
     assert len({k for k in keys_rfe if k.startswith("rf:")}) == 3
 
     IMP.lasso_importance(c).collect()
-    keys_before = set(IMP._FIT_CACHE[c])
+    keys_before = set(memo_entries(c))
 
     out = IMP.consensus_all_methods(c)
     assert out.count() == len(IMP.FEATURES)
-    assert set(IMP._FIT_CACHE[c]) == keys_before, (
+    assert set(memo_entries(c)) == keys_before, (
         "consensus_all_methods must replay cached fits, not re-fit"
     )
 

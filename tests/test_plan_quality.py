@@ -17,6 +17,8 @@ pushdown) fails CI rather than only showing up in bench numbers:
 
 from __future__ import annotations
 
+import datetime
+
 import pytest
 
 from streaming_forex_data_pipeline_spark.plans.registry import all_queries
@@ -60,17 +62,52 @@ def _plan(spark, sf_dir, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-@pytest.mark.slow  # r15: slow lane (see pytest.ini)
-def test_no_unsanctioned_python_udfs(spark, sf_dir):
+def _python_udf_offenders(spark, sf_dir, names) -> list[str]:
     offenders = []
-    for name, q in all_queries().items():
+    for name in names:
         if name in PANDAS_UDF_SANCTIONED:
             continue
-        plan = q.spark(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        plan = _plan(spark, sf_dir, name)
         if "EvalPython" in plan:
             offenders.append(name)
+    return offenders
+
+
+@pytest.mark.slow  # r15: slow lane (see pytest.ini)
+def test_no_unsanctioned_python_udfs(spark, sf_dir):
+    offenders = _python_udf_offenders(spark, sf_dir, all_queries())
     assert not offenders, (
         f"Python eval nodes in non-sanctioned hot paths: {offenders}"
+    )
+
+
+# the fast-lane twin plans every UDF_SAMPLE_STEP-th query by name,
+# from an offset that moves with the day of the year: ~20 queries a
+# run, the whole registry every UDF_SAMPLE_STEP days.  The other
+# offsets sit in the slow lane, so any day's sample reruns with
+# ``-m "" -k "udfs_sample and offset<N>"``.
+UDF_SAMPLE_STEP = 13
+_UDF_OFFSET = datetime.date.today().timetuple().tm_yday % UDF_SAMPLE_STEP
+
+
+@pytest.mark.parametrize(
+    "offset",
+    [
+        pytest.param(
+            o,
+            marks=() if o == _UDF_OFFSET else pytest.mark.slow,
+            id=f"offset{o}",
+        )
+        for o in range(UDF_SAMPLE_STEP)
+    ],
+)
+def test_no_unsanctioned_python_udfs_sample(spark, sf_dir, offset):
+    sample = sorted(all_queries())[offset::UDF_SAMPLE_STEP]
+    assert len(sample) >= 15
+    offenders = _python_udf_offenders(spark, sf_dir, sample)
+    assert not offenders, (
+        f"Python eval nodes in non-sanctioned hot paths (offset {offset}): "
+        f"{offenders}"
     )
 
 

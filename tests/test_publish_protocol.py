@@ -4,18 +4,24 @@
   no other package module gates a build on a ``_SUCCESS`` marker.
 - S7 upserts publish through the commit log (``commit_append`` /
   ``read_committed``): the blind-append sink stays deleted.
+- State that outlives a query goes through ``session.session_memo``:
+  no other module registers an exit hook, reads ``applicationId`` (the
+  key every hand-rolled session cache used) or keeps a module-level
+  cache.
 
 Pure text scan of the package sources, no Spark.
 """
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "streaming_forex_data_pipeline_spark"
 SCRATCH = os.path.join(PACKAGE, "sources", "scratch.py")
+MEMO = os.path.join(PACKAGE, "session.py")
 
 _SUCCESS_GATE = re.compile(
     r"""["']_SUCCESS["']\)\.exists\(\)|exists\([^)]*["']_SUCCESS["']"""
@@ -51,3 +57,95 @@ def test_no_blind_append_upsert_sink():
         if _BLIND_UPSERT.search(line)
     ]
     assert not hits, f"blind-append upsert sink referenced: {hits}"
+
+
+# module-level containers that are filled at run time: session state
+_STATE_CONTAINERS = {
+    "dict", "list", "set", "defaultdict", "OrderedDict", "deque",
+    "WeakKeyDictionary", "WeakValueDictionary", "WeakSet",
+}
+_ALLOWED_STATE = {"_REGISTRY", "SILVER_BUILD_LOG"}
+
+
+def _is_state_container(value) -> bool:
+    if isinstance(value, (ast.Dict, ast.List, ast.Set)):
+        return not (getattr(value, "keys", None) or getattr(value, "elts", None))
+    if isinstance(value, ast.Call):
+        f = value.func
+        return (f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")) in (
+            _STATE_CONTAINERS
+        )
+    return False
+
+
+def _session_state_outside_memo(rel: str, text: str) -> list[str]:
+    tree = ast.parse(text)
+    hits = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr == "applicationId":
+            hits.append(f"{rel}:{node.lineno} applicationId")
+        if (
+            isinstance(node, ast.Attribute)
+            and node.attr == "register"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "atexit"
+        ) or (isinstance(node, ast.ImportFrom) and node.module == "atexit"):
+            hits.append(f"{rel}:{node.lineno} atexit.register")
+    for node in tree.body:
+        if isinstance(node, ast.Assign):
+            targets, value = node.targets, node.value
+        elif isinstance(node, ast.AnnAssign):
+            targets, value = [node.target], node.value
+        else:
+            continue
+        for t in targets:
+            name = getattr(t, "id", None)
+            if name is None or name in _ALLOWED_STATE:
+                continue
+            if name.endswith("_CACHE") or _is_state_container(value):
+                hits.append(f"{rel}:{node.lineno} module-level {name}")
+    return hits
+
+
+def test_session_state_goes_through_session_memo():
+    hits = [
+        hit
+        for rel, text in _package_sources()
+        if rel != MEMO
+        for hit in _session_state_outside_memo(rel, text)
+    ]
+    assert not hits, (
+        "session state outside session.session_memo (route it through "
+        f"the memo): {hits}"
+    )
+
+
+def test_session_state_gate_sees_the_hand_rolled_caches():
+    """The scan flags each shape the memo replaced."""
+    sample = """
+import atexit
+import weakref
+_SHIPPED: set[str] = set()
+_WALK_CACHE = {}
+_FIT_CACHE = weakref.WeakKeyDictionary()
+_INGEST_DIRS: list[str] = []
+_REGISTRY: dict = {}
+ROUND = 6
+TABLES = ("events",)
+
+@atexit.register
+def _cleanup():
+    pass
+
+def f(spark):
+    key = (spark.sparkContext.applicationId, "x")
+"""
+    hits = _session_state_outside_memo("m.py", sample)
+    assert sorted(h.split(" ", 1)[1] for h in hits) == sorted([
+        "applicationId",
+        "atexit.register",
+        "module-level _SHIPPED",
+        "module-level _WALK_CACHE",
+        "module-level _FIT_CACHE",
+        "module-level _INGEST_DIRS",
+    ])

@@ -146,6 +146,75 @@ def test_partitioned_delete_range_failed_swap_keeps_chunk(
     assert _siblings(os.path.join(tdir, ".p_date")) == []
 
 
+def test_range_delete_restores_table_a_killed_swap_left_aside(spark, tmp_path):
+    """A process killed between swap_aside's two renames leaves the
+    table (or a chunk) only in its ``.old-*`` aside.  The next
+    delete_range renames it back first, so every original row outside
+    the range survives."""
+    import os
+
+    t0 = dt.datetime(2024, 1, 1)
+    flat = str(tmp_path / "flat")
+    flat_rows = [("S", t0 + dt.timedelta(hours=h), float(h)) for h in range(10)]
+    _candles(spark, flat_rows).write.parquet(flat)
+    os.rename(flat, f"{flat}.old-deadbeef")
+    S.delete_range(spark, flat, "ts", t0, t0 + dt.timedelta(hours=1))
+    left = sorted(r["close"] for r in spark.read.parquet(flat).collect())
+    assert left == [float(h) for h in range(2, 10)]
+    assert _siblings(flat) == []
+
+    part = str(tmp_path / "part")
+    part_rows = [("S", t0 + dt.timedelta(days=d, hours=h), float(d * 24 + h))
+                 for d in range(3) for h in range(4)]
+    S.write_partitioned(_candles(spark, part_rows), part)
+    day = os.path.join(part, "p_date=2024-01-02")
+    os.rename(day, os.path.join(part, ".p_date=2024-01-02.old-deadbeef"))
+    S.delete_range(
+        spark, part, "ts", dt.datetime(2024, 1, 3), dt.datetime(2024, 1, 3, 1)
+    )
+    left = sorted(r["close"] for r in spark.read.parquet(part).collect())
+    assert left == sorted(r[2] for r in part_rows if r[2] not in (48.0, 49.0))
+    assert _siblings(os.path.join(part, ".p_date")) == []
+
+
+def test_layout_publish_restores_layout_a_killed_swap_left_aside(
+    spark, tmp_path, monkeypatch
+):
+    """The same post-kill state for a maintained layout: when the next
+    publish's own swap then fails, the original layout is back in
+    place instead of staying hidden in its aside."""
+    import os
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from streaming_forex_data_pipeline_spark.streaming.channels import (
+        _publish_rebuilt_layout,
+    )
+
+    sink = str(tmp_path / "log")
+    S.commit_append(
+        spark.range(3).withColumn("batch", F.lit(0).cast("long")), sink, version=0.0
+    )
+    loc = str(tmp_path / "layout")
+    spark.range(5).write.parquet(f"{loc}.old-deadbeef")
+    spark.range(7).write.parquet(f"{loc}.rebuild-x")
+
+    real_rename = os.rename
+
+    def failing_swap(src, dst):
+        if ".rebuild" in os.path.basename(src):
+            raise OSError("injected swap failure")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_swap)
+    with pytest.raises(OSError, match="injected swap failure"):
+        _publish_rebuilt_layout(sink, loc, f"{loc}.rebuild-x")
+    monkeypatch.undo()
+    assert sorted(r["id"] for r in spark.read.parquet(loc).collect()) == list(range(5))
+    assert _siblings(loc) == []
+
+
 def test_partitioned_retention_drops_only_old_chunks(spark, tmp_path):
     """S11 on a date-partitioned table: expired partitions vanish as
     whole directories and surviving partitions' files are untouched
@@ -713,7 +782,7 @@ def test_compact_log_tolerates_all_empty_folded_commits(spark, tmp_path):
 
 def test_maintenance_entry_point(spark, tmp_path, monkeypatch):
     """r14: the consolidated maintenance() entry — compaction + vacuum
-    per sink, LRU silver retirement per prefix, per-sink error
+    per sink, LRU retirement of every build-once slot, per-sink error
     isolation — one call a production cron can own."""
     import os
     import time
@@ -743,6 +812,16 @@ def test_maintenance_entry_point(spark, tmp_path, monkeypatch):
     os.utime(stale, (old, old))
     live = SC.scratch_path("knng_v2_livebeef")
     os.makedirs(live)
+    # every build-once family retires, not a listed few; a channel's
+    # scratch_dir never does, whatever its name starts with
+    other_families = [
+        SC.scratch_path("kmc2_deadbeef_k16_s7"),
+        SC.scratch_path("events_by_day_deadbeef"),
+    ]
+    channel_dir = SC.scratch_dir("ivf_assign_log_")
+    for p in (*other_families, channel_dir):
+        os.makedirs(p, exist_ok=True)
+        os.utime(p, (old, old))
 
     # a wedged sink: a corrupt manifest must not stop the fleet
     wedged = str(tmp_path / "wedged_sink")
@@ -776,6 +855,9 @@ def test_maintenance_entry_point(spark, tmp_path, monkeypatch):
     assert got == {(0, 4), (1, 4), (2, 4)}  # keep-latest preserved
     assert stale in rep["retired"] and not os.path.exists(stale)
     assert os.path.exists(live)
+    for p in other_families:
+        assert p in rep["retired"] and not os.path.exists(p)
+    assert os.path.isdir(channel_dir)
     # the wedged sink errored in isolation; the healthy one (listed
     # AFTER it) was still maintained
     assert wedged in rep["errors"]
