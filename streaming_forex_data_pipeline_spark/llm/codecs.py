@@ -19,9 +19,9 @@ portable fallback and the arbiter in tests.
 Reference scope: the reference pipeline is forex-only and carries no
 media; this module is part of the mandated LLM-pipeline multimodal
 extension (SURVEY.md §2 extension family).  Scale shape: codecs are
-per-row byte work inside Arrow-batched `mapInPandas` kernels
-(`llm/multimodal.py`) — embarrassingly parallel, no shuffle, no
-driver involvement.
+per-row byte work inside the `mapInArrow` row kernel
+(`llm/multimodal.py:row_kernel`) — embarrassingly parallel, no
+shuffle, no driver involvement.
 """
 
 from __future__ import annotations

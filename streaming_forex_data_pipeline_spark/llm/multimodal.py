@@ -1,37 +1,39 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 Mandated LLM-pipeline extension: image/audio/video content is carried
-as an opaque ``binary`` column plus a typed metadata struct; decode /
-feature-extraction runs as an Arrow-batched pandas kernel over
-``mapInPandas`` (per-batch, no per-row Python), because byte-level
-decoding is not expressible in Column algebra.
+as an opaque ``binary`` column plus a typed metadata struct.  Only
+byte-level codec work needs Python; it runs through one Arrow row
+kernel, `row_kernel` over ``mapInArrow`` (per-batch Arrow transfer,
+one codec call per row).
 
 Two tiers coexist:
 
-1. the original byte-level STUB stages (`decode_stub`, `resize_stub`,
-   `frame_sample_stub`) whose payloads are UTF-8 text bytes — kept
-   verbatim for the established `multimodal_*` oracle parity;
+1. the byte-level STUB stages (`decode_stub`, `resize_stub`,
+   `frame_sample_stub`) whose payloads are UTF-8 text bytes — plain
+   Column algebra (``octet_length``, ``substring``, ``hex``,
+   ``sequence``/``explode``), so their plans carry no Python node;
 2. REAL codec stages (`encode_images` / `decode_images` /
-   `resize_images`, `encode_audio` / `decode_audio`) backed by the
-   spec-compliant pure-stdlib PNG and RIFF/WAVE codecs in
-   `llm/codecs.py`.  Payload CONTENT is deterministic arithmetic in
-   ``doc_id`` (the testdata carries no real media), so a DuckDB oracle
-   can reproduce every decoded pixel/sample sum in closed form — the
-   hash check therefore verifies the actual inflate + unfilter work,
-   not just plumbing.  Per-scanline filters rotate through all five
-   PNG filter types keyed on (doc_id + row), so the corpus-wide
-   round-trip exercises every unfilter path.
+   `resize_images`, `encode_audio` / `decode_audio`, the video and
+   signature kernels) backed by the spec-compliant pure-stdlib PNG,
+   RIFF/WAVE and Motion-PNG codecs in `llm/codecs.py`.  Payload
+   CONTENT is deterministic arithmetic in ``doc_id`` (the testdata
+   carries no real media), so a DuckDB oracle can reproduce every
+   decoded pixel/sample sum in closed form — the hash check therefore
+   verifies the actual inflate + unfilter work, not just plumbing.
+   Per-scanline filters rotate through all five PNG filter types keyed
+   on (doc_id + row), so the corpus-wide round-trip exercises every
+   unfilter path.
 
-All stages are Arrow-batched pandas kernels over ``mapInPandas``
-(byte-level codec work is not expressible in Column algebra); per-row
-cost is the codec itself, embarrassingly parallel, no shuffle.
+Every codec stage is a `row_kernel` (byte-level codec work is not
+expressible in Column algebra); per-row cost is the codec itself,
+embarrassingly parallel, no shuffle.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
 
-import pandas as pd
+import numpy as np
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,6 +46,16 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .codecs import (
+    decode_png,
+    decode_wav,
+    encode_mpng,
+    encode_png,
+    encode_wav,
+    split_mpng,
+)
+from ..sources.tables import ship_package
 
 MODALITIES = ("image", "audio", "video")
 
@@ -62,6 +74,38 @@ DECODE_SCHEMA = StructType(
 )
 
 MIN_VALID_BYTES = 16
+
+
+def row_kernel(
+    df: DataFrame, in_cols: list[str], fn, schema: StructType
+) -> DataFrame:
+    """Run ``fn`` once per row of ``df[in_cols]`` inside ``mapInArrow``.
+
+    ``fn(*values)`` takes one input row's values (Python objects:
+    ``int`` for long columns, ``bytes`` for binary) and yields zero or
+    more output tuples in ``schema`` order, so 1:1 kernels and
+    row-expanding ones share this one path.  Each output batch is
+    typed from ``schema``, so no kernel types its own columns.  ``fn``
+    pickles the package's functions by reference, so the package ships
+    to the workers first: a query that reads only silvers never passes
+    through ``load_table``, which ships it otherwise."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+
+    def run(batches):
+        for batch in batches:
+            values = zip(*(col.to_pylist() for col in batch.columns))
+            rows = [out for args in values for out in fn(*args)]
+            cols = list(zip(*rows)) or [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema,
+            )
+
+    ship_package(df.sparkSession)
+    return df.select(*in_cols).mapInArrow(run, schema)
 
 
 def attach_payload(docs: DataFrame) -> DataFrame:
@@ -88,35 +132,25 @@ def attach_payload(docs: DataFrame) -> DataFrame:
 
 
 def decode_stub(multimodal: DataFrame) -> DataFrame:
-    """Arrow-batched decode over ``mapInPandas``.
+    """Byte-level decode stub in Column algebra (``DECODE_SCHEMA``).
 
     Stub semantics (deterministic, byte-level): n_bytes = payload
-    length, header = first 4 bytes as lowercase hex, is_valid =
-    n_bytes >= MIN_VALID_BYTES, width/height echoed from metadata (a
-    real decoder would read them from the payload).  Batches stream
-    through Arrow; no per-row Python calls besides the vectorized
-    pandas ops.
+    length, header = first 4 bytes as lowercase hex (shorter for a
+    shorter payload), is_valid = n_bytes >= MIN_VALID_BYTES,
+    width/height echoed from metadata (a real decoder would read them
+    from the payload).
     """
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payload = pdf["payload"]
-            n_bytes = payload.map(len).astype("int64")
-            header = payload.map(lambda b: bytes(b[:4]).hex())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "modality": pdf["modality"],
-                    "n_bytes": n_bytes,
-                    "header": header,
-                    "is_valid": n_bytes >= MIN_VALID_BYTES,
-                    "width": pdf["meta"].map(lambda m: m["width"]).astype("int32"),
-                    "height": pdf["meta"].map(lambda m: m["height"]).astype("int32"),
-                }
-            )
-
-    narrow = multimodal.select("doc_id", "modality", "payload", "meta")
-    return narrow.mapInPandas(decode, DECODE_SCHEMA)
+    payload = F.col("payload")
+    n_bytes = F.octet_length(payload).cast("long")
+    return multimodal.select(
+        "doc_id",
+        "modality",
+        n_bytes.alias("n_bytes"),
+        F.lower(F.hex(F.substring(payload, 1, 4))).alias("header"),
+        (n_bytes >= MIN_VALID_BYTES).alias("is_valid"),
+        F.col("meta.width").alias("width"),
+        F.col("meta.height").alias("height"),
+    )
 
 
 RESIZE_SCHEMA = StructType(
@@ -135,41 +169,30 @@ RESIZE_SCHEMA = StructType(
 def resize_stub(
     multimodal: DataFrame, target_w: int = 224, target_h: int = 224
 ) -> DataFrame:
-    """Image-resize stage over ``mapInPandas`` (Arrow-batched).
+    """Image-resize stage in Column algebra (``RESIZE_SCHEMA``).
 
     STUB: a real implementation decodes the payload with PIL and
     re-encodes at (target_w, target_h); no codec exists in this
     container, so the stub scales the PAYLOAD LENGTH by the pixel ratio
-    (truncation — deterministic and schema-faithful) and rewrites the
-    size metadata.  The plumbing a swap-in decoder needs — binary in,
-    binary out, metadata rewrite, batch iteration — is all real.
+    (prefix truncation — deterministic and schema-faithful) and
+    rewrites the size metadata.  The kept length follows one float
+    order: ``n * (target_w*target_h / greatest(w*h, 1))``, capped at
+    ``n``, truncated to long, floored at 1.
     """
-
-    def resize(batches) -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            w = pdf["meta"].map(lambda m: m["width"]).astype("int32")
-            h = pdf["meta"].map(lambda m: m["height"]).astype("int32")
-            ratio = (target_w * target_h) / (w * h).clip(lower=1)
-            n = pdf["payload"].map(len)
-            keep = (n * ratio).clip(upper=n).astype("int64").clip(lower=1)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "modality": pdf["modality"],
-                    "payload": [
-                        bytes(b[:k]) for b, k in zip(pdf["payload"], keep)
-                    ],
-                    "width": target_w,
-                    "height": target_h,
-                    "orig_width": w,
-                    "orig_height": h,
-                }
-            )
-
-    narrow = multimodal.filter(F.col("modality") == "image").select(
-        "doc_id", "modality", "payload", "meta"
+    payload = F.col("payload")
+    w, h = F.col("meta.width"), F.col("meta.height")
+    n = F.octet_length(payload)
+    ratio = F.lit(target_w * target_h) / F.greatest(w * h, F.lit(1))
+    keep = F.greatest(F.least(n * ratio, n).cast("long"), F.lit(1))
+    return multimodal.filter(F.col("modality") == "image").select(
+        "doc_id",
+        "modality",
+        F.substring(payload, F.lit(1), keep.cast("int")).alias("payload"),
+        F.lit(target_w).alias("width"),
+        F.lit(target_h).alias("height"),
+        w.alias("orig_width"),
+        h.alias("orig_height"),
     )
-    return narrow.mapInPandas(resize, RESIZE_SCHEMA)
 
 
 FRAME_BYTES = 256
@@ -184,40 +207,34 @@ FRAME_SCHEMA = StructType(
 
 
 def frame_sample_stub(multimodal: DataFrame, every_n: int = 4) -> DataFrame:
-    """Video frame-sampling stage over ``mapInPandas`` — a ROW-EXPANDING
-    kernel (one input video -> many frame rows), the shape a real
-    ffmpeg-backed sampler needs.
+    """Video frame-sampling stage in Column algebra (``FRAME_SCHEMA``) —
+    a ROW-EXPANDING stage (one input video -> many frame rows), the
+    shape a real ffmpeg-backed sampler needs.
 
     STUB: a "frame" is a FRAME_BYTES-byte slice of the payload; every
     ``every_n``-th frame is emitted with its index and length.  Output
     row count per doc = ceil(ceil(n_bytes / FRAME_BYTES) / every_n),
-    which is what the oracle checks.
+    which is what the oracle checks; an empty payload has no frames.
     """
-
-    def sample(batches) -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            out = {"doc_id": [], "frame_idx": [], "frame_len": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n = len(payload)
-                n_frames = (n + FRAME_BYTES - 1) // FRAME_BYTES
-                for i in range(0, n_frames, every_n):
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["frame_len"].append(
-                        min(FRAME_BYTES, n - i * FRAME_BYTES)
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    "frame_idx": pd.Series(out["frame_idx"], dtype="int32"),
-                    "frame_len": pd.Series(out["frame_len"], dtype="int32"),
-                }
+    n = F.octet_length("payload")
+    n_frames = F.ceil(n / FRAME_BYTES).cast("int")
+    frames = multimodal.filter(F.col("modality") == "video").select(
+        "doc_id",
+        n.alias("n"),
+        F.explode(
+            F.when(
+                n_frames > 0,
+                F.sequence(F.lit(0), n_frames - 1, F.lit(every_n)),
             )
-
-    narrow = multimodal.filter(F.col("modality") == "video").select(
-        "doc_id", "payload"
+        ).alias("frame_idx"),
     )
-    return narrow.mapInPandas(sample, FRAME_SCHEMA)
+    return frames.select(
+        "doc_id",
+        "frame_idx",
+        F.least(
+            F.lit(FRAME_BYTES), F.col("n") - F.col("frame_idx") * FRAME_BYTES
+        ).alias("frame_len"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -245,8 +262,6 @@ PAYLOAD_SCHEMA = StructType(
 
 
 def _image_pixels(doc_id: int):
-    import numpy as np
-
     w = doc_id % IMG_W_MOD + IMG_W_OFF
     h = doc_id % IMG_H_MOD + IMG_H_OFF
     i = np.arange(w * h, dtype=np.int64)
@@ -255,27 +270,15 @@ def _image_pixels(doc_id: int):
 
 def encode_images(docs: DataFrame) -> DataFrame:
     """Produce a REAL spec-compliant PNG per document (content per the
-    module contract above).  Arrow-batched `mapInPandas`; any external
-    PNG reader can open the payloads."""
-    from .codecs import encode_png
+    module contract above).  One `row_kernel` pass; any external PNG
+    reader can open the payloads."""
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": [
-                        encode_png(
-                            _image_pixels(d),
-                            filter_for_row=lambda y, d=d: (d + y) % 5,
-                        )
-                        for d in ids
-                    ],
-                }
-            )
+    def encode(doc_id):
+        yield doc_id, encode_png(
+            _image_pixels(doc_id), filter_for_row=lambda y: (doc_id + y) % 5
+        )
 
-    return docs.select("doc_id").mapInPandas(encode, PAYLOAD_SCHEMA)
+    return row_kernel(docs, ["doc_id"], encode, PAYLOAD_SCHEMA)
 
 
 IMAGE_DECODE_SCHEMA = StructType(
@@ -291,37 +294,18 @@ IMAGE_DECODE_SCHEMA = StructType(
 
 
 def decode_images(images: DataFrame) -> DataFrame:
-    """REAL PNG decode (inflate + unfilter all five filter types) over
-    `mapInPandas`: width/height/channels come from the parsed IHDR and
+    """REAL PNG decode (inflate + unfilter all five filter types) in a
+    `row_kernel`: width/height/channels come from the parsed IHDR and
     pixel_sum from the reconstructed scanlines, so the oracle's
     closed-form pixel arithmetic only matches if the codec is
     byte-exact."""
-    from .codecs import decode_png
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in IMAGE_DECODE_SCHEMA.fieldNames()}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, ch, px = decode_png(bytes(payload))
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["channels"].append(ch)
-                rows["n_pixels"].append(w * h * ch)
-                rows["pixel_sum"].append(int(px.astype("int64").sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "channels": pd.Series(rows["channels"], dtype="int32"),
-                    "n_pixels": pd.Series(rows["n_pixels"], dtype="int64"),
-                    "pixel_sum": pd.Series(rows["pixel_sum"], dtype="int64"),
-                }
-            )
+    def decode(doc_id, payload):
+        w, h, ch, px = decode_png(payload)
+        yield doc_id, w, h, ch, w * h * ch, int(px.astype("int64").sum())
 
-    return images.select("doc_id", "payload").mapInPandas(
-        decode, IMAGE_DECODE_SCHEMA
+    return row_kernel(
+        images, ["doc_id", "payload"], decode, IMAGE_DECODE_SCHEMA
     )
 
 
@@ -332,30 +316,14 @@ def resize_images(
     (target_w, target_h) with numpy fancy indexing, re-encode as PNG.
     Binary-in/binary-out — the same kernel shape a PIL/ffmpeg-backed
     production resize uses."""
-    import numpy as np
 
-    from .codecs import decode_png, encode_png
+    def resize(doc_id, payload):
+        w, h, ch, px = decode_png(payload)
+        sy = (np.arange(target_h, dtype=np.int64) * h) // target_h
+        sx = (np.arange(target_w, dtype=np.int64) * w) // target_w
+        yield doc_id, encode_png(px[np.ix_(sy, sx)])
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_payloads = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, ch, px = decode_png(bytes(payload))
-                sy = (np.arange(target_h, dtype=np.int64) * h) // target_h
-                sx = (np.arange(target_w, dtype=np.int64) * w) // target_w
-                small = px[np.ix_(sy, sx)]
-                out_ids.append(int(doc_id))
-                out_payloads.append(encode_png(small))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_ids, dtype="int64"),
-                    "payload": out_payloads,
-                }
-            )
-
-    return images.select("doc_id", "payload").mapInPandas(
-        resize, PAYLOAD_SCHEMA
-    )
+    return row_kernel(images, ["doc_id", "payload"], resize, PAYLOAD_SCHEMA)
 
 
 AUD_N_MOD, AUD_N_OFF, AUD_RATE = 400, 50, 8000
@@ -364,22 +332,13 @@ AUD_N_MOD, AUD_N_OFF, AUD_RATE = 400, 50, 8000
 def encode_audio(docs: DataFrame) -> DataFrame:
     """Produce a REAL RIFF/WAVE (PCM16 mono 8 kHz) per document,
     content per the module contract above."""
-    import numpy as np
 
-    from .codecs import encode_wav
+    def encode(doc_id):
+        i = np.arange(doc_id % AUD_N_MOD + AUD_N_OFF, dtype=np.int64)
+        samples = ((doc_id * 131 + i * 17) % 65536 - 32768).astype("<i2")
+        yield doc_id, encode_wav(samples, framerate=AUD_RATE)
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                n = d % AUD_N_MOD + AUD_N_OFF
-                i = np.arange(n, dtype=np.int64)
-                samples = ((d * 131 + i * 17) % 65536 - 32768).astype("<i2")
-                payloads.append(encode_wav(samples, framerate=AUD_RATE))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(encode, PAYLOAD_SCHEMA)
+    return row_kernel(docs, ["doc_id"], encode, PAYLOAD_SCHEMA)
 
 
 AUDIO_DECODE_SCHEMA = StructType(
@@ -398,39 +357,14 @@ def decode_audio(audio: DataFrame) -> DataFrame:
     """REAL WAV decode: header fields from the RIFF parse, sample_sum /
     peak from the PCM frames — all exact integers the oracle replays in
     closed form."""
-    import numpy as np
 
-    from .codecs import decode_wav
+    def decode(doc_id, payload):
+        ch, _sw, rate, n, samples = decode_wav(payload)
+        s64 = samples.astype(np.int64)
+        yield doc_id, ch, rate, n, int(s64.sum()), int(np.abs(s64).max())
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in AUDIO_DECODE_SCHEMA.fieldNames()}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                ch, _sw, rate, n, samples = decode_wav(bytes(payload))
-                s64 = samples.astype(np.int64)
-                rows["doc_id"].append(int(doc_id))
-                rows["channels"].append(ch)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(n)
-                rows["sample_sum"].append(int(s64.sum()))
-                rows["peak"].append(int(np.abs(s64).max()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "channels": pd.Series(rows["channels"], dtype="int32"),
-                    "sample_rate": pd.Series(
-                        rows["sample_rate"], dtype="int32"
-                    ),
-                    "n_samples": pd.Series(rows["n_samples"], dtype="int64"),
-                    "sample_sum": pd.Series(
-                        rows["sample_sum"], dtype="int64"
-                    ),
-                    "peak": pd.Series(rows["peak"], dtype="int32"),
-                }
-            )
-
-    return audio.select("doc_id", "payload").mapInPandas(
-        decode, AUDIO_DECODE_SCHEMA
+    return row_kernel(
+        audio, ["doc_id", "payload"], decode, AUDIO_DECODE_SCHEMA
     )
 
 
@@ -441,6 +375,23 @@ DHASH_SCHEMA = StructType(
         StructField("h_hi", LongType()),
     ]
 )
+
+
+def _check_dhash_grid(grid_w: int, grid_h: int) -> None:
+    if grid_w * grid_h != 64:
+        raise ValueError(
+            f"dhash grid must yield 64 bits (got {grid_w}x{grid_h}); "
+            f"the two-half packing and 16-bit banding assume 64"
+        )
+
+
+def _pack_halves(bits) -> tuple[int, int]:
+    """64 bits (index 0 = least significant) -> two non-negative 32-bit
+    halves (h_lo = bits 0..31, h_hi = bits 32..63)."""
+    packed = np.packbits(bits, bitorder="little").tobytes()
+    return int.from_bytes(packed[:4], "little"), int.from_bytes(
+        packed[4:], "little"
+    )
 
 
 def dhash_images(
@@ -468,53 +419,25 @@ def dhash_images(
     every value, shift, and band mask in safe non-negative range
     while Hamming distance stays two bit_count(xor) terms.
 
-    Arrow-batched ``mapInPandas``; embarrassingly parallel, no
-    shuffle — the 100 TB shape is one codec+hash pass, then all
-    pairing work happens on the 16-byte signatures."""
-    from .codecs import decode_png
+    One `row_kernel` pass; embarrassingly parallel, no shuffle — the
+    100 TB shape is one codec+hash pass, then all pairing work happens
+    on the 16-byte signatures."""
+    _check_dhash_grid(grid_w, grid_h)
 
-    n_bits = grid_w * grid_h
-    if n_bits != 64:
-        raise ValueError(
-            f"dhash grid must yield 64 bits (got {grid_w}x{grid_h}); "
-            f"the two-half packing and 16-bit banding assume 64"
-        )
+    def hash_image(doc_id, payload):
+        w, h, ch, px = decode_png(payload)
+        yield (doc_id, *_dhash_halves(px, ch, w, h, grid_w, grid_h))
 
-    def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, lo, hi = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, ch, px = decode_png(bytes(payload))
-                hl, hh = _dhash_halves(px, ch, w, h, grid_w, grid_h)
-                ids.append(int(doc_id))
-                lo.append(hl)
-                hi.append(hh)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "h_lo": pd.Series(lo, dtype="int64"),
-                    "h_hi": pd.Series(hi, dtype="int64"),
-                }
-            )
-
-    return images.select("doc_id", "payload").mapInPandas(
-        hash_batch, DHASH_SCHEMA
+    return row_kernel(
+        images, ["doc_id", "payload"], hash_image, DHASH_SCHEMA
     )
-
-
-import functools
 
 
 @functools.lru_cache(maxsize=256)
 def _dhash_grid(w: int, h: int, grid_w: int, grid_h: int):
-    import numpy as np
-
     sy = (np.arange(grid_h, dtype=np.int64) * h) // grid_h
     sx = (np.arange(grid_w + 1, dtype=np.int64) * w) // (grid_w + 1)
     return sy, sx
-
-
-_POW2_32 = None  # lazily-built 1 << arange(32) (numpy import stays lazy)
 
 
 def _dhash_halves(
@@ -526,27 +449,19 @@ def _dhash_halves(
     nearest-neighbor sample to (grid_w+1) x grid_h with the
     `resize_images` integer index arithmetic, one bit per horizontal
     neighbor pair, packed as two non-negative 32-bit halves."""
-    import numpy as np
-
     if ch != 1:
         # RGB: integer luma (channel mean, floor) BEFORE sampling —
         # without this the channel axis would survive np.ix_, ravel()
         # would yield ch*64 bits, and the halves would slice an
         # interleaved channel mix into a garbage hash with no error
-        # (review-found; deterministic integer math so the hash stays
+        # (deterministic integer math so the hash stays
         # engine-replayable)
         px = px.astype(np.int64).sum(axis=2) // ch
-    # per-frame allocations hoisted (review-found): the weights vector
-    # is parameter-free and the sample grids repeat per (w, h) — on the
-    # video path every sampled frame of a clip shares one grid
-    global _POW2_32
-    if _POW2_32 is None:
-        _POW2_32 = 1 << np.arange(32, dtype=np.int64)
-    weights = _POW2_32
+    # the sample grids repeat per (w, h): on the video path every
+    # sampled frame of a clip shares one grid
     sy, sx = _dhash_grid(w, h, grid_w, grid_h)
     g = px[np.ix_(sy, sx)].astype(np.int64)
-    bits = (g[:, 1:] > g[:, :-1]).astype(np.int64).ravel()
-    return int((bits[:32] * weights).sum()), int((bits[32:] * weights).sum())
+    return _pack_halves((g[:, 1:] > g[:, :-1]).ravel())
 
 
 def fingerprint_audio(audio: DataFrame, n_frames: int = 65) -> DataFrame:
@@ -570,45 +485,25 @@ def fingerprint_audio(audio: DataFrame, n_frames: int = 65) -> DataFrame:
     65 frames -> 64 bits, packed as the same two non-negative 32-bit
     halves as `dhash_images` (single-int64 signatures put bit 63 in
     the sign position), so `llm/dedup.py:dhash_near_dup_pairs` bands
-    and verifies audio prints unchanged.  Arrow-batched
-    ``mapInPandas``, no shuffle; at 100 TB the corpus reduces to
-    16-byte signatures before any pairing cost."""
-    from .codecs import decode_wav
-
+    and verifies audio prints unchanged.  One `row_kernel` pass, no
+    shuffle; at 100 TB the corpus reduces to 16-byte signatures before
+    any pairing cost."""
     if n_frames != 65:
         raise ValueError(
             f"audio fingerprint needs 65 frames -> 64 bits (got "
             f"{n_frames}); the two-half packing and banding assume 64"
         )
 
-    def fp_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def fingerprint(doc_id, payload):
+        _ch, _sw, _rate, n, samples = decode_wav(payload)
+        s = np.abs(samples.astype(np.int64))
+        bounds = (np.arange(n_frames + 1, dtype=np.int64) * n) // n_frames
+        sums = np.concatenate(([0], np.cumsum(s)))
+        e = sums[bounds[1:]] - sums[bounds[:-1]]
+        yield (doc_id, *_pack_halves(e[1:] > e[:-1]))
 
-        weights = 1 << np.arange(32, dtype=np.int64)
-        for pdf in batches:
-            ids, lo, hi = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _ch, _sw, _rate, n, samples = decode_wav(bytes(payload))
-                s = np.abs(samples.astype(np.int64))
-                bounds = (np.arange(n_frames + 1, dtype=np.int64) * n) // (
-                    n_frames
-                )
-                sums = np.concatenate(([0], np.cumsum(s)))
-                e = sums[bounds[1:]] - sums[bounds[:-1]]
-                bits = (e[1:] > e[:-1]).astype(np.int64)
-                ids.append(int(doc_id))
-                lo.append(int((bits[:32] * weights).sum()))
-                hi.append(int((bits[32:] * weights).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "h_lo": pd.Series(lo, dtype="int64"),
-                    "h_hi": pd.Series(hi, dtype="int64"),
-                }
-            )
-
-    return audio.select("doc_id", "payload").mapInPandas(
-        fp_batch, DHASH_SCHEMA
+    return row_kernel(
+        audio, ["doc_id", "payload"], fingerprint, DHASH_SCHEMA
     )
 
 
@@ -633,8 +528,6 @@ VID_H_MOD, VID_H_OFF = 10, 6
 
 
 def _video_frame_pixels(doc_id: int, k: int):
-    import numpy as np
-
     w = doc_id % VID_W_MOD + VID_W_OFF
     h = doc_id % VID_H_MOD + VID_H_OFF
     i = np.arange(w * h, dtype=np.int64)
@@ -647,27 +540,20 @@ def encode_videos(docs: DataFrame) -> DataFrame:
     """Produce a REAL Motion-PNG clip per document (content per the
     module contract above): every member frame is a spec-compliant
     PNG through `llm/codecs.py:encode_png`, rotating all five
-    scanline filters, concatenated by `encode_mpng`.  Arrow-batched
-    `mapInPandas`; any external PNG reader can open each member."""
-    from .codecs import encode_mpng, encode_png
+    scanline filters, concatenated by `encode_mpng`.  One `row_kernel`
+    pass; any external PNG reader can open each member."""
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                nf = d % VID_NF_MOD + VID_NF_OFF
-                frames = [
-                    encode_png(
-                        _video_frame_pixels(d, k),
-                        filter_for_row=lambda y, d=d, k=k: (d + k + y) % 5,
-                    )
-                    for k in range(nf)
-                ]
-                payloads.append(encode_mpng(frames))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def encode(doc_id):
+        frames = [
+            encode_png(
+                _video_frame_pixels(doc_id, k),
+                filter_for_row=lambda y, k=k: (doc_id + k + y) % 5,
+            )
+            for k in range(doc_id % VID_NF_MOD + VID_NF_OFF)
+        ]
+        yield doc_id, encode_mpng(frames)
 
-    return docs.select("doc_id").mapInPandas(encode, PAYLOAD_SCHEMA)
+    return row_kernel(docs, ["doc_id"], encode, PAYLOAD_SCHEMA)
 
 
 VIDEO_DECODE_SCHEMA = StructType(
@@ -688,44 +574,22 @@ def decode_videos(videos: DataFrame) -> DataFrame:
     across all frames — the closed-form totals a DuckDB oracle
     replays, so one wrong byte anywhere in the container walk or any
     member's inflate/unfilter chain breaks the sum."""
-    from .codecs import decode_png, split_mpng
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in VIDEO_DECODE_SCHEMA.fieldNames()}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                frames = split_mpng(bytes(payload))
-                if not frames:
-                    # split_mpng returns [] for an EMPTY stream (its
-                    # loop never runs) — raise the structural error the
-                    # codec layer promises instead of crashing below on
-                    # int(None) (review-found)
-                    raise ValueError(
-                        f"doc {int(doc_id)}: empty Motion-PNG stream"
-                    )
-                total = 0
-                w = h = None
-                for fb in frames:
-                    fw, fh, _ch, px = decode_png(fb)
-                    w, h = fw, fh
-                    total += int(px.astype("int64").sum())
-                rows["doc_id"].append(int(doc_id))
-                rows["n_frames"].append(len(frames))
-                rows["width"].append(int(w))
-                rows["height"].append(int(h))
-                rows["pixel_sum"].append(total)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "n_frames": pd.Series(rows["n_frames"], dtype="int32"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "pixel_sum": pd.Series(rows["pixel_sum"], dtype="int64"),
-                }
-            )
+    def decode(doc_id, payload):
+        frames = split_mpng(payload)
+        if not frames:
+            # split_mpng returns [] for an EMPTY stream (its loop never
+            # runs) — raise the structural error the codec layer
+            # promises instead of emitting a clip with no dimensions
+            raise ValueError(f"doc {doc_id}: empty Motion-PNG stream")
+        total = 0
+        for fb in frames:
+            w, h, _ch, px = decode_png(fb)
+            total += int(px.astype("int64").sum())
+        yield doc_id, len(frames), w, h, total
 
-    return videos.select("doc_id", "payload").mapInPandas(
-        decode, VIDEO_DECODE_SCHEMA
+    return row_kernel(
+        videos, ["doc_id", "payload"], decode, VIDEO_DECODE_SCHEMA
     )
 
 
@@ -740,35 +604,22 @@ FRAME_PAYLOAD_SCHEMA = StructType(
 
 def sample_frames(videos: DataFrame, every_n: int = 2) -> DataFrame:
     """REAL frame sampling — the production replacement for
-    `frame_sample_stub` (which sliced payload bytes; kept verbatim
-    for its established oracle): split the Motion-PNG container by
-    chunk grammar and emit every ``every_n``-th member as its own
-    complete PNG row (doc_id, frame_idx, payload).  The row-expanding
+    `frame_sample_stub` (which slices payload bytes; kept for its
+    established oracle): split the Motion-PNG container by chunk
+    grammar and emit every ``every_n``-th member as its own complete
+    PNG row (doc_id, frame_idx, payload).  The row-expanding
     binary-in/binary-out kernel shape an ffmpeg-backed sampler needs,
     with a real codec behind it.  Embarrassingly parallel, no
     shuffle; at 100 TB the clip corpus fans out to sampled frames in
     one Arrow-batched pass."""
-    from .codecs import split_mpng
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, payloads = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                frames = split_mpng(bytes(payload))
-                for k in range(0, len(frames), every_n):
-                    ids.append(int(doc_id))
-                    idxs.append(k)
-                    payloads.append(frames[k])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "payload": payloads,
-                }
-            )
+    def sample(doc_id, payload):
+        frames = split_mpng(payload)
+        for k in range(0, len(frames), every_n):
+            yield doc_id, k, frames[k]
 
-    return videos.select("doc_id", "payload").mapInPandas(
-        sample, FRAME_PAYLOAD_SCHEMA
+    return row_kernel(
+        videos, ["doc_id", "payload"], sample, FRAME_PAYLOAD_SCHEMA
     )
 
 
@@ -796,35 +647,14 @@ def dhash_video_frames(
     a clip reduces to ~n_frames/every_n 16-byte signatures in one
     Arrow-batched pass, and ALL pairing cost moves to the signature
     table — the 100 TB shape shared by the whole near-dup family."""
-    from .codecs import decode_png, split_mpng
+    _check_dhash_grid(grid_w, grid_h)
 
-    if grid_w * grid_h != 64:
-        raise ValueError(
-            f"dhash grid must yield 64 bits (got {grid_w}x{grid_h}); "
-            f"the two-half packing and 16-bit banding assume 64"
-        )
+    def hash_frames(doc_id, payload):
+        frames = split_mpng(payload)
+        for k in range(0, len(frames), every_n):
+            w, h, ch, px = decode_png(frames[k])
+            yield (doc_id, k, *_dhash_halves(px, ch, w, h, grid_w, grid_h))
 
-    def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, lo, hi = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                frames = split_mpng(bytes(payload))
-                for k in range(0, len(frames), every_n):
-                    w, h, ch, px = decode_png(frames[k])
-                    hl, hh = _dhash_halves(px, ch, w, h, grid_w, grid_h)
-                    ids.append(int(doc_id))
-                    idxs.append(k)
-                    lo.append(hl)
-                    hi.append(hh)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "h_lo": pd.Series(lo, dtype="int64"),
-                    "h_hi": pd.Series(hi, dtype="int64"),
-                }
-            )
-
-    return videos.select("doc_id", "payload").mapInPandas(
-        hash_batch, FRAME_DHASH_SCHEMA
+    return row_kernel(
+        videos, ["doc_id", "payload"], hash_frames, FRAME_DHASH_SCHEMA
     )

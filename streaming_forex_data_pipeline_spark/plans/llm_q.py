@@ -331,12 +331,12 @@ FROM documents
 ORDER BY doc_id
 """,
     doc="Multimodal decode plumbing — opaque binary payload + typed "
-    "metadata struct through an Arrow-batched mapInPandas decode stub "
+    "metadata struct through a Column-algebra decode stub "
     "(llm/multimodal.py): byte length, 4-byte header hex, validity "
     "flag, metadata echo.  The stub tier exercises the triage shape; "
     "the REAL codec tier (image_decode/image_resize/audio_decode, "
-    "llm/codecs.py) does actual PNG/WAV decode in the same kernel "
-    "shape.",
+    "llm/codecs.py) does actual PNG/WAV decode in the mapInArrow row "
+    "kernel.",
 )
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -626,10 +626,10 @@ FROM frames
 ORDER BY doc_id, frame_idx
 """,
     doc="Multimodal frame sampling: every-4th 256-byte 'frame' of each "
-    "video payload via a ROW-EXPANDING mapInPandas kernel "
-    "(llm/multimodal.py:frame_sample_stub) — the Arrow plumbing an "
-    "ffmpeg-backed sampler drops into.  The oracle reproduces the "
-    "frame arithmetic with generate_series, so the kernel's expansion "
+    "video payload via a ROW-EXPANDING explode over a sequence "
+    "(llm/multimodal.py:frame_sample_stub) — the row-expanding shape "
+    "an ffmpeg-backed sampler drops into.  The oracle reproduces the "
+    "frame arithmetic with generate_series, so the stage's expansion "
     "(count, indices, tail-frame length) is checked exactly.",
 )
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -657,10 +657,10 @@ WHERE {_MODALITY_SQL} = 'image'
 ORDER BY doc_id
 """,
     doc="Multimodal resize stage (llm/multimodal.py:resize_stub): "
-    "binary-in/binary-out mapInPandas kernel scaling payload length by "
-    "the pixel ratio (the PIL swap-in point).  The oracle checks the "
-    "byte-length arithmetic and metadata rewrite exactly; payload bytes "
-    "themselves are prefix-truncations verified in "
+    "binary-in/binary-out Column-algebra stage scaling payload "
+    "length by the pixel ratio (the PIL swap-in point).  The oracle "
+    "checks the byte-length arithmetic and metadata rewrite exactly; "
+    "payload bytes themselves are prefix-truncations verified in "
     "tests/test_multimodal_stages.py.",
 )
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2039,8 +2039,8 @@ ORDER BY doc_id
     "measures).  Pixel content is "
     "closed-form in doc_id, so the DuckDB oracle replays the sum "
     "analytically — the hash only matches if every filter/unfilter "
-    "path is byte-exact.  Both stages are Arrow-batched mapInPandas "
-    "kernels (per-row codec work, embarrassingly parallel, no "
+    "path is byte-exact.  Both stages run in the mapInArrow row "
+    "kernel (per-row codec work, embarrassingly parallel, no "
     "shuffle); upgrades the byte-level multimodal_decode stub tier to "
     "a real codec tier.",
 )
@@ -2074,7 +2074,7 @@ ORDER BY doc_id
     "two full codec round-trips plus the resampler.  The oracle "
     "replays the nearest-neighbor index arithmetic "
     "(src = (dst * src_dim) // dst_dim) in closed form.  "
-    "Binary-in/binary-out mapInPandas, the exact kernel shape a "
+    "Binary-in/binary-out mapInArrow row kernel, the exact shape a "
     "PIL/ffmpeg-backed production resize drops into.",
 )
 def image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2109,7 +2109,7 @@ ORDER BY doc_id
     "frames and reports exact-integer sample_sum and peak amplitude, "
     "replayed in closed form by the oracle (payloads read from the "
     "build-once media_payloads silver).  Same Arrow-batched "
-    "mapInPandas shape as the image tier.",
+    "mapInArrow row-kernel shape as the image tier.",
 )
 def audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .media_q import media_payloads

@@ -160,7 +160,7 @@ SELECT doc_id, h_lo, h_hi FROM hashes ORDER BY doc_id
     "horizontal-gradient-sign bits as two 32-bit halves.  The oracle "
     "replays every sampled pixel comparison and shift in closed form, "
     "so a single wrong bit anywhere in the codec/downsample/sign "
-    "chain breaks the hash.  One Arrow-batched mapInPandas pass, no "
+    "chain breaks the hash.  One mapInArrow row-kernel pass, no "
     "shuffle — at 100 TB the corpus reduces to 16-byte signatures "
     "and all pairing cost moves to the signature table.",
 )
@@ -255,8 +255,8 @@ SELECT doc_id, h_lo, h_hi FROM ahashes ORDER BY doc_id
     "brightness-robust.  The oracle replays every frame sum and "
     "comparison in closed form, so one wrong sample anywhere in the "
     "codec/framing/energy chain breaks the hash.  One Arrow-batched "
-    "mapInPandas pass, no shuffle; the corpus reduces to 16-byte "
-    "signatures before any pairing cost.",
+    "mapInArrow row-kernel pass, no shuffle; the corpus reduces to "
+    "16-byte signatures before any pairing cost.",
 )
 def audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media_signatures(spark, sf_dir, "audio").orderBy("doc_id")

@@ -133,9 +133,9 @@ ORDER BY doc_id, frame_idx
     "every sampled pixel comparison in closed form, so one wrong "
     "byte anywhere in the container walk, inflate, unfilter, "
     "downsample, or sign chain breaks the hash.  One Arrow-batched "
-    "mapInPandas pass, no shuffle — a 100 TB clip corpus reduces to "
-    "~n_frames/2 16-byte signatures per clip before any pairing "
-    "cost.  Replaces frame_sample_stub as the production video "
+    "mapInArrow row-kernel pass, no shuffle — a 100 TB clip corpus "
+    "reduces to ~n_frames/2 16-byte signatures per clip before any "
+    "pairing cost.  Replaces frame_sample_stub as the production video "
     "path (the stub stays for its established byte-level oracle).",
 )
 def video_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -479,7 +479,7 @@ ORDER BY doc_id
     "(sampling-based fingerprints only touch every 2nd frame; this "
     "reads all of them, so a single corrupt member or off-by-one in "
     "the chunk walk breaks the sum).  The oracle replays every pixel "
-    "of every frame in closed form.  One Arrow-batched mapInPandas "
+    "of every frame in closed form.  One mapInArrow row-kernel "
     "pass, no shuffle, embarrassingly parallel.",
 )
 def video_decode(spark: SparkSession, sf_dir: str) -> DataFrame:

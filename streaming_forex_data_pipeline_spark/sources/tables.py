@@ -41,13 +41,13 @@ TABLES = (
 ROUND = 6
 
 
-# applyInPandas kernels reference module-level functions, which
-# cloudpickle serializes BY REFERENCE — Python workers must be able to
-# import this package.  When the driver process runs from a different
-# cwd (the correctness harness does), workers would fail with
-# ModuleNotFoundError, so ship the package source as a zip via
-# addPyFile once per application.
-def _ship_package(spark: SparkSession) -> None:
+# Python kernels (applyInPandas, the media row kernel) reference
+# module-level functions, which cloudpickle serializes BY REFERENCE —
+# Python workers must be able to import this package.  When the driver
+# process runs from a different cwd (the correctness harness does),
+# workers would fail with ModuleNotFoundError, so ship the package
+# source as a zip via addPyFile once per application.
+def ship_package(spark: SparkSession) -> None:
     import os
     import tempfile
     import zipfile
@@ -115,7 +115,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     caller reach the parquet reader via Catalyst pushdown."""
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    _ship_package(spark)
+    ship_package(spark)
     pin_portability_confs(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":

@@ -223,7 +223,7 @@ def start_media_decode_channel(
     """Streaming face of the real-codec multimodal tier: documents
     stream in, each micro-batch synthesizes its PNG payloads and
     REAL-decodes them (`llm/multimodal.py encode_images/decode_images`)
-    inside the continuous plan itself — Arrow-batched ``mapInPandas``
+    inside the continuous plan itself — the ``mapInArrow`` row kernel
     is stateless, so unlike the dedup/decontamination faces no
     foreachBatch recompute is needed: the codec kernels run as plain
     map stages of the streaming query (the shape a 100 TB multimodal

@@ -7,34 +7,76 @@ from streaming_forex_data_pipeline_spark.llm import multimodal as MM
 from streaming_forex_data_pipeline_spark.sources.tables import load_table
 
 
-def test_resize_payload_is_prefix_truncation(spark, sf_dir):
+# hand-made documents beside the corpus rows: an empty and a 2-byte
+# payload for each of the image (doc_id % 3 == 0) and video
+# (doc_id % 3 == 2) modalities
+_EDGE_DOCS = [
+    (3_000_000, ""),
+    (3_000_003, "ab"),
+    (3_000_002, ""),
+    (3_000_005, "ab"),
+]
+
+
+def _fields(schema):
+    return [(f.name, f.dataType) for f in schema]
+
+
+def _docs_with_edges(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").limit(60)
-    mm = MM.attach_payload(d)
+    edges = spark.createDataFrame(
+        [(i, t, "en", "edge", len(t)) for i, t in _EDGE_DOCS], d.schema
+    )
+    return d.unionByName(edges)
+
+
+def test_decode_stub_header_and_validity(spark, sf_dir):
+    mm = MM.attach_payload(_docs_with_edges(spark, sf_dir))
     orig = {r["doc_id"]: bytes(r["payload"]) for r in mm.collect()}
-    out = MM.resize_stub(mm).collect()
-    assert out, "no image rows"
+    decoded = MM.decode_stub(mm)
+    assert _fields(decoded.schema) == _fields(MM.DECODE_SCHEMA)
+    out = decoded.collect()
+    assert {r["doc_id"] for r in out} == set(orig)
     for r in out:
         full = orig[r["doc_id"]]
-        got = bytes(r["payload"])
-        assert 1 <= len(got) <= len(full)
-        assert full.startswith(got), "resized payload is not a prefix"
+        assert r["n_bytes"] == len(full)
+        assert r["header"] == full[:4].hex()  # shorter for a short payload
+        assert r["is_valid"] == (len(full) >= MM.MIN_VALID_BYTES)
+    headers = {r["doc_id"]: r["header"] for r in out}
+    assert (headers[3_000_000], headers[3_000_003]) == ("", "6162")
+
+
+def test_resize_payload_is_prefix_truncation(spark, sf_dir):
+    mm = MM.attach_payload(_docs_with_edges(spark, sf_dir))
+    orig = {r["doc_id"]: bytes(r["payload"]) for r in mm.collect()}
+    resized = MM.resize_stub(mm)
+    assert _fields(resized.schema) == _fields(MM.RESIZE_SCHEMA)
+    out = resized.collect()
+    assert {3_000_000, 3_000_003} <= {r["doc_id"] for r in out}
+    for r in out:
+        full = orig[r["doc_id"]]
+        n = len(full)
+        ratio = (224 * 224) / max(r["orig_width"] * r["orig_height"], 1)
+        keep = max(int(min(n * ratio, n)), 1)
+        assert bytes(r["payload"]) == full[:keep], "not the kept prefix"
         assert (r["width"], r["height"]) == (224, 224)
 
 
 def test_frame_sample_row_expansion(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents").limit(60)
-    mm = MM.attach_payload(d)
+    mm = MM.attach_payload(_docs_with_edges(spark, sf_dir))
     vids = {
         r["doc_id"]: len(bytes(r["payload"]))
         for r in mm.filter("modality = 'video'").collect()
     }
-    frames = MM.frame_sample_stub(mm, every_n=4).collect()
+    assert (vids[3_000_002], vids[3_000_005]) == (0, 2)
+    sampled = MM.frame_sample_stub(mm, every_n=4)
+    assert _fields(sampled.schema) == _fields(MM.FRAME_SCHEMA)
     by_doc: dict[int, list] = {}
-    for r in frames:
+    for r in sampled.collect():
         by_doc.setdefault(r["doc_id"], []).append(r)
-    assert set(by_doc) == set(vids)
-    for doc_id, rows in by_doc.items():
-        n = vids[doc_id]
+    assert set(by_doc) <= set(vids)
+    for doc_id, n in vids.items():
+        rows = by_doc.get(doc_id, [])  # an empty payload has no frames
         n_frames = (n + MM.FRAME_BYTES - 1) // MM.FRAME_BYTES
         want_idx = list(range(0, n_frames, 4))
         got_idx = sorted(r["frame_idx"] for r in rows)
@@ -42,6 +84,76 @@ def test_frame_sample_row_expansion(spark, sf_dir):
         for r in rows:
             expect = min(MM.FRAME_BYTES, n - r["frame_idx"] * MM.FRAME_BYTES)
             assert r["frame_len"] == expect
+
+
+def test_kernel_input_guards(spark):
+    """Each kernel refuses input its 64-bit packing or container walk
+    cannot represent: a dHash grid that is not 64 bits and an audio
+    print that is not 65 frames fail when the stage is built; an empty
+    Motion-PNG payload fails the decode with a named error."""
+    import numpy as np
+    import pytest
+
+    from pyspark.errors import PythonException
+
+    from streaming_forex_data_pipeline_spark.llm.codecs import encode_png
+
+    media = spark.createDataFrame(
+        [(0, encode_png(np.zeros((8, 9), dtype="uint8")))],
+        "doc_id long, payload binary",
+    )
+    for build in (
+        lambda: MM.dhash_images(media, grid_w=9, grid_h=8),
+        lambda: MM.dhash_video_frames(media, grid_w=4, grid_h=8),
+    ):
+        with pytest.raises(ValueError, match="must yield 64 bits"):
+            build()
+    with pytest.raises(ValueError, match="needs 65 frames"):
+        MM.fingerprint_audio(media, n_frames=64)
+
+    empty = spark.createDataFrame([(7, b"")], "doc_id long, payload binary")
+    with pytest.raises(
+        PythonException, match="doc 7: empty Motion-PNG stream"
+    ):
+        MM.decode_videos(empty).collect()
+
+
+def test_row_kernel_ships_the_package(tmp_path):
+    """A query that reads only silvers never calls load_table, so the
+    row kernel itself must put the package on the workers: a fresh
+    vanilla session whose cwd cannot import the package decodes one
+    PNG built in the driver."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+import numpy as np
+from pyspark.sql import SparkSession
+from streaming_forex_data_pipeline_spark.llm import multimodal as MM
+from streaming_forex_data_pipeline_spark.llm.codecs import encode_png
+
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+png = encode_png(np.full((3, 4), 7, dtype="uint8"))
+df = spark.createDataFrame([(5, png)], "doc_id long, payload binary")
+print(MM.decode_images(df).collect()[0]["pixel_sum"])
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.split()[-1] == "84"
 
 
 def test_dhash_images_invariances_and_crafted_near_pair(spark):

@@ -5,9 +5,12 @@ COVERAGE.md as tests, so a refactor that silently de-optimizes a plan
 (drops a broadcast, adds a Python UDF to a hot path, loses filter
 pushdown) fails CI rather than only showing up in bench numbers:
 
-1. Python UDFs (BatchEvalPython/ArrowEvalPython) appear ONLY in the
-   sanctioned applyInPandas escapes (SURVEY §2.13): EMA-family parity,
-   PSAR, percent-rank, backtest loop, spark.ml feature importance.
+1. Python plan nodes (EvalPython, MapInPandas/MapInArrow,
+   FlatMapGroupsIn*/FlatMapCoGroupsIn*) appear in exactly the
+   sanctioned queries: the grouped applyInPandas escapes (SURVEY
+   §2.13: EMA-family parity, PSAR, packing, backtest loop) and the
+   consumers of the media row kernel (llm/multimodal.py:row_kernel).
+   A sanctioned query whose plan has no Python node fails too.
 2. Dimension joins broadcast; no sort-merge join sneaks into the
    star-schema queries.
 3. Filter pushdown reaches the parquet scan for predicate queries.
@@ -18,12 +21,14 @@ pushdown) fails CI rather than only showing up in bench numbers:
 from __future__ import annotations
 
 import datetime
+import re
 
 import pytest
 
 from streaming_forex_data_pipeline_spark.plans.registry import all_queries
 
-# SURVEY §2.13: the ONLY operators allowed to run Python kernels.
+# SURVEY §2.13: the ONLY queries whose plans run Python kernels, and
+# every one of them must (the gate is two-way)
 PANDAS_UDF_SANCTIONED = {
     "ema",
     "rsi",
@@ -32,14 +37,23 @@ PANDAS_UDF_SANCTIONED = {
     "ma_ratios",  # consumes the EMA family
     "psar",
     "pack_greedy",  # fill-with-reset packing recurrence (non-associative)
-    "volatility_regime",  # trailing percent-rank
-    "aroon",  # window-trick primary, pandas fallback allowed
+    "packing_stats",
     "backtest_trades",
+    "backtest_trades_multi",
     "backtest_metrics",
-    "rf_importance",  # spark.ml pipeline
-    "feature_importance",
-    "feature_importance_consensus",
+    "strategy_comparison",
+    # the media row kernel (llm/multimodal.py:row_kernel) in the timed
+    # region; the multimodal_* stub stages are Column algebra
+    "image_decode",
+    "image_resize",
+    "audio_decode",
+    "video_decode",
 }
+
+_PYTHON_NODE = re.compile(
+    r"EvalPython|MapInPandas|MapInArrow"
+    r"|FlatMapGroupsIn\w+|FlatMapCoGroupsIn\w+"
+)
 
 BROADCAST_EXPECTED = [
     "revenue_by_nation",
@@ -63,21 +77,21 @@ def _plan(spark, sf_dir, name: str) -> str:
 
 
 def _python_udf_offenders(spark, sf_dir, names) -> list[str]:
-    offenders = []
-    for name in names:
-        if name in PANDAS_UDF_SANCTIONED:
-            continue
-        plan = _plan(spark, sf_dir, name)
-        if "EvalPython" in plan:
-            offenders.append(name)
-    return offenders
+    """Names whose plan disagrees with PANDAS_UDF_SANCTIONED: a Python
+    node in an unsanctioned query, or none in a sanctioned one."""
+    return [
+        name
+        for name in names
+        if bool(_PYTHON_NODE.search(_plan(spark, sf_dir, name)))
+        != (name in PANDAS_UDF_SANCTIONED)
+    ]
 
 
 @pytest.mark.slow  # r15: slow lane (see pytest.ini)
 def test_no_unsanctioned_python_udfs(spark, sf_dir):
     offenders = _python_udf_offenders(spark, sf_dir, all_queries())
     assert not offenders, (
-        f"Python eval nodes in non-sanctioned hot paths: {offenders}"
+        f"Python plan nodes disagree with PANDAS_UDF_SANCTIONED: {offenders}"
     )
 
 
@@ -106,8 +120,8 @@ def test_no_unsanctioned_python_udfs_sample(spark, sf_dir, offset):
     assert len(sample) >= 15
     offenders = _python_udf_offenders(spark, sf_dir, sample)
     assert not offenders, (
-        f"Python eval nodes in non-sanctioned hot paths (offset {offset}): "
-        f"{offenders}"
+        f"Python plan nodes disagree with PANDAS_UDF_SANCTIONED "
+        f"(offset {offset}): {offenders}"
     )
 
 

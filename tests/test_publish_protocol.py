@@ -8,6 +8,10 @@
   no other module registers an exit hook, reads ``applicationId`` (the
   key every hand-rolled session cache used) or keeps a module-level
   cache.
+- Python map kernels run through one helper,
+  ``llm/multimodal.py:row_kernel``: it is the only ``mapInArrow`` /
+  ``mapInPandas`` call site, and the media module builds no
+  ``pd.Series`` by hand.
 
 Pure text scan of the package sources, no Spark.
 """
@@ -22,6 +26,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "streaming_forex_data_pipeline_spark"
 SCRATCH = os.path.join(PACKAGE, "sources", "scratch.py")
 MEMO = os.path.join(PACKAGE, "session.py")
+MEDIA = os.path.join(PACKAGE, "llm", "multimodal.py")
 
 _SUCCESS_GATE = re.compile(
     r"""["']_SUCCESS["']\)\.exists\(\)|exists\([^)]*["']_SUCCESS["']"""
@@ -149,3 +154,84 @@ def f(spark):
         "module-level _FIT_CACHE",
         "module-level _INGEST_DIRS",
     ])
+
+
+_PYTHON_MAPS = ("mapInArrow", "mapInPandas")
+_PANDAS_IMPORT = re.compile(r"^\s*(?:import|from) pandas\b", re.M)
+
+
+def _python_map_sites(rel: str, text: str) -> list[str]:
+    """``rel:function`` for each mapInArrow/mapInPandas call, named by
+    its enclosing top-level definition; in the media module also
+    ``rel:pandas`` per pandas import and ``rel:pd.Series`` per
+    hand-built series."""
+    sites = []
+    for top in ast.parse(text).body:
+        owner = getattr(top, "name", "<module>")
+        for node in ast.walk(top):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _PYTHON_MAPS
+            ):
+                sites.append(f"{rel}:{owner}")
+    if rel == MEDIA:
+        sites += [f"{rel}:pandas"] * len(_PANDAS_IMPORT.findall(text))
+        sites += [f"{rel}:pd.Series"] * text.count("pd.Series(")
+    return sites
+
+
+def test_python_map_kernels_go_through_row_kernel():
+    sites = [
+        site
+        for rel, text in _package_sources()
+        for site in _python_map_sites(rel, text)
+    ]
+    assert sites == [f"{MEDIA}:row_kernel"], (
+        "Python map kernels outside llm/multimodal.py:row_kernel (route "
+        f"them through it): {sites}"
+    )
+
+
+def test_row_kernel_gate_sees_the_hand_written_kernels():
+    """The scan flags each shape row_kernel replaced (cut from the
+    module before it): a mapInPandas closure per stage, each typing
+    its own output columns through pandas."""
+    sample = """
+import pandas as pd
+
+def decode_stub(multimodal):
+    def decode(batches):
+        for pdf in batches:
+            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64")})
+
+    narrow = multimodal.select("doc_id", "payload")
+    return narrow.mapInPandas(decode, DECODE_SCHEMA)
+
+
+def decode_images(images):
+    def decode(batches):
+        for pdf in batches:
+            rows = {k: [] for k in IMAGE_DECODE_SCHEMA.fieldNames()}
+            yield pd.DataFrame(
+                {
+                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
+                    "width": pd.Series(rows["width"], dtype="int32"),
+                }
+            )
+
+    return images.select("doc_id", "payload").mapInPandas(
+        decode, IMAGE_DECODE_SCHEMA
+    )
+"""
+    assert _python_map_sites(MEDIA, sample) == [
+        f"{MEDIA}:decode_stub",
+        f"{MEDIA}:decode_images",
+        f"{MEDIA}:pandas",
+        f"{MEDIA}:pd.Series",
+        f"{MEDIA}:pd.Series",
+    ]
+    assert _python_map_sites("other.py", sample) == [
+        "other.py:decode_stub",
+        "other.py:decode_images",
+    ]

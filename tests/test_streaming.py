@@ -335,7 +335,7 @@ def test_decontamination_channel_matches_batch(spark, sf_dir):
 
 def test_media_decode_channel_matches_batch(spark, sf_dir):
     """The codec kernels run INSIDE the continuous plan (stateless
-    mapInPandas, no foreachBatch) and agree with the batch tier."""
+    mapInArrow, no foreachBatch) and agree with the batch tier."""
     from streaming_forex_data_pipeline_spark.llm.multimodal import (
         decode_images,
         encode_images,

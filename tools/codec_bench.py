@@ -1,8 +1,8 @@
 """Quantify pure-Python codec throughput for the 100-TB posture.
 
-The PNG/WAV codecs (`llm/codecs.py`) run inside Arrow-batched
-`mapInPandas` kernels — embarrassingly parallel, no shuffle — so the
-only scale question is per-core byte throughput.  This measures
+The PNG/WAV codecs (`llm/codecs.py`) run inside the `mapInArrow` row
+kernel (`llm/multimodal.py:row_kernel`) — embarrassingly parallel, no
+shuffle — so the only scale question is per-core byte throughput.  This measures
 encode/decode MB/s per core at realistic sizes and prints the
 projected core-hours per TB of media, recorded in COVERAGE.md.
 
