@@ -658,3 +658,50 @@ def dhash_video_frames(
     return row_kernel(
         videos, ["doc_id", "payload"], hash_frames, FRAME_DHASH_SCHEMA
     )
+
+
+#: the registered video sampling stride — ONE definition feeding the
+#: Spark builders, the streaming signature channel and the oracle CTEs
+VIDEO_EVERY_N = 2
+
+#: composite frame-id base: frame signatures ride the shared banding
+#: engine as doc_id * VID_FID_BASE + frame_idx — frame counts are
+#: bounded at 29 by the content contract, so the composite is
+#: collision-free and order-preserving.  ONE definition for every
+#: encode/decode site.
+VID_FID_BASE = 1024
+
+
+def vid_fid():
+    """Encode (doc_id, frame_idx) into the composite id, aliased back
+    to doc_id for the banding engine."""
+    return (F.col("doc_id") * VID_FID_BASE + F.col("frame_idx")).alias(
+        "doc_id"
+    )
+
+
+def fid_clip(col: str):
+    """The clip id of a composite frame-id column."""
+    return F.floor(F.col(col) / VID_FID_BASE)
+
+
+def fid_frame(col: str):
+    """The frame position of a composite frame-id column."""
+    return F.col(col) % VID_FID_BASE
+
+
+def clip_pairs(frame_pairs: DataFrame, min_frames: int) -> DataFrame:
+    """Clip pairs (doc_a, doc_b, n_matching_frames) from near-dup pairs
+    of composite frame ids: a pair counts when its two frames sit at
+    the same position of two different clips, and a clip pair needs
+    >= ``min_frames`` such positions (video_near_dups' multi-evidence
+    rule)."""
+    va, vb = fid_clip("doc_a"), fid_clip("doc_b")
+    same_pos = fid_frame("doc_a") == fid_frame("doc_b")
+    return (
+        frame_pairs.filter(same_pos & (va != vb))
+        .select(va.alias("doc_a"), vb.alias("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_matching_frames"))
+        .filter(F.col("n_matching_frames") >= min_frames)
+    )

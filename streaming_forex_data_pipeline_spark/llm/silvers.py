@@ -1,0 +1,214 @@
+"""Build-once silvers read by several query families: the media
+payloads and perceptual signatures, the kNN graph and its navigable
+union, and the per-session batch graph walk.
+
+Each is built once per corpus (`sources/scratch.build_once`) or once
+per session (`session.session_memo`) and read back by every consumer.
+They live outside ``plans/`` so plan modules import infrastructure,
+never each other.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from ..session import session_memo
+from ..sources.scratch import build_once, corpus_fingerprint, scratch_path
+from ..sources.tables import fan_out, load_table
+from . import multimodal as MM
+from . import similarity as SIM
+
+#: bump when any llm/multimodal.py content contract changes — the
+#: payload silver tables below must invalidate even though the source
+#: documents.parquet did not move
+_MEDIA_CONTRACT_VERSION = 1
+
+
+def media_payloads(spark, sf_dir: str, modality: str):
+    """Build-if-missing payload silver table for one modality: the
+    synthetic media payloads are DERIVED from doc_id by the
+    `llm/multimodal.py` content contracts, but in production they are
+    SOURCE DATA — so every query that consumes them should read a
+    materialized table, not re-run the encoder (the ivf_silver
+    pattern: the encode is the once-per-corpus amortized step; bench
+    runs and repeated runs measure the probe).  Keyed by the documents
+    fingerprint + contract version under the verified per-user
+    scratch root; published through `scratch.build_once`."""
+    builders = {
+        "image": MM.encode_images,
+        "audio": MM.encode_audio,
+        "video": MM.encode_videos,
+    }
+    fp = corpus_fingerprint(sf_dir, table="documents")
+    out_dir = scratch_path(
+        f"media_{modality}_v{_MEDIA_CONTRACT_VERSION}_{fp}"
+    )
+
+    def build(tmp: str) -> None:
+        d = load_table(spark, sf_dir, "documents")
+        builders[modality](fan_out(d)).write.parquet(tmp)
+
+    return spark.read.parquet(build_once(out_dir, build))
+
+
+#: bump when any signature computation in llm/multimodal.py changes
+#: (dhash grid walk, envelope framing, frame sampling) — the signature
+#: silvers below must invalidate independently of the payload contract
+_SIG_CONTRACT_VERSION = 1
+
+
+def media_signatures(
+    spark, sf_dir: str, modality: str, every_n: int | None = None
+):
+    """Build-once perceptual-signature silver for one modality — the
+    r10-verdict follow-up to `media_payloads`: dHash / envelope /
+    frame-hash signatures were recomputed by EVERY consumer
+    (video_*, *_contamination, cross_modal_clusters — together ~25 s
+    of the bench), even though the signature of a payload corpus is
+    as immutable as the payloads themselves.  One decode+hash pass per
+    (corpus fingerprint, media contract, signature contract, modality,
+    frame stride) materializes the 16-byte-per-item signature table;
+    every pairing/banding/contamination consumer reads the table, so
+    at 100 TB the codec work is paid once per corpus, not once per
+    query.  Schemas: image/audio (doc_id, h_lo, h_hi); video
+    (doc_id, frame_idx, h_lo, h_hi) at stride ``every_n``.
+
+    Same `scratch.build_once` protocol as media_payloads; the payload
+    silver it reads is a nested build that logs its own cost."""
+    if modality == "video":
+        if every_n is None:
+            raise ValueError("video signatures require every_n")
+        builder = lambda df: MM.dhash_video_frames(df, every_n=every_n)
+        suffix = f"_e{every_n}"
+    elif modality == "image":
+        builder, suffix = MM.dhash_images, ""
+    elif modality == "audio":
+        builder, suffix = MM.fingerprint_audio, ""
+    else:
+        raise ValueError(f"unknown modality {modality!r}")
+    fp = corpus_fingerprint(sf_dir, table="documents")
+    out_dir = scratch_path(
+        f"sig_{modality}{suffix}"
+        f"_v{_MEDIA_CONTRACT_VERSION}_{_SIG_CONTRACT_VERSION}_{fp}"
+    )
+
+    def build(tmp: str) -> None:
+        builder(media_payloads(spark, sf_dir, modality)).write.parquet(tmp)
+
+    return spark.read.parquet(build_once(out_dir, build))
+
+
+# Algorithm-version token baked into the kNN-graph silver cache keys
+# (advice r12): the key is otherwise only (corpus fingerprint, k,
+# planes), so a semantic change to knn_graph/lsh_bucket would keep
+# serving stale edges from persistent scratch across sessions,
+# surfacing as a baffling oracle hash mismatch instead of a rebuild.
+# BUMP THIS whenever the edge construction changes meaning — the
+# golden corpus_md5 fail-fast doctrine applied to the silver.
+_KNNG_ALGO_VERSION = "v2"  # v2 (r14): zero-norm pairs dropped in build
+
+
+def knn_graph_silver(
+    spark: SparkSession, sf_dir: str, k: int = 3, n_planes: int = 4
+) -> DataFrame:
+    """Build-once kNN-graph silver (r11 verdict Next #1): the
+    `llm/similarity.knn_graph` edge table for one (corpus fingerprint,
+    k, n_planes) key, materialized ONCE per corpus and read back by
+    every graph consumer (`knn_graph`, `pagerank_topk`,
+    `triangle_topk`, the union silver below) — the media_signatures
+    doctrine applied to the similarity graph: an index over immutable
+    data is as immutable as the data, so rebuilding it inline on
+    every query run pays the bucketed self-join + top-k window per
+    RUN instead of per CORPUS.  Files are range-partitioned and
+    sorted by ``src`` so point probes (`graph.filter(src IN beam)`)
+    prune row groups on min/max stats — the local[32] analogue of the
+    src-bucketed table the 100 TB deployment would keep
+    (sources/layout.write_bucketed).  Shared `build_once` protocol:
+    concurrent builders race benignly and the loser adopts the
+    winner's identical (deterministic) graph."""
+    fp = corpus_fingerprint(sf_dir)
+    out_dir = scratch_path(
+        f"knng_{_KNNG_ALGO_VERSION}_{fp}_k{k}_p{n_planes}"
+    )
+
+    def build(tmp: str) -> None:
+        e = load_table(spark, sf_dir, "embeddings")
+        g = SIM.knn_graph(e, k=k, n_planes=n_planes)
+        (
+            g.repartitionByRange(8, "src")
+            .sortWithinPartitions("src", "rank")
+            .write.parquet(tmp)
+        )
+
+    return spark.read.parquet(build_once(out_dir, build))
+
+
+def knn_union_graph_silver(
+    spark: SparkSession,
+    sf_dir: str,
+    k: int = 3,
+    planes: tuple = (4, 2),
+) -> DataFrame:
+    """The NAVIGABLE union graph silver: distinct (src, dst) edges of
+    the per-planes kNN graphs — the multi-bucket-system union that
+    bridges the per-bucket components a single LSH system leaves
+    disconnected (see knn_graph_topk's doc).  Built once per (corpus
+    fingerprint, k, planes-set) FROM the per-planes silvers, so the
+    expensive bucketed self-joins are shared with every other graph
+    consumer and the union pays only one distinct.  Read by the graph
+    ANN search faces (`knn_graph_topk`, `knn_graph_topk_batch`,
+    `ann_recall_report`'s graph tier)."""
+    fp = corpus_fingerprint(sf_dir)
+    tag = "-".join(str(p) for p in planes)
+    out_dir = scratch_path(
+        f"knng_union_{_KNNG_ALGO_VERSION}_{fp}_k{k}_p{tag}"
+    )
+
+    def build(tmp: str) -> None:
+        parts = [
+            knn_graph_silver(spark, sf_dir, k=k, n_planes=p).select(
+                "src", "dst"
+            )
+            for p in planes
+        ]
+        g = parts[0]
+        for part in parts[1:]:
+            g = g.unionByName(part)
+        (
+            g.distinct()
+            .repartitionByRange(8, "src")
+            .sortWithinPartitions("src", "dst")
+            .write.parquet(tmp)
+        )
+
+    return spark.read.parquet(build_once(out_dir, build))
+
+
+def shared_batch_walk(
+    spark: SparkSession, sf_dir: str, beam: int = 16, steps: int = 8
+):
+    """(scores, visited, w, queries) for the registered batch-walk
+    query set (every 7th vector), built once per session and corpus
+    (r13 verdict Next #8): the three walk faces — knn_graph_topk_batch,
+    graph_recall_batch, graph_convergence_rounds — consume the
+    IDENTICAL walk.  Both frames are localCheckpoint'd and frontier/
+    score-matrix sized, never corpus-sized."""
+
+    def build():
+        e = load_table(spark, sf_dir, "embeddings")
+        g = knn_union_graph_silver(spark, sf_dir, k=3, planes=(4, 2))
+        qs = e.filter(F.col("vec_id") % 7 == 3)
+        scores = SIM.batch_cosine_scores(e, qs)
+        walk = SIM._batch_walk_visited(
+            e, g, qs, beam=beam, steps=steps, scores=scores
+        )
+        return (*walk, qs)
+
+    return session_memo(
+        spark,
+        ("batch_walk", sf_dir, beam, steps),
+        build,
+        sources=((sf_dir, "embeddings"),),
+        log=f"walk:b{beam}s{steps}",
+    )

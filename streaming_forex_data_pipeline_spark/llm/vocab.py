@@ -536,8 +536,16 @@ def cms_estimate(
 
 
 HLL_P = 6  # 2^6 = 64 registers; alpha_64 = 0.709 (Flajolet et al. 2007)
-_HLL_WBITS = 60 - HLL_P  # md5-prefix hash is 15 hex digits = 60 bits
 _HLL_ALPHA = {4: 0.673, 5: 0.697, 6: 0.709}
+
+
+def hll_fold_constants(p: int = HLL_P) -> tuple[int, int, float]:
+    """(m, w1, c) for ``2**p`` registers: the register count, the
+    exponent base of the exact S* terms (``2**(w1 - rho)``) and the
+    ``alpha * m**2 * 2**w1`` constant the raw estimate divides by S*."""
+    m = 1 << p
+    w1 = 60 - p + 1  # the md5-prefix hash is 15 hex digits = 60 bits
+    return m, w1, _HLL_ALPHA[p] * float(m * m) * float(2 ** w1)
 
 
 def hll_keyed_rhos(
@@ -637,10 +645,8 @@ def hll_estimate(regs: DataFrame, p: int = HLL_P) -> DataFrame:
     trees costs driver seconds — the r6 lesson).
 
     Returns one row: (m, v_zero, s_star, raw_est, hll_est)."""
-    m = 1 << p
-    wbits = 60 - p
-    alpha = _HLL_ALPHA[p]
-    c = alpha * float(m * m) * float(2 ** (wbits + 1))
+    m, w1, c = hll_fold_constants(p)
+    wbits = w1 - 1
     folded = regs.agg(
         # F.shiftleft only takes a Python-int shift; the SQL form
         # shifts by an expression
@@ -732,10 +738,8 @@ def hll_by_group(
     Returns (group, v_zero, s_star, hll_est) ordered by group."""
     from .dedup import portable_token_hash
 
-    m = 1 << p
-    wbits = 60 - p
-    alpha = _HLL_ALPHA[p]
-    c = alpha * float(m * m) * float(2 ** (wbits + 1))
+    m, w1, c = hll_fold_constants(p)
+    wbits = w1 - 1
     h = portable_token_hash(F.col(col))
     hashed = items.select(
         F.col(group_col).alias("grp"),

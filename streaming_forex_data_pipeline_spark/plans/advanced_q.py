@@ -17,10 +17,10 @@ from pyspark.sql import functions as F
 
 from ..operators import advanced as A
 from ..sources.tables import CANDLES_CTE, candles_from_events
+from .oracle_sql import _W
 from .registry import register
 
 R = 6
-_W = "PARTITION BY symbol ORDER BY ts"
 
 
 def _fr(n: int) -> str:

@@ -16,88 +16,16 @@ from ..operators import backtest as B
 from ..operators import patterns as P
 from ..sources.tables import CANDLES_CTE, candles_from_events
 from .goldens import GOLDEN_DIR, events_md5_sql, golden_oracle
+from .oracle_sql import (
+    _PATTERNS_BASE,
+    _PATTERNS_UNION,
+    _W,
+    _fold_sql,
+    _native_frame_sql,
+)
 from .registry import register
 
 R = 6
-_W = "PARTITION BY symbol ORDER BY ts"
-
-_PATTERNS_BASE = f"""
-, lagd AS (
-  SELECT symbol, ts, open, high, low, close,
-         lag(open)  OVER ({_W}) AS p_o,
-         lag(close) OVER ({_W}) AS p_c,
-         lag(open, 2)  OVER ({_W}) AS f_o,
-         lag(close, 2) OVER ({_W}) AS f_c,
-         abs(close - open) AS body,
-         high - low AS rng,
-         least(open, close) - low AS lower_sh,
-         high - greatest(open, close) AS upper_sh
-  FROM candles
-),
-feat AS (
-  SELECT *,
-         abs(p_c - p_o) AS p_body,
-         abs(f_c - f_o) AS f_body,
-         body / rng AS body_ratio,
-         lower_sh / rng AS lower_ratio,
-         upper_sh / rng AS upper_ratio
-  FROM lagd
-)
-"""
-
-
-#: the six-pattern UNION body — shared verbatim by the `patterns`
-#: oracle below and the `pattern_alerts_replay` oracle
-#: (plans/streaming_q.py), so the alert channel's replay face can never
-#: drift from the batch pattern semantics.
-_PATTERNS_UNION = """
-  SELECT symbol, ts, 'doji' AS pattern,
-         CASE WHEN body_ratio <= 0.05 THEN 'high' ELSE 'medium' END AS confidence,
-         round(close, 6) AS price_level,
-         round(least(1.0, 1.0 - body_ratio), 6) AS signal_strength
-  FROM feat WHERE rng > 0 AND body_ratio <= 0.1
-  UNION ALL
-  SELECT symbol, ts, 'hammer',
-         CASE WHEN lower_ratio >= 0.7 THEN 'high' ELSE 'medium' END,
-         round(close, 6),
-         round(least(1.0, lower_ratio), 6)
-  FROM feat
-  WHERE rng > 0 AND body > 0 AND lower_ratio >= 0.6 AND body_ratio <= 0.3
-    AND upper_ratio <= 0.1 AND p_c < p_o
-  UNION ALL
-  SELECT symbol, ts, 'bullish_engulfing',
-         'medium',
-         round(close, 6),
-         round(least(1.0, body / (p_body + 1e-6)), 6)
-  FROM feat
-  WHERE p_c < p_o AND close > open AND open < p_c AND close > p_o AND body > p_body
-  UNION ALL
-  SELECT symbol, ts, 'bearish_engulfing',
-         'medium',
-         round(close, 6),
-         round(least(1.0, body / (p_body + 1e-6)), 6)
-  FROM feat
-  WHERE p_c > p_o AND close < open AND open > p_c AND close < p_o AND body > p_body
-  UNION ALL
-  SELECT symbol, ts, 'morning_star',
-         CASE WHEN least(1.0, body / (f_body + 1e-6)) > 0.8
-              THEN 'high' ELSE 'medium' END,
-         round(close, 6),
-         round(least(1.0, body / (f_body + 1e-6)), 6)
-  FROM feat
-  WHERE f_c < f_o AND p_body < f_body * 0.3 AND close > open
-    AND close > (f_o + f_c) / 2
-  UNION ALL
-  SELECT symbol, ts, 'evening_star',
-         CASE WHEN least(1.0, body / (f_body + 1e-6)) > 0.8
-              THEN 'high' ELSE 'medium' END,
-         round(close, 6),
-         round(least(1.0, body / (f_body + 1e-6)), 6)
-  FROM feat
-  WHERE f_c > f_o AND p_body < f_body * 0.3 AND close < open
-    AND close < (f_o + f_c) / 2
-"""
-
 
 @register(
     "patterns",
@@ -235,8 +163,6 @@ def _macd_lines_sql(src: str, prefix: str) -> str:
     ``src`` (must expose symbol, ts, close) — the SQL twin of
     operators/ewm.py:macd_native, shared by signals_macd and the
     strategy-comparison base."""
-    from .ewm_q import _fold_sql, _native_frame_sql
-
     return f"""{prefix}_f1 AS (
   SELECT symbol, ts, close,
          row_number() OVER ({_W}) AS rn,

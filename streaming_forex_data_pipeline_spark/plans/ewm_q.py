@@ -9,7 +9,9 @@ Oracle side: with adjust=True and no interior NaNs, the EMA has the
 closed form  ema[t] = Σᵢ x[i]·(1-α)^(t-i) / Σᵢ (1-α)^(t-i)  (α=2/(N+1)),
 which DuckDB evaluates via a per-symbol triangular self-join on row
 number.  O(n²) per symbol — fine for the oracle tier (n ≈ thousands at
-sf0.01); the Spark side stays O(n).
+sf0.01); the Spark side stays O(n).  The native-tier fold renderings
+(`_fold_sql`, `_native_frame_sql`) live in `plans/oracle_sql.py`,
+shared with analysis_q's MACD oracle.
 """
 
 from __future__ import annotations
@@ -19,10 +21,10 @@ from pyspark.sql import functions as F
 
 from ..operators import ewm as E
 from ..sources.tables import CANDLES_CTE, candles_from_events
+from .oracle_sql import _W, _fold_sql, _native_frame_sql
 from .registry import register
 
 R = 6
-_W = "PARTITION BY symbol ORDER BY ts"
 
 
 def _decay(span: int) -> str:
@@ -300,24 +302,6 @@ def macd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("macd_signal", R).alias("macd_signal"),
         F.round("macd_histogram", R).alias("macd_histogram"),
     ).orderBy("symbol", "ts")
-
-
-def _fold_sql(xs: str, span: int, num_only: bool = False) -> str:
-    """DuckDB rendering of the truncated-EMA Horner fold(s) —
-    op-for-op the same sequence as operators/ewm.py:_horner_ema."""
-    r = repr(1.0 - 2.0 / (span + 1.0))
-    pre = f"list_prepend(CAST(0.0 AS DOUBLE), {xs})"
-    num = f"list_reduce({pre}, (a, x) -> a * {r} + x)"
-    if num_only:
-        return f"({num})"
-    return f"({num} / list_reduce({pre}, (a, x) -> a * {r} + 1.0))"
-
-
-def _native_frame_sql(c: str, span: int) -> str:
-    from ..operators.ewm import EMA_NATIVE_FRAMES
-
-    m = EMA_NATIVE_FRAMES[span]
-    return f"list({c}) OVER ({_W} ROWS BETWEEN {m - 1} PRECEDING AND CURRENT ROW)"
 
 
 @register(

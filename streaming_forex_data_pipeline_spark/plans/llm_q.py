@@ -2,6 +2,8 @@
 
 Mandated extensions beyond the reference's surface — each is a
 first-class oracle-checked query over the documents/embeddings tables.
+Silvers shared with other families live in `llm/silvers.py`, shared
+oracle text (LSH buckets, kNN-graph CTEs) in `plans/oracle_sql.py`.
 """
 
 from __future__ import annotations
@@ -13,9 +15,18 @@ from ..llm import dedup as DD
 from ..llm import multimodal as MM
 from ..llm import similarity as SIM
 from ..llm import text as TX
-from ..session import session_memo
+from ..llm.silvers import (
+    knn_graph_silver,
+    knn_union_graph_silver,
+    media_payloads,
+    shared_batch_walk,
+)
+from ..llm.vocab import hll_fold_constants
 from ..sources.scratch import build_once, corpus_fingerprint, scratch_path
 from ..sources.tables import fan_out, load_table
+from .fragments import by_doc_id
+from .goldens import golden_oracle as _golden_oracle
+from .oracle_sql import _knn_graph_ctes, _knn_union_graph_ctes, _lsh_bucket_sql
 from .registry import register
 
 R = 6
@@ -204,19 +215,6 @@ def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select(
         "doc_a", "doc_b", F.round("jaccard", R).alias("jaccard")
     ).orderBy("doc_a", "doc_b")
-
-
-def _lsh_bucket_sql(col: str, n_planes: int = 8, dim: int = 64, seed: int = 42) -> str:
-    """DuckDB rendering of llm.similarity.lsh_bucket with the SAME plane
-    literals (repr round-trips doubles exactly)."""
-    terms = []
-    for p, weights in enumerate(SIM.lsh_planes(n_planes, dim, seed)):
-        lits = ", ".join(repr(w) for w in weights)
-        terms.append(
-            f"(CASE WHEN list_dot_product({col}, [{lits}]) >= 0 "
-            f"THEN {2 ** p} ELSE 0 END)"
-        )
-    return "(" + "\n       + ".join(terms) + ")"
 
 
 @register(
@@ -1198,34 +1196,10 @@ def pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: the kNN-graph construction CTEs — shared by the `knn_graph` oracle
-#: and the `knn_graph_topk` search oracle, so build and search can
-#: never disagree on the graph
-_KNN_GRAPH_CTES = f"""b AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                               CAST(embedding AS DOUBLE[]))) AS nn,
-         {_lsh_bucket_sql('CAST(embedding AS DOUBLE[])', n_planes=4)} AS bucket
-  FROM embeddings
-),
-pairs AS (
-  SELECT a.vec_id AS src, c.vec_id AS dst,
-         list_dot_product(a.v, c.v) / (a.nn * c.nn) AS cos
-  FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id <> c.vec_id
-                   AND a.nn * c.nn <> 0
-),
-r AS (
-  SELECT src, dst, cos,
-         CAST(row_number() OVER (PARTITION BY src
-                                 ORDER BY cos DESC, dst ASC) AS INT) AS rank
-  FROM pairs
-)"""
-
-
 @register(
     "knn_graph",
     oracle="WITH "
-    + _KNN_GRAPH_CTES
+    + _knn_graph_ctes()
     + """
 SELECT src, dst, round(cos, 5) AS cos_sim, rank
 FROM r WHERE rank <= 3
@@ -1242,7 +1216,7 @@ ORDER BY src, rank
     "ranks exactly hash-checkable.",
 )
 def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _knn_graph_silver(spark, sf_dir, k=3, n_planes=4)
+    out = knn_graph_silver(spark, sf_dir, k=3, n_planes=4)
     return out.select(
         "src", "dst", F.round("cos_sim", 5).alias("cos_sim"), "rank"
     ).orderBy("src", "rank")
@@ -1251,7 +1225,7 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "incremental_knn_graph",
     oracle="WITH "
-    + _KNN_GRAPH_CTES
+    + _knn_graph_ctes()
     + """
 SELECT src, dst, round(cos, 5) AS cos_sim, rank
 FROM r WHERE rank <= 3
@@ -1286,29 +1260,8 @@ def incremental_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "knn_graph_topk",
     oracle="WITH "
-    + _KNN_GRAPH_CTES
-    + f""",
-bk2 AS (
-  SELECT vec_id, v, nn, {_lsh_bucket_sql('v', n_planes=2)} AS bucket
-  FROM b
-),
-pairs2 AS (
-  SELECT a.vec_id AS src, c.vec_id AS dst,
-         list_dot_product(a.v, c.v) / (a.nn * c.nn) AS cos
-  FROM bk2 a JOIN bk2 c ON a.bucket = c.bucket AND a.vec_id <> c.vec_id
-                       AND a.nn * c.nn <> 0
-),
-r2 AS (
-  SELECT src, dst,
-         row_number() OVER (PARTITION BY src
-                            ORDER BY cos DESC, dst ASC) AS rank
-  FROM pairs2
-),
-graph AS MATERIALIZED (
-  SELECT src, dst FROM r WHERE rank <= 3
-  UNION
-  SELECT src, dst FROM r2 WHERE rank <= 3
-),
+    + _knn_union_graph_ctes()
+    + """,
 q AS (SELECT v AS qv, nn AS qn FROM b WHERE vec_id = 100),
 scores AS MATERIALIZED (
   SELECT b.vec_id, list_dot_product(b.v, q.qv) / (b.nn * q.qn) AS cos
@@ -1422,7 +1375,7 @@ LIMIT 10
 )
 def knn_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
-    g = _knn_union_graph_silver(spark, sf_dir, k=3, planes=(4, 2))
+    g = knn_union_graph_silver(spark, sf_dir, k=3, planes=(4, 2))
     q = e.filter(F.col("vec_id") == 100)
     out = SIM.knn_graph_search(
         e, g, q, k=10, beam=16, steps=8
@@ -1436,10 +1389,10 @@ def _knn_walk_batch_ctes(
     qpred: str, steps: int = 8, beam: int = 16, prefix: str = ""
 ) -> str:
     """The qid-keyed unrolled walk as DuckDB CTE text (no leading
-    WITH): the union graph CTEs, the query set selected by ``qpred``
-    over ``b``, per-(qid) scores, and ``steps`` relational rounds
-    ending at ``v{steps}`` — exactly `knn_graph_search_batch`'s
-    semantics.  Callers append a final SELECT over
+    WITH): the union graph CTEs (`oracle_sql._knn_union_graph_ctes`),
+    the query set selected by ``qpred`` over ``b``, per-(qid) scores,
+    and ``steps`` relational rounds ending at ``v{steps}`` — exactly
+    `knn_graph_search_batch`'s semantics.  Callers append a final SELECT over
     ``scores JOIN v{steps} USING (qid, vec_id)``.  CTE namespace
     (all ``prefix``-able, so the chain composes into oracles that
     already use b/q/c — ann_recall_report's graph tier): b/pairs/r
@@ -1448,47 +1401,7 @@ def _knn_walk_batch_ctes(
     prefixed names back to the short ones, so only FROM targets
     carry the prefix."""
     p = prefix
-    head = f"""{p}b AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                               CAST(embedding AS DOUBLE[]))) AS nn,
-         {_lsh_bucket_sql('CAST(embedding AS DOUBLE[])', n_planes=4)} AS bucket
-  FROM embeddings
-),
-{p}pairs AS (
-  SELECT a.vec_id AS src, c.vec_id AS dst,
-         list_dot_product(a.v, c.v) / (a.nn * c.nn) AS cos
-  FROM {p}b a JOIN {p}b c ON a.bucket = c.bucket AND a.vec_id <> c.vec_id
-                         AND a.nn * c.nn <> 0
-),
-{p}r AS (
-  SELECT src, dst,
-         row_number() OVER (PARTITION BY src
-                            ORDER BY cos DESC, dst ASC) AS rank
-  FROM {p}pairs
-),
-{p}bk2 AS (
-  SELECT vec_id, v, nn, {_lsh_bucket_sql('v', n_planes=2)} AS bucket
-  FROM {p}b
-),
-{p}pairs2 AS (
-  SELECT a.vec_id AS src, c.vec_id AS dst,
-         list_dot_product(a.v, c.v) / (a.nn * c.nn) AS cos
-  FROM {p}bk2 a JOIN {p}bk2 c
-    ON a.bucket = c.bucket AND a.vec_id <> c.vec_id
-   AND a.nn * c.nn <> 0
-),
-{p}r2 AS (
-  SELECT src, dst,
-         row_number() OVER (PARTITION BY src
-                            ORDER BY cos DESC, dst ASC) AS rank
-  FROM {p}pairs2
-),
-{p}graph AS MATERIALIZED (
-  SELECT src, dst FROM {p}r WHERE rank <= 3
-  UNION
-  SELECT src, dst FROM {p}r2 WHERE rank <= 3
-),
+    head = _knn_union_graph_ctes(p) + f""",
 {p}q AS (
   SELECT vec_id AS qid, v AS qv, nn AS qn FROM {p}b WHERE {qpred}
 ),
@@ -1529,35 +1442,6 @@ def _knn_walk_batch_ctes(
     return head + "".join(rounds)
 
 
-def _shared_batch_walk(
-    spark: SparkSession, sf_dir: str, beam: int = 16, steps: int = 8
-):
-    """(scores, visited, w, queries) for the registered batch-walk
-    query set (every 7th vector), built once per session and corpus
-    (r13 verdict Next #8): the three walk faces — knn_graph_topk_batch,
-    graph_recall_batch, graph_convergence_rounds — consume the
-    IDENTICAL walk.  Both frames are localCheckpoint'd and frontier/
-    score-matrix sized, never corpus-sized."""
-
-    def build():
-        e = load_table(spark, sf_dir, "embeddings")
-        g = _knn_union_graph_silver(spark, sf_dir, k=3, planes=(4, 2))
-        qs = e.filter(F.col("vec_id") % 7 == 3)
-        scores = SIM.batch_cosine_scores(e, qs)
-        walk = SIM._batch_walk_visited(
-            e, g, qs, beam=beam, steps=steps, scores=scores
-        )
-        return (*walk, qs)
-
-    return session_memo(
-        spark,
-        ("batch_walk", sf_dir, beam, steps),
-        build,
-        sources=((sf_dir, "embeddings"),),
-        log=f"walk:b{beam}s{steps}",
-    )
-
-
 @register(
     "knn_graph_topk_batch",
     oracle="WITH "
@@ -1590,7 +1474,7 @@ def knn_graph_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     # walk state shared across the three walk faces (graph=None is
     # never touched when a prebuilt walk is passed)
-    scores, visited, w, qs = _shared_batch_walk(spark, sf_dir)
+    scores, visited, w, qs = shared_batch_walk(spark, sf_dir)
     out = SIM.knn_graph_search_batch(
         e, None, qs, k=10, beam=16, steps=8, walk=(scores, visited, w)
     )
@@ -1653,7 +1537,7 @@ def graph_recall_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shared per-session walk (r14): ONE score matrix + ONE walk
     # serve this face, the search face, and the convergence face —
     # the brute-force truth below falls out of the same scores frame
-    scores, visited, wv, qs = _shared_batch_walk(spark, sf_dir)
+    scores, visited, wv, qs = shared_batch_walk(spark, sf_dir)
     walk = SIM.knn_graph_search_batch(
         e, None, qs, k=10, beam=16, steps=8,
         walk=(scores, visited, wv),
@@ -1736,7 +1620,7 @@ ORDER BY g.qid
 )
 def graph_convergence_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
-    scores, visited, w, qs = _shared_batch_walk(spark, sf_dir)
+    scores, visited, w, qs = shared_batch_walk(spark, sf_dir)
     out = SIM.knn_graph_convergence(
         e, None, qs, k=10, beam=16, steps=8,
         walk=(scores, visited, w),
@@ -2040,16 +1924,14 @@ ORDER BY doc_id
     "closed-form in doc_id, so the DuckDB oracle replays the sum "
     "analytically — the hash only matches if every filter/unfilter "
     "path is byte-exact.  Both stages run in the mapInArrow row "
-    "kernel (per-row codec work, embarrassingly parallel, no "
-    "shuffle); upgrades the byte-level multimodal_decode stub tier to "
-    "a real codec tier.",
+    "kernel (per-row codec work, embarrassingly parallel) over "
+    "payloads range-partitioned by doc_id, so the output is sorted "
+    "within partitions and no sort samples the kernel for a second "
+    "run; upgrades the byte-level multimodal_decode stub tier to a "
+    "real codec tier.",
 )
 def image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .media_q import media_payloads
-
-    return MM.decode_images(
-        media_payloads(spark, sf_dir, "image")
-    ).orderBy("doc_id")
+    return by_doc_id(MM.decode_images, media_payloads(spark, sf_dir, "image"))
 
 
 @register(
@@ -2078,12 +1960,12 @@ ORDER BY doc_id
     "PIL/ffmpeg-backed production resize drops into.",
 )
 def image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .media_q import media_payloads
-
-    resized = MM.resize_images(
-        media_payloads(spark, sf_dir, "image"), target_w=16, target_h=12
+    return by_doc_id(
+        lambda images: MM.decode_images(
+            MM.resize_images(images, target_w=16, target_h=12)
+        ),
+        media_payloads(spark, sf_dir, "image"),
     )
-    return MM.decode_images(resized).orderBy("doc_id")
 
 
 @register(
@@ -2112,11 +1994,7 @@ ORDER BY doc_id
     "mapInArrow row-kernel shape as the image tier.",
 )
 def audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .media_q import media_payloads
-
-    return MM.decode_audio(
-        media_payloads(spark, sf_dir, "audio")
-    ).orderBy("doc_id")
+    return by_doc_id(MM.decode_audio, media_payloads(spark, sf_dir, "audio"))
 
 
 # golden-parquet oracles for the seeded spark.ml tiers (round-10
@@ -2134,13 +2012,8 @@ def audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # error() instead of a confusing row-count mismatch).  Regenerate with
 # tests/goldens/regen_ml_tiers.py after any intentional pipeline
 # change; tests/test_operators.py gates freshness.
-# Shared golden-oracle plumbing (round 13: the importance tiers in
-# analysis_q adopted the same pattern, so the single definitions moved
-# to plans/goldens.py); corpus_md5_sql stays re-exported here — the
-# regen scripts and freshness gates import it from this module.
-from .goldens import GOLDEN_DIR as _GOLDEN_DIR  # noqa: F401
-from .goldens import corpus_md5_sql  # noqa: F401
-from .goldens import golden_oracle as _golden_oracle
+# The golden-oracle plumbing is shared with analysis_q's importance
+# tiers (plans/goldens.py).
 
 
 @register(
@@ -2658,7 +2531,7 @@ def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "minhash_near_dups_ml",
-    # golden-parquet oracle (see _GOLDEN_DIR note): spark.ml HashingTF
+    # golden-parquet oracle (see the golden-oracle note): spark.ml HashingTF
     # (JVM MurmurHash3) + fitted MinHashLSH coefficients are not
     # DuckDB-replayable in closed form, but the output is seeded-
     # deterministic — the pinned expected pairs per scale ARE the
@@ -2947,7 +2820,7 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # HLL oracle fragments: the register file over 5-gram shingle
 # occurrences, shared by hll_registers / hll_distinct.  The estimate
-# constant alpha*m^2*2^(wbits+1) folds in Python (vocab._HLL_C) and
+# constant alpha*m^2*2^(wbits+1) folds in Python (vocab.hll_fold_constants)
 # ships as a literal on both engines.  Every width literal is
 # interpolated from HLL_P (m = 2^p buckets out of a 60-bit md5-prefix
 # hash, wbits = 60 - p value bits) so bumping HLL_P keeps Spark/DuckDB
@@ -2955,10 +2828,8 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hll_regs_sql() -> str:
-    from ..llm.vocab import _HLL_WBITS, HLL_P
-
-    m = 1 << HLL_P
-    wbits = _HLL_WBITS
+    m, w1, _ = hll_fold_constants()
+    wbits = w1 - 1
     return rf"""
 WITH ws AS (
   SELECT regexp_split_to_array(lower(trim(text)), '\s+') AS w
@@ -3024,15 +2895,12 @@ def hll_registers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hll_distinct_oracle() -> str:
-    from ..llm.vocab import _HLL_ALPHA, _HLL_WBITS, HLL_P
-
-    m = 1 << HLL_P
-    c = _HLL_ALPHA[HLL_P] * float(m * m) * float(2 ** (_HLL_WBITS + 1))
+    m, w1, c = hll_fold_constants()
     return (
         _HLL_REGS_SQL
         + f"""
 , folded AS (
-  SELECT CAST(sum(1::BIGINT << ({_HLL_WBITS + 1} - max_rho)) AS BIGINT)
+  SELECT CAST(sum(1::BIGINT << ({w1} - max_rho)) AS BIGINT)
            AS s_star,
          count(*) FILTER (max_rho = 0) AS v_zero
   FROM regs
@@ -3070,9 +2938,8 @@ FROM est
 )
 def hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llm import vocab as VO
-    from ..llm.vocab import HLL_P
 
-    m = 1 << HLL_P
+    m, _, _ = hll_fold_constants()
     items = _hll_items(spark, sf_dir).localCheckpoint(eager=False)
     est = VO.hll_estimate(VO.hll_registers(items))
     exact = items.agg(F.count_distinct("item").alias("n_exact"))
@@ -3139,92 +3006,6 @@ def source_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_match",
         F.round("jaccard_est", R).alias("jaccard_est"),
     ).orderBy("src_a", "src_b")
-
-
-# Algorithm-version token baked into the kNN-graph silver cache keys
-# (advice r12): the key is otherwise only (corpus fingerprint, k,
-# planes), so a semantic change to knn_graph/lsh_bucket would keep
-# serving stale edges from persistent scratch across sessions,
-# surfacing as a baffling oracle hash mismatch instead of a rebuild.
-# BUMP THIS whenever the edge construction changes meaning — the
-# golden corpus_md5 fail-fast doctrine applied to the silver.
-_KNNG_ALGO_VERSION = "v2"  # v2 (r14): zero-norm pairs dropped in build
-
-
-def _knn_graph_silver(
-    spark: SparkSession, sf_dir: str, k: int = 3, n_planes: int = 4
-) -> DataFrame:
-    """Build-once kNN-graph silver (r11 verdict Next #1): the
-    `llm/similarity.knn_graph` edge table for one (corpus fingerprint,
-    k, n_planes) key, materialized ONCE per corpus and read back by
-    every graph consumer (`knn_graph`, `pagerank_topk`,
-    `triangle_topk`, the union silver below) — the media_signatures
-    doctrine applied to the similarity graph: an index over immutable
-    data is as immutable as the data, so rebuilding it inline on
-    every query run pays the bucketed self-join + top-k window per
-    RUN instead of per CORPUS.  Files are range-partitioned and
-    sorted by ``src`` so point probes (`graph.filter(src IN beam)`)
-    prune row groups on min/max stats — the local[32] analogue of the
-    src-bucketed table the 100 TB deployment would keep
-    (sources/layout.write_bucketed).  Shared `build_once` protocol:
-    concurrent builders race benignly and the loser adopts the
-    winner's identical (deterministic) graph."""
-    fp = corpus_fingerprint(sf_dir)
-    out_dir = scratch_path(
-        f"knng_{_KNNG_ALGO_VERSION}_{fp}_k{k}_p{n_planes}"
-    )
-
-    def build(tmp: str) -> None:
-        e = load_table(spark, sf_dir, "embeddings")
-        g = SIM.knn_graph(e, k=k, n_planes=n_planes)
-        (
-            g.repartitionByRange(8, "src")
-            .sortWithinPartitions("src", "rank")
-            .write.parquet(tmp)
-        )
-
-    return spark.read.parquet(build_once(out_dir, build))
-
-
-def _knn_union_graph_silver(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 3,
-    planes: tuple = (4, 2),
-) -> DataFrame:
-    """The NAVIGABLE union graph silver: distinct (src, dst) edges of
-    the per-planes kNN graphs — the multi-bucket-system union that
-    bridges the per-bucket components a single LSH system leaves
-    disconnected (see knn_graph_topk's doc).  Built once per (corpus
-    fingerprint, k, planes-set) FROM the per-planes silvers, so the
-    expensive bucketed self-joins are shared with every other graph
-    consumer and the union pays only one distinct.  Read by the graph
-    ANN search faces (`knn_graph_topk`, `knn_graph_topk_batch`,
-    `ann_recall_report`'s graph tier)."""
-    fp = corpus_fingerprint(sf_dir)
-    tag = "-".join(str(p) for p in planes)
-    out_dir = scratch_path(
-        f"knng_union_{_KNNG_ALGO_VERSION}_{fp}_k{k}_p{tag}"
-    )
-
-    def build(tmp: str) -> None:
-        parts = [
-            _knn_graph_silver(spark, sf_dir, k=k, n_planes=p).select(
-                "src", "dst"
-            )
-            for p in planes
-        ]
-        g = parts[0]
-        for part in parts[1:]:
-            g = g.unionByName(part)
-        (
-            g.distinct()
-            .repartitionByRange(8, "src")
-            .sortWithinPartitions("src", "dst")
-            .write.parquet(tmp)
-        )
-
-    return spark.read.parquet(build_once(out_dir, build))
 
 
 def _ivf_silver_dir(sf_dir: str) -> str:
@@ -3389,11 +3170,7 @@ def dsir_gumbel_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hll_by_source_oracle() -> str:
-    from ..llm.vocab import _HLL_ALPHA, _HLL_WBITS, HLL_P
-
-    m = 1 << HLL_P
-    w1 = _HLL_WBITS + 1
-    c = _HLL_ALPHA[HLL_P] * float(m * m) * float(2 ** w1)
+    m, w1, c = hll_fold_constants()
     return rf"""
 WITH ws AS (
   SELECT source, regexp_split_to_array(lower(trim(text)), '\s+') AS w
@@ -3778,7 +3555,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     walk = SIM.knn_graph_search(
         e,
-        _knn_union_graph_silver(spark, sf_dir, k=3, planes=(4, 2)),
+        knn_union_graph_silver(spark, sf_dir, k=3, planes=(4, 2)),
         e.filter(F.col("vec_id") == 0),
         k=10,
         beam=16,

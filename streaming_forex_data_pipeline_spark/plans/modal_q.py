@@ -25,93 +25,18 @@ from pyspark.sql import functions as F
 
 from ..llm import dedup as DD
 from ..llm import multimodal as MM
+from ..llm.multimodal import VIDEO_EVERY_N, fid_clip, fid_frame, vid_fid
+from ..llm.silvers import media_payloads, media_signatures
 from ..sources.tables import load_table
-from .media_q import media_payloads, media_signatures
+from .fragments import by_doc_id
+from .oracle_sql import (
+    _AFP_CTE,
+    _DHASH_CTE,
+    _VDIMS_SQL,
+    _VHASH_CTE,
+    _hll_user_regs_sql,
+)
 from .registry import register
-
-# closed-form replay of video-frame dHash bit b (0..63) for sampled
-# frame k of doc_id: same sampled-pixel arithmetic as media_q's image
-# oracle with the per-frame k*101 term, pixel(k, i) =
-# (doc_id*31 + k*101 + i*7) % 256 over the w x h frame grid.
-_VPX = (
-    "(doc_id*31 + k*101 "
-    "+ ((((b // 8) * h) // 8) * w + (({x}) * w) // 9) * 7) % 256"
-)
-_VBIT = (
-    "CASE WHEN "
-    + _VPX.format(x="b % 8 + 1")
-    + " > "
-    + _VPX.format(x="b % 8")
-    + " THEN 1 ELSE 0 END"
-)
-
-#: the registered sampling stride — ONE definition feeding both the
-#: Spark builders and the oracle CTEs (review-found triplication)
-VIDEO_EVERY_N = 2
-
-#: composite frame-id base: frame signatures ride the shared banding
-#: engine as doc_id * VID_FID_BASE + frame_idx — frame counts are
-#: bounded at 29 by the content contract, so the composite is
-#: collision-free and order-preserving.  ONE definition for every
-#: encode/decode site (review-found triplication across modal_q and
-#: pipeline_q).
-VID_FID_BASE = 1024
-
-
-def vid_fid():
-    """Encode (doc_id, frame_idx) into the composite id, aliased back
-    to doc_id for the banding engine."""
-    return (F.col("doc_id") * VID_FID_BASE + F.col("frame_idx")).alias(
-        "doc_id"
-    )
-
-
-def fid_clip(col: str):
-    """The clip id of a composite frame-id column."""
-    return F.floor(F.col(col) / VID_FID_BASE)
-
-
-def fid_frame(col: str):
-    """The frame position of a composite frame-id column."""
-    return F.col(col) % VID_FID_BASE
-
-# one oracle-side rendering of the llm/multimodal.py video dimension
-# contract, interpolated from the SAME constants the kernels use
-_VDIMS_SQL = (
-    f"SELECT doc_id, "
-    f"doc_id % {MM.VID_NF_MOD} + {MM.VID_NF_OFF} AS nf, "
-    f"doc_id % {MM.VID_W_MOD} + {MM.VID_W_OFF} AS w, "
-    f"doc_id % {MM.VID_H_MOD} + {MM.VID_H_OFF} AS h "
-    f"FROM documents"
-)
-
-_VHASH_CTE = f"""
-vdims AS (
-  {_VDIMS_SQL}
-),
-vframes AS (
-  SELECT doc_id, w, h, unnest(range(0, nf)) AS k FROM vdims
-),
-vsampled AS (
-  SELECT * FROM vframes WHERE k % {VIDEO_EVERY_N} = 0
-),
-vbt AS (
-  SELECT doc_id, k,
-         list_transform(range(0, 64), b -> {_VBIT}) AS bits
-  FROM vsampled
-),
-vhashes AS (
-  SELECT doc_id,
-         CAST(k AS INT) AS frame_idx,
-         CAST(list_sum(list_transform(range(0, 32),
-              b -> bits[b + 1] * (CAST(1 AS BIGINT) << b))) AS BIGINT)
-           AS h_lo,
-         CAST(list_sum(list_transform(range(32, 64),
-              b -> bits[b + 1] * (CAST(1 AS BIGINT) << (b - 32))))
-           AS BIGINT) AS h_hi
-  FROM vbt
-)
-"""
 
 
 @register(
@@ -197,17 +122,7 @@ def _video_pairs(
     pairs = DD.dhash_near_dup_pairs(
         prints.select(vid_fid(), "h_lo", "h_hi"), max_hamming=max_hamming
     )
-    va = fid_clip("doc_a")
-    vb = fid_clip("doc_b")
-    fa = fid_frame("doc_a")
-    fb = fid_frame("doc_b")
-    return (
-        pairs.filter((fa == fb) & (va != vb))
-        .select(va.alias("doc_a"), vb.alias("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_matching_frames"))
-        .filter(F.col("n_matching_frames") >= min_frames)
-    )
+    return MM.clip_pairs(pairs, min_frames)
 
 
 def _cc_rounds_sql(n_rounds: int) -> tuple[str, str]:
@@ -247,11 +162,6 @@ j{r} AS MATERIALIZED (
 
 
 _CC_SQL, _CC_FINAL = _cc_rounds_sql(16)
-
-# media_q's image and audio signature CTEs are the shared oracle
-# fragments (one definition per signature function, round-9 pattern)
-from .media_q import _AFP_CTE, _DHASH_CTE  # noqa: E402
-
 
 @register(
     "cross_modal_clusters",
@@ -369,9 +279,6 @@ def cross_modal_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return DD.cross_modal_clusters(edges, d)
 
 
-from .olap_q import _hll_user_regs_sql  # noqa: E402 — shared oracle fragment
-
-
 @register(
     "channel_stats_replay",
     oracle=f"""
@@ -480,12 +387,12 @@ ORDER BY doc_id
     "reads all of them, so a single corrupt member or off-by-one in "
     "the chunk walk breaks the sum).  The oracle replays every pixel "
     "of every frame in closed form.  One mapInArrow row-kernel "
-    "pass, no shuffle, embarrassingly parallel.",
+    "pass over payloads range-partitioned by doc_id, embarrassingly "
+    "parallel; the output sorts within partitions, so no sort runs "
+    "the kernel a second time.",
 )
 def video_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.decode_videos(
-        media_payloads(spark, sf_dir, "video")
-    ).orderBy("doc_id")
+    return by_doc_id(MM.decode_videos, media_payloads(spark, sf_dir, "video"))
 
 
 @register(

@@ -24,6 +24,9 @@ Three families, all oracle-exact against DuckDB:
   holdout splitting (leakage-proof BY CONSTRUCTION, complementing the
   measuring `split_leakage`), int8 embedding quantization QA, and an
   n-gram novelty-over-ingestion-order curve.
+
+The funnel, cohort and Q3 plans are `plans/fragments.py` builders,
+shared with their bucketed probes.
 """
 
 from __future__ import annotations
@@ -31,7 +34,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..llm import similarity as SIM
+from ..llm.silvers import knn_graph_silver
+from ..llm.vocab import hll_fold_constants
 from ..sources.tables import fan_out, load_table
+from .fragments import (
+    cohort_over_events,
+    funnel_over_events,
+    shipping_priority_over,
+)
+from .oracle_sql import _hll_user_regs_sql, _knn_graph_ctes
 from .registry import register
 
 R = 6  # float rounding for cross-engine hash stability
@@ -266,69 +278,6 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return funnel_over_events(load_table(spark, sf_dir, "events"))
 
 
-def funnel_stage_frontiers(e: DataFrame) -> list[tuple[str, DataFrame]]:
-    """The strict funnel's per-stage frontier frames over ANY events
-    frame: stage k holds (user_id, t) = each surviving user's FIRST
-    qualifying timestamp strictly after their stage k-1 time.  The
-    single definition of funnel strictness — funnel_over_events counts
-    the frontiers, scale_q's funnel_ttc histograms the first-to-last
-    durations; a second copy of this chain would let the two readouts
-    silently diverge (review-found)."""
-
-    def first_after(prev: DataFrame, etype: str) -> DataFrame:
-        return (
-            e.filter(F.col("event_type") == etype)
-            .join(prev.select("user_id", F.col("t").alias("__pt")), "user_id")
-            .filter(F.col("ts") > F.col("__pt"))
-            .groupBy("user_id")
-            .agg(F.min("ts").alias("t"))
-        )
-
-    s1 = (
-        e.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t"))
-    )
-    stages = [("signup", s1)]
-    for etype in ("view", "click", "purchase"):
-        stages.append((etype, first_after(stages[-1][1], etype)))
-    return stages
-
-
-def funnel_over_events(e: DataFrame) -> DataFrame:
-    """The strict-sequential funnel plan over ANY events frame — shared
-    by funnel_conversion (plain parquet scan) and funnel_bucketed
-    (scale_q's user-bucketed silver table, where the same plan runs
-    with zero user-keyed exchanges)."""
-    from pyspark.sql import Window
-
-    stages = funnel_stage_frontiers(e)
-    counts = None
-    for i, (name, df) in enumerate(stages, start=1):
-        row = df.agg(F.count(F.lit(1)).alias("n_users")).select(
-            F.lit(i).alias("stage_ord"), F.lit(name).alias("stage"), "n_users"
-        )
-        counts = row if counts is None else counts.unionByName(row)
-    w = Window.orderBy("stage_ord")
-    return (
-        counts.withColumn(
-            "conv_from_start",
-            F.round(
-                F.col("n_users").cast("double")
-                / F.first("n_users").over(w),
-                R,
-            ),
-        )
-        .withColumn(
-            "conv_from_prev",
-            F.round(
-                F.col("n_users").cast("double") / F.lag("n_users").over(w), R
-            ),
-        )
-        .orderBy("stage_ord")
-    )
-
-
 @register(
     "cohort_retention",
     oracle="""
@@ -364,42 +313,6 @@ ORDER BY cohort, week_offset
 )
 def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cohort_over_events(load_table(spark, sf_dir, "events"))
-
-
-def cohort_over_events(e: DataFrame) -> DataFrame:
-    """The weekly-cohort retention plan over ANY events frame — shared
-    by cohort_retention (raw scan) and cohort_bucketed (scale_q's
-    user-bucketed silver table, where the user-keyed aggregate, the
-    (user, week) distinct, and the user join all run exchange-free)."""
-    firsts = e.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("ts")).alias("cohort")
-    )
-    sizes = firsts.groupBy("cohort").agg(F.count(F.lit(1)).alias("n_cohort"))
-    active = e.select(
-        "user_id", F.date_trunc("week", F.col("ts")).alias("wk")
-    ).distinct()
-    ret = (
-        active.join(firsts, "user_id")
-        .withColumn(
-            "week_offset",
-            F.floor(F.datediff("wk", "cohort") / F.lit(7.0)).cast("int"),
-        )
-        .groupBy("cohort", "week_offset")
-        .agg(F.countDistinct("user_id").alias("n_active"))
-    )
-    return (
-        ret.join(sizes, "cohort")
-        .select(
-            "cohort",
-            "week_offset",
-            "n_active",
-            "n_cohort",
-            F.round(
-                F.col("n_active").cast("double") / F.col("n_cohort"), R
-            ).alias("retention"),
-        )
-        .orderBy("cohort", "week_offset")
-    )
 
 
 @register(
@@ -1033,71 +946,14 @@ def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def shipping_priority_over(
-    c: DataFrame, o: DataFrame, li: DataFrame
-) -> DataFrame:
-    """The Q3 plan over caller-supplied (customer, orders, lineitem)
-    frames — factored so the bucketed-layout probe in
-    plans/pipeline_q.py runs the IDENTICAL composition over the
-    co-bucketed silver tables."""
-    from ..operators.indicators import cents
-
-    cutoff = F.lit("1998-06-01").cast("timestamp")
-    c = c.filter(F.col("c_mktsegment") == "BUILDING")
-    o = o.filter(F.col("o_orderdate") < cutoff)
-    li = li.filter(F.col("l_shipdate") > cutoff)
-    rev_c4 = cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
-    return (
-        li.join(
-            o.join(
-                F.broadcast(c.select("c_custkey")),
-                F.col("o_custkey") == F.col("c_custkey"),
-            ).select("o_orderkey", "o_orderdate", "o_orderpriority"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(F.sum(rev_c4) / 10000.0, R).alias("revenue"))
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(F.desc("revenue"), "o_orderdate", "l_orderkey")
-        .limit(10)
-    )
-
-
-def _knn_edges_head_sql() -> str:
-    """The knn_graph(k=3, n_planes=4) edge list as DuckDB CTEs — the
-    shared oracle head for every query that consumes the document
-    similarity graph (pagerank_topk, triangle_topk)."""
-    from .llm_q import _lsh_bucket_sql
-
-    return f"""
-WITH b AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                               CAST(embedding AS DOUBLE[]))) AS nn,
-         {_lsh_bucket_sql('CAST(embedding AS DOUBLE[])', n_planes=4)} AS bucket
-  FROM embeddings
-),
-pairs AS (
-  SELECT a.vec_id AS src, c.vec_id AS dst,
-         list_dot_product(a.v, c.v) / (a.nn * c.nn) AS cos
-  FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id <> c.vec_id
-),
-ranked AS (
-  SELECT src, dst,
-         row_number() OVER (PARTITION BY src
-                            ORDER BY cos DESC, dst ASC) AS rnk
-  FROM pairs
-),
-edges AS (SELECT src, dst FROM ranked WHERE rnk <= 3)"""
-
-
 def _pagerank_oracle(iters: int = 10, scale: int = 1_000_000_000_000,
                      d: int = 85, k: int = 20) -> str:
     """Unrolled integer-PageRank oracle: the knn_graph edge CTEs (same
     plane literals) followed by one CTE per iteration — pure BIGINT
     floor arithmetic, so DuckDB reproduces Spark's ranks exactly."""
     base = (100 - d) * scale // 100
-    head = _knn_edges_head_sql() + f""",
+    head = "\nWITH " + _knn_graph_ctes() + f""",
+edges AS (SELECT src, dst FROM r WHERE rank <= 3),
 deg AS (SELECT src, count(*) AS dg FROM edges GROUP BY 1),
 nodes AS (SELECT vec_id FROM embeddings),
 p0 AS (SELECT vec_id, CAST({scale} AS BIGINT) AS pr FROM nodes)"""
@@ -1142,13 +998,10 @@ LIMIT {k}
     "steps as chained CTEs.  Top-20 via TakeOrdered.",
 )
 def pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..llm import similarity as SIM
-    from .llm_q import _knn_graph_silver
-
     e = load_table(spark, sf_dir, "embeddings")
     # r11 verdict Next #1: read the build-once graph silver instead of
     # rebuilding the bucketed self-join + top-k window per run
-    edges = _knn_graph_silver(spark, sf_dir, k=3, n_planes=4).select(
+    edges = knn_graph_silver(spark, sf_dir, k=3, n_planes=4).select(
         "src", "dst"
     )
     pr = SIM.integer_pagerank(
@@ -1157,41 +1010,12 @@ def pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pr.orderBy(F.desc("pr"), "vec_id").limit(20)
 
 
-def _hll_user_regs_sql(unit: str, key: str) -> str:
-    """The calendar-keyed per-user HLL register CTEs (hr/touched) —
-    the hash contract (15-hex md5 prefix, bucket = hv % m, rho =
-    first-1-bit of hv // m) in ONE oracle-side definition, shared by
-    the rolling-WAU and week-overlap oracles exactly as the Spark
-    side shares vocab.py:hll_keyed_rhos (review-found third copy)."""
-    from ..llm.vocab import _HLL_WBITS, HLL_P
-
-    m = 1 << HLL_P
-    w1 = _HLL_WBITS + 1
-    return f"""hr AS (
-  SELECT CAST(date_trunc('{unit}', ts) AS TIMESTAMP) AS {key},
-         hv % {m} AS bucket, hv // {m} AS wv
-  FROM (SELECT ts, ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
-                     ::BIGINT AS hv
-        FROM events)
-),
-touched AS (
-  SELECT {key}, bucket,
-         max(CASE WHEN wv = 0 THEN {w1}
-                  ELSE instr(lpad(bin(wv), {w1 - 1}, '0'), '1') END) AS rho
-  FROM hr GROUP BY 1, 2
-)"""
-
-
 def _rolling_wau_oracle() -> str:
     """Sliding-window HLL oracle: per-day register files densified over
     a (day x bucket) spine, merged by 7-day windowed MAX per bucket,
     folded to estimates with the exact-integer S* contract — plus the
     exact rolling distinct as the in-plan yardstick."""
-    from ..llm.vocab import _HLL_ALPHA, _HLL_WBITS, HLL_P
-
-    m = 1 << HLL_P
-    w1 = _HLL_WBITS + 1
-    c = _HLL_ALPHA[HLL_P] * float(m * m) * float(2 ** w1)
+    m, w1, c = hll_fold_constants()
     return f"""
 WITH {_hll_user_regs_sql('day', 'day')},
 days AS (SELECT DISTINCT day FROM hr),
@@ -1259,11 +1083,7 @@ def rolling_wau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..llm import vocab as VO
-    from ..llm.vocab import _HLL_ALPHA, _HLL_WBITS, HLL_P
-
-    m = 1 << HLL_P
-    w1 = _HLL_WBITS + 1
-    c = _HLL_ALPHA[HLL_P] * float(m * m) * float(2 ** w1)
+    m, w1, c = hll_fold_constants()
 
     e = load_table(spark, sf_dir, "events")
     day = F.date_trunc("day", F.col("ts"))

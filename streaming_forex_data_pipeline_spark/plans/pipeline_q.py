@@ -39,16 +39,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..llm import dedup as DD
+from ..llm import similarity as SIM
+from ..llm.multimodal import VIDEO_EVERY_N, fid_clip, fid_frame, vid_fid
+from ..llm.silvers import media_signatures
 from ..sources.scratch import build_once, corpus_fingerprint, scratch_path
 from ..sources.tables import load_table
-from .media_q import _AFP_CTE, media_signatures
-from .modal_q import (
-    _VHASH_CTE,
-    VIDEO_EVERY_N,
-    fid_clip,
-    fid_frame,
-    vid_fid,
-)
+from .fragments import large_order_customers_over, shipping_priority_over
+from .oracle_sql import _AFP_CTE, _VHASH_CTE, _lsh_bucket_sql
 from .registry import _REGISTRY, register
 
 R = 6
@@ -115,8 +112,6 @@ def _ensure_fact_bucketed(
     "the registered query measures the probe.",
 )
 def shipping_priority_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .olap_q import shipping_priority_over
-
     otbl, ltbl = _ensure_fact_bucketed(spark, sf_dir)
     return shipping_priority_over(
         load_table(spark, sf_dir, "customer"),
@@ -142,8 +137,6 @@ def shipping_priority_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def large_order_customers_bucketed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .tpch_q import large_order_customers_over
-
     otbl, ltbl = _ensure_fact_bucketed(spark, sf_dir)
     return large_order_customers_over(
         spark.table(ltbl),
@@ -409,8 +402,6 @@ def weekend_traffic_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _incremental_embedding_oracle() -> str:
-    from .llm_q import _lsh_bucket_sql
-
     return f"""
 WITH e AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
@@ -452,8 +443,6 @@ ORDER BY id_a, id_b
 def incremental_embedding_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..llm import similarity as SIM
-
     e = load_table(spark, sf_dir, "embeddings")
     pairs = SIM.incremental_embedding_pairs(
         e, F.col("vec_id") % 5 == 0, threshold=0.35, n_planes=4

@@ -42,6 +42,19 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
     return deco
 
 
+def keep_after(anchor: str, module: str) -> None:
+    """Move the queries ``module`` registered to sit right after
+    ``anchor``, in their own order: a module that an earlier module
+    once imported mid-way keeps the registration index the evidence
+    rotation's tie-break has always used for it."""
+    items = list(_REGISTRY.items())
+    moved = [(n, q) for n, q in items if q.spark.__module__ == module]
+    rest = [(n, q) for n, q in items if q.spark.__module__ != module]
+    at = [n for n, _ in rest].index(anchor) + 1
+    _REGISTRY.clear()
+    _REGISTRY.update(rest[:at] + moved + rest[at:])
+
+
 def latest_records(root: Path | None = None) -> dict[str, tuple[int, dict]]:
     """Latest driver verdict per query name from the CORRECTNESS_r*.json
     drops at the repo root (rounds parsed numerically — lexicographic

@@ -25,8 +25,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..llm import similarity as SIM
+from ..llm.silvers import knn_graph_silver
+from ..llm.vocab import hll_fold_constants
 from ..sources.tables import load_table
-from .olap_q import _knn_edges_head_sql, funnel_over_events
+from .fragments import (
+    cohort_over_events,
+    funnel_over_events,
+    funnel_stage_frontiers,
+)
+from .oracle_sql import _hll_user_regs_sql, _knn_graph_ctes
 from .registry import _REGISTRY, register
 
 R = 6
@@ -34,8 +42,10 @@ R = 6
 
 @register(
     "triangle_topk",
-    oracle=_knn_edges_head_sql()
+    oracle="\nWITH "
+    + _knn_graph_ctes()
     + """,
+edges AS (SELECT src, dst FROM r WHERE rank <= 3),
 und AS (
   SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
   FROM edges WHERE src <> dst
@@ -87,12 +97,9 @@ LIMIT 20
     "triangle-identical.",
 )
 def triangle_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..llm import similarity as SIM
-    from .llm_q import _knn_graph_silver
-
     # r11 verdict Next #1: read the build-once graph silver instead of
     # rebuilding the bucketed self-join + top-k window per run
-    edges = _knn_graph_silver(spark, sf_dir, k=3, n_planes=4).select(
+    edges = knn_graph_silver(spark, sf_dir, k=3, n_planes=4).select(
         "src", "dst"
     )
     t = SIM.triangle_counts(edges)
@@ -226,8 +233,6 @@ def funnel_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ways there, and the skew soak showed spread wins.",
 )
 def cohort_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .olap_q import cohort_over_events
-
     tbl = _ensure_events_bucketed(spark, sf_dir)
     return cohort_over_events(spark.table(tbl))
 
@@ -274,8 +279,6 @@ ORDER BY 1
     "non-negative ints).",
 )
 def funnel_ttc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .olap_q import funnel_stage_frontiers
-
     e = load_table(spark, sf_dir, "events")
     stages = funnel_stage_frontiers(e)
     s1, s4 = stages[0][1], stages[-1][1]
@@ -414,11 +417,7 @@ def _week_overlap_oracle() -> str:
     weeks paired by bucket-wise LAG, union = element-wise max,
     intersection = inclusion-exclusion over the three estimates —
     every estimate folded from the exact-integer S* contract."""
-    from ..llm.vocab import _HLL_ALPHA, _HLL_WBITS, HLL_P
-
-    m = 1 << HLL_P
-    w1 = _HLL_WBITS + 1
-    c = _HLL_ALPHA[HLL_P] * float(m * m) * float(2 ** w1)
+    m, w1, c = hll_fold_constants()
 
     def est(s: str, v: str) -> str:
         return (
@@ -427,8 +426,6 @@ def _week_overlap_oracle() -> str:
             f"/ CAST({v} AS DOUBLE)) "
             f"ELSE ({c!r} / CAST({s} AS DOUBLE)) END"
         )
-
-    from .olap_q import _hll_user_regs_sql
 
     return f"""
 WITH {_hll_user_regs_sql('week', 'wk')},
@@ -512,11 +509,7 @@ def week_overlap_over_events(spark: SparkSession, e: DataFrame) -> DataFrame:
     from pyspark.sql import Window
 
     from ..llm import vocab as VO
-    from ..llm.vocab import _HLL_ALPHA, _HLL_WBITS, HLL_P
-
-    m = 1 << HLL_P
-    w1 = _HLL_WBITS + 1
-    c = _HLL_ALPHA[HLL_P] * float(m * m) * float(2 ** w1)
+    m, w1, c = hll_fold_constants()
 
     wk = F.date_trunc("week", F.col("ts"))
     keyed = e.select(wk.alias("wk"), "user_id")

@@ -14,10 +14,10 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import CANDLES_CTE, candles_from_events
 from ..streaming import features as ST
+from .oracle_sql import _PATTERNS_BASE, _PATTERNS_UNION, _W
 from .registry import register
 
 R = 6
-_W = "PARTITION BY symbol ORDER BY ts"
 
 _ML_CTE = f"""
 , d AS (
@@ -224,10 +224,8 @@ def technical_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pattern_alerts_oracle() -> str:
     """Alert-envelope SQL over the SAME six-pattern union the `patterns`
-    oracle uses (analysis_q._PATTERNS_UNION) — the replay face cannot
+    oracle uses (oracle_sql._PATTERNS_UNION) — the replay face cannot
     drift from the batch pattern semantics."""
-    from .analysis_q import _PATTERNS_BASE, _PATTERNS_UNION
-
     return (
         CANDLES_CTE
         + _PATTERNS_BASE

@@ -28,8 +28,8 @@ from pyspark.sql import functions as F
 
 from ..operators.indicators import cents
 from ..sources.tables import load_table
+from .oracle_sql import _REV_C4_SQL
 from .registry import register
-from .tpch_q import _REV_C4_SQL  # shared integer-cents oracle fragment
 
 R = 6  # float rounding for cross-engine hash stability
 

@@ -6,7 +6,9 @@ the synthetic schema lacks a column (noted per query).
 All money math uses the integer-cents contract (`pricing_summary`'s
 pattern): extendedprice and discount become exact BIGINT cents before
 any SUM, so the hash compare is aggregation-order-insensitive and the
-final division by a constant is identical on both engines.
+final division by a constant is identical on both engines; the oracle
+side's cents term is `plans/oracle_sql.py:_REV_C4_SQL`, shared with the
+decorrelation family.
 """
 
 from __future__ import annotations
@@ -16,15 +18,11 @@ from pyspark.sql import functions as F
 
 from ..operators.indicators import cents
 from ..sources.tables import load_table
+from .fragments import large_order_customers_over
+from .oracle_sql import _REV_C4_SQL
 from .registry import register
 
 R = 6  # float rounding for cross-engine hash stability
-
-_REV_C4_SQL = (
-    "CAST(round(l_extendedprice * 100) AS BIGINT) "
-    "* (100 - CAST(round(l_discount * 100) AS BIGINT))"
-)
-
 
 @register(
     "returned_revenue",
@@ -254,38 +252,6 @@ def large_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "lineitem"),
         load_table(spark, sf_dir, "orders"),
         load_table(spark, sf_dir, "customer"),
-    )
-
-
-def large_order_customers_over(
-    li: DataFrame, o: DataFrame, c: DataFrame
-) -> DataFrame:
-    """The Q18 plan over caller-supplied frames — factored so the
-    bucketed-layout probe in plans/pipeline_q.py runs the IDENTICAL
-    composition over the co-bucketed silver tables."""
-    qty = F.round(F.col("l_quantity")).cast("bigint")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(qty).alias("total_qty"))
-        .filter(F.col("total_qty") > 175)
-    )
-    o = o.select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
-    c = c.select("c_custkey", "c_name")
-    return (
-        big.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .orderBy(
-            F.desc("o_totalprice"), F.asc("o_orderdate"), F.asc("o_orderkey")
-        )
-        .limit(100)
-        .select(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            "o_orderdate",
-            F.round("o_totalprice", R).alias("o_totalprice"),
-            "total_qty",
-        )
     )
 
 

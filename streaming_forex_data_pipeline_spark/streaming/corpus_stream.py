@@ -617,36 +617,23 @@ def start_video_signature_channel(
 ):
     """The video face of `start_signature_channel`: each micro-batch's
     clips are container-split and frame-dHashed onto COMPOSITE frame
-    ids (the modal_q convention), the index accumulates at FRAME
-    granularity — so cross-batch frame pairs are found like any other
-    pair — and the published view reduces the committed frame pairs
+    ids (the `llm/multimodal.py` frame-id contract), the index
+    accumulates at FRAME granularity — so cross-batch frame pairs are
+    found like any other pair — and the published view reduces the committed frame pairs
     to CLIP pairs under video_near_dups' multi-evidence rule (>=
     ``min_frames`` same-position matches).  Publishing from the FULL
     committed pair log is what makes a clip pair whose evidence
     straddles micro-batches reach the threshold the moment its later
     frames arrive."""
-    from ..llm.multimodal import dhash_video_frames, encode_videos
-    from ..plans.modal_q import VIDEO_EVERY_N, fid_clip, fid_frame, vid_fid
+    from ..llm import multimodal as MM
 
     def signature_fn(docs):
-        return dhash_video_frames(
-            encode_videos(docs), every_n=VIDEO_EVERY_N
-        ).select(vid_fid(), "h_lo", "h_hi")
+        return MM.dhash_video_frames(
+            MM.encode_videos(docs), every_n=MM.VIDEO_EVERY_N
+        ).select(MM.vid_fid(), "h_lo", "h_hi")
 
     def publish_fn(pairs):
-        return (
-            pairs.filter(
-                (fid_frame("doc_a") == fid_frame("doc_b"))
-                & (fid_clip("doc_a") != fid_clip("doc_b"))
-            )
-            .select(
-                fid_clip("doc_a").alias("doc_a"),
-                fid_clip("doc_b").alias("doc_b"),
-            )
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("n_matching_frames"))
-            .filter(F.col("n_matching_frames") >= min_frames)
-        )
+        return MM.clip_pairs(pairs, min_frames)
 
     return start_signature_channel(
         spark, sf_dir, signature_fn,

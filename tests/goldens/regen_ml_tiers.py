@@ -42,10 +42,10 @@ GOLDEN_QUERIES = ["ivf_topk_kmeans", "minhash_near_dups_ml"]
 
 def corpus_md5(sf_dir: str) -> str:
     """The golden key — computed with the ONE shared SQL definition
-    the oracle WHERE clauses use (plans/llm_q.corpus_md5_sql)."""
+    the oracle WHERE clauses use (plans/goldens.corpus_md5_sql)."""
     import duckdb
 
-    from streaming_forex_data_pipeline_spark.plans.llm_q import (
+    from streaming_forex_data_pipeline_spark.plans.goldens import (
         corpus_md5_sql,
     )
 

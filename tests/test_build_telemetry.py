@@ -111,7 +111,7 @@ def test_warm_media_read_keeps_slot_from_retirement(
     """A warm `media_payloads` read refreshes its slot's mtime, so
     `retire_stale_silvers` (which `sinks.maintenance` runs over the
     ``media_`` prefix) keeps a silver that is still read."""
-    from streaming_forex_data_pipeline_spark.plans.media_q import (
+    from streaming_forex_data_pipeline_spark.llm.silvers import (
         media_payloads,
     )
 

@@ -2,7 +2,9 @@
 freshness by corpus fingerprint, and release of cached frames and
 session dirs.  A new application is simulated by patching
 ``SparkContext.applicationId``, so the shared test session keeps
-running."""
+running.  Each test runs against a private memo state, so a simulated
+application releases only the entries the test made, never the shared
+session's (its staging dirs, its package-ship record)."""
 
 from __future__ import annotations
 
@@ -11,15 +13,31 @@ import shutil
 import sys
 import threading
 import time
+import weakref
 
 import pyarrow.parquet as pq
+import pytest
 from pyspark import SparkContext
 
+from streaming_forex_data_pipeline_spark import session as SESSION
 from streaming_forex_data_pipeline_spark.plans.registry import all_queries
 from streaming_forex_data_pipeline_spark.session import memo_entries, session_memo
 from streaming_forex_data_pipeline_spark.sources import scratch as SCR
 from streaming_forex_data_pipeline_spark.sources.tables import candles_from_events
 from streaming_forex_data_pipeline_spark.streaming.channels import read_table_stream
+
+
+@pytest.fixture(autouse=True)
+def private_memo(spark, monkeypatch):
+    """A memo state of the test's own, under the shared session's
+    application; released at teardown while it is still in place."""
+    monkeypatch.setattr(SESSION, "_session_entries", {})
+    monkeypatch.setattr(SESSION, "_frame_entries", weakref.WeakKeyDictionary())
+    monkeypatch.setattr(
+        SESSION, "_memo_app", spark.sparkContext.applicationId
+    )
+    yield
+    SESSION._release_all()
 
 
 def _as_application(monkeypatch, app_id: str) -> None:

@@ -1696,7 +1696,7 @@ def test_ml_tier_goldens_fresh(spark, sf_dir):
 
     import duckdb
 
-    from streaming_forex_data_pipeline_spark.plans.llm_q import (
+    from streaming_forex_data_pipeline_spark.plans.goldens import (
         corpus_md5_sql,
     )
 
@@ -2009,9 +2009,11 @@ def test_knn_graph_silver_builds_once(spark, sf_dir):
     identical result."""
     import os
 
+    from streaming_forex_data_pipeline_spark.llm.silvers import (
+        knn_graph_silver,
+        knn_union_graph_silver,
+    )
     from streaming_forex_data_pipeline_spark.plans.llm_q import (
-        _knn_graph_silver,
-        _knn_union_graph_silver,
         knn_graph_topk,
     )
     from streaming_forex_data_pipeline_spark.plans.olap_q import (
@@ -2023,8 +2025,8 @@ def test_knn_graph_silver_builds_once(spark, sf_dir):
     # locate both silver dirs via their build functions (cache hit)
     dirs = []
     for df, loc in (
-        (_knn_graph_silver(spark, sf_dir), None),
-        (_knn_union_graph_silver(spark, sf_dir), None),
+        (knn_graph_silver(spark, sf_dir), None),
+        (knn_union_graph_silver(spark, sf_dir), None),
     ):
         files = [
             f.replace("file:", "")
@@ -2066,8 +2068,8 @@ def test_knn_graph_zero_norm_vector_engine_parity(spark, sf_dir):
     import duckdb
 
     from streaming_forex_data_pipeline_spark.llm import similarity as SIM
-    from streaming_forex_data_pipeline_spark.plans.llm_q import (
-        _KNN_GRAPH_CTES,
+    from streaming_forex_data_pipeline_spark.plans.oracle_sql import (
+        _knn_graph_ctes,
     )
 
     e = load_table(spark, sf_dir, "embeddings").limit(40)
@@ -2090,7 +2092,7 @@ def test_knn_graph_zero_norm_vector_engine_parity(spark, sf_dir):
     try:
         con.register("embeddings", corpus.toPandas())
         want = con.execute(
-            "WITH " + _KNN_GRAPH_CTES
+            "WITH " + _knn_graph_ctes()
             + """
 SELECT src, dst, round(cos, 5) AS cos_sim, rank
 FROM r WHERE rank <= 3
@@ -2103,6 +2105,60 @@ ORDER BY src, rank"""
         for r in sorted(g, key=lambda r: (r["src"], r["rank"]))
     ]
     assert got == [tuple(w) for w in want]
+
+
+def test_graph_oracles_match_spark_on_a_zero_norm_corpus(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Every consumer of the kNN graph drops a zero-norm vector's pairs
+    on both engines: with vec_id 7's embedding zeroed in a copy of the
+    corpus, the registered Spark side of the graph build, PageRank and
+    the triangle census equals its DuckDB oracle row for row.  The
+    shipped corpora hold no zero-norm vector, so the oracle sweep
+    cannot see an oracle copy that keeps those pairs."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from streaming_forex_data_pipeline_spark.plans.registry import all_queries
+
+    # the copy's silvers go to a private scratch root
+    monkeypatch.setattr("tempfile.gettempdir", lambda: str(tmp_path))
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    t = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    field = t.schema.field("embedding")
+    vecs = [
+        [0.0] * len(v) if i == 7 else v
+        for i, v in zip(
+            t.column("vec_id").to_pylist(), t.column("embedding").to_pylist()
+        )
+    ]
+    assert any(not any(v) for v in vecs), "vec_id 7 not in the corpus"
+    t = t.set_column(
+        t.schema.get_field_index("embedding"),
+        field,
+        pa.array(vecs, type=field.type),
+    )
+    pq.write_table(t, corpus / "embeddings.parquet")
+
+    qs = all_queries()
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW embeddings AS SELECT * FROM "
+            f"read_parquet('{corpus}/embeddings.parquet')"
+        )
+        for name in ("knn_graph", "pagerank_topk", "triangle_topk"):
+            got = qs[name].spark(spark, str(corpus)).toPandas()
+            want = con.execute(qs[name].oracle).fetchdf()
+            cols = sorted(want.columns)
+            assert sorted(got.columns) == cols, name
+            assert sorted(map(tuple, got[cols].values.tolist())) == sorted(
+                map(tuple, want[cols].values.tolist())
+            ), f"{name}: Spark and oracle disagree on the zero-norm corpus"
+    finally:
+        con.close()
 
 
 def test_batch_walk_zero_norm_query_and_corpus_vector(spark, sf_dir):

@@ -76,6 +76,44 @@ def _plan(spark, sf_dir, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _ancestors(plan: str, node: str) -> list[list[str]]:
+    """For each ``node`` operator in a plan tree string, the operator
+    names on its path up to the root."""
+    paths, stack = [], []
+    for line in plan.splitlines():
+        m = re.match(r"([ :+\-]*)(\w+)", line)
+        if not m:
+            continue
+        depth, name = len(m.group(1)), m.group(2)
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        if name == node:
+            paths.append([n for _, n in stack])
+        stack.append((depth, name))
+    return paths
+
+
+#: the registered media codec queries: one row kernel each
+#: (image_resize chains two), run once per row
+CODEC_QUERIES = (
+    "image_decode",
+    "image_resize",
+    "audio_decode",
+    "video_decode",
+)
+
+
+def test_codec_kernels_run_once(spark, sf_dir):
+    """No Exchange sits above a codec query's MapInArrow node: a
+    global sort over the kernel output samples it for range bounds,
+    which runs every codec call a second time."""
+    for name in CODEC_QUERIES:
+        paths = _ancestors(_plan(spark, sf_dir, name), "MapInArrow")
+        assert paths, f"{name}: no MapInArrow node"
+        above = [p for p in paths if any(n.startswith("Exchange") for n in p)]
+        assert not above, f"{name}: Exchange above the row kernel {above}"
+
+
 def _python_udf_offenders(spark, sf_dir, names) -> list[str]:
     """Names whose plan disagrees with PANDAS_UDF_SANCTIONED: a Python
     node in an unsanctioned query, or none in a sanctioned one."""
@@ -243,14 +281,14 @@ def test_knn_graph_consumers_read_silver_not_rebuild(
     driver side of the graph-loop gate pagerank_topk's plan is a local
     relation, so the check also runs with broadcasts disabled, where
     the plan is the distributed recurrence."""
-    from streaming_forex_data_pipeline_spark.plans.llm_q import (
-        _knn_graph_silver,
-        _knn_union_graph_silver,
+    from streaming_forex_data_pipeline_spark.llm.silvers import (
+        knn_graph_silver,
+        knn_union_graph_silver,
     )
 
     # ensure both silvers are built (idempotent)
-    _knn_graph_silver(spark, sf_dir).count()
-    _knn_union_graph_silver(spark, sf_dir).count()
+    knn_graph_silver(spark, sf_dir).count()
+    knn_union_graph_silver(spark, sf_dir).count()
     for side in gate_sides:
         with side() as name_of_side:
             for name in ("knn_graph", "pagerank_topk", "triangle_topk"):

@@ -12,6 +12,10 @@
   ``llm/multimodal.py:row_kernel``: it is the only ``mapInArrow`` /
   ``mapInPandas`` call site, and the media module builds no
   ``pd.Series`` by hand.
+- Plan modules import infrastructure, not each other: a plan module
+  imports only ``registry``, ``goldens``, ``oracle_sql`` and
+  ``fragments`` of ``plans/``, all at module top, and no package module
+  outside ``plans/`` imports a plan module.
 
 Pure text scan of the package sources, no Spark.
 """
@@ -234,4 +238,119 @@ def decode_images(images):
     assert _python_map_sites("other.py", sample) == [
         "other.py:decode_stub",
         "other.py:decode_images",
+    ]
+
+
+PLANS = PACKAGE + ".plans"
+#: the plan-package modules a plan module may import
+_PLAN_INFRA = {"registry", "goldens", "oracle_sql", "fragments"}
+
+
+def _plan_import_faults(rel: str, text: str) -> list[str]:
+    """``rel:line target (fault)`` for each import of a plan module
+    that the layering forbids.  In ``plans/`` the faults are a plan
+    module outside `_PLAN_INFRA` (``plan-to-plan``), an import inside
+    a function (``function-local``) and one below the module's leading
+    imports (``below module top``); outside ``plans/`` every plan
+    import is a fault (``outside plans/``).  The package aggregator
+    ``plans/__init__.py`` imports every plan module and is exempt."""
+    mod = rel[: -len(".py")].replace(os.sep, ".")
+    pkg = mod.rsplit(".", 1)[0]
+    if mod == PLANS + ".__init__":
+        return []
+    in_plans = pkg == PLANS
+    tree = ast.parse(text)
+    body = [
+        n for n in tree.body
+        if not (isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant))
+    ]
+    head = set()
+    for n in body:
+        if not isinstance(n, (ast.Import, ast.ImportFrom)):
+            break
+        head.add(id(n))
+    top_level = {id(n) for n in tree.body}
+
+    def targets(node):
+        if isinstance(node, ast.Import):
+            return [a.name for a in node.names]
+        base = node.module or ""
+        if node.level:
+            anchor = pkg.split(".")[: len(pkg.split(".")) - node.level + 1]
+            base = ".".join(anchor + ([base] if base else []))
+        if base == PLANS:
+            return [f"{base}.{a.name}" for a in node.names]
+        return [base]
+
+    faults = []
+    for node in ast.walk(tree):
+        if not isinstance(node, (ast.Import, ast.ImportFrom)):
+            continue
+        for t in targets(node):
+            if not t.startswith(PLANS + "."):
+                continue
+            name = t[len(PLANS) + 1:].split(".")[0]
+            where = f"{rel}:{node.lineno} {name}"
+            if not in_plans:
+                faults.append(f"{where} (outside plans/)")
+                continue
+            if name not in _PLAN_INFRA:
+                faults.append(f"{where} (plan-to-plan)")
+            if id(node) not in top_level:
+                faults.append(f"{where} (function-local)")
+            elif id(node) not in head:
+                faults.append(f"{where} (below module top)")
+    return faults
+
+
+def test_plan_modules_import_infrastructure_not_each_other():
+    faults = [
+        fault
+        for rel, text in _package_sources()
+        for fault in _plan_import_faults(rel, text)
+    ]
+    assert not faults, (
+        "plan-module imports outside the layering (move the shared name "
+        "into llm/, plans/oracle_sql.py or plans/fragments.py and import "
+        f"it at module top): {faults}"
+    )
+
+
+def test_layering_gate_sees_the_cross_plan_imports():
+    """The scan flags each shape the layering replaced (cut from the
+    modules before it): a function-local plan-to-plan import dodging a
+    cycle, a mid-module one, and a streaming channel importing a plan
+    module for the video frame-id contract."""
+    plan = """
+from ..llm import dedup as DD
+from .olap_q import funnel_over_events
+from .oracle_sql import _REV_C4_SQL
+from .registry import register
+
+R = 6
+
+
+def triangle_topk(spark, sf_dir):
+    from .llm_q import _knn_graph_silver
+
+    return _knn_graph_silver(spark, sf_dir)
+
+
+from .goldens import GOLDEN_DIR  # noqa: E402
+"""
+    stream = """
+def start_video_signature_channel(spark, sf_dir):
+    from ..llm.multimodal import dhash_video_frames, encode_videos
+    from ..plans.modal_q import VIDEO_EVERY_N, fid_clip, fid_frame, vid_fid
+"""
+    scale_q = os.path.join(PACKAGE, "plans", "scale_q.py")
+    corpus_stream = os.path.join(PACKAGE, "streaming", "corpus_stream.py")
+    assert _plan_import_faults(scale_q, plan) == [
+        f"{scale_q}:3 olap_q (plan-to-plan)",
+        f"{scale_q}:16 goldens (below module top)",
+        f"{scale_q}:11 llm_q (plan-to-plan)",
+        f"{scale_q}:11 llm_q (function-local)",
+    ]
+    assert _plan_import_faults(corpus_stream, stream) == [
+        f"{corpus_stream}:4 modal_q (outside plans/)",
     ]

@@ -890,7 +890,7 @@ def test_funnel_default_invocation_corrects_disorder(
 
     from pyspark.sql import functions as F
 
-    from streaming_forex_data_pipeline_spark.plans.olap_q import (
+    from streaming_forex_data_pipeline_spark.plans.fragments import (
         funnel_over_events,
     )
     from streaming_forex_data_pipeline_spark.sources.tables import load_table
@@ -1231,7 +1231,7 @@ def test_events_bucketed_channel_matches_batch_build(spark, sf_dir, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from streaming_forex_data_pipeline_spark.plans.olap_q import (
+    from streaming_forex_data_pipeline_spark.plans.fragments import (
         funnel_over_events,
     )
     from streaming_forex_data_pipeline_spark.plans.registry import all_queries
@@ -1307,7 +1307,7 @@ def test_compact_bucketed_table_preserves_content_and_contract(
 
     from pyspark.sql import functions as F
 
-    from streaming_forex_data_pipeline_spark.plans.olap_q import (
+    from streaming_forex_data_pipeline_spark.plans.fragments import (
         funnel_over_events,
     )
     from streaming_forex_data_pipeline_spark.sources.layout import (
