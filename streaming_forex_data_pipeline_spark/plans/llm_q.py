@@ -26,7 +26,12 @@ from ..sources.scratch import build_once, corpus_fingerprint, scratch_path
 from ..sources.tables import fan_out, load_table
 from .fragments import by_doc_id
 from .goldens import golden_oracle as _golden_oracle
-from .oracle_sql import _knn_graph_ctes, _knn_union_graph_ctes, _lsh_bucket_sql
+from .oracle_sql import (
+    _knn_graph_ctes,
+    _knn_union_graph_ctes,
+    _lsh_bucket_sql,
+    hll_estimate_sql,
+)
 from .registry import register
 
 R = 6
@@ -2895,7 +2900,7 @@ def hll_registers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hll_distinct_oracle() -> str:
-    m, w1, c = hll_fold_constants()
+    m, w1, _ = hll_fold_constants()
     return (
         _HLL_REGS_SQL
         + f"""
@@ -2908,10 +2913,7 @@ def _hll_distinct_oracle() -> str:
 exact AS (SELECT count(DISTINCT gram) AS n_exact FROM occ),
 est AS (
   SELECT s_star, v_zero, n_exact,
-         CASE WHEN ({c!r} / CAST(s_star AS DOUBLE)) <= {2.5 * m!r}
-                   AND v_zero > 0
-              THEN {float(m)!r} * ln({float(m)!r} / CAST(v_zero AS DOUBLE))
-              ELSE ({c!r} / CAST(s_star AS DOUBLE)) END AS hll_est
+         {hll_estimate_sql('s_star', 'v_zero')} AS hll_est
   FROM folded, exact
 )
 SELECT CAST({m} AS BIGINT) AS m, CAST(v_zero AS BIGINT) AS v_zero, s_star,
@@ -3170,7 +3172,7 @@ def dsir_gumbel_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hll_by_source_oracle() -> str:
-    m, w1, c = hll_fold_constants()
+    m, w1, _ = hll_fold_constants()
     return rf"""
 WITH ws AS (
   SELECT source, regexp_split_to_array(lower(trim(text)), '\s+') AS w
@@ -3210,11 +3212,7 @@ folded AS (
   FROM per
 )
 SELECT source, v_zero, s_star,
-       round(CASE WHEN ({c!r} / CAST(s_star AS DOUBLE)) <= {2.5 * m!r}
-                       AND v_zero > 0
-                  THEN {float(m)!r}
-                       * ln({float(m)!r} / CAST(v_zero AS DOUBLE))
-                  ELSE ({c!r} / CAST(s_star AS DOUBLE)) END, 6) AS hll_est
+       round({hll_estimate_sql('s_star', 'v_zero')}, 6) AS hll_est
 FROM folded
 ORDER BY source
 """

@@ -43,7 +43,7 @@ from .fragments import (
     funnel_over_events,
     shipping_priority_over,
 )
-from .oracle_sql import _hll_user_regs_sql, _knn_graph_ctes
+from .oracle_sql import _hll_user_regs_sql, _knn_graph_ctes, hll_estimate_sql
 from .registry import register
 
 R = 6  # float rounding for cross-engine hash stability
@@ -1015,7 +1015,7 @@ def _rolling_wau_oracle() -> str:
     a (day x bucket) spine, merged by 7-day windowed MAX per bucket,
     folded to estimates with the exact-integer S* contract — plus the
     exact rolling distinct as the in-plan yardstick."""
-    m, w1, c = hll_fold_constants()
+    m, w1, _ = hll_fold_constants()
     return f"""
 WITH {_hll_user_regs_sql('day', 'day')},
 days AS (SELECT DISTINCT day FROM hr),
@@ -1049,12 +1049,7 @@ exact AS (
 )
 SELECT f.day,
        CAST(x.wau_exact AS BIGINT) AS wau_exact,
-       round(CASE WHEN ({c!r} / CAST(f.s_star AS DOUBLE)) <= {2.5 * m!r}
-                       AND f.v_zero > 0
-                  THEN {float(m)!r} * ln({float(m)!r}
-                                         / CAST(f.v_zero AS DOUBLE))
-                  ELSE ({c!r} / CAST(f.s_star AS DOUBLE)) END, 6)
-         AS wau_est
+       round({hll_estimate_sql('f.s_star', 'f.v_zero')}, 6) AS wau_est
 FROM folded f JOIN exact x USING (day)
 ORDER BY day
 """

@@ -213,6 +213,21 @@ vhashes AS (
 """
 
 
+def hll_estimate_sql(s_star: str, v_zero: str) -> str:
+    """The HLL estimate folded from the exact-integer S* contract
+    (`llm/vocab.py:hll_fold_constants`): the small-range linear count
+    m*ln(m/V) when the raw estimate c/S* is at most 2.5m and a register
+    is zero, else the raw estimate.  ``s_star`` and ``v_zero`` are the
+    SQL expressions of S* and of the zero-register count V."""
+    m, _, c = hll_fold_constants()
+    return (
+        f"CASE WHEN ({c!r} / CAST({s_star} AS DOUBLE)) <= {2.5 * m!r} "
+        f"AND {v_zero} > 0 THEN {float(m)!r} * ln({float(m)!r} "
+        f"/ CAST({v_zero} AS DOUBLE)) "
+        f"ELSE ({c!r} / CAST({s_star} AS DOUBLE)) END"
+    )
+
+
 def _hll_user_regs_sql(unit: str, key: str) -> str:
     """The calendar-keyed per-user HLL register CTEs (hr/touched) —
     the hash contract (15-hex md5 prefix, bucket = hv % m, rho =

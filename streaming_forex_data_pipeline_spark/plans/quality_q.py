@@ -14,6 +14,7 @@ from ..operators import indicators as I
 from ..operators import quality as Q
 from ..session import session_dir, session_memo
 from ..sources import sinks as SK
+from ..sources.layout import write_day_partitioned
 from ..sources.tables import CANDLES_CTE, candles_from_events, load_table
 from .registry import register
 
@@ -708,7 +709,8 @@ GROUP BY 1
 ORDER BY 1
 """,
     doc="S10 range delete, DRIVER-CHECKABLE (r11 verdict Next #8): "
-    "write the events fact date-partitioned (sinks.write_partitioned), "
+    "write the events fact date-partitioned (layout."
+    "write_day_partitioned), "
     "delete_range the data-derived window [min_day+2d, min_day+3d12h] "
     "— one FULLY-DOOMED day (pure directory drop, repository.py:"
     "311-339 chunk-drop semantics) plus one BOUNDARY day (half-day "
@@ -725,7 +727,7 @@ def range_delete_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "events")
     table_dir = session_dir(spark, "range_delete_rb_")
-    SK.write_partitioned(e, table_dir, ts_col="ts")
+    write_day_partitioned(e, table_dir, mode="overwrite")
     d0 = e.agg(F.min(F.to_date("ts")).alias("d")).collect()[0]["d"]
     lo = datetime.datetime.combine(
         d0 + datetime.timedelta(days=2), datetime.time()

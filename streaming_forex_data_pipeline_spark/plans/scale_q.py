@@ -34,7 +34,7 @@ from .fragments import (
     funnel_over_events,
     funnel_stage_frontiers,
 )
-from .oracle_sql import _hll_user_regs_sql, _knn_graph_ctes
+from .oracle_sql import _hll_user_regs_sql, _knn_graph_ctes, hll_estimate_sql
 from .registry import _REGISTRY, register
 
 R = 6
@@ -417,16 +417,7 @@ def _week_overlap_oracle() -> str:
     weeks paired by bucket-wise LAG, union = element-wise max,
     intersection = inclusion-exclusion over the three estimates —
     every estimate folded from the exact-integer S* contract."""
-    m, w1, c = hll_fold_constants()
-
-    def est(s: str, v: str) -> str:
-        return (
-            f"CASE WHEN ({c!r} / CAST({s} AS DOUBLE)) <= {2.5 * m!r} "
-            f"AND {v} > 0 THEN {float(m)!r} * ln({float(m)!r} "
-            f"/ CAST({v} AS DOUBLE)) "
-            f"ELSE ({c!r} / CAST({s} AS DOUBLE)) END"
-        )
-
+    m, w1, _ = hll_fold_constants()
     return f"""
 WITH {_hll_user_regs_sql('week', 'wk')},
 weeks AS (SELECT DISTINCT wk FROM hr),
@@ -468,11 +459,11 @@ exact AS (
 )
 SELECT f.wk,
        CAST(coalesce(x.overlap_exact, 0) AS BIGINT) AS overlap_exact,
-       round({est('f.sa', 'f.va')}, 6) AS prev_est,
-       round({est('f.sb', 'f.vb')}, 6) AS cur_est,
-       round({est('f.su', 'f.vu')}, 6) AS union_est,
-       round(({est('f.sa', 'f.va')}) + ({est('f.sb', 'f.vb')})
-             - ({est('f.su', 'f.vu')}), 6) AS overlap_est
+       round({hll_estimate_sql('f.sa', 'f.va')}, 6) AS prev_est,
+       round({hll_estimate_sql('f.sb', 'f.vb')}, 6) AS cur_est,
+       round({hll_estimate_sql('f.su', 'f.vu')}, 6) AS union_est,
+       round(({hll_estimate_sql('f.sa', 'f.va')}) + ({hll_estimate_sql('f.sb', 'f.vb')})
+             - ({hll_estimate_sql('f.su', 'f.vu')}), 6) AS overlap_est
 FROM folded f LEFT JOIN exact x USING (wk)
 ORDER BY wk
 """

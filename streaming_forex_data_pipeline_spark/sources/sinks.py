@@ -11,9 +11,14 @@ container) the idiomatic equivalents are:
   manifest-listed files and keeps the latest row per key, and
   ``compact_log`` folds settled commits into one replacing commit —
   the same lifecycle as Delta's checkpoint/OPTIMIZE.
-- S10 delete = drop the doomed partitions, rewrite the boundary ones
-  beside the table and swap them in rename-aside.
-- S11 retention = drop partitions older than the horizon.
+- S10 delete = drop the doomed day partitions, rewrite the boundary
+  ones beside the table and publish them with ``swap_aside``.
+- S11 retention = the same delete from the first day to the horizon.
+- One protocol replaces a live directory: ``swap_aside`` (rename-aside
+  behind an fsynced manifest, late-append carry) or ``drop_dir``
+  (rename to a ``drop`` sibling, then delete); ``repair`` resolves
+  whatever a killed call left.  Every layout maintenance entry point
+  (here and in ``layout.py``) publishes through them.
 - S14 export = df.write.json.
 
 All set-based: the reference's N-round-trips-per-batch loop disappears.
@@ -21,9 +26,11 @@ All set-based: the reference's N-round-trips-per-batch loop disappears.
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import json
 import os
+import re
 import shutil
 import uuid
 
@@ -362,39 +369,11 @@ def vacuum(table_dir: str) -> list[str]:
     return removed
 
 
-PARTITION_COL = "p_date"
-
-
-def write_partitioned(df: DataFrame, table_dir: str, ts_col: str = "ts") -> None:
-    """S11 scale path: persist date-partitioned in the Hive layout
-    (``p_date=YYYY-MM-DD/`` directories) — the Parquet analogue of the
-    reference's TimescaleDB 1-day hypertable chunks
-    (02-create-tables.sh:30-40).  Buys two things at 100 TB: retention
-    and range deletes become O(partitions-touched) directory operations
-    instead of full-table rewrites, and any reader filtering on the
-    event date gets partition pruning from Catalyst for free."""
-    (
-        df.withColumn(PARTITION_COL, F.to_date(F.col(ts_col)))
-        .write.mode("overwrite")
-        .partitionBy(PARTITION_COL)
-        .parquet(table_dir)
-    )
-
-
-def _partition_dirs(table_dir: str) -> list[tuple]:
-    """(date, path) for each Hive ``p_date=`` partition directory;
-    empty list means the table is unpartitioned."""
-
-    out = []
-    if os.path.isdir(table_dir):
-        for d in os.listdir(table_dir):
-            if d.startswith(PARTITION_COL + "="):
-                try:
-                    day = datetime.date.fromisoformat(d.split("=", 1)[1])
-                except ValueError:
-                    continue  # stray non-date dir (e.g. crashed temp)
-                out.append((day, os.path.join(table_dir, d)))
-    return sorted(out)
+#: the swap manifest `swap_aside` writes into a live directory just
+#: before renaming it aside, so the aside carries its own identity
+_MANIFEST = "_MANIFEST"
+#: a sibling entry `_sibling_stem` names: ``<live>.<kind>-<id>``
+_SIBLING = re.compile(r"(?P<live>.+)\.(?P<kind>old|new|drop)-[0-9A-Za-z]+")
 
 
 def _as_datetime(x):
@@ -408,53 +387,225 @@ def _as_datetime(x):
 
 
 def _sibling_stem(live: str, kind: str) -> str:
-    """``<live>.<kind>-``, the stem of a rewrite (``del``) or aside
-    (``old``) sibling.  A ``col=value`` partition's is dot-prefixed:
-    Spark's listing and `_partition_dirs` skip it, where a crash
-    leaving ``p_date=<date>.del-*`` would break both."""
+    """``<live>.<kind>-``, the stem of a sibling of ``live``: a
+    replacement build (``new``), the previous copy set aside by a swap
+    (``old``) or a directory on its way out (``drop``).  A
+    ``col=value`` partition's is dot-prefixed, so Spark's file index
+    never lists it."""
     parent, base = os.path.split(os.path.normpath(live))
     if "=" in base:
         base = "." + base
     return os.path.join(parent, f"{base}.{kind}-")
 
 
-def _restore_aside(live: str) -> None:
-    """Rename a lone aside back to ``live`` when ``live`` is missing, as
-    a process killed between `swap_aside`'s two renames leaves it."""
-    if os.path.exists(live):
-        return
-    parent, stem = os.path.split(_sibling_stem(live, "old"))
+def _set_aside(live: str, kind: str) -> str:
+    aside = _sibling_stem(live, kind) + uuid.uuid4().hex
+    os.rename(live, aside)
+    return aside
+
+
+def dir_files(root: str) -> set[str]:
+    """Relative path of every file under ``root`` but its manifest."""
+    out = {
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, names in os.walk(root)
+        for f in names
+    }
+    out.discard(_MANIFEST)
+    return out
+
+
+def _move(src: str, dst: str, names) -> int:
+    """Move each relative path in ``names`` from ``src`` into ``dst``
+    unless ``dst`` already holds it; returns how many moved."""
+    moved = 0
+    for rel in sorted(names):
+        target = os.path.join(dst, rel)
+        if not os.path.exists(target):
+            os.makedirs(os.path.dirname(target), exist_ok=True)
+            os.rename(os.path.join(src, rel), target)
+            moved += 1
+    return moved
+
+
+def _drop_manifest(live: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(os.path.join(live, _MANIFEST))
+
+
+def _restore(aside: str, live: str) -> None:
+    os.rename(aside, live)
+    _drop_manifest(live)
+
+
+def _read_manifest(aside: str):
+    """(replacement, snapshot) names from an aside's manifest, or None
+    when it is missing, empty, malformed or names no replacement."""
     try:
-        asides = [e for e in os.listdir(parent) if e.startswith(stem)]
+        with open(os.path.join(aside, _MANIFEST)) as fh:
+            lines = fh.read().splitlines()
     except FileNotFoundError:
+        return None
+    named = {"repl": set(), "snap": set()}
+    for line in lines:
+        kind, _, name = line.partition(":")
+        if kind not in named or not name:
+            return None
+        named[kind].add(name)
+    return (named["repl"], named["snap"]) if named["repl"] else None
+
+
+@contextlib.contextmanager
+def replacement(live: str):
+    """Yield a fresh ``new`` sibling of ``live`` to build its
+    replacement in; the sibling is removed if the block raises, and a
+    killed builder's is swept by the next `repair`."""
+    tmp = _sibling_stem(live, "new") + uuid.uuid4().hex
+    try:
+        yield tmp
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+
+
+def swap_aside(tmp: str, live: str, snapshot: set | None = None) -> None:
+    """Publish the fully written directory ``tmp`` at ``live`` — the one
+    protocol by which a live directory is replaced.  Callers run
+    `repair` on ``live`` first (every entry point does).
+
+    1. One manifest is written into ``live`` and fsynced: a
+       ``repl:<path>`` line per data file of ``tmp`` (the files that
+       prove the swap went live) and a ``snap:<path>`` line per file of
+       ``snapshot`` — the files the replacement was built from,
+       default every file in ``live`` now.
+    2. ``live`` is renamed aside to ``<live>.old-<id>``, carrying the
+       manifest with it; ``tmp`` is renamed to ``live``.  If that
+       rename fails, the aside is renamed back.
+    3. Aside files not in ``snapshot`` landed after the replacement was
+       built (a live appender); they move into the new ``live``, then
+       the aside is deleted.
+
+    A delete followed by a rename would leave NEITHER copy on disk if
+    the process died between the two; a kill at any point here leaves
+    a state `repair` resolves from the names and the manifest alone.
+    Raises ValueError when ``tmp`` holds no data file while ``live``
+    exists: such a manifest could never prove the swap completed."""
+    if not os.path.isdir(live):
+        os.rename(tmp, live)
         return
-    if len(asides) == 1:
-        os.rename(os.path.join(parent, asides[0]), live)
-
-
-def swap_aside(tmp: str, live: str) -> None:
-    """Publish the fully written directory ``tmp`` at ``live`` by
-    rename-ASIDE: the live copy is renamed to ``<live>.old-<uuid>``,
-    ``tmp`` takes its place, and the aside is deleted only after that
-    rename succeeded — if it fails, the aside is renamed back.  A
-    delete followed by a rename would leave NEITHER copy on disk if
-    the process died between the two; a process killed between the
-    two renames leaves the aside, which the next swap of ``live``
-    restores before it starts."""
-
-    _restore_aside(live)
-    aside = _sibling_stem(live, "old") + uuid.uuid4().hex
-    had_old = os.path.isdir(live)
-    if had_old:
-        os.rename(live, aside)
+    if snapshot is None:
+        snapshot = dir_files(live)
+    repl = {
+        f for f in dir_files(tmp)
+        if not any(p.startswith(("_", ".")) for p in f.split(os.sep))
+    }
+    if not repl:
+        raise ValueError(f"swap_aside: {tmp} holds no data file to publish")
+    with open(os.path.join(live, _MANIFEST), "w") as fh:
+        fh.write(
+            "\n".join(
+                [*(f"repl:{r}" for r in sorted(repl)),
+                 *(f"snap:{s}" for s in sorted(snapshot))]
+            )
+        )
+        fh.flush()
+        os.fsync(fh.fileno())
+    aside = _set_aside(live, "old")
     try:
         os.rename(tmp, live)
     except BaseException:
-        if had_old:
-            os.rename(aside, live)  # restore the live copy
+        _restore(aside, live)
         raise
-    if had_old:
+    _move(aside, live, dir_files(aside) - set(snapshot))
+    shutil.rmtree(aside, ignore_errors=True)
+
+
+def drop_dir(live: str) -> None:
+    """Delete ``live`` after one atomic rename to a ``drop`` sibling:
+    readers see all of it or none of it, and a killed delete leaves a
+    sibling the next `repair` sweeps."""
+    shutil.rmtree(_set_aside(live, "drop"))
+
+
+def _siblings(parent: str) -> dict[str, list[tuple[str, str]]]:
+    """live name -> [(kind, entry)] for each sibling entry in ``parent``."""
+    out: dict[str, list[tuple[str, str]]] = {}
+    for entry in sorted(os.listdir(parent)) if os.path.isdir(parent) else ():
+        m = _SIBLING.fullmatch(entry)
+        if m:
+            name = m["live"]
+            if name.startswith(".") and "=" in name:
+                name = name[1:]
+            out.setdefault(name, []).append((m["kind"], entry))
+    return out
+
+
+def _repair_one(parent: str, name: str, siblings, report: dict) -> None:
+    live = os.path.join(parent, name)
+    asides = []
+    for kind, entry in siblings:
+        if kind == "old":
+            asides.append(entry)
+        else:
+            shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
+            report["swept"].append(entry)
+    if not os.path.isdir(live):
+        if len(asides) == 1:
+            _restore(os.path.join(parent, asides[0]), live)
+            report["restored"].append(name)
+        else:
+            report["unidentified"] += asides
+        return
+    for entry in asides:
+        aside = os.path.join(parent, entry)
+        manifest = _read_manifest(aside)
+        if manifest is None:
+            report["unidentified"].append(entry)
+            continue
+        repl, snap = manifest
+        if any(os.path.exists(os.path.join(live, r)) for r in repl):
+            report["carried"] += _move(aside, live, dir_files(aside) - snap)
+            report["swept"].append(entry)
+        else:
+            _move(aside, live, dir_files(aside))
+            report["restored"].append(name)
         shutil.rmtree(aside, ignore_errors=True)
+    _drop_manifest(live)
+
+
+def repair(live: str) -> dict:
+    """Resolve what a killed `swap_aside` or `drop_dir` left of
+    ``live`` and of its ``col=value`` partitions.  Idempotent; run at
+    the start of every entry point that swaps or drops.  Per live
+    directory:
+
+    - ``new`` and ``drop`` siblings are swept: a replacement that
+      never went live, or a directory already on its way out.
+    - ``live`` missing: its aside holds the only copy — renamed back.
+      Several asides for one ``live`` cannot be told apart: all are
+      kept and reported.
+    - ``live`` present and the aside's manifest valid: if a ``repl:``
+      file is live the swap completed — late files (not ``snap:``)
+      carry into ``live`` and the aside is dropped; if none is, an
+      appender recreated ``live`` — every aside file merges back.
+    - A manifest that is missing, empty, malformed or names no
+      replacement leaves the aside unidentified: never moved or
+      deleted, only reported.
+    - A stray manifest inside ``live`` (a kill before the aside
+      rename) is dropped.
+
+    Leftovers are named by `_sibling_stem`, so readers never list
+    them.  Returns {'swept', 'restored', 'carried', 'unidentified'}."""
+    live = os.path.abspath(live)
+    report = {"swept": [], "restored": [], "carried": 0, "unidentified": []}
+    parent, base = os.path.split(live)
+    _repair_one(parent, base, _siblings(parent).get(base, ()), report)
+    if os.path.isdir(live):
+        parts = _siblings(live)
+        for name in sorted(set(parts) | set(os.listdir(live))):
+            if "=" in name and not name.startswith("."):
+                _repair_one(live, name, parts.get(name, ()), report)
+    return report
 
 
 def delete_range(
@@ -467,60 +618,49 @@ def delete_range(
     """S10 — range delete of rows with ``start <= ts <= end``
     (repository.py:311-339).
 
-    On a ``write_partitioned`` table this is chunk-drop semantics
-    (TimescaleDB drop_chunks): partitions fully inside the range are
-    removed as whole directories, the at-most-two boundary partitions
-    are rewritten alone, and every surviving partition's files are not
-    read, rewritten, or even listed — O(partitions-touched), not
-    O(table).  On an unpartitioned table it falls back to one rewrite
-    of the whole table.  Every rewrite lands in a sibling directory
-    and is published by `swap_aside`, so a failed rewrite or swap
-    leaves that directory readable with its original rows, and a
-    table or chunk a killed swap left aside is restored first."""
+    On a day-partitioned table (`layout.write_day_partitioned`) this is
+    chunk-drop semantics (TimescaleDB drop_chunks): days fully inside
+    the range go by `drop_dir`, the at-most-two boundary days are
+    rewritten alone (and dropped if emptied), and every surviving
+    day's files are not read, rewritten, or even listed —
+    O(partitions-touched), not O(table).  On an unpartitioned table it
+    falls back to one rewrite of the whole table.  Every rewrite is
+    published by `swap_aside`, so a failed rewrite or swap leaves that
+    directory readable with its original rows; `repair` first
+    resolves what a killed earlier call left."""
+    from .layout import day_partitions
+
+    keep = ~((F.col(ts_col) >= start) & (F.col(ts_col) <= end))
 
     def rewrite(path: str, drop_if_empty: bool) -> None:
-        """Write ``path``'s surviving rows to a ``.del-*`` sibling and
-        swap them in (or drop ``path`` if none survive and that is
-        allowed)."""
-        tmp = _sibling_stem(path, "del") + uuid.uuid4().hex
-        try:
-            spark.read.parquet(path).filter(
-                ~((F.col(ts_col) >= start) & (F.col(ts_col) <= end))
-            ).write.parquet(tmp)
+        with replacement(path) as tmp:
+            spark.read.parquet(path).filter(keep).write.parquet(tmp)
             # count survivors from the materialized tmp — the filter
             # above still lazily references ``path``
             if drop_if_empty and not spark.read.parquet(tmp).limit(1).count():
-                shutil.rmtree(path)
+                drop_dir(path)
                 shutil.rmtree(tmp)
             else:
                 swap_aside(tmp, path)
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
 
-    _restore_aside(table_dir)
-    for name in os.listdir(table_dir) if os.path.isdir(table_dir) else ():
-        if name.startswith(".") and ".old-" in name:  # a chunk's aside
-            _restore_aside(os.path.join(table_dir, name[1:].split(".old-")[0]))
-    parts = _partition_dirs(table_dir)
+    table_dir = os.path.normpath(table_dir)
+    repair(table_dir)
+    parts = day_partitions(table_dir)
     if not parts:
-        table_dir = table_dir.rstrip("/")
         rewrite(table_dir, drop_if_empty=False)
         return
-
     lo, hi = _as_datetime(start), _as_datetime(end)
     one_day = datetime.timedelta(days=1)
     for day, path in parts:
-        p_lo = _as_datetime(day)
-        p_hi_excl = p_lo + one_day
-        if hi < p_lo or lo >= p_hi_excl:
+        d_lo = _as_datetime(day)
+        if hi < d_lo or lo >= d_lo + one_day:
             continue  # fully surviving: never touched
-        if lo <= p_lo and hi >= p_hi_excl - datetime.timedelta(
+        if lo <= d_lo and hi >= d_lo + one_day - datetime.timedelta(
             microseconds=1
         ):
-            shutil.rmtree(path)  # fully doomed: pure directory drop
-            continue
-        rewrite(path, drop_if_empty=True)  # boundary chunk: just its rows
+            drop_dir(path)  # fully doomed: one directory drop
+        else:
+            rewrite(path, drop_if_empty=True)  # boundary day: its rows
 
 
 def export_json(df: DataFrame, out_dir: str) -> None:
@@ -534,17 +674,18 @@ def apply_retention(
     """S11 — retention policy: drop rows older than ``horizon``
     (02-create-tables.sh:180-186 auto-drops 30-90-day-old chunks).
 
-    On a ``write_partitioned`` table this needs no scan at all — the
-    doomed range is resolved from partition directory names and
-    ``delete_range`` turns it into directory drops (plus at most one
-    boundary-chunk rewrite).  Unpartitioned tables pay one min(ts)
-    scan and the full-table rewrite."""
-    parts = _partition_dirs(table_dir)
+    On a day-partitioned table this needs no scan at all — the doomed
+    range starts at the first day directory, and ``delete_range`` turns
+    it into directory drops (plus at most one boundary-day rewrite).
+    Unpartitioned tables pay one min(ts) scan and the full-table
+    rewrite."""
+    from .layout import day_partitions
+
+    repair(table_dir)
+    parts = day_partitions(table_dir)
     if parts:
-        if parts[0][0] <= _as_datetime(horizon).date():
-            delete_range(
-                spark, table_dir, ts_col, _as_datetime(parts[0][0]), horizon
-            )
+        first = _as_datetime(parts[0][0])
+        delete_range(spark, table_dir, ts_col, first, horizon)
         return
     df = spark.read.parquet(table_dir)
     lo = df.agg(F.min(ts_col)).collect()[0][0]

@@ -547,9 +547,9 @@ def start_events_bucketed_channel(
         from ..sources.layout import compact_bucketed_table
 
         compact_bucketed_table(spark, loc)
-        # the compaction swapped files under the catalog table —
-        # invalidate the cached file index before the next insertInto
-        # batch's readers see the layout
+        # the compaction swapped the layout directory under the
+        # catalog table — invalidate the cached file index before the
+        # next insertInto batch's readers see the layout
         spark.catalog.refreshTable(tbl)
 
     run_batch = _maintained_layout_batch(

@@ -800,10 +800,12 @@ def _rebuild_layout(spark, sink_dir: str, loc: str, key: str, build_fn):
 
 
 def _publish_rebuilt_layout(sink_dir: str, loc: str, tmp_loc: str) -> None:
-    """Markers + rename-aside swap (`sinks.swap_aside`) of a rebuilt
-    layout.  Published batch ids come from the O(#commits) manifest
-    metadata, never a data-sized distinct over the committed rows."""
-    from ..sources.sinks import log_versions, swap_aside
+    """Markers + rename-aside swap (`sinks.swap_aside`, after
+    `sinks.repair`) of a rebuilt layout.  Published batch ids come from
+    the O(#commits) manifest metadata, never a data-sized distinct over
+    the committed rows."""
+    from ..sources.sinks import log_versions, repair, swap_aside
 
+    repair(loc)
     _mark_published(tmp_loc, log_versions(sink_dir))
     swap_aside(tmp_loc, loc)

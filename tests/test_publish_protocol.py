@@ -16,6 +16,11 @@
   imports only ``registry``, ``goldens``, ``oracle_sql`` and
   ``fragments`` of ``plans/``, all at module top, and no package module
   outside ``plans/`` imports a plan module.
+- A live directory is replaced through ``sources/sinks.py``
+  (``swap_aside``, ``drop_dir``, ``repair``): the aside and manifest
+  literals live only there, the ``day=`` partition naming in one
+  module, and no other ``sources/`` code but ``scratch.build_once``
+  calls ``os.rename``.
 
 Pure text scan of the package sources, no Spark.
 """
@@ -31,6 +36,8 @@ PACKAGE = "streaming_forex_data_pipeline_spark"
 SCRATCH = os.path.join(PACKAGE, "sources", "scratch.py")
 MEMO = os.path.join(PACKAGE, "session.py")
 MEDIA = os.path.join(PACKAGE, "llm", "multimodal.py")
+SINKS = os.path.join(PACKAGE, "sources", "sinks.py")
+LAYOUT = os.path.join(PACKAGE, "sources", "layout.py")
 
 _SUCCESS_GATE = re.compile(
     r"""["']_SUCCESS["']\)\.exists\(\)|exists\([^)]*["']_SUCCESS["']"""
@@ -353,4 +360,123 @@ def start_video_signature_channel(spark, sf_dir):
     ]
     assert _plan_import_faults(corpus_stream, stream) == [
         f"{corpus_stream}:4 modal_q (outside plans/)",
+    ]
+
+
+#: an aside name (``.old-``, ``_old-``; not ``threshold-``) or the swap
+#: manifest
+_ASIDE_LITERAL = re.compile(r"(?<![A-Za-z])old-|_MANIFEST")
+
+
+def _swap_sites(rel: str, text: str) -> list[str]:
+    """``rel:owner kind`` for each swap-protocol site in code, named by
+    its enclosing top-level definition: an ``aside`` literal (an
+    ``old-`` name or ``_MANIFEST``), a ``day=`` literal and an
+    ``os.rename`` call.  Docstrings are prose and are skipped."""
+    tree = ast.parse(text)
+    docs = {
+        id(n.body[0].value)
+        for n in ast.walk(tree)
+        if isinstance(
+            n, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        )
+        and n.body
+        and isinstance(n.body[0], ast.Expr)
+        and isinstance(n.body[0].value, ast.Constant)
+    }
+    sites = []
+    for top in tree.body:
+        owner = getattr(top, "name", "<module>")
+        for node in ast.walk(top):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if id(node) in docs:
+                    continue
+                if _ASIDE_LITERAL.search(node.value):
+                    sites.append((node.lineno, f"{rel}:{owner} aside"))
+                if "day=" in node.value:
+                    sites.append((node.lineno, f"{rel}:{owner} day="))
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "rename"
+                and getattr(node.func.value, "id", None) == "os"
+            ):
+                sites.append((node.lineno, f"{rel}:{owner} os.rename"))
+    return [site for _, site in sorted(sites)]
+
+
+def test_live_directories_are_replaced_through_sinks():
+    sites = [
+        site
+        for rel, text in _package_sources()
+        for site in _swap_sites(rel, text)
+    ]
+
+    def modules(kind):
+        return {s.split(":")[0] for s in sites if s.endswith(" " + kind)}
+
+    assert modules("aside") == {SINKS}, (
+        "aside/manifest literals outside sources/sinks.py (publish "
+        f"through sinks.swap_aside): {sorted(s for s in sites if 'aside' in s)}"
+    )
+    assert len(modules("day=")) == 1, (
+        f"day= partition naming in several modules: {modules('day=')}"
+    )
+    renames = {
+        s.rsplit(" ", 1)[0]
+        for s in sites
+        if s.endswith(" os.rename")
+        and s.startswith(os.path.join(PACKAGE, "sources", ""))
+        and not s.startswith(SINKS + ":")
+    }
+    assert renames <= {f"{SCRATCH}:build_once"}, (
+        "os.rename in sources/ outside sinks.py and scratch.build_once "
+        f"(swap through sinks.swap_aside): {sorted(renames)}"
+    )
+
+
+def test_swap_gate_sees_the_hand_rolled_swaps():
+    """The scan flags each shape the one swap replaced (cut from the
+    layout module before it): the day compaction's own aside, manifest
+    and rename pair, and the bucketed compaction's per-bucket aside."""
+    sample = """
+def compact_day_partitions(spark, loc, max_files_per_day=1):
+    \"\"\"Rename-aside, with ``_old-*`` leftovers.\"\"\"
+    repair = repair_day_maintenance(loc)
+    for entry in sorted(os.listdir(loc)):
+        day_dir = os.path.join(loc, entry)
+        if not entry.startswith("day=") or not os.path.isdir(day_dir):
+            continue
+        tmp = os.path.join(loc, f"_compact-{uuid.uuid4().hex}")
+        spark.read.parquet(*files).coalesce(1).write.parquet(tmp)
+        old = os.path.join(loc, f"_old-{uuid.uuid4().hex}")
+        _write_day_manifest(day_dir, entry, snapshot, repl)
+        os.rename(day_dir, old)
+        try:
+            os.rename(tmp, day_dir)
+        except BaseException:
+            os.rename(old, day_dir)
+            raise
+
+
+def compact_bucketed_table(spark, loc, max_files_per_bucket=1):
+    for b, files in sorted(by_bucket.items()):
+        old = os.path.join(loc, f"_old-{uuid.uuid4().hex}")
+        os.makedirs(old)
+        with open(os.path.join(old, "_MANIFEST"), "w") as fh:
+            fh.write(final_name)
+        for f in files:
+            os.rename(os.path.join(loc, f), os.path.join(old, f))
+"""
+    day = f"{LAYOUT}:compact_day_partitions"
+    bucketed = f"{LAYOUT}:compact_bucketed_table"
+    assert _swap_sites(LAYOUT, sample) == [
+        f"{day} day=",
+        f"{day} aside",
+        f"{day} os.rename",
+        f"{day} os.rename",
+        f"{day} os.rename",
+        f"{bucketed} aside",
+        f"{bucketed} aside",
+        f"{bucketed} os.rename",
     ]

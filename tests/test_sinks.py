@@ -9,6 +9,10 @@ from pyspark.sql import functions as F
 
 from streaming_forex_data_pipeline_spark.operators import normalize as N
 from streaming_forex_data_pipeline_spark.sources import sinks as S
+from streaming_forex_data_pipeline_spark.sources.layout import (
+    day_partitions,
+    write_day_partitioned,
+)
 from streaming_forex_data_pipeline_spark.sources.tables import load_table
 
 
@@ -82,13 +86,13 @@ def _file_identities(root):
 
 
 def _fail_swap_in(monkeypatch):
-    """Make every rename that publishes a ``.del-*`` rewrite fail."""
+    """Make every rename that publishes a ``.new-*`` rewrite fail."""
     import os
 
     real_rename = os.rename
 
     def failing_swap(src, dst):
-        if ".del-" in os.path.basename(src):
+        if ".new-" in os.path.basename(src):
             raise OSError("injected swap failure")
         return real_rename(src, dst)
 
@@ -98,7 +102,9 @@ def _fail_swap_in(monkeypatch):
 def _siblings(path):
     import glob
 
-    return glob.glob(f"{path}*.del-*") + glob.glob(f"{path}*.old-*")
+    return [
+        p for kind in ("new", "old", "drop") for p in glob.glob(f"{path}*.{kind}-*")
+    ]
 
 
 def test_range_delete_failed_swap_keeps_table(spark, tmp_path, monkeypatch):
@@ -134,7 +140,7 @@ def test_partitioned_delete_range_failed_swap_keeps_chunk(
     t0 = dt.datetime(2024, 1, 1)
     rows = [("S", t0 + dt.timedelta(days=d, hours=h), float(d * 24 + h))
             for d in range(2) for h in range(4)]
-    S.write_partitioned(_candles(spark, rows), tdir)
+    write_day_partitioned(_candles(spark, rows), tdir)
     _fail_swap_in(monkeypatch)
     with pytest.raises(OSError, match="injected swap failure"):
         S.delete_range(
@@ -143,7 +149,7 @@ def test_partitioned_delete_range_failed_swap_keeps_chunk(
         )
     left = sorted(r["close"] for r in spark.read.parquet(tdir).collect())
     assert left == sorted(r[2] for r in rows)
-    assert _siblings(os.path.join(tdir, ".p_date")) == []
+    assert _siblings(os.path.join(tdir, ".day")) == []
 
 
 def test_range_delete_restores_table_a_killed_swap_left_aside(spark, tmp_path):
@@ -166,15 +172,15 @@ def test_range_delete_restores_table_a_killed_swap_left_aside(spark, tmp_path):
     part = str(tmp_path / "part")
     part_rows = [("S", t0 + dt.timedelta(days=d, hours=h), float(d * 24 + h))
                  for d in range(3) for h in range(4)]
-    S.write_partitioned(_candles(spark, part_rows), part)
-    day = os.path.join(part, "p_date=2024-01-02")
-    os.rename(day, os.path.join(part, ".p_date=2024-01-02.old-deadbeef"))
+    write_day_partitioned(_candles(spark, part_rows), part)
+    day = os.path.join(part, "day=2024-01-02")
+    os.rename(day, os.path.join(part, ".day=2024-01-02.old-deadbeef"))
     S.delete_range(
         spark, part, "ts", dt.datetime(2024, 1, 3), dt.datetime(2024, 1, 3, 1)
     )
     left = sorted(r["close"] for r in spark.read.parquet(part).collect())
     assert left == sorted(r[2] for r in part_rows if r[2] not in (48.0, 49.0))
-    assert _siblings(os.path.join(part, ".p_date")) == []
+    assert _siblings(os.path.join(part, ".day")) == []
 
 
 def test_layout_publish_restores_layout_a_killed_swap_left_aside(
@@ -228,21 +234,21 @@ def test_partitioned_retention_drops_only_old_chunks(spark, tmp_path):
         for d in range(5)
         for h in range(4)
     ]
-    S.write_partitioned(_candles(spark, rows), tdir)
-    assert len(S._partition_dirs(tdir)) == 5
+    write_day_partitioned(_candles(spark, rows), tdir)
+    assert len(day_partitions(tdir)) == 5
 
     before = _file_identities(tdir)
     surviving = {
         p: ident
         for p, ident in before.items()
-        if not (p.startswith("p_date=2024-01-01") or p.startswith("p_date=2024-01-02"))
+        if not (p.startswith("day=2024-01-01") or p.startswith("day=2024-01-02"))
     }
     # horizon at end of Jan 2: days 1-2 expire as whole-directory drops
     S.apply_retention(
         spark, tdir, "ts", dt.datetime(2024, 1, 2, 23, 59, 59)
     )
-    assert not os.path.exists(os.path.join(tdir, "p_date=2024-01-01"))
-    assert not os.path.exists(os.path.join(tdir, "p_date=2024-01-02"))
+    assert not os.path.exists(os.path.join(tdir, "day=2024-01-01"))
+    assert not os.path.exists(os.path.join(tdir, "day=2024-01-02"))
     after = _file_identities(tdir)
     assert after == surviving  # byte-for-byte the same files, untouched
     left = sorted(r["close"] for r in spark.read.parquet(tdir).collect())
@@ -266,12 +272,12 @@ def test_partitioned_delete_range_boundary_chunk_rewrite(spark, tmp_path):
         for d in range(4)
         for h in range(4)
     ]
-    S.write_partitioned(_candles(spark, rows), tdir)
+    write_day_partitioned(_candles(spark, rows), tdir)
     before = _file_identities(tdir)
     untouched = {
         p: ident
         for p, ident in before.items()
-        if not (p.startswith("p_date=2024-01-02") or p.startswith("p_date=2024-01-03"))
+        if not (p.startswith("day=2024-01-02") or p.startswith("day=2024-01-03"))
     }
     # [Jan 2 00:00, Jan 3 01:00]: Jan 2 fully doomed (directory drop),
     # Jan 3 is a boundary chunk (rewrite keeps hours 2-3)
@@ -282,11 +288,11 @@ def test_partitioned_delete_range_boundary_chunk_rewrite(spark, tmp_path):
         dt.datetime(2024, 1, 2),
         dt.datetime(2024, 1, 3, 1, 0, 0),
     )
-    assert not os.path.exists(os.path.join(tdir, "p_date=2024-01-02"))
-    assert os.path.exists(os.path.join(tdir, "p_date=2024-01-03"))
+    assert not os.path.exists(os.path.join(tdir, "day=2024-01-02"))
+    assert os.path.exists(os.path.join(tdir, "day=2024-01-03"))
     after = _file_identities(tdir)
     assert {
-        p: i for p, i in after.items() if not p.startswith("p_date=2024-01-03")
+        p: i for p, i in after.items() if not p.startswith("day=2024-01-03")
     } == untouched
     left = sorted(r["close"] for r in spark.read.parquet(tdir).collect())
     assert left == [0.0, 1.0, 2.0, 3.0, 50.0, 51.0, 72.0, 73.0, 74.0, 75.0]
@@ -301,16 +307,62 @@ def test_partitioned_delete_range_empties_boundary_chunk(spark, tmp_path):
     t0 = dt.datetime(2024, 1, 1)
     rows = [("S", t0 + dt.timedelta(days=d, hours=h), float(d * 24 + h))
             for d in range(2) for h in range(4)]
-    S.write_partitioned(_candles(spark, rows), tdir)
+    write_day_partitioned(_candles(spark, rows), tdir)
     # covers every row of Jan 2 that exists (hours 0-3) but not the
     # whole day, so it takes the boundary-rewrite path and empties it
     S.delete_range(
         spark, tdir, "ts",
         dt.datetime(2024, 1, 2), dt.datetime(2024, 1, 2, 3, 0, 0),
     )
-    assert not os.path.exists(os.path.join(tdir, "p_date=2024-01-02"))
+    assert not os.path.exists(os.path.join(tdir, "day=2024-01-02"))
     left = sorted(r["close"] for r in spark.read.parquet(tdir).collect())
     assert left == [0.0, 1.0, 2.0, 3.0]
+
+
+def test_whole_day_drop_is_atomic(spark, tmp_path, monkeypatch):
+    """A fully doomed day leaves in one rename: a delete that dies after
+    removing one of the day's files leaves readers all of that day's
+    rows or none of them, never part of the day, and the other days'
+    files untouched; the next repair sweeps the leftover."""
+    import os
+    import shutil
+
+    import pytest
+
+    tdir = str(tmp_path / "part_atomic")
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [("S", t0 + dt.timedelta(days=d, hours=h), float(d * 24 + h))
+            for d in range(3) for h in range(4)]
+    # two writes: every day holds two files
+    write_day_partitioned(_candles(spark, [r for r in rows if r[2] % 24 < 2]), tdir)
+    write_day_partitioned(
+        _candles(spark, [r for r in rows if r[2] % 24 >= 2]), tdir, mode="append"
+    )
+    doomed = os.path.join(tdir, "day=2024-01-02")
+    assert len([f for f in os.listdir(doomed) if f.endswith(".parquet")]) >= 2
+    untouched = {
+        p: i for p, i in _file_identities(tdir).items() if "2024-01-02" not in p
+    }
+
+    def dying_rmtree(path, *args, **kwargs):
+        victim = min(f for f in os.listdir(path) if f.endswith(".parquet"))
+        os.remove(os.path.join(path, victim))
+        raise OSError("killed mid-delete")
+
+    monkeypatch.setattr(shutil, "rmtree", dying_rmtree)
+    with pytest.raises(OSError, match="killed mid-delete"):
+        S.delete_range(
+            spark, tdir, "ts",
+            dt.datetime(2024, 1, 2), dt.datetime(2024, 1, 2, 23, 59, 59, 999999),
+        )
+    monkeypatch.undo()
+    closes = [r["close"] for r in spark.read.parquet(tdir).collect()]
+    assert sorted(c for c in closes if 24 <= c < 48) in ([], [24.0, 25.0, 26.0, 27.0])
+    assert {
+        p: i for p, i in _file_identities(tdir).items() if "2024-01-02" not in p
+    } == untouched
+    assert S.repair(tdir)["swept"]
+    assert _siblings(os.path.join(tdir, ".day")) == []
 
 
 def test_export_json(spark, tmp_path):

@@ -1313,8 +1313,8 @@ def test_compact_bucketed_table_preserves_content_and_contract(
     from streaming_forex_data_pipeline_spark.sources.layout import (
         _BUCKET_FILE_RE,
         compact_bucketed_table,
-        repair_bucketed_compaction,
     )
+    from streaming_forex_data_pipeline_spark.sources.sinks import repair
     from streaming_forex_data_pipeline_spark.sources.tables import load_table
     from streaming_forex_data_pipeline_spark.streaming.analytics_stream import (
         start_events_bucketed_channel,
@@ -1399,28 +1399,27 @@ def test_compact_bucketed_table_preserves_content_and_contract(
     spark.catalog.refreshTable(tbl)
     assert spark.table(tbl).count() == truth + one.count()
 
-    # crash repair, restore branch: aside a live bucket file behind a
+    # crash repair, restore branch: the layout set aside behind a
     # manifest naming a replacement that never went live
     victim_bucket, (victim,) = next(iter(live_by_bucket().items()))
-    aside = os.path.join(loc, "_old-deadbeef")
-    os.makedirs(aside)
-    with open(os.path.join(aside, "_MANIFEST"), "w") as fh:
-        fh.write("part-00000-neverwritten_99999.c000.snappy.parquet")
-    os.rename(os.path.join(loc, victim), os.path.join(aside, victim))
-    rep = repair_bucketed_compaction(loc)
-    assert rep["restored"] == 1
+    aside = f"{loc}.old-deadbeef"
+    with open(os.path.join(loc, "_MANIFEST"), "w") as fh:
+        fh.write("repl:part-00000-neverwritten_99999.c000.snappy.parquet")
+    os.rename(loc, aside)
+    rep = repair(loc)
+    assert rep["restored"] == [os.path.basename(loc)]
     assert os.path.exists(os.path.join(loc, victim))
     # crash repair, completed branch: aside a COPY whose manifest names
     # a file that IS live — the redundant aside must be dropped
-    aside2 = os.path.join(loc, "_old-cafef00d")
+    aside2 = f"{loc}.old-cafef00d"
     os.makedirs(aside2)
     with open(os.path.join(aside2, "_MANIFEST"), "w") as fh:
-        fh.write(victim)
+        fh.write(f"repl:{victim}\nsnap:stale-copy.parquet")
     shutil.copy(
         os.path.join(loc, victim), os.path.join(aside2, "stale-copy.parquet")
     )
-    rep2 = repair_bucketed_compaction(loc)
-    assert rep2 == {"restored": 0, "completed": 1}
+    rep2 = repair(loc)
+    assert (rep2["restored"], rep2["swept"]) == ([], [os.path.basename(aside2)])
     assert not os.path.isdir(aside2)
     spark.catalog.refreshTable(tbl)
     assert spark.table(tbl).count() == truth + one.count()
@@ -2167,11 +2166,11 @@ def test_day_layout_maintenance_crash_and_live_append_safety(
     spark, sf_dir, tmp_path
 ):
     """The advice-found maintenance hazards pinned: (a) crash leftovers
-    are underscore-named, so Spark partition discovery never parses
+    are dot-prefixed siblings, so Spark partition discovery never parses
     them as bogus day values, and the next maintenance call sweeps
     them; (b) a file appended into a day AFTER the compaction snapshot
     but before the aside-rename survives the rewrite (carried into the
-    compacted day, not rmtree'd with the aside copy); (c) the sweep is
+    compacted day, not rmtree'd with the aside copy); (c) the repair is
     callable standalone."""
     import glob
     import os
@@ -2181,9 +2180,9 @@ def test_day_layout_maintenance_crash_and_live_append_safety(
 
     from streaming_forex_data_pipeline_spark.sources.layout import (
         compact_day_partitions,
-        sweep_maintenance_leftovers,
         write_day_partitioned,
     )
+    from streaming_forex_data_pipeline_spark.sources.sinks import repair
     from streaming_forex_data_pipeline_spark.sources.tables import load_table
 
     e = load_table(spark, sf_dir, "events").limit(4000)
@@ -2198,23 +2197,22 @@ def test_day_layout_maintenance_crash_and_live_append_safety(
     # neither (row count and day-value set unchanged), and compaction
     # must sweep them.
     victim = os.path.join(loc, day_dirs[0])
-    aside_a = os.path.join(loc, "_old-deadbeef")
+    aside_a = os.path.join(loc, f".{day_dirs[0]}.old-deadbeef")
     shutil.copytree(victim, aside_a)
-    # self-describing aside (manifest names the live day, the live
-    # replacement files, and the snapshot) — the repair's "completed"
-    # branch, the only kind the sweep may delete
+    # self-describing aside (its name names the live day; its manifest
+    # the live replacement files and the snapshot) — the repair's
+    # "completed" branch, the only kind the sweep may delete
     files_a = sorted(
         f for f in os.listdir(aside_a) if f.endswith(".parquet")
     )
     with open(os.path.join(aside_a, "_MANIFEST"), "w") as fh:
         fh.write(
             "\n".join(
-                [day_dirs[0]]
-                + [f"repl:{f}" for f in files_a]
+                [f"repl:{f}" for f in files_a]
                 + [f"snap:{f}" for f in files_a]
             )
         )
-    shutil.copytree(victim, os.path.join(loc, "_compact-deadbeef"))
+    shutil.copytree(victim, os.path.join(loc, f".{day_dirs[0]}.new-deadbeef"))
     visible = spark.read.parquet(loc)
     assert visible.count() == truth_rows
     assert visible.select("day").distinct().count() == len(day_dirs)
@@ -2236,7 +2234,7 @@ def test_day_layout_maintenance_crash_and_live_append_safety(
     def racing_rename(src, dst):
         if (
             not injected["done"]
-            and os.path.basename(dst).startswith("_old-")
+            and ".old-" in os.path.basename(dst)
         ):
             shutil.copy(late_file, os.path.join(src, "late-append.parquet"))
             injected["done"] = True
@@ -2251,7 +2249,7 @@ def test_day_layout_maintenance_crash_and_live_append_safety(
     assert stats["days_compacted"] >= 1
     # crash leftovers from (a) were swept
     assert not [
-        d for d in os.listdir(loc) if d.startswith(("_old-", "_compact-"))
+        d for d in os.listdir(loc) if ".old-" in d or ".new-" in d
     ]
     # the late-appended file was carried into the rewritten day
     assert glob.glob(os.path.join(loc, "day=*", "late-append.parquet"))
@@ -2259,9 +2257,9 @@ def test_day_layout_maintenance_crash_and_live_append_safety(
     assert final.count() == truth_rows + 3
     assert final.exceptAll(truth).count() == 3
 
-    # (c) sweep is callable standalone and returns what it removed
-    os.makedirs(os.path.join(loc, "_backfill-cafe"))
-    assert sweep_maintenance_leftovers(loc) == ["_backfill-cafe"]
+    # (c) repair is callable standalone and returns what it removed
+    os.makedirs(os.path.join(loc, f".{day_dirs[0]}.new-cafe"))
+    assert repair(loc)["swept"] == [f".{day_dirs[0]}.new-cafe"]
 
 
 def test_day_layout_retention_and_backfill(spark, sf_dir, tmp_path):
@@ -2339,22 +2337,30 @@ def test_day_layout_retention_and_backfill(spark, sf_dir, tmp_path):
         drop_day_partitions(loc, "Jan 5")
 
 
-def test_repair_day_maintenance_restores_crashed_swap(
-    spark, sf_dir, tmp_path
-):
+def test_repair_resolves_crashed_swaps(spark, sf_dir, tmp_path):
     """The advice-found (round 12) data-loss window pinned: a HARD
-    crash between rename(day, _old) and rename(_compact, day) leaves
-    the day's ONLY copy in the aside.  The manifest (written into the
-    day dir before the rename, so it rides along atomically) lets
-    repair restore it; the old unconditional sweep deleted it.  Also
-    pinned: the completed branch replays the late-append carry, and a
-    manifest-less aside is NEVER deleted (unidentifiable)."""
+    crash between swap_aside's two renames leaves the day's ONLY copy
+    in the aside.  The manifest (written into the day dir before the
+    rename, so it rides along atomically) lets `sinks.repair` restore
+    it; the old unconditional sweep deleted it.  Also pinned: the
+    completed branch replays the late-append carry, an appender-
+    recreated day merge-restores, and an aside whose manifest is
+    missing, empty or names no replacement is NEVER deleted
+    (unidentifiable) — nor restored beside the live compacted
+    replacement of a bucketed layout, which would duplicate rows."""
     import os
     import shutil
+    import uuid
+
+    import pytest
 
     from streaming_forex_data_pipeline_spark.sources.layout import (
-        repair_day_maintenance,
+        write_bucketed_events,
         write_day_partitioned,
+    )
+    from streaming_forex_data_pipeline_spark.sources.sinks import (
+        repair,
+        swap_aside,
     )
     from streaming_forex_data_pipeline_spark.sources.tables import load_table
 
@@ -2364,6 +2370,9 @@ def test_repair_day_maintenance_restores_crashed_swap(
     truth_rows = spark.read.parquet(loc).count()
     day_dirs = sorted(d for d in os.listdir(loc) if d.startswith("day="))
 
+    def aside_of(day, tag):
+        return os.path.join(loc, f".{day}.old-{tag}")
+
     # --- restore branch: reconstruct the exact mid-swap crash state
     victim = day_dirs[0]
     vic_dir = os.path.join(loc, victim)
@@ -2371,19 +2380,18 @@ def test_repair_day_maintenance_restores_crashed_swap(
     with open(os.path.join(vic_dir, "_MANIFEST"), "w") as fh:
         fh.write(
             "\n".join(
-                [victim, "repl:never-went-live.parquet"]
-                + [f"snap:{f}" for f in snap]
+                ["repl:never-went-live.parquet"] + [f"snap:{f}" for f in snap]
             )
         )
-    os.rename(vic_dir, os.path.join(loc, "_old-crashed"))
-    os.makedirs(os.path.join(loc, "_compact-halfbuilt"))
+    os.rename(vic_dir, aside_of(victim, "crashed"))
+    os.makedirs(os.path.join(loc, f".{victim}.new-halfbuilt"))
 
     # --- completed branch with pending carry: replacement live, aside
     # holds the (now stale) snapshot plus one late-appended file
     day2 = day_dirs[1]
     d2_dir = os.path.join(loc, day2)
     snap2 = sorted(f for f in os.listdir(d2_dir) if f.endswith(".parquet"))
-    aside2 = os.path.join(loc, "_old-completed")
+    aside2 = aside_of(day2, "completed")
     os.makedirs(aside2)
     for f in snap2:
         shutil.copy(os.path.join(d2_dir, f), os.path.join(aside2, f))
@@ -2397,14 +2405,11 @@ def test_repair_day_maintenance_restores_crashed_swap(
     # the replacement name IS live in the day dir -> truly completed
     with open(os.path.join(aside2, "_MANIFEST"), "w") as fh:
         fh.write(
-            "\n".join(
-                [day2, f"repl:{snap2[0]}"]
-                + [f"snap:{f}" for f in snap2]
-            )
+            "\n".join([f"repl:{snap2[0]}"] + [f"snap:{f}" for f in snap2])
         )
 
     # --- unidentifiable aside: no manifest — must survive untouched
-    unident = os.path.join(loc, "_old-anonymous")
+    unident = aside_of(day2, "anonymous")
     os.makedirs(unident)
     shutil.copy(
         os.path.join(d2_dir, snap2[0]),
@@ -2427,15 +2432,14 @@ def test_repair_day_maintenance_restores_crashed_swap(
         f for f in os.listdir(d4_dir) if f.endswith(".parquet")
     )
     d4_rows = spark.read.parquet(d4_dir).count()
-    aside4 = os.path.join(loc, "_old-recreated")
+    aside4 = aside_of(day4, "recreated")
     os.makedirs(aside4)
     for f in snap4:
         os.rename(os.path.join(d4_dir, f), os.path.join(aside4, f))
     with open(os.path.join(aside4, "_MANIFEST"), "w") as fh:
         fh.write(
             "\n".join(
-                [day4, "repl:never-went-live.parquet"]
-                + [f"snap:{f}" for f in snap4]
+                ["repl:never-went-live.parquet"] + [f"snap:{f}" for f in snap4]
             )
         )
     append4 = spark.read.parquet(
@@ -2446,7 +2450,7 @@ def test_repair_day_maintenance_restores_crashed_swap(
 
     # --- malformed manifest (power loss zeroed the file): must be
     # reported unidentified, never crash the repair, never delete
-    empty_aside = os.path.join(loc, "_old-empty")
+    empty_aside = aside_of(day2, "empty")
     os.makedirs(empty_aside)
     open(os.path.join(empty_aside, "_MANIFEST"), "w").close()
     shutil.copy(
@@ -2459,29 +2463,30 @@ def test_repair_day_maintenance_restores_crashed_swap(
     # False and a completed swap would merge-restore stale snapshot
     # rows — must be treated as unidentifiable instead, and the
     # writer must refuse to produce one
-    norepl_aside = os.path.join(loc, "_old-norepl")
+    norepl_aside = aside_of(day2, "norepl")
     os.makedirs(norepl_aside)
     shutil.copy(
         os.path.join(d2_dir, snap2[0]),
         os.path.join(norepl_aside, "stale-snap.parquet"),
     )
     with open(os.path.join(norepl_aside, "_MANIFEST"), "w") as fh:
-        fh.write("\n".join([day2, "snap:stale-snap.parquet"]))
-    import pytest
+        fh.write("snap:stale-snap.parquet")
+    no_data = tmp_path / "no_data_replacement"
+    no_data.mkdir()
+    (no_data / "_SUCCESS").touch()
+    with pytest.raises(ValueError, match="no data file"):
+        swap_aside(str(no_data), d2_dir)
 
-    from streaming_forex_data_pipeline_spark.sources.layout import (
-        _write_day_manifest,
-    )
-    with pytest.raises(ValueError, match="empty replacements"):
-        _write_day_manifest(d2_dir, day2, {"a.parquet"}, set())
-
-    rep = repair_day_maintenance(loc)
+    rep = repair(loc)
     assert rep["restored"] == [victim, day4]
-    assert sorted(rep["swept"]) == ["_compact-halfbuilt", "_old-completed"]
+    assert sorted(rep["swept"]) == sorted(
+        [f".{victim}.new-halfbuilt", os.path.basename(aside2)]
+    )
     assert rep["carried"] == 1
-    assert rep["unidentified"] == [
-        "_old-anonymous", "_old-empty", "_old-norepl",
+    unidentified = [
+        os.path.basename(p) for p in (unident, empty_aside, norepl_aside)
     ]
+    assert rep["unidentified"] == unidentified
     # the no-repl aside and its file survive untouched
     assert os.path.exists(
         os.path.join(norepl_aside, "stale-snap.parquet")
@@ -2513,13 +2518,29 @@ def test_repair_day_maintenance_restores_crashed_swap(
         == truth_rows + late_rows + appender_rows
     )
     # idempotent
-    rep2 = repair_day_maintenance(loc)
+    rep2 = repair(loc)
     assert rep2 == {
         "swept": [],
         "restored": [],
         "carried": 0,
-        "unidentified": ["_old-anonymous", "_old-empty", "_old-norepl"],
+        "unidentified": unidentified,
     }
+
+    # --- bucketed layout: an aside with an EMPTY manifest beside its
+    # live compacted replacement is unidentified too — left in place,
+    # reported, and the table's rows are not duplicated
+    tbl = f"events_repair_{uuid.uuid4().hex[:8]}"
+    bloc = str(tmp_path / "bucketed")
+    write_bucketed_events(spark, e, tbl, bloc)
+    bucketed_rows = spark.table(tbl).count()
+    baside = f"{bloc}.old-empty"
+    shutil.copytree(bloc, baside)
+    open(os.path.join(baside, "_MANIFEST"), "w").close()
+    assert repair(bloc)["unidentified"] == [os.path.basename(baside)]
+    assert os.path.isdir(baside)
+    spark.catalog.refreshTable(tbl)
+    assert spark.table(tbl).count() == bucketed_rows
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
 def test_retention_and_backfill_under_live_append(spark, sf_dir, tmp_path):
@@ -2564,9 +2585,7 @@ def test_retention_and_backfill_under_live_append(spark, sf_dir, tmp_path):
     injected = {"done": False}
 
     def racing_rename(src, dst):
-        if not injected["done"] and os.path.basename(dst).startswith(
-            "_old-"
-        ):
+        if not injected["done"] and ".old-" in os.path.basename(dst):
             shutil.copy(
                 late_file, os.path.join(src, "live-append.parquet")
             )
@@ -2598,9 +2617,7 @@ def test_retention_and_backfill_under_live_append(spark, sf_dir, tmp_path):
     injected["done"] = False
 
     def racing_drop_rename(src, dst):
-        if not injected["done"] and os.path.basename(dst).startswith(
-            "_drop-"
-        ):
+        if not injected["done"] and ".drop-" in os.path.basename(dst):
             shutil.copy(
                 late_file, os.path.join(src, "expired-append.parquet")
             )
@@ -2614,7 +2631,7 @@ def test_retention_and_backfill_under_live_append(spark, sf_dir, tmp_path):
         os.rename = real_rename
     assert injected["done"] and dropped == [days[0]]
     assert not os.path.isdir(os.path.join(loc, f"day={days[0]}"))
-    assert not [d for d in os.listdir(loc) if d.startswith("_drop-")]
+    assert not [d for d in os.listdir(loc) if ".drop-" in d]
     assert {
         f: os.stat(os.path.join(keep_dir, f)).st_ino
         for f in os.listdir(keep_dir)
