@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..session import session_memo
 from ..sources.scratch import build_once, corpus_fingerprint, scratch_path
-from ..sources.tables import fan_out, load_table
+from ..sources.tables import fan_out, load_table, read_parquet, table_path
 from . import multimodal as MM
 from . import similarity as SIM
 
@@ -49,7 +49,7 @@ def media_payloads(spark, sf_dir: str, modality: str):
         d = load_table(spark, sf_dir, "documents")
         builders[modality](fan_out(d)).write.parquet(tmp)
 
-    return spark.read.parquet(build_once(out_dir, build))
+    return read_parquet(spark, build_once(out_dir, build))
 
 
 #: bump when any signature computation in llm/multimodal.py changes
@@ -96,7 +96,7 @@ def media_signatures(
     def build(tmp: str) -> None:
         builder(media_payloads(spark, sf_dir, modality)).write.parquet(tmp)
 
-    return spark.read.parquet(build_once(out_dir, build))
+    return read_parquet(spark, build_once(out_dir, build))
 
 
 # Algorithm-version token baked into the kNN-graph silver cache keys
@@ -141,7 +141,7 @@ def knn_graph_silver(
             .write.parquet(tmp)
         )
 
-    return spark.read.parquet(build_once(out_dir, build))
+    return read_parquet(spark, build_once(out_dir, build))
 
 
 def knn_union_graph_silver(
@@ -182,7 +182,7 @@ def knn_union_graph_silver(
             .write.parquet(tmp)
         )
 
-    return spark.read.parquet(build_once(out_dir, build))
+    return read_parquet(spark, build_once(out_dir, build))
 
 
 def shared_batch_walk(
@@ -209,6 +209,6 @@ def shared_batch_walk(
         spark,
         ("batch_walk", sf_dir, beam, steps),
         build,
-        sources=((sf_dir, "embeddings"),),
+        sources=(table_path(sf_dir, "embeddings"),),
         log=f"walk:b{beam}s{steps}",
     )

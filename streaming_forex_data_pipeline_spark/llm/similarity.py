@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_parquet
+
 
 def lit_double_array(values) -> Column:
     """array<double> literal built by ONE SQL parse instead of
@@ -1385,7 +1387,7 @@ def probe_ivf_silver(
     """Query the silver table: coarse-probe the centroids, scan only
     the probed ``cell=`` partitions (the IN-filter prunes at the file
     index, no data read outside them), exact cosine within."""
-    silver = spark.read.parquet(out_dir)
+    silver = read_parquet(spark, out_dir)
     probe = _probe_cells(emb, query, n_cells, nprobe, id_col, vec_col)
     q = query.select(
         F.col(vec_col).alias("qv"), norm(vec_col).alias("qn")

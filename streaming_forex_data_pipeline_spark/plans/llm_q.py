@@ -23,7 +23,7 @@ from ..llm.silvers import (
 )
 from ..llm.vocab import hll_fold_constants
 from ..sources.scratch import build_once, corpus_fingerprint, scratch_path
-from ..sources.tables import fan_out, load_table
+from ..sources.tables import fan_out, load_table, read_parquet
 from .fragments import by_doc_id
 from .goldens import golden_oracle as _golden_oracle
 from .oracle_sql import (
@@ -3055,7 +3055,7 @@ def _cached_kmeans_centroids(
         cents = SIM.kmeans_centroids(e, n_cells=n_cells, seed=seed)
         cents.coalesce(1).write.parquet(tmp)
 
-    return spark.read.parquet(build_once(out_dir, build))
+    return read_parquet(spark, build_once(out_dir, build))
 
 
 def _ensure_ivf_silver(spark: SparkSession, sf_dir: str) -> str:
@@ -3289,7 +3289,7 @@ ORDER BY cell
 )
 def ivf_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = _ensure_ivf_silver(spark, sf_dir)
-    silver = spark.read.parquet(out_dir)
+    silver = read_parquet(spark, out_dir)
     per = silver.groupBy(F.col("cell").cast("int").alias("cell")).agg(
         F.count(F.lit(1)).alias("n_vecs")
     )

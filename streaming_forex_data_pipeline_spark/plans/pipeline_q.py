@@ -43,7 +43,7 @@ from ..llm import similarity as SIM
 from ..llm.multimodal import VIDEO_EVERY_N, fid_clip, fid_frame, vid_fid
 from ..llm.silvers import media_signatures
 from ..sources.scratch import build_once, corpus_fingerprint, scratch_path
-from ..sources.tables import load_table
+from ..sources.tables import load_table, read_parquet
 from .fragments import large_order_customers_over, shipping_priority_over
 from .oracle_sql import _AFP_CTE, _VHASH_CTE, _lsh_bucket_sql
 from .registry import _REGISTRY, register
@@ -319,7 +319,7 @@ def _ensure_events_partitioned(spark: SparkSession, sf_dir: str) -> str:
     the time-keyed access path.  Same cache protocol as every silver:
     fingerprint-keyed location under the 0700 scratch root, published
     through `scratch.build_once`.  Readers go through
-    ``spark.read.parquet`` (path-based partition discovery), so no
+    `tables.read_parquet` (path-based partition discovery), so no
     catalog state outlives the session."""
     from ..sources.layout import write_day_partitioned
 
@@ -366,7 +366,7 @@ ORDER BY 1
 )
 def weekend_traffic_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     loc = _ensure_events_partitioned(spark, sf_dir)
-    part = spark.read.parquet(loc)
+    part = read_parquet(spark, loc)
     dim = (
         load_table(spark, sf_dir, "events")
         .select(

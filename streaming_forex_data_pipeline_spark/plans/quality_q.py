@@ -15,7 +15,13 @@ from ..operators import quality as Q
 from ..session import session_dir, session_memo
 from ..sources import sinks as SK
 from ..sources.layout import write_day_partitioned
-from ..sources.tables import CANDLES_CTE, candles_from_events, load_table
+from ..sources.tables import (
+    CANDLES_CTE,
+    candles_from_events,
+    load_table,
+    read_parquet,
+    table_path,
+)
 from .registry import register
 
 R = 6
@@ -676,7 +682,7 @@ def ingest_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         ("ingest_batches", sf_dir),
         lambda: _ingest_batches(spark, sf_dir),
-        sources=((sf_dir, "events"),),
+        sources=(table_path(sf_dir, "events"),),
     )
     # the returned frame reads the table lazily: it lives with the session
     table_dir = session_dir(spark, "ingest_cycle_")
@@ -736,7 +742,7 @@ def range_delete_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
         d0 + datetime.timedelta(days=3), datetime.time(12)
     )
     SK.delete_range(spark, table_dir, "ts", lo, hi)
-    surv = spark.read.parquet(table_dir)
+    surv = read_parquet(spark, table_dir)
     return (
         surv.groupBy(
             F.to_date("ts").cast("timestamp").alias("day")

@@ -202,25 +202,25 @@ def session_memo(
     key,
     build,
     *,
-    sources: tuple[tuple[str, str], ...] = (),
+    sources: tuple[str, ...] = (),
     log: str | None = None,
 ):
     """``build()``'s value for ``key``, built once per owner.
 
     The owner is a SparkSession (the entry lives as long as its
     application) or a DataFrame (held weakly; its entries go with it).
-    ``sources`` names the ``(sf_dir, table)`` inputs of the value: their
-    `corpus_fingerprint` is checked on every hit, and a rewritten source
+    ``sources`` names the parquet paths the value derives from: their
+    `listing_fingerprint` is checked on every hit, and a rewritten source
     releases the entry and rebuilds it.  Releasing unpersists a
     DataFrame value, with the entries hanging off it, and removes a
     `session_dir`; it happens when the entry goes stale, when a new
     application starts, and at exit.  A cold build with ``log`` set is
     logged under that name (`scratch.log_silver_build`)."""
-    from .sources.scratch import corpus_fingerprint, log_silver_build
+    from .sources.scratch import listing_fingerprint, log_silver_build
 
     with _memo_lock:
         entries = memo_entries(owner)
-        stamp = tuple(corpus_fingerprint(d, t) for d, t in sources)
+        stamp = tuple(listing_fingerprint(p) for p in sources)
         hit = entries.get(key)
         if hit is not None and hit[1] == stamp:
             return hit[0]

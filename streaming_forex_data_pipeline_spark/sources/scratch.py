@@ -174,31 +174,42 @@ def scratch_path(name: str) -> str:
     return os.path.join(user_scratch_root(), name + SILVER_MARK)
 
 
-def corpus_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
-    """CONTENT-HASH fingerprint of a source parquet listing (per-file
-    name + mtime_ns + size, not whole-second mtime + total size — a
-    same-second same-size rewrite must invalidate).  The shared cache
-    key for every once-per-corpus artifact (kNN/IVF/k-means silvers,
-    media payloads and signatures, the bucketed and date-partitioned
-    fact layouts)."""
-    tag = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir).strip("_")
-    src = f"{sf_dir}/{table}.parquet"
-    h = hashlib.md5(os.path.abspath(src).encode())
+def listing_fingerprint(path: str) -> str:
+    """CONTENT-HASH fingerprint of a parquet path's listing: every
+    ``.parquet`` file under it (the file itself when ``path`` is one)
+    by relative name, mtime_ns and size, not whole-second mtime and
+    total size, so a same-second same-size rewrite still changes it.
+    Directories Spark's file index hides (``_``/``.`` names) are not
+    walked.  The freshness stamp of `session.session_memo`."""
+    h = hashlib.md5(os.path.abspath(path).encode())
 
-    def _add(path: str) -> None:
-        st = os.stat(path)
-        h.update(
-            f"{os.path.basename(path)}:{st.st_mtime_ns}:{st.st_size};"
-            .encode()
-        )
+    def _add(full: str, name: str) -> None:
+        st = os.stat(full)
+        h.update(f"{name}:{st.st_mtime_ns}:{st.st_size};".encode())
 
-    if os.path.isdir(src):
-        for f in sorted(os.listdir(src)):
-            if f.endswith(".parquet"):
-                _add(os.path.join(src, f))
+    if os.path.isdir(path):
+        names = []
+        for d, dirs, files in os.walk(path):
+            dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+            names += [
+                os.path.relpath(os.path.join(d, f), path)
+                for f in files
+                if f.endswith(".parquet")
+            ]
+        for rel in sorted(names):
+            _add(os.path.join(path, rel), rel)
     else:
-        _add(src)
-    return f"{tag}_{h.hexdigest()[:16]}"
+        _add(path, os.path.basename(path))
+    return h.hexdigest()
+
+
+def corpus_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
+    """`listing_fingerprint` of a source table, tagged with its
+    ``sf_dir``: the shared cache key for every once-per-corpus artifact
+    (kNN/IVF/k-means silvers, media payloads and signatures, the
+    bucketed and date-partitioned fact layouts)."""
+    tag = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir).strip("_")
+    return f"{tag}_{listing_fingerprint(f'{sf_dir}/{table}.parquet')[:16]}"
 
 
 def build_once(out_dir: str, build) -> str:

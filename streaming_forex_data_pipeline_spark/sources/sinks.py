@@ -36,6 +36,13 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 
 def commit_append(
@@ -58,8 +65,9 @@ def commit_append(
     staging dir — invisible to readers, reclaimed by ``vacuum``.
 
     Scale shape: the commit is O(1) metadata (one manifest listing the
-    batch's files) regardless of batch size; readers pay one scan over
-    the union of committed files.  Returns the commit id."""
+    batch's files and their schema) regardless of batch size; readers
+    pay one scan over the union of committed files.  Returns the
+    commit id."""
 
     if stamp_from_column:
         # compaction path: rows already carry their original
@@ -92,13 +100,11 @@ def commit_append(
         "staged": os.path.basename(staged),
         "files": files,
         "version": version,
+        # the batch's schema, as Delta's log records it in a metaData
+        # action: the plan already knows it, and readers take it from
+        # here instead of opening footers
+        "schema": stamped.schema.jsonValue(),
     }
-    if "__orig_cid" in stamped.columns:
-        # compacted rows carry their ORIGINAL commit id as a secondary
-        # tie-break column; flagging it in the manifest lets
-        # read_committed turn on parquet schema merging only for
-        # tables that actually contain the extra column
-        manifest["orig_cid"] = True
     if replaces:
         # compaction commit: this manifest logically SUBSUMES the
         # listed earlier commits — readers skip them from the moment
@@ -187,45 +193,14 @@ def read_committed(
     snapshot is just a manifest-prefix scan).  Raises if no commit
     <= as_of exists.
 
-    One parquet scan over all committed files; the file -> commit-id
-    map rides a broadcast join keyed on the (globally unique) parquet
-    part-file basename via input_file_name()."""
+    One parquet scan over all committed files, read with the schema
+    their manifests record (`_committed_files`), so no footer is opened
+    to plan it; the file -> commit-id map rides a broadcast join keyed
+    on the (globally unique) parquet part-file basename via
+    input_file_name()."""
 
-    log_dir = os.path.join(table_dir, "_log")
-    rows = []
-    cids = _commit_ids(log_dir)
-    if as_of is not None:
-        cids = [c for c in cids if c <= as_of]
-    manifests = {}
-    for cid in cids:
-        with open(os.path.join(log_dir, f"{cid:020d}.json")) as fh:
-            manifests[cid] = json.load(fh)
-    # compaction: a manifest's "replaces" list names earlier commits it
-    # logically subsumes — skip them (their files may or may not still
-    # exist; GC is lazy).  Computed WITHIN the as_of scope, so time
-    # travel to a pre-compaction snapshot still reads the original
-    # commits until compact_log's GC physically reclaims them.
-    replaced = set()
-    for m in manifests.values():
-        replaced.update(m.get("replaces", ()))
-    any_orig_cid = False
-    for cid, m in manifests.items():
-        if cid in replaced:
-            continue
-        any_orig_cid = any_orig_cid or bool(m.get("orig_cid"))
-        for f in m["files"]:
-            rows.append(
-                (f, cid, os.path.join(table_dir, "_staged", m["staged"], f))
-            )
-    if not rows:
-        raise FileNotFoundError(f"no commits in {log_dir}")
-    reader = spark.read
-    if any_orig_cid:
-        # a compaction commit in scope carries the folded rows'
-        # ORIGINAL commit ids as a data column the retained commits
-        # lack — merge footers so the column survives the union scan
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(*[p for _, _, p in rows])
+    rows, schema = _committed_files(table_dir, as_of)
+    df = spark.read.schema(schema).parquet(*[p for _, _, p in rows])
     fmap = spark.createDataFrame(
         [(f, cid) for f, cid, _ in rows], ["__file", "__cid"]
     )
@@ -252,6 +227,86 @@ def read_committed(
         # folded commit without disturbing keep-latest ordering
         return out.drop("__rn", "__file")
     return out.drop("__rn", "__ingest_ts", "__cid", "__orig_cid", "__file")
+
+
+def _committed_files(table_dir: str, as_of: int | None = None):
+    """``([(file, commit id, path)], schema)`` of the commits in scope
+    (up to ``as_of``, minus those a compaction replaced): ``schema`` is
+    the union of their manifests' schemas (`_merged_type`); a manifest
+    with no files adds none.  Raises FileNotFoundError when no file is
+    committed, ValueError when a manifest lists files but no schema."""
+    log_dir = os.path.join(table_dir, "_log")
+    rows = []
+    cids = _commit_ids(log_dir)
+    if as_of is not None:
+        cids = [c for c in cids if c <= as_of]
+    manifests = {}
+    for cid in cids:
+        with open(os.path.join(log_dir, f"{cid:020d}.json")) as fh:
+            manifests[cid] = json.load(fh)
+    # compaction: a manifest's "replaces" list names earlier commits it
+    # logically subsumes — skip them (their files may or may not still
+    # exist; GC is lazy).  Computed WITHIN the as_of scope, so time
+    # travel to a pre-compaction snapshot still reads the original
+    # commits until compact_log's GC physically reclaims them.
+    replaced = set()
+    for m in manifests.values():
+        replaced.update(m.get("replaces", ()))
+    schema = None
+    for cid, m in manifests.items():
+        if cid in replaced or not m["files"]:
+            continue
+        if "schema" not in m:
+            raise ValueError(
+                f"commit {cid} of {log_dir} lists files but no schema"
+            )
+        # a compaction commit carries the folded rows' ORIGINAL commit
+        # ids (__orig_cid), a column the retained commits lack: the
+        # union keeps it, and their rows read it as null
+        s = StructType.fromJson(m["schema"])
+        schema = _merged_type(schema or s, s, log_dir)
+        for f in m["files"]:
+            rows.append(
+                (f, cid, os.path.join(table_dir, "_staged", m["staged"], f))
+            )
+    if not rows:
+        raise FileNotFoundError(f"no commits in {log_dir}")
+    return rows, schema
+
+
+def _merged_type(a: DataType, b: DataType, log_dir: str) -> DataType:
+    """``a`` and ``b`` merged as parquet's ``mergeSchema`` merges
+    footers: struct fields by name in first-seen order, nested types
+    recursively, every level nullable (as a file scan reads it); two
+    other types that differ raise.  Fields only ``a`` has are kept as
+    they are, so merge a first type with itself."""
+    if isinstance(a, StructType) and isinstance(b, StructType):
+        fields = {f.name: f for f in a.fields}
+        for f in b.fields:
+            old = fields.get(f.name, f)
+            fields[f.name] = StructField(
+                f.name,
+                _merged_type(old.dataType, f.dataType, log_dir),
+                True,
+                old.metadata,
+            )
+        return StructType(list(fields.values()))
+    if isinstance(a, ArrayType) and isinstance(b, ArrayType):
+        return ArrayType(
+            _merged_type(a.elementType, b.elementType, log_dir), True
+        )
+    if isinstance(a, MapType) and isinstance(b, MapType):
+        return MapType(
+            _merged_type(a.keyType, b.keyType, log_dir),
+            _merged_type(a.valueType, b.valueType, log_dir),
+            True,
+        )
+    if a != b:
+        raise ValueError(
+            f"commits of {log_dir} disagree on a column's type: "
+            f"{a.simpleString()} vs {b.simpleString()}"
+        )
+    return a
 
 
 def compact_log(

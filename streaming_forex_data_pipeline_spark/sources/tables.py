@@ -9,16 +9,20 @@ reference: app/database/repository.py:450-471) so that every
 indicator/window operator has a realistic per-symbol time series to run
 against.
 
-Scale notes: the loaders read with the parquet-embedded schema (no
-inference) so Catalyst can push filters/prune columns into the scan.
-At 100 TB the same call targets a date/symbol-partitioned table and
-partition pruning applies unchanged.
+Schemas come from metadata (`read_parquet`): the first read of a path
+in a session infers its schema from the parquet footers, which takes a
+Spark job; every later read passes that schema, so it starts none until
+the path's file listing or an inference conf changes.  Catalyst still
+pushes filters and prunes columns into the scan.  At 100 TB the same
+call targets a date/symbol-partitioned table and partition pruning
+applies unchanged.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..session import session_memo
 
@@ -110,6 +114,41 @@ def pin_portability_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+#: The parquet reader confs that change what footer inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def table_path(sf_dir: str, name: str) -> str:
+    return f"{sf_dir}/{name}.parquet"
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    session (`session_memo`) for each path and setting of the
+    inference confs, which are read on every call.  The entry's stamp
+    is the path's `listing_fingerprint`, so a rewritten table, or a
+    retired and rebuilt silver slot, infers again."""
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    return session_memo(
+        spark,
+        ("parquet_schema", path, confs),
+        lambda: spark.read.parquet(path).schema,
+        sources=(path,),
+    )
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema from `parquet_schema`:
+    a warm read lists the files and starts no Spark job."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Batch scan (S1/S8 seam). Predicates and projections applied by the
     caller reach the parquet reader via Catalyst pushdown."""
@@ -117,7 +156,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     ship_package(spark)
     pin_portability_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         df = normalize_event_ts(df)
     return df
@@ -161,7 +200,10 @@ def candles_from_events(
         )
 
     return session_memo(
-        spark, ("candles", sf_dir, bucket), build, sources=((sf_dir, "events"),)
+        spark,
+        ("candles", sf_dir, bucket),
+        build,
+        sources=(table_path(sf_dir, "events"),),
     )
 
 

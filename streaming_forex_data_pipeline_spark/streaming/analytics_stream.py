@@ -18,6 +18,7 @@ and the weekly cohort sizes derived from them equal the batch answer
 
 from __future__ import annotations
 
+from ..sources.tables import parquet_schema, read_parquet
 from .channels import (
     _maintained_layout_batch,
     _rebuild_layout,
@@ -91,7 +92,7 @@ def append_flush_sentinels(
 
     from pyspark.sql import functions as F
 
-    batch = spark.read.parquet(source_dir)
+    batch = read_parquet(spark, source_dir)
     mx = batch.agg(F.max("ts").alias("m")).collect()[0]["m"]
     if mx is None:
         return
@@ -239,7 +240,7 @@ def start_funnel_channel(
                 f"{source_dir}/events.parquet",
             )
         if source_dir is not None:
-            src_schema = spark.read.parquet(source_dir).schema
+            src_schema = parquet_schema(spark, source_dir)
             if final_flush and not ordered:
                 append_flush_sentinels(spark, source_dir, lateness)
             # one file per trigger keeps the sentinels in their own,

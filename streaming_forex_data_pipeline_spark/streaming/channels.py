@@ -29,8 +29,6 @@ from __future__ import annotations
 
 import logging
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,14 +63,19 @@ def read_table_stream(
     is made once per session, sf_dir and table (`session_memo`;
     testdata is read-only)."""
     from ..session import session_dir, session_memo
-    from ..sources.tables import pin_portability_confs
+    from ..sources.tables import (
+        parquet_schema,
+        pin_portability_confs,
+        table_path,
+    )
 
     pin_portability_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+    path = table_path(sf_dir, table)
+    schema = parquet_schema(spark, path)
 
     def stage() -> str:
         staging = session_dir(spark, f"{table}_stream_")
-        os.symlink(f"{sf_dir}/{table}.parquet", f"{staging}/{table}.parquet")
+        os.symlink(path, f"{staging}/{table}.parquet")
         return staging
 
     staging = session_memo(spark, ("stream_staging", sf_dir, table), stage)
@@ -782,30 +785,28 @@ def _rebuild_layout(spark, sink_dir: str, loc: str, key: str, build_fn):
     """Re-derive the serving layout at ``loc`` from its log — the
     recovery path of `_maintained_layout_batch` (index-from-WAL).
     Committed (``key``, batch) rows dedup idempotently, so the rebuild
-    is exact under any crash interleaving.  ``build_fn(data, tmp_loc)``
-    builds the replacement completely in a sibling directory, so a
-    failed build leaves the live layout readable; a failed build or
-    swap removes the sibling.  Returns the rebuilt data frame."""
-    from ..sources.sinks import read_committed
-
-    data = read_committed(spark, sink_dir, keys=[key, "batch"]).drop("batch")
-    tmp_loc = f"{loc}.rebuild-{uuid.uuid4().hex}"
-    try:
-        build_fn(data, tmp_loc)
-        _publish_rebuilt_layout(sink_dir, loc, tmp_loc)
-    except BaseException:
-        shutil.rmtree(tmp_loc, ignore_errors=True)
-        raise
-    return data
-
-
-def _publish_rebuilt_layout(sink_dir: str, loc: str, tmp_loc: str) -> None:
-    """Markers + rename-aside swap (`sinks.swap_aside`, after
-    `sinks.repair`) of a rebuilt layout.  Published batch ids come from
-    the O(#commits) manifest metadata, never a data-sized distinct over
-    the committed rows."""
-    from ..sources.sinks import log_versions, repair, swap_aside
+    is exact under any crash interleaving.  `sinks.repair` runs first,
+    so what a killed rebuild left is resolved: its replacement sibling
+    swept, a layout hidden by its swap restored.  ``build_fn(data,
+    tmp_loc)`` then builds the replacement completely in a
+    `sinks.replacement` sibling, which gets a marker per published
+    batch (ids from the O(#commits) manifest metadata, never a
+    data-sized distinct over the committed rows) and goes live by
+    `sinks.swap_aside`.  A failed build or swap leaves the live layout
+    readable and removes the sibling.  Returns the rebuilt data
+    frame."""
+    from ..sources.sinks import (
+        log_versions,
+        read_committed,
+        repair,
+        replacement,
+        swap_aside,
+    )
 
     repair(loc)
-    _mark_published(tmp_loc, log_versions(sink_dir))
-    swap_aside(tmp_loc, loc)
+    data = read_committed(spark, sink_dir, keys=[key, "batch"]).drop("batch")
+    with replacement(loc) as tmp_loc:
+        build_fn(data, tmp_loc)
+        _mark_published(tmp_loc, log_versions(sink_dir))
+        swap_aside(tmp_loc, loc)
+    return data

@@ -71,3 +71,43 @@ def test_knn_graph_search_job_budget(spark, sf_dir):
     )
     assert n <= 4, f"knn_graph_search started {n} jobs"
     assert out.count() == 10
+
+
+def test_warm_reads_start_no_jobs(spark, sf_dir, tmp_path):
+    """Schemas come from metadata: on a warm session, a table load, the
+    kNN graph silvers, a table stream and a delta-log read (on a
+    three-commit log, and again after a compaction) start no Spark
+    job."""
+    from streaming_forex_data_pipeline_spark.llm.silvers import (
+        knn_graph_silver,
+        knn_union_graph_silver,
+    )
+    from streaming_forex_data_pipeline_spark.sources import sinks as S
+    from streaming_forex_data_pipeline_spark.streaming.channels import (
+        read_table_stream,
+    )
+
+    log = str(tmp_path / "log")
+    for v in range(3):
+        S.commit_append(
+            spark.range(4).withColumn("v", F.lit(v)), log, version=float(v)
+        )
+    reads = {
+        "load_table": lambda: load_table(spark, sf_dir, "events"),
+        "knn_graph_silver": lambda: knn_graph_silver(spark, sf_dir),
+        "knn_union_graph_silver": lambda: knn_union_graph_silver(spark, sf_dir),
+        "read_table_stream": lambda: read_table_stream(spark, sf_dir, "documents"),
+        "read_committed": lambda: S.read_committed(spark, log, keys=["id"]),
+    }
+    for read in reads.values():
+        read()  # the first read of each path infers its schema
+    for name, read in reads.items():
+        _, n = _jobs(spark, read)
+        assert n == 0, f"warm {name} started {n} jobs"
+
+    assert S.compact_log(spark, log, keys=["id"]) is not None
+    out, n = _jobs(spark, lambda: S.read_committed(spark, log, keys=["id"]))
+    assert n == 0, f"read_committed after compact_log started {n} jobs"
+    assert sorted((r["id"], r["v"]) for r in out.collect()) == [
+        (i, 2) for i in range(4)
+    ]

@@ -195,7 +195,7 @@ def test_layout_publish_restores_layout_a_killed_swap_left_aside(
     from pyspark.sql import functions as F
 
     from streaming_forex_data_pipeline_spark.streaming.channels import (
-        _publish_rebuilt_layout,
+        _rebuild_layout,
     )
 
     sink = str(tmp_path / "log")
@@ -204,21 +204,41 @@ def test_layout_publish_restores_layout_a_killed_swap_left_aside(
     )
     loc = str(tmp_path / "layout")
     spark.range(5).write.parquet(f"{loc}.old-deadbeef")
-    spark.range(7).write.parquet(f"{loc}.rebuild-x")
 
     real_rename = os.rename
 
     def failing_swap(src, dst):
-        if ".rebuild" in os.path.basename(src):
+        if ".new-" in os.path.basename(src):
             raise OSError("injected swap failure")
         return real_rename(src, dst)
 
     monkeypatch.setattr(os, "rename", failing_swap)
     with pytest.raises(OSError, match="injected swap failure"):
-        _publish_rebuilt_layout(sink, loc, f"{loc}.rebuild-x")
+        _rebuild_layout(
+            spark, sink, loc, "id", lambda _, tmp: spark.range(7).write.parquet(tmp)
+        )
     monkeypatch.undo()
     assert sorted(r["id"] for r in spark.read.parquet(loc).collect()) == list(range(5))
     assert _siblings(loc) == []
+
+
+def test_rebuild_sweeps_the_copy_a_killed_rebuild_left(spark, tmp_path):
+    """A rebuild killed before its swap leaves its replacement sibling
+    behind; the next rebuild sweeps it and publishes from the log."""
+    from streaming_forex_data_pipeline_spark.streaming.channels import (
+        _rebuild_layout,
+    )
+
+    sink = str(tmp_path / "log")
+    S.commit_append(
+        spark.range(3).withColumn("batch", F.lit(0).cast("long")), sink, version=0.0
+    )
+    loc = str(tmp_path / "layout")
+    spark.range(5).write.parquet(loc)
+    spark.range(7).write.parquet(f"{loc}.new-deadbeef")
+    _rebuild_layout(spark, sink, loc, "id", lambda data, tmp: data.write.parquet(tmp))
+    assert _siblings(loc) == []
+    assert sorted(r["id"] for r in spark.read.parquet(loc).collect()) == [0, 1, 2]
 
 
 def test_partitioned_retention_drops_only_old_chunks(spark, tmp_path):

@@ -1205,7 +1205,7 @@ def test_ivf_rebuild_failed_swap_keeps_serving_layout(
     real_rename = os.rename
 
     def failing_swap(src, dst):
-        if ".rebuild" in os.path.basename(src):
+        if ".new-" in os.path.basename(src):
             raise OSError("injected swap failure")
         return real_rename(src, dst)
 
@@ -1217,6 +1217,7 @@ def test_ivf_rebuild_failed_swap_keeps_serving_layout(
     assert rows() == before
     assert not glob.glob(f"{serve}.rebuild*")
     assert not glob.glob(f"{serve}.old-*")
+    assert not glob.glob(f"{serve}.new-*")
 
 
 def test_events_bucketed_channel_matches_batch_build(spark, sf_dir, tmp_path):
